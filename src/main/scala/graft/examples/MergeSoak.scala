@@ -2,13 +2,13 @@ package graft.examples
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.format.{GraftDataset, Versioning}
+import graft.format.{CommitLog, CommitMeta, GraftDataset, Versioning}
 
 /** Three-way merge at soak scale. MergeSpec proves the resolution
   * matrix (append/update/pop × ours/theirs/both) on toy tables; the
   * reference benchmarks merge on 10k-row datasets
   * (exp_scripts/version_control.py:172-240). This drives the
-  * one-full-outer-join merge design at 10^5-row divergence PER SIDE and
+  * churn-restricted delta merge at 10^5-row divergence PER SIDE and
   * verifies every resolution against an independent closed-form model:
   *
   *  - base: N rows (id, v = md5(id)) committed on main
@@ -27,6 +27,10 @@ import graft.format.{GraftDataset, Versioning}
   * re-mints identity; base uuids are shared by both branches, appended
   * uuids come from each side's reservation). detectMergeConflict counts
   * are also asserted against the model's closed-form slice counts.
+  *
+  * Beside each case's merge time it reports the merge's write
+  * amplification: the data bytes the merge commit added, as a share of
+  * the bytes its manifest references (`merge_bytes_share`).
   *
   * Run: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.examples.MergeSoak [rowsPerSide]"`
   * Prints one JSON line; measured results recorded in SCALE.md.
@@ -132,12 +136,24 @@ object MergeSoak {
       "pop_ours" -> Versioning.MergeResolutions(pop = "ours"),
       "pop_theirs" -> Versioning.MergeResolutions(pop = "theirs"))
 
+    // write amplification: data bytes a merge commit adds, as a share of
+    // the bytes its whole manifest references
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries(m: CommitMeta) = m.files ++ m.updates ++ m.tombstones
+    def bytes(rels: Seq[String]): Long = rels.map(rel =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(root, rel))
+        .filter(_.isFile).map(_.getLen).sum).sum
+
     val timings = cases.map { case (name, res) =>
       val h = GraftDataset.load(spark, root) // at main
       h.checkout(s"m-$name", create = true)
+      val ours = CommitLog.readCommit(spark, root, h.head.get)
       val m0 = System.nanoTime()
-      h.merge("dev", res)
+      val merged = CommitLog.readCommit(spark, root, h.merge("dev", res))
       val sec = (System.nanoTime() - m0) / 1e9
+      val share = bytes(entries(merged).filterNot(entries(ours).toSet)).toDouble /
+        bytes(entries(merged))
       // content must equal the model exactly
       val act = h.toDF.select(col("id"), col("v"))
       val exp = expected(res)
@@ -152,7 +168,7 @@ object MergeSoak {
         s"$name: merge re-minted uuids")
       require(mergedPairs.select(U).distinct().count() == actN,
         s"$name: duplicate uuids after merge")
-      name -> sec
+      (name, sec, share)
     }
 
     val out = Map(
@@ -163,8 +179,10 @@ object MergeSoak {
       "main_pops" -> mainPop, "setup_sec" -> f"$setupSec%.1f".toDouble,
       "conflicts_update_update" -> expUpdUpd,
       "conflicts_delete_vs_update" -> (expDelOurs + expDelTheirs),
-      "merges" -> timings.map { case (k, v) =>
+      "merges" -> timings.map { case (k, v, _) =>
         s""""$k":${f"$v%.2f"}""" }.mkString("{", ",", "}"),
+      "merge_bytes_share" -> timings.map { case (k, _, b) =>
+        s""""$k":${f"$b%.4f"}""" }.mkString("{", ",", "}"),
       "verified" -> "content+uuid+conflicts")
     println(out.map {
       case (k, v: String) if v.startsWith("{") => s""""$k":$v"""

@@ -206,6 +206,12 @@ class GraftDataset private[format] (
       (legacyDfs ++ derivedDfs).reduce(_ unionByName _)
     }
 
+  /** The `_uuid`s of manifest entries of any kind, read with the known
+    * one-column schema (no footer inference job). */
+  private[format] def readUuids(entries: Seq[String]): DataFrame =
+    spark.read.schema(UuidSchema)
+      .parquet(entries.map(e => new Path(root, e).toString): _*)
+
   /** Snapshot with the hidden `_uuid` column (internal + merge/diff +
     * the integrity gates of the soak mains). */
   private[graft] def snapshotWithUuid(
@@ -213,28 +219,27 @@ class GraftDataset private[format] (
       tombstones: Seq[String] = stTombstones,
       schema: StructType = stSchema): DataFrame = {
     val target = withUuidSchema(schema)
-    var df = readManifest(files, target)
-    // merge-on-read, FLAT: union every update file with its manifest
-    // position, keep the last write per uuid (one window), then ONE
-    // anti-join + union against the base. A per-file anti-join chain
-    // would grow the plan linearly in the number of uncompacted updates.
-    if (updates.nonEmpty) {
-      // one update file needs no last-wins window — skip the extra shuffle
-      val latest =
-        if (updates.size == 1) readManifest(updates, target)
-        else GraftDataset.lastWinsPerUuid(
-          updates.zipWithIndex.map { case (u, i) =>
-            readManifest(Seq(u), target).withColumn("_file_seq", lit(i))
-          }.reduce(_ unionByName _), "_file_seq")
-      df = df.join(latest.select(UuidCol), Seq(UuidCol), "left_anti")
-        .unionByName(latest)
-    }
-    if (tombstones.nonEmpty) {
-      val dead = spark.read.parquet(
-        tombstones.map(t => new Path(root, t).toString): _*)
-      df = df.join(dead.select(UuidCol), Seq(UuidCol), "left_anti")
-    }
-    df
+    val base = readManifest(files, target)
+    if (updates.isEmpty && tombstones.isEmpty) return base
+    // merge-on-read, FLAT: ONE anti-join drops every base row an update
+    // or tombstone entry touches — a key set, so it needs no window.
+    // The last-wins window runs once, over update rows only, and only
+    // when there is more than one update file; tombstoned uuids are then
+    // filtered out of its (churn-sized) result. A per-file anti-join
+    // chain would grow the plan linearly in the uncompacted updates.
+    val kept = base.join(readUuids(updates ++ tombstones), Seq(UuidCol),
+      "left_anti")
+    if (updates.isEmpty) return kept
+    val latest =
+      if (updates.size == 1) readManifest(updates, target)
+      else GraftDataset.lastWinsPerUuid(
+        updates.zipWithIndex.map { case (u, i) =>
+          readManifest(Seq(u), target).withColumn("_file_seq", lit(i))
+        }.reduce(_ unionByName _), "_file_seq")
+    val live =
+      if (tombstones.isEmpty) latest
+      else latest.join(readUuids(tombstones), Seq(UuidCol), "left_anti")
+    kept.unionByName(live)
   }
 
   /** The user-facing snapshot (hidden columns dropped). */
@@ -386,6 +391,18 @@ class GraftDataset private[format] (
             .fromStatus(s, conf))
         try r.getRecordCount finally r.close()
       }.sum
+  }
+
+  /** Write `df` as one new entry of `kind` and hand it to `register` if
+    * it holds rows (an empty one is deleted); returns its row count from
+    * the footers. Any registered entry marks the state dirty. */
+  private def landEntry(df: DataFrame, kind: String)
+                       (register: String => Unit): Long = {
+    val rel = writeData(df, kind)
+    val n = writtenRowCount(rel)
+    if (n > 0) { register(rel); dirty = true; pendingRewrite = false }
+    else deleteData(rel)
+    n
   }
 
   /** Footer row count over several manifest entries, parallelized —
@@ -628,9 +645,14 @@ class GraftDataset private[format] (
   }
 
   def renameTensor(from: String, to: String): Unit = {
+    require(!to.startsWith(DropPrefix), s"$DropPrefix names are reserved")
+    appendRename(from, to)
+  }
+
+  /** Rename a column by appending to the rename chain (no data moves). */
+  private def appendRename(from: String, to: String): Unit = {
     require(stSchema.fieldNames.contains(from), s"no column $from")
     require(!stSchema.fieldNames.contains(to), s"column $to exists")
-    require(!to.startsWith(DropPrefix), s"$DropPrefix names are reserved")
     stSchema = StructType(stSchema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
     stRenames :+= (from, to)
@@ -1246,12 +1268,8 @@ class GraftDataset private[format] (
     // cost scales with the churn of the two commits, never the table —
     // with no driver-side uuid materialization.
     if (headNewUpdates.nonEmpty || headNewTombstones.nonEmpty) {
-      def uuidsOf(entries: Seq[String]) = entries
-        .map(rel => spark.read.parquet(new Path(root, rel).toString)
-          .select(col(UuidCol)))
-        .reduce(_ union _)
-      val ours = uuidsOf(newUpdates ++ newTombstones)
-      val theirs = uuidsOf(headNewUpdates ++ headNewTombstones)
+      val ours = readUuids(newUpdates ++ newTombstones)
+      val theirs = readUuids(headNewUpdates ++ headNewTombstones)
       if (!ours.join(theirs, UuidCol).isEmpty) return false
     }
     val newEntries = (newFiles ++ newUpdates ++ newTombstones).toSet
@@ -1645,20 +1663,60 @@ class GraftDataset private[format] (
       { require(CommitLog.listCommits(spark, root).contains(ref),
           s"no branch or commit $ref"); ref })
 
-  private def threeWayInputs(targetRef: String) = {
+  private def threeWayIds(targetRef: String) = {
     val ourId = headId.getOrElse(throw new IllegalStateException("no HEAD"))
     val theirId = resolveRef(targetRef)
     val lcaId = CommitLog.lca(spark, root, ourId, theirId)
     (ourId, theirId, lcaId)
   }
 
-  /** Per-side change sets vs the LCA (reference `diff`). */
-  def diff(targetRef: String): DataFrame = {
-    val (ourId, theirId, lcaId) = threeWayInputs(targetRef)
-    Versioning.diffReport(
-      snapshotAtWithUuid(lcaId), snapshotAtWithUuid(ourId),
+  /** Semi-join the three frames of `tw` to the churn since the LCA: the
+    * `_uuid`s of every manifest entry that is not shared by all three
+    * commits. `frames` gives each frame's commit (LCA, ours, theirs) and
+    * the renames applied to its snapshot. A uuid outside the churn lives
+    * only in shared entries, so it reads the same row in all three
+    * snapshots — provided the columns line up
+    * ([[Versioning.uniformOutsideChurn]]) and the shared update entries
+    * keep one order (last-wins). Otherwise `tw` is returned
+    * unrestricted, which is what a dropped column or a compaction on
+    * either side gives.
+    */
+  private def restrictToChurn(tw: ThreeWay,
+      frames: Seq[(CommitMeta, Seq[(String, String)])]): ThreeWay = {
+    val metas = frames.map(_._1)
+    val lca = metas.head
+    val shared = metas.map(entriesOf(_).toSet).reduce(_ intersect _)
+    val sameOrder = metas.map(_.updates.filter(shared)).distinct.size == 1
+    if (!sameOrder || !Versioning.uniformOutsideChurn(tw.schema, lca, frames)) tw
+    else {
+      val churn = metas.flatMap(entriesOf).distinct.filterNot(shared)
+      val cands = if (churn.isEmpty) emptyDf(UuidSchema) else readUuids(churn)
+      def keep(df: DataFrame) = df.join(cands, Seq(UuidCol), "left_semi")
+      ThreeWay(keep(tw.lca), keep(tw.ours), keep(tw.theirs), tw.schema)
+    }
+  }
+
+  /** The three-way inputs [[diff]] and [[detectMergeConflict]] join:
+    * the LCA, HEAD and `targetRef` snapshots under HEAD's schema plus
+    * the target-only columns, restricted to the churn since the LCA
+    * unless `restrict` is false (the unrestricted form is the reference
+    * the equivalence spec compares against).
+    */
+  private[format] def compareInputs(targetRef: String,
+                                    restrict: Boolean = true): ThreeWay = {
+    val (ourId, theirId, lcaId) = threeWayIds(targetRef)
+    val metas = Seq(lcaId, ourId, theirId).map(CommitLog.readCommit(spark, root, _))
+    val tw = ThreeWay(snapshotAtWithUuid(lcaId), snapshotAtWithUuid(ourId),
       snapshotAtWithUuid(theirId),
-      Versioning.mergedSchema(stSchema, schemaAt(theirId)))
+      Versioning.mergedSchema(stSchema, schemaOf(metas(2))))
+    if (restrict) restrictToChurn(tw, metas.map(_ -> Nil)) else tw
+  }
+
+  /** Per-side change sets vs the LCA (reference `diff`). Joins only the
+    * rows either side touched since the LCA (see [[Versioning]]). */
+  def diff(targetRef: String): DataFrame = {
+    val in = compareInputs(targetRef)
+    Versioning.diffReport(in.lca, in.ours, in.theirs, in.schema)
   }
 
   /** Batch change feed (Delta's `table_changes`): every CDC event of
@@ -1820,14 +1878,6 @@ class GraftDataset private[format] (
           "column add in range) — apply them to the replica first " +
           "(GraftStreaming.replicate does this automatically) or filter " +
           "them out explicitly after aligning the feed")
-      def land(df: DataFrame, kind: String,
-               register: String => Unit): Long = {
-        val rel = writeData(df, kind)
-        val n = writtenRowCount(rel)
-        if (n > 0) { register(rel); dirty = true; pendingRewrite = false }
-        else deleteData(rel)
-        n
-      }
       // row-level idempotency with UPSERT semantics: an insert whose
       // uuid this replica already carries (a replayed bootstrap after a
       // lost checkpoint) must not be dropped —
@@ -1863,7 +1913,7 @@ class GraftDataset private[format] (
             "uuids are untouched rows, not deletions")
       val freshIns = ins.select(dataCols: _*)
         .join(replicaIds, Seq(UuidCol), "left_anti")
-      val nIns = land(freshIns.select(dataCols: _*), "cdc", stFiles :+= _)
+      val nIns = landEntry(freshIns.select(dataCols: _*), "cdc")(stFiles :+= _)
       val staleIns = ins
         .join(replicaIds, Seq(UuidCol), "left_semi")
       // postimages win over a same-commit insert of the same uuid
@@ -1875,7 +1925,7 @@ class GraftDataset private[format] (
       val latestUpd = GraftDataset.lastWinsPerUuid(
         cached.filter(tpe === "update_postimage").unionByName(staleIns)
           .select((dataCols :+ seq.as("_seq")): _*), "_seq")
-      val nUpd = land(latestUpd, "update", stUpdates :+= _)
+      val nUpd = landEntry(latestUpd, "update")(stUpdates :+= _)
       // delete idempotency must hold at the FILE level, not just the
       // snapshot level: countRows subtracts tombstone-file row counts
       // assuming every tombstoned uuid was live exactly once, so a
@@ -1890,14 +1940,9 @@ class GraftDataset private[format] (
         cached.filter(tpe === "delete").select(col(UuidCol)).distinct()
       val freshDel =
         if (dedupInserts && stTombstones.nonEmpty)
-          delEvents.join(
-            spark.read.schema(StructType(Seq(
-                StructField(UuidCol, LongType, nullable = false))))
-              .parquet(stTombstones.map(t =>
-                new Path(root, t).toString): _*),
-            Seq(UuidCol), "left_anti")
+          delEvents.join(readUuids(stTombstones), Seq(UuidCol), "left_anti")
         else delEvents
-      var nDel = land(freshDel, "tombstone", stTombstones :+= _)
+      var nDel = landEntry(freshDel, "tombstone")(stTombstones :+= _)
       // a BOOTSTRAP feed (the complete live snapshot as insert events)
       // carries no delete events for rows that died before it was cut —
       // a behind replica re-synced from a fresh checkpoint would keep
@@ -1906,8 +1951,8 @@ class GraftDataset private[format] (
       // outside it are tombstoned. Only valid for full feeds — a delta
       // feed's absent uuids are merely untouched rows (caller decides).
       if (reconcileDeletes)
-        nDel += land(replicaIds.join(ins.select(col(UuidCol)),
-          Seq(UuidCol), "left_anti"), "tombstone", stTombstones :+= _)
+        nDel += landEntry(replicaIds.join(ins.select(col(UuidCol)),
+          Seq(UuidCol), "left_anti"), "tombstone")(stTombstones :+= _)
       (nIns, nUpd, nDel)
     } finally {
       cached.unpersist(false)
@@ -1942,44 +1987,39 @@ class GraftDataset private[format] (
   }
 
   /** Conflict report for merging `targetRef` into HEAD
-    * (reference `detect_merge_conflict`).
+    * (reference `detect_merge_conflict`). Joins only the churn since the
+    * LCA, like [[diff]].
     */
   def detectMergeConflict(targetRef: String): DataFrame = {
-    val (ourId, theirId, lcaId) = threeWayInputs(targetRef)
-    Versioning.conflicts(
-      snapshotAtWithUuid(lcaId), snapshotAtWithUuid(ourId),
-      snapshotAtWithUuid(theirId),
-      Versioning.mergedSchema(stSchema, schemaAt(theirId)))
+    val in = compareInputs(targetRef)
+    Versioning.conflicts(in.lca, in.ours, in.theirs, in.schema)
   }
 
   private def schemaAt(commitId: String): StructType =
-    org.apache.spark.sql.types.DataType
-      .fromJson(CommitLog.readCommit(spark, root, commitId).schemaJson)
-      .asInstanceOf[StructType]
+    schemaOf(CommitLog.readCommit(spark, root, commitId))
 
-  /** Three-way merge of `targetRef` into the current branch (reference
-    * `merge`, commits.py:305-401 + merge.py:499-543). Fast-forward-safe:
-    * if the LCA equals the target head the merge is a no-op (reference
-    * "target is an ancestor", merge.py:528-530). Returns the new commit id
-    * (or current HEAD on no-op).
+  private def schemaOf(m: CommitMeta): StructType =
+    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+
+  /** The merge's three-way inputs, renamed onto the merged names, and
+    * the renames ours adopts from theirs (in chain order).
+    *
+    * Rename reconciliation (reference merge.py:624-708): renames made on
+    * either side since the LCA are propagated to the OTHER side (and to
+    * the LCA snapshot) before the uuid join, so renamed data lines up
+    * under one column instead of forking into old+new columns. A column
+    * renamed DIFFERENTLY on both sides keeps ours' name (the reference's
+    * force rule); a rename whose target name already exists on the other
+    * side is not propagated.
     */
-  def merge(targetRef: String,
-            resolutions: Versioning.MergeResolutions =
-              Versioning.MergeResolutions()): String = {
-    Versioning.validate(resolutions) // even for no-op merges
-    require(!dirty, "uncommitted changes; commit or reset first")
-    val (ourId, theirId, lcaId) = threeWayInputs(targetRef)
-    if (lcaId == theirId) return ourId // target already merged
-    // Rename reconciliation (reference merge.py:624-708): renames made on
-    // either side since the LCA are propagated to the OTHER side (and to
-    // the LCA snapshot) before the uuid join, so renamed data lines up
-    // under one column instead of forking into old+new columns. A column
-    // renamed DIFFERENTLY on both sides keeps ours' name (the reference's
-    // force rule); a rename whose target name already exists on the other
-    // side is not propagated.
-    def renamesOf(id: String): Seq[(String, String)] =
-      CommitLog.readCommit(spark, root, id).renames.map(p => (p(0), p(1)))
-    val lcaRen = renamesOf(lcaId)
+  private[format] def mergeInputs(ourId: String, theirId: String,
+      lcaId: String, restrict: Boolean = true)
+      : (ThreeWay, Seq[(String, String)]) = {
+    val Seq(l, o, t) =
+      Seq(lcaId, ourId, theirId).map(CommitLog.readCommit(spark, root, _))
+    def renamesOf(m: CommitMeta): Seq[(String, String)] =
+      m.renames.map(p => (p(0), p(1)))
+    val lcaRen = renamesOf(l)
     def since(chain: Seq[(String, String)]): Seq[(String, String)] =
       if (chain.startsWith(lcaRen)) chain.drop(lcaRen.length)
       else chain // compaction reset the chain; apply conservatively
@@ -1987,9 +2027,9 @@ class GraftDataset private[format] (
     // propagate: delete-vs-keep keeps the column via schema union, the
     // pre-marker semantics; letting a marker through would rename the
     // other side's live column (or the LCA's) onto a dead name.
-    val theirNew = since(renamesOf(theirId)).filterNot(p => isDropMarker(p._2))
-    val ourNew = since(stRenames.toSeq).filterNot(p => isDropMarker(p._2))
-    val theirSchema0 = schemaAt(theirId)
+    val theirNew = since(renamesOf(t)).filterNot(p => isDropMarker(p._2))
+    val ourNew = since(renamesOf(o)).filterNot(p => isDropMarker(p._2))
+    val (ourSchema0, theirSchema0) = (schemaOf(o), schemaOf(t))
     def applicable(renames: Seq[(String, String)], toSchema: StructType,
                    otherSide: Seq[(String, String)]) =
       renames.filter { case (from, to) =>
@@ -1997,33 +2037,96 @@ class GraftDataset private[format] (
           !toSchema.fieldNames.contains(to) &&
           !otherSide.exists(_._1 == from)
       }
-    val adoptOurs = applicable(theirNew, stSchema, ourNew) // theirs → ours
+    val adoptOurs = applicable(theirNew, ourSchema0, ourNew) // theirs → ours
     val adoptTheirs = applicable(ourNew, theirSchema0, theirNew) // ours → theirs
     def renameSchema(s: StructType, r: Seq[(String, String)]) =
       StructType(s.fields.map(f =>
         r.find(_._1 == f.name).map(p => f.copy(name = p._2)).getOrElse(f)))
     def renameDf(df: DataFrame, r: Seq[(String, String)]) =
       r.foldLeft(df) { case (d, (from, to)) => d.withColumnRenamed(from, to) }
-    val ourSchema = renameSchema(stSchema, adoptOurs)
-    val theirSchema = renameSchema(theirSchema0, adoptTheirs)
-    val ourSnap = renameDf(snapshotAtWithUuid(ourId), adoptOurs)
-    val theirSnap = renameDf(snapshotAtWithUuid(theirId), adoptTheirs)
-    // LCA must see the FINAL names too, or rename-only rows would look
-    // changed on both sides and spuriously conflict
-    val lcaSnap = renameDf(snapshotAtWithUuid(lcaId),
-      ourNew ++ adoptOurs)
-    val newSchema = Versioning.mergedSchema(ourSchema, theirSchema)
-    val merged = Versioning.mergeSnapshots(
-      lcaSnap, ourSnap, theirSnap, withUuidSchema(newSchema), resolutions)
-    // adopt the merged schema BEFORE the write so the skipping stats are
-    // captured for the FINAL column names (writeData keys `wanted` off
-    // stSchema); the merged plan reads only per-commit temp snapshots,
-    // never this instance's staged state, so the reorder is safe
-    stSchema = newSchema
-    stRenames = Vector.empty; stEpochs = Map.empty; stStatsNormalized = true
-    val rel = writeData(merged, "merge")
-    stFiles = Vector(rel); stUpdates = Vector.empty
-    stTombstones = Vector.empty
+    // the LCA must see the FINAL names too, or rename-only rows would
+    // look changed on both sides and spuriously conflict
+    val lcaRenames = ourNew ++ adoptOurs
+    val tw = ThreeWay(
+      renameDf(snapshotAtWithUuid(lcaId), lcaRenames),
+      renameDf(snapshotAtWithUuid(ourId), adoptOurs),
+      renameDf(snapshotAtWithUuid(theirId), adoptTheirs),
+      Versioning.mergedSchema(renameSchema(ourSchema0, adoptOurs),
+        renameSchema(theirSchema0, adoptTheirs)))
+    (if (restrict) restrictToChurn(tw,
+       Seq(l -> lcaRenames, o -> adoptOurs, t -> adoptTheirs))
+     else tw, adoptOurs)
+  }
+
+  /** Three-way merge of `targetRef` into the current branch (reference
+    * `merge`, commits.py:305-401 + merge.py:499-543). Fast-forward-safe:
+    * if the LCA equals the target head the merge is a no-op (reference
+    * "target is an ancestor", merge.py:528-530). Returns the new commit id
+    * (or current HEAD on no-op).
+    *
+    * Like the reference, which copies only the winning chunks, the merge
+    * commit is a DELTA over ours: ours' manifest unchanged (entries,
+    * stats, epochs, rename chain, with the adopted renames appended as
+    * [[renameTensor]] appends them) plus at most three churn-sized
+    * entries — a base entry for winners ours has no row for, an update
+    * entry of full-row postimages where the winner differs from ours'
+    * row, a tombstone entry where ours' row loses. A winner whose uuid
+    * ours popped (pop = "theirs" resurrects) is an update postimage, and
+    * only the tombstone entries holding such uuids are rewritten without
+    * them. Cost: O(churn since the LCA) in join width and bytes written
+    * (the snapshot scans stay O(table)); a column dropped on either side
+    * changes every row's payload, so then every row is a candidate and
+    * the delta may span the table. A feed can tail across the commit,
+    * except across a resurrecting one, which folds tombstones.
+    */
+  def merge(targetRef: String,
+            resolutions: Versioning.MergeResolutions =
+              Versioning.MergeResolutions()): String = {
+    Versioning.validate(resolutions) // even for no-op merges
+    require(!dirty, "uncommitted changes; commit or reset first")
+    val (ourId, theirId, lcaId) = threeWayIds(targetRef)
+    if (lcaId == theirId) return ourId // target already merged
+    val (in, adoptOurs) = mergeInputs(ourId, theirId, lcaId)
+    val delta = Versioning.mergeDelta(in.lca, in.ours, in.theirs,
+        withUuidSchema(in.schema), resolutions)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // adopt the merged names BEFORE any write, so the entries' skipping
+      // stats and rename epochs are taken under the final names; the
+      // delta plan reads per-commit snapshots, never this staged state
+      for ((from, to) <- adoptOurs if stSchema.fieldNames.contains(from))
+        appendRename(from, to)
+      stSchema = in.schema
+      val op = col(Versioning.DeltaOp)
+      // one job (no separate exchange stage) materializes the delta and
+      // counts its kinds; an empty kind writes no entry
+      val n = delta.select(op).as(org.apache.spark.sql.Encoders.STRING).rdd
+        .countByValue().toMap.withDefaultValue(0L)
+      val inserts = delta.filter(op === "insert")
+      val updates = delta.filter(op === "update")
+      // an inserted winner whose uuid ours tombstoned is a resurrection:
+      // its row is still in ours' base files, so it becomes live again by
+      // dropping it from its tombstone entry, with its postimage on top
+      val revived =
+        if (n("insert") == 0 || stTombstones.isEmpty) None
+        else Some(inserts.select(UuidCol)
+          .join(readUuids(stTombstones), Seq(UuidCol), "left_semi"))
+          .filterNot(_.isEmpty)
+      val (fresh, postimages) = revived.fold((inserts, updates))(r =>
+        (inserts.join(r, Seq(UuidCol), "left_anti"),
+          updates.unionByName(inserts.join(r, Seq(UuidCol), "left_semi"))))
+      if (n("insert") > 0)
+        landEntry(fresh.drop(Versioning.DeltaOp), "merge")(stFiles :+= _)
+      if (n("update") > 0 || revived.isDefined)
+        landEntry(postimages.drop(Versioning.DeltaOp), "update")(stUpdates :+= _)
+      revived.foreach(reviveFromTombstones)
+      if (n("delete") > 0)
+        landEntry(delta.filter(op === "delete").select(UuidCol),
+          "tombstone")(stTombstones :+= _)
+    } catch {
+      // a failed merge leaves HEAD's state staged, never a half-adopted one
+      case scala.util.control.NonFatal(e) => loadHead(); throw e
+    } finally { delta.unpersist(false); () }
     dirty = true; pendingRewrite = false
     val id = CommitLog.nextCommitId(spark, root)
     // no auto-rebase for merges (a lost CAS means the branch moved —
@@ -2042,6 +2145,25 @@ class GraftDataset private[format] (
         throw e
     }
     id
+  }
+
+  /** Rewrite, in place, each staged tombstone entry that holds one of
+    * `uuids` without them; an entry left empty leaves the manifest. */
+  private def reviveFromTombstones(uuids: DataFrame): Unit = {
+    val hit = stTombstones.zipWithIndex
+      .map { case (t, i) => readUuids(Seq(t)).withColumn("_entry", lit(i)) }
+      .reduce(_ unionByName _)
+      .join(uuids, Seq(UuidCol), "left_semi")
+      .select("_entry").distinct().collect().map(_.getInt(0)).toSet
+    stTombstones = stTombstones.zipWithIndex.flatMap { case (t, i) =>
+      if (!hit(i)) Some(t)
+      else {
+        var kept: Option[String] = None
+        landEntry(readUuids(Seq(t)).join(uuids, Seq(UuidCol), "left_anti"),
+          "tombstone")(r => kept = Some(r))
+        kept
+      }
+    }
   }
 
   // ---- views (reference save_view/load_view, view_operations.py) ----------
@@ -3143,6 +3265,18 @@ class GraftDataset private[format] (
 object GraftDataset {
   /** Hidden row-identity column (reference `_uuid` tensor). */
   val UuidCol = "_uuid"
+
+  /** The read schema of a uuid-only scan. Every manifest entry kind
+    * carries `_uuid LONG`, so tombstone and key-set reads pass it instead
+    * of inferring it: inference runs a footer-read job per read.
+    */
+  val UuidSchema: StructType =
+    StructType(Seq(StructField(UuidCol, LongType, nullable = false)))
+
+  /** The three snapshots (with `_uuid`) a diff, conflict report or
+    * merge joins, already renamed onto `schema`'s names. */
+  private[format] final case class ThreeWay(lca: DataFrame, ours: DataFrame,
+      theirs: DataFrame, schema: StructType)
 
   /** Default [[GraftDataset.vacuum]] retention — 7 days, Delta's default:
     * long enough for the slowest plausible reader/streaming tail, short

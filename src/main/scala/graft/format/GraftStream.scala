@@ -98,12 +98,15 @@ object GraftStream {
       if (f.name == GraftDataset.UuidCol) f else f.copy(nullable = true)))
 
   /** A commit whose manifest DROPPED prior entries (compaction or
-    * bin-packing over staged changes, a merge) FOLDS history into fresh
-    * files: its new base files are rewritten old rows, not inserts, so
-    * a change feed cannot express it as per-row events — emitting its
-    * files as inserts would silently duplicate the whole table
-    * downstream. Fail loudly; maintenance run from a CLEAN state
-    * publishes a rewrite-flagged commit, which feeds skip entirely.
+    * bin-packing over staged changes, a merge that resurrects popped
+    * rows by rewriting their tombstone entries) FOLDS history into fresh
+    * files: its new files restate old rows, not changes, so a change
+    * feed cannot express it as per-row events — emitting its files as
+    * inserts would silently duplicate the whole table downstream. Fail
+    * loudly; maintenance run from a CLEAN state publishes a
+    * rewrite-flagged commit, which feeds skip entirely. A merge commit
+    * that only extends ours' manifest (the common case, see
+    * [[GraftDataset.merge]]) passes: its entries are its events.
     */
   private[format] def requireDeltaExpressible(m: CommitMeta,
                                               prev: CommitMeta): Unit = {
@@ -113,7 +116,8 @@ object GraftStream {
         prev.updates.forall(ups) &&
         prev.tombstones.forall(tombs),
       s"commit ${m.id} folds prior state into rewritten files (compaction " +
-        "over staged changes, or a merge); a change feed cannot express " +
+        "over staged changes, or a merge that resurrects popped rows); a " +
+        "change feed cannot express " +
         "it as row events — run maintenance from a clean state (rewrite-" +
         "flagged commits are skipped) or split the feed at this commit")
   }
@@ -284,8 +288,8 @@ object GraftStream {
     }
     val newTombs = m.tombstones.filterNot(prev.tombstones.toSet)
     if (newTombs.nonEmpty) {
-      val dead = spark.read.parquet(paths(newTombs): _*)
-        .select(GraftDataset.UuidCol)
+      val dead = spark.read.schema(GraftDataset.UuidSchema)
+        .parquet(paths(newTombs): _*)
       val cols = dataSchema.fields.toIndexedSeq.map { f =>
         if (f.name == GraftDataset.UuidCol) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)
@@ -389,7 +393,7 @@ class GraftSink(spark: SparkSession, root: String, branch: String,
   * files and emits new BASE files as inserts — Delta's `ignoreChanges`
   * contract INCLUDING its documented duplicate delivery: a commit that
   * folds prior state into rewritten base files (compaction over staged
-  * changes, a merge) re-delivers the rewritten rows as inserts, because
+  * changes) re-delivers the rewritten rows as inserts, because
   * new appends folded into those files are indistinguishable from old
   * rows without row-level diffing — downstream must tolerate duplicates
   * (or use `changeFeed=true`, which refuses such commits loudly).

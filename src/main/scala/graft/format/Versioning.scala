@@ -2,7 +2,7 @@ package graft.format
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Three-way, uuid-keyed diff & merge over Graft snapshots — the
   * DataFrame-algebra re-design of the reference's merge engine
@@ -21,6 +21,18 @@ import org.apache.spark.sql.types.StructType
   *   pops    = uuid present in LCA, absent  → pop_resolution ours/theirs/both
   *             on one side                    (honor whose deletions)
   *   schema  = target-only columns are copied (merge.py:624-708)
+  *
+  * Cost model: a uuid that no manifest entry changed on either side
+  * since the LCA reads the same payload in all three snapshots, so its
+  * winner is ours' row. The callers therefore semi-join the three
+  * snapshots to the churn (the `_uuid`s of the entries that differ
+  * between the LCA and either side) before joining, and a merge commits
+  * only [[mergeDelta]] over ours' manifest: join width and bytes written
+  * are O(churn since the LCA), not O(table). The scans stay O(table).
+  * When the columns do not line up outside the churn — a column dropped,
+  * a rename not carried to every frame, a compaction that reset the
+  * rename chain (see [[uniformOutsideChurn]]) — every row is a candidate
+  * and the join is the unrestricted one.
   */
 object Versioning {
 
@@ -91,6 +103,10 @@ object Versioning {
       Set("ours", "theirs", "both").contains(r.pop),
       s"bad resolutions $r")
 
+  /** `_uuid` plus the winning payload's columns, in `schema` order. */
+  private def winnerRow(schema: StructType): Seq[Column] =
+    col(U) +: schema.fieldNames.filterNot(_ == U).map(n => col(s"_w.$n").as(n)).toSeq
+
   /** Merged snapshot (with `_uuid`) of ours+theirs vs their LCA. */
   def mergeSnapshots(lca: DataFrame, ours: DataFrame, theirs: DataFrame,
                      schema: StructType, r: MergeResolutions): DataFrame = {
@@ -98,9 +114,80 @@ object Versioning {
     threeWay(lca, ours, theirs, schema)
       .withColumn("_w", winner(r))
       .filter(col("_w").isNotNull)
-      .select(col(U) +: schema.fieldNames.filterNot(_ == U)
-        .map(n => col(s"_w.$n").as(n)).toIndexedSeq: _*)
+      .select(winnerRow(schema): _*)
   }
+
+  /** Column of [[mergeDelta]] saying how a row changes ours. */
+  val DeltaOp = "_delta_op"
+
+  /** The merge as a delta over ours: one row per uuid whose winner
+    * differs from ours' live row, compared null-safe over the whole
+    * payload. [[DeltaOp]] is `insert` (ours has no live row), `update`
+    * (the winner is a different full row) or `delete` (ours' live row
+    * loses; the payload columns are null). Every other uuid's winner is
+    * ours' row, so ours' snapshot with this delta applied is
+    * [[mergeSnapshots]] row for row.
+    */
+  def mergeDelta(lca: DataFrame, ours: DataFrame, theirs: DataFrame,
+                 schema: StructType, r: MergeResolutions): DataFrame = {
+    validate(r)
+    val w = col("_w"); val o = col("o")
+    threeWay(lca, ours, theirs, schema)
+      .withColumn("_w", winner(r))
+      .filter(!(w <=> o))
+      .select(winnerRow(schema) :+
+        when(w.isNull, lit("delete")).when(o.isNull, lit("insert"))
+          .otherwise(lit("update")).as(DeltaOp): _*)
+  }
+
+  /** Whether every column of `schema` reads the same values in all
+    * three frames on rows the LCA already held: the same LCA source
+    * column (or none, so null everywhere) in each frame, with one type.
+    * Then a uuid whose entries are shared by all three commits has equal
+    * payloads l = o = t, [[winner]] picks o, and the three-way join may
+    * skip it. `frames` gives each frame's commit and the renames applied
+    * to its snapshot; every frame's lineage must be known.
+    */
+  private[format] def uniformOutsideChurn(schema: StructType, lca: CommitMeta,
+      frames: Seq[(CommitMeta, Seq[(String, String)])]): Boolean = {
+    val lineages = frames.map { case (m, renames) => lineage(lca, m, renames) }
+    lineages.forall(_.isDefined) &&
+      schema.fieldNames.filterNot(_ == U).forall { n =>
+        val seen = lineages.flatten.map(_.get(n))
+        seen.map(_.flatMap(_._1)).distinct.size == 1 &&
+          seen.flatten.collect { case (Some(_), t) => t }.distinct.size <= 1
+      }
+  }
+
+  /** What each column of one frame holds on rows the LCA already had:
+    * column name → (the LCA column whose values it carries, or None for
+    * a column created since the LCA, null on every such row; its type).
+    * Built by walking the side's rename chain since the LCA (a drop
+    * marker moves the column onto a dead name, so a re-created column
+    * has no source), then `frameRenames` with `withColumnRenamed`
+    * semantics. None when no lineage can be given: the side's chain does
+    * not extend the LCA's (a compaction reset it) or a frame rename lands
+    * on a live name.
+    */
+  private def lineage(lca: CommitMeta, side: CommitMeta,
+      frameRenames: Seq[(String, String)])
+      : Option[Map[String, (Option[String], DataType)]] = {
+    if (!side.renames.startsWith(lca.renames)) return None
+    val carried = side.renames.drop(lca.renames.size)
+      .foldLeft(schemaOf(lca).fieldNames.map(n => n -> n).toMap) {
+        (m, p) => m.get(p(0)).fold(m)(src => m - p(0) + (p(1) -> src))
+      }
+    val start = schemaOf(side).fields
+      .map(f => f.name -> (carried.get(f.name), f.dataType)).toMap
+    frameRenames.foldLeft(Option(start)) {
+      case (Some(m), (from, to)) if m.contains(from) =>
+        if (m.contains(to)) None else Some(m - from + (to -> m(from)))
+      case (acc, _) => acc
+    }
+  }
+
+  private def schemaOf(m: CommitMeta): StructType =
+    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
 
   /** Conflict report (reference `detect_merge_conflict`,
     * commits.py:254-302): update/update rows changed differently on both

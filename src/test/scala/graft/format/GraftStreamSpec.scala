@@ -816,6 +816,69 @@ class GraftStreamSpec extends SparkSpec {
     assert(e2.getMessage.contains("folds prior state"))
   }
 
+  test("changeFeed continues across a delta merge; a resurrecting one folds") {
+    val root = tmpDir("gcdfmerge") + "/t"
+    val ds = GraftDataset.create(spark, root, schema2)
+    ds.append((1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"))
+    ds.commit("seed")
+    ds.checkout("dev", create = true)
+    ds.append(Seq((10L, "dev-new")).toDF("id", "v")); ds.commit("dev append")
+    ds.update(col("id") === 2L, Map("v" -> lit("dev-2"))); ds.commit("dev update")
+    ds.pop(col("id") === 3L); ds.commit("dev pop")
+    ds.checkout("main")
+    ds.update(col("id") === 4L, Map("v" -> lit("main-4"))); ds.commit("main update")
+    val q = spark.readStream.format("graft")
+      .option("changeFeed", "true").load(root)
+      .writeStream.format("memory").queryName("gcdfmerge_out")
+      .trigger(Trigger.ProcessingTime(0L))
+      .option("checkpointLocation", tmpDir("gcdfmergeckpt"))
+      .start()
+    q.processAllAvailable()
+    type Ev = (Option[Long], Option[String], Long, String)
+    def snap() = ds.snapshotWithUuid().select("id", "v", "_uuid")
+      .as[(Long, String, Long)].collect().map(r => r._3 -> r).toMap
+    val (ourId, before) = (ds.head.get, snap())
+    val mergeId = ds.merge("dev")
+    q.processAllAvailable()
+    val after = snap()
+    def evs(df: org.apache.spark.sql.DataFrame): Seq[Ev] =
+      df.filter(col("_commit_id") === mergeId)
+        .select("id", "v", "_uuid", "_change_type")
+        .as[(Option[Long], Option[String], Long, String)].collect().toSeq.sorted
+    val fed = evs(spark.table("gcdfmerge_out"))
+    assert(fed == evs(ds.changes(ourId, mergeId)))
+    // the events are exactly the snapshot difference across the merge
+    val want = (after.keySet -- before.keySet).toSeq.map { u =>
+        (Some(after(u)._1), Some(after(u)._2), u, "insert") } ++
+      (before.keySet -- after.keySet).toSeq.map(u =>
+        (None, None, u, "delete")) ++
+      (after.keySet intersect before.keySet).toSeq
+        .filter(u => after(u) != before(u)).map { u =>
+          (Some(after(u)._1), Some(after(u)._2), u, "update_postimage") }
+    assert(fed == want.sorted)
+    assert(fed.map(_._4).sorted == Seq("delete", "insert", "update_postimage"))
+    // ours popped 5, the branch kept it: pop = theirs resurrects 5 by
+    // rewriting the tombstone entry that holds it — history folded
+    ds.checkout("dev2", create = true)
+    ds.update(col("id") === 1L, Map("v" -> lit("dev2-1"))); ds.commit("dev2")
+    ds.checkout("main")
+    ds.pop(col("id") === 5L); ds.commit("pop 5")
+    val popId = ds.head.get
+    q.processAllAvailable()
+    val revived = ds.merge("dev2", Versioning.MergeResolutions(pop = "theirs"))
+    assert(ds.toDF.filter(col("id") === 5L).count() == 1)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+      q.awaitTermination(10000)
+    }
+    assert(err.getMessage.contains("folds prior state") ||
+      Option(err.getCause).exists(_.getMessage.contains("folds prior state")))
+    q.stop()
+    val e2 = intercept[IllegalArgumentException](
+      ds.changes(popId, revived).count())
+    assert(e2.getMessage.contains("folds prior state"))
+  }
+
   test("changeFeed and ignoreChanges are mutually exclusive") {
     val root = tmpDir("gcdfex") + "/t"
     val ds = GraftDataset.create(spark, root, schema2)
