@@ -464,8 +464,7 @@ object TextQueries {
             Dedup.simHashState(corpus, "text", "doc_id",
               fingerprint = Dedup.simHash60Md5),
             delta, "text", "doc_id", maxHamming = 2,
-            maxBucket = Int.MaxValue,
-            fingerprint = Dedup.simHash60Md5, fpBits = 60)
+            maxBucket = Int.MaxValue, fingerprint = Dedup.simHash60Md5)
           .select("doc_id").orderBy("doc_id")
       },
       Some("""WITH delta AS (
@@ -545,7 +544,7 @@ object TextQueries {
     QueryDef("q51_simhash_near_dup",
       (s, dir) => Dedup.simHashNearDup(docs(s, dir), "text", "doc_id",
           maxHamming = 2, maxBucket = Int.MaxValue,
-          fingerprint = Dedup.simHash60Md5, fpBits = 60)
+          fingerprint = Dedup.simHash60Md5)
         .orderBy("doc_id_a", "doc_id_b"),
       Some(duckSimHash60 +
         """ SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,

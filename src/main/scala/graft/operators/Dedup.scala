@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftnative.{InternalDf, RpLshBandsQ,
+  NativeExpressions => N}
 import graft.functions.{TextFunctions => T, VectorFunctions => V}
 
 /** Deduplication operators for training-data pipelines, all expressed as
@@ -14,6 +16,29 @@ import graft.functions.{TextFunctions => T, VectorFunctions => V}
   * these (its only dedup-adjacent op is `np.unique` inside aggregation —
   * muller/core/query/aggregate_vectorized.py:53-54); they are the
   * beyond-parity LLM-pipeline layer this engine adds.
+  *
+  * Every near-dup path is one SIGNATURE → CANDIDATES → VERIFY skeleton
+  * (the candidate-verify framework of set-similarity joins):
+  *  1. signature — a per-row feature, computed once per row after a
+  *     round-robin exchange over the cores ([[spread]]; the cost is
+  *     CPU-per-row, and a single small input file would otherwise run
+  *     the whole corpus in one task): a FENCED shingle set
+  *     ([[shingles]]), a MinHash signature ([[minHashState]]), a SimHash
+  *     fingerprint ([[simHashState]]) or a quantized vector;
+  *  2. candidates — per-row (band, bucket) keys ([[minHashBands]],
+  *     [[simHashBands]], RP-LSH bands, IVF cells) expanded into id pairs
+  *     per bucket ([[expandPairs]]) — never a corpus self-join — or, for
+  *     PPJoin, a prefix equi-join; the incrementals join delta buckets
+  *     against state buckets ([[crossCandidates]]). Buckets larger than
+  *     `maxBucket` drop out (the degenerate-flood guard);
+  *  3. verify — the candidate table joined to both sides' features by id
+  *     ([[verify]]) and scored exactly: Jaccard ([[jaccardAtLeast]]),
+  *     Hamming ([[hamming]]) or scaled-int cosine ([[cosineAtLeast]]).
+  *     The verify sides sit below an id-hash exchange (reused by both
+  *     join sides, so features are computed once) or, in the
+  *     incrementals, in a cached frame.
+  * The incrementals ([[minHashLshIncremental]], [[simHashIncremental]])
+  * share one survivor body ([[survivors]]) over their state functions.
   */
 object Dedup {
 
@@ -67,96 +92,39 @@ object Dedup {
       .select(cols.map(c => col(s"_r.$c").as(c)).toIndexedSeq: _*)
   }
 
-  // ---- MinHash + LSH ----------------------------------------------------
+  // ---- the signature → candidates → verify skeleton ----------------------
 
-  /** Seeds of the ENGINE-PORTABLE MinHash family (h_i = (a_i·H + b_i)
-    * mod p over the md5-32-bit shingle hash H): p is the Mersenne prime
-    * 2^31−1 and (a_i, b_i) come from a FIXED-SEED PRNG, so an external
-    * SQL oracle interpolates the identical constants (q66). */
-  val portableP: Long = 2147483647L
-  /** Multiplier of the portable band fold `acc = (acc·131 + v) mod p`. */
-  val portableBandMult: Long = 131L
-  def portableSeeds(numHashes: Int): (Array[Long], Array[Long]) = {
-    val rnd = new scala.util.Random(4242)
-    val a = Array.fill(numHashes)(1L + rnd.nextInt(portableP.toInt - 1))
-    val b = Array.fill(numHashes)(rnd.nextInt(portableP.toInt).toLong)
-    (a, b)
-  }
-
-  /** MinHash signature as one `_mh` array column of `numHashes` values
-    * over token `n`-gram shingles. The default hash family is murmur3 of
-    * the (shingle, seed) pair — evaluated per element with no UDF; the
-    * whole signature is a single projection (one pass over the shingle
-    * array per seed, all inside codegen). `portable = true` switches to
-    * the md5 Carter-Wegman family ([[portableSeeds]]) that a DuckDB/Trino
-    * oracle reproduces verbatim — same plan shape, ~the md5 cost of
-    * [[simHash60Md5]] per shingle.
-    */
-  def minHashSignature(df: DataFrame, textCol: String,
-                       numHashes: Int, shingleN: Int,
-                       portable: Boolean = false): DataFrame = {
-    val sig =
-      if (portable) {
-        val (a, b) = portableSeeds(numHashes)
-        org.apache.spark.sql.graftnative.NativeExpressions
-          .minHashSigMod(col("_sh"), a, b, portableP)
-      } else graft.functions.NativeExpressions.minHashSig(col("_sh"), numHashes)
-    // repartition first: signature cost is CPU-per-row, so partitioning
-    // must follow cores, not input file sizes (a single small parquet file
-    // would otherwise run the whole corpus on one task). The shingle
-    // column is FENCED (guide §4.4): unfenced, the size(_sh) > 0 filter
-    // pushes its definition below the repartition and re-tokenizes the
-    // corpus inside the single-task scan stage (measured 2.2-2.5 s per
-    // path on q66 at sf0.1), then the signature evaluates it again.
+  /** Round-robin over the session's cores (signature stage input). */
+  private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("_sh", graft.functions.NativeExpressions.fence(
-        T.tokenShingles(col(textCol), shingleN)))
-      .filter(size(col("_sh")) > 0)
-      .withColumn("_mh", sig)
-      .drop("_sh")
-  }
 
-  /** LSH banding: group the signature into `bands` bands of `rowsPerBand`
-    * hashes; two docs sharing ANY band bucket become a candidate pair.
-    * Returns candidate pairs (idCol_a < idCol_b), deduplicated.
-    *
-    * Scale shape: explode-to-bands (rows × bands), shuffle on
-    * (band, bucket-hash), self-join WITHIN buckets only — never a full
-    * cross join. Skew guard: buckets larger than `maxBucket` are
-    * DROPPED from candidate generation — silently, with no side output:
-    * a bucket that large is a degenerate near-identical flood, and the
-    * right tool for it is a content-dedup pass ([[exact]] /
-    * [[dedupCorpus]]) run FIRST, which collapses the flood before LSH
-    * ever sees it. Callers who need to know whether the guard fired can
-    * count oversized buckets from the same banding
-    * (`groupBy(band, bucket).count().filter(_ > maxBucket)`).
+  /** Hash-partition on `idCol` (verify side): an exchange ABOVE the
+    * per-row features, so both verify join sides (and the bucket
+    * branch) reuse it and the features run once per row — only
+    * exchanges are reused, a plain self-referenced subtree re-executes
+    * per side.
     */
-  def lshCandidates(sig: DataFrame, idCol: String, numHashes: Int,
-                    bands: Int, maxBucket: Int = 1000,
-                    portable: Boolean = false): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    // All band buckets come out of ONE native expression
-    // ([[MinHashBands]] / [[MinHashBandsMod]]), so even when
-    // CollapseProject inlines the signature into the generator below it
-    // is still evaluated once per row — no materialization barrier needed
-    // (the per-band `hash(slice(_mh, ...))` formulation this replaces
-    // recomputed the signature once PER BAND when inlined, higher-order
-    // array functions having no CSE).
-    val bandCol =
-      if (portable) org.apache.spark.sql.graftnative.NativeExpressions
-        .minHashBandsMod(col("_mh"), rowsPerBand, portableBandMult, portableP)
-      else graft.functions.NativeExpressions.minHashBands(col("_mh"), rowsPerBand)
-    val buckets = sig.select(col(idCol),
-        posexplode(bandCol).as(Seq("band", "bucket")))
-    // Pairs are generated per bucket from a grouped id list instead of a
-    // bucket self-join: a self-join re-executes the whole signature
-    // subtree once per side, while one groupBy runs it once; memory per
-    // group is bounded by the maxBucket cap (oversized buckets are
-    // degenerate near-identical floods, dropped here and flagged for an
-    // exact pass — same guard as before, now costing one aggregation).
-    expandPairs(buckets, idCol, maxBucket)
-  }
+  private def byId(df: DataFrame, idCol: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      col(idCol))
+
+  /** Token `n`-gram shingle set, FENCED (guide §4.4): unfenced, a
+    * `size(_sh) > 0` filter pushes the shingle definition below the
+    * repartition and re-tokenizes the corpus inside the single-task scan
+    * stage (measured 2.2-2.5 s per path on q66 at sf0.1), and
+    * CollapseProject inlines it into every consumer. The fence blocks
+    * pushdown only from above it: a caller's predicate on the input
+    * still reaches the scan.
+    */
+  private def shingles(textCol: String, n: Int): Column =
+    N.fence(T.tokenShingles(col(textCol), n))
+
+  /** (id, band, bucket) rows: one generator over a per-row array of band
+    * buckets.
+    */
+  private def buckets(df: DataFrame, idCol: String,
+                      bandCol: Column): DataFrame =
+    df.select(col(idCol), posexplode(bandCol).as(Seq("band", "bucket")))
 
   /** All (lo, hi) id pairs of each (band, bucket) group (lo < hi):
     * group → SORTED id list (sorted inside the aggregate, so `_ids` is an
@@ -165,7 +133,9 @@ object Dedup {
     * only O(1) attribute lookups. Sorting inside a downstream projection
     * instead would get inlined into the lambda bodies (Catalyst has no
     * CSE in lambdas) and re-sort per inner element — O(m³ log m) per
-    * bucket, which detonated on large exact buckets.
+    * bucket, which detonated on large exact buckets. A grouped id list
+    * instead of a bucket self-join: a self-join re-executes the whole
+    * signature subtree once per side, one groupBy runs it once.
     *
     * The result carries a MERGE (sort-merge) join hint: the planner
     * sizes a generator's output from its pre-explode child (a few
@@ -177,6 +147,14 @@ object Dedup {
     * the per-task execution pool at ~128 MB/task) — sort-merge spills
     * gracefully on both sides, and the verify sides already sit below
     * an id-hash exchange.
+    *
+    * Buckets larger than `maxBucket` are DROPPED — silently, with no
+    * side output: a bucket that large is a degenerate near-identical
+    * flood, and the right tool for it is a content-dedup pass
+    * ([[exact]] / [[dedupCorpus]]) run FIRST, which collapses the flood
+    * before LSH ever sees it. Callers who need to know whether the guard
+    * fired can count oversized buckets from the same banding
+    * (`groupBy(band, bucket).count().filter(_ > maxBucket)`).
     */
   private def expandPairs(buckets: DataFrame, idCol: String,
                           maxBucket: Int): DataFrame = {
@@ -193,8 +171,167 @@ object Dedup {
       .hint("merge")
   }
 
-  /** Full MinHash-LSH near-dup: candidates verified by exact Jaccard over
-    * the same shingle sets, keeping pairs with similarity >= threshold.
+  /** Candidate pairs (`<id>_a` from `stateBuckets`, `<id>_b` from
+    * `deltaBuckets`) sharing a (band, bucket): one equi-join, the delta
+    * side tiny, so state × state pairs never form. State buckets larger
+    * than `maxBucket` drop out first ([[expandPairs]]'s flood guard).
+    * Merge hint as in [[expandPairs]]: the pair table's size is
+    * estimated from the pre-explode generator children, while its REAL
+    * cardinality is the cross-bucket pair count — unhinted, the planner
+    * broadcasts or hash-builds it into the verify joins.
+    */
+  private def crossCandidates(deltaBuckets: DataFrame,
+                              stateBuckets: DataFrame, idCol: String,
+                              maxBucket: Int): DataFrame = {
+    val sb =
+      if (maxBucket == Int.MaxValue) stateBuckets
+      else stateBuckets.join(
+        stateBuckets.groupBy("band", "bucket").count()
+          .filter(col("count") > maxBucket).select("band", "bucket"),
+        Seq("band", "bucket"), "left_anti")
+    deltaBuckets.select(col(idCol).as(s"${idCol}_b"), col("band"),
+        col("bucket"))
+      .join(sb.select(col(idCol).as(s"${idCol}_a"), col("band"),
+        col("bucket")), Seq("band", "bucket"))
+      .select(s"${idCol}_a", s"${idCol}_b").distinct().hint("merge")
+  }
+
+  /** Joins candidate pairs (`<id>_a`, `<id>_b`) to side `a` and side `b`
+    * by id — every side column renamed with an `_a` / `_b` suffix — and
+    * keeps the pairs `score` passes.
+    */
+  private def verify(cand: DataFrame, idCol: String, a: DataFrame,
+                     b: DataFrame)(score: DataFrame => DataFrame)
+      : DataFrame = {
+    def side(df: DataFrame, sfx: String) =
+      df.select(df.columns.toIndexedSeq.map(c => col(c).as(c + sfx)): _*)
+    score(cand.join(side(a, "_a"), s"${idCol}_a")
+      .join(side(b, "_b"), s"${idCol}_b"))
+  }
+
+  /** Exact Jaccard |A∩B| / (|A|+|B|−|A∩B|) ≥ `t` of the `_sh` shingle
+    * sides (with their `_cnt` sizes) from ONE `array_intersect` — shingle
+    * arrays are distinct by construction, so no `array_union` pass is
+    * needed for |A∪B|.
+    *
+    * The intersection count lands in its own FENCED projection
+    * (`_jint`) so it is evaluated ONCE per candidate pair: unfenced,
+    * the `jaccard >= threshold` filter pushes the whole
+    * `array_intersect` into its predicate and the two references in
+    * the ratio inline it again — q50's verify stage measured 93 s of
+    * CPU at sf0.1 (≈4 evaluations per pair); fenced it is one.
+    */
+  private def jaccardAtLeast(t: Double)(df: DataFrame): DataFrame =
+    df.withColumn("_jint", N.fence(
+        size(array_intersect(col("_sh_a"), col("_sh_b")))))
+      .withColumn("jaccard", col("_jint").cast("double") /
+        (col("_cnt_a") + col("_cnt_b") - col("_jint")).cast("double"))
+      .filter(col("jaccard") >= t)
+
+  private def hammingAtMost(r: Int)(df: DataFrame): DataFrame =
+    df.withColumn("hamming", hamming(col("_fp_a"), col("_fp_b")))
+      .filter(col("hamming") <= r)
+
+  /** Scaled-int cosine of the `_qv` sides over their `_nrm` norms.
+    * try_divide, the codebase's zero-divisor convention (KnnJoin,
+    * TextFunctions): a zero-norm embedding (a failed embedding call
+    * quantizes to all zeros) pairs with its LSH twins but must fail the
+    * verify as null, not ride IEEE NaN through the filter.
+    */
+  private def cosineAtLeast(t: Double)(df: DataFrame): DataFrame =
+    df.withColumn("cos_sim",
+        try_divide(V.dotQ(col("_qv_a"), col("_qv_b")).cast("double"),
+          col("_nrm_a") * col("_nrm_b")))
+      .filter(col("cos_sim") >= t)
+
+  /** Quantized vector `_qv` with its norm `_nrm`. */
+  private def withNorm(df: DataFrame): DataFrame =
+    df.withColumn("_nrm", sqrt(V.dotQ(col("_qv"), col("_qv")).cast("double")))
+
+  /** Bounded ring of live incremental-dedup state caches: the
+    * incremental paths consume their delta/state frames from several
+    * subtrees whose column pruning de-canonicalizes the hoisted exchange
+    * copies, so exchange reuse cannot be relied on to run the expensive
+    * tokenize+fingerprint lineage once — a persisted InternalRow RDD can
+    * (measured on q104: four ~3-8 s fingerprint stages collapse to one
+    * per side). The bound keeps a long-lived session from accumulating
+    * state-sized caches on local disk.
+    */
+  private val stateCaches = new InternalDf.CacheRing(8)
+
+  /** The incremental drop rule: a delta row is dropped iff (a) some
+    * STATE row shares a band bucket with it and passes `score`, or (b)
+    * some EARLIER delta row (smaller id) does — the greedy
+    * keep-lowest-id rule, applied pairwise (non-transitive: a delta row
+    * dropped against the state still shadows later delta rows that
+    * duplicate it, which matches "both copies of an already-seen doc
+    * are dropped"). State-side buckets larger than `maxBucket` drop out
+    * ([[crossCandidates]]); delta-internal pairs go through
+    * [[expandPairs]] with the same cap. Returns surviving delta rows
+    * with all their columns.
+    *
+    * Both state frames are cached once ([[stateCaches]]): the band
+    * extraction, the oversized-bucket count and the verify sides each
+    * consume them, and each consumer shuffles the small state rows
+    * directly to the key it needs. `side` selects a state frame's verify
+    * features.
+    */
+  private def survivors(state: DataFrame, delta: DataFrame,
+                        deltaState: DataFrame, idCol: String,
+                        bandCol: Column, maxBucket: Int,
+                        side: DataFrame => DataFrame,
+                        score: DataFrame => DataFrame): DataFrame = {
+    val ds = stateCaches.cache(deltaState)
+    val ss = stateCaches.cache(state)
+    val db = buckets(ds, idCol, bandCol)
+    def dropped(cand: DataFrame, aSide: DataFrame): DataFrame =
+      verify(cand, idCol, side(aSide), side(ds))(score)
+        .select(col(s"${idCol}_b").as(idCol))
+    val drops = dropped(
+        crossCandidates(db, buckets(ss, idCol, bandCol), idCol, maxBucket), ss)
+      .unionByName(dropped(expandPairs(db, idCol, maxBucket), ds))
+      .distinct()
+    delta.join(drops, Seq(idCol), "left_anti")
+  }
+
+  // ---- MinHash + LSH ----------------------------------------------------
+
+  /** Seeds of the ENGINE-PORTABLE MinHash family (h_i = (a_i·H + b_i)
+    * mod p over the md5-32-bit shingle hash H): p is the Mersenne prime
+    * 2^31−1 and (a_i, b_i) come from a FIXED-SEED PRNG, so an external
+    * SQL oracle interpolates the identical constants (q66). */
+  val portableP: Long = 2147483647L
+  /** Multiplier of the portable band fold `acc = (acc·131 + v) mod p`. */
+  val portableBandMult: Long = 131L
+  def portableSeeds(numHashes: Int): (Array[Long], Array[Long]) = {
+    val rnd = new scala.util.Random(4242)
+    val a = Array.fill(numHashes)(1L + rnd.nextInt(portableP.toInt - 1))
+    val b = Array.fill(numHashes)(rnd.nextInt(portableP.toInt).toLong)
+    (a, b)
+  }
+
+  /** LSH band buckets of the `_mh` signature: `bands` bands of
+    * `numHashes / bands` hashes each; two docs sharing ANY band bucket
+    * become a candidate pair. All buckets come out of ONE native
+    * expression ([[org.apache.spark.sql.graftnative.MinHashBands]] /
+    * `MinHashBandsMod`), so even when CollapseProject inlines the
+    * signature into the generator it is evaluated once per row (the
+    * per-band `hash(slice(_mh, ...))` formulation this replaces
+    * recomputed the signature once PER BAND when inlined, higher-order
+    * array functions having no CSE).
+    */
+  private def minHashBands(numHashes: Int, bands: Int,
+                           portable: Boolean): Column = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val rowsPerBand = numHashes / bands
+    if (portable)
+      N.minHashBandsMod(col("_mh"), rowsPerBand, portableBandMult, portableP)
+    else N.minHashBands(col("_mh"), rowsPerBand)
+  }
+
+  /** Full MinHash-LSH near-dup: candidates from [[minHashState]]'s
+    * signature bands, verified by exact Jaccard over the same shingle
+    * sets, keeping pairs with similarity >= threshold.
     * `portable = true` runs the md5 Carter-Wegman hash family end-to-end,
     * making the WHOLE pipeline — candidates included — reproducible in an
     * external SQL engine (q66's DuckDB oracle replays signature, banding,
@@ -204,35 +341,29 @@ object Dedup {
                  numHashes: Int = 32, bands: Int = 8, shingleN: Int = 3,
                  threshold: Double = 0.7, portable: Boolean = false,
                  maxBucket: Int = 1000): DataFrame = {
-    val sig = minHashSignature(df, textCol, numHashes, shingleN, portable)
-    val cand = lshCandidates(sig, idCol, numHashes, bands, maxBucket, portable)
-    // Shingle table for exact-Jaccard verification, hash-partitioned on id
-    // ABOVE the shingle projection: both join sides below reference the
-    // same exchange, so Spark's ReusedExchange computes the shingles once
-    // (a plain self-referenced subtree would re-execute per side — only
-    // exchanges are reused).
-    val sh = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol), graft.functions.NativeExpressions.fence(
-        T.tokenShingles(col(textCol), shingleN)).as("_sh"))
-      .withColumn("_cnt", size(col("_sh")))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism, col(idCol))
-    withJaccard(cand
-        .join(sh.select(col(idCol).as(s"${idCol}_a"), col("_sh").as("_sa"),
-          col("_cnt").as("_ca")), s"${idCol}_a")
-        .join(sh.select(col(idCol).as(s"${idCol}_b"), col("_sh").as("_sb"),
-          col("_cnt").as("_cb")), s"${idCol}_b"),
-        col("_sa"), col("_sb"), col("_ca"), col("_cb"))
-      .filter(col("jaccard") >= threshold)
+    val bandCol = minHashBands(numHashes, bands, portable)
+    val cand = expandPairs(buckets(minHashState(df, textCol, idCol,
+      numHashes, shingleN, portable), idCol, bandCol), idCol, maxBucket)
+    val sh = byId(spread(df)
+      .select(col(idCol), shingles(textCol, shingleN).as("_sh"))
+      .withColumn("_cnt", size(col("_sh"))), idCol)
+    verify(cand, idCol, sh, sh)(jaccardAtLeast(threshold))
       .select(s"${idCol}_a", s"${idCol}_b", "jaccard")
   }
 
   /** Per-row dedup STATE — `(id, _sh shingles, _mh signature)` — the
     * persistable artifact [[minHashLshIncremental]] joins new data
-    * against. At 100 TB the state is computed once per corpus and
-    * carried forward per increment
+    * against, and the signature stage of [[minHashLsh]]. At 100 TB the
+    * state is computed once per corpus and carried forward per increment
     * (`state.unionByName(minHashState(survivors, ...))`), so an
     * increment never re-tokenizes or re-hashes the corpus.
+    *
+    * The default hash family is murmur3 of the (shingle, seed) pair —
+    * evaluated per element with no UDF; the whole signature is a single
+    * projection. `portable = true` switches to the md5 Carter-Wegman
+    * family ([[portableSeeds]]) that a DuckDB/Trino oracle reproduces
+    * verbatim — same plan shape, ~the md5 cost of [[simHash60Md5]] per
+    * shingle. Rows too short to shingle are left out (they never pair).
     */
   def minHashState(df: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 32, shingleN: Int = 3,
@@ -240,12 +371,10 @@ object Dedup {
     val sig =
       if (portable) {
         val (a, b) = portableSeeds(numHashes)
-        org.apache.spark.sql.graftnative.NativeExpressions
-          .minHashSigMod(col("_sh"), a, b, portableP)
-      } else graft.functions.NativeExpressions.minHashSig(col("_sh"), numHashes)
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .withColumn("_sh", graft.functions.NativeExpressions.fence(
-        T.tokenShingles(col(textCol), shingleN)))
+        N.minHashSigMod(col("_sh"), a, b, portableP)
+      } else N.minHashSig(col("_sh"), numHashes)
+    spread(df)
+      .withColumn("_sh", shingles(textCol, shingleN))
       .filter(size(col("_sh")) > 0)
       .select(col(idCol), col("_sh"), sig.as("_mh"))
   }
@@ -258,17 +387,9 @@ object Dedup {
     * equi-join of delta buckets against corpus buckets, and O(delta)
     * internal pairs — never a corpus re-dedup.
     *
-    * A delta row is dropped iff (a) some STATE row shares an LSH band
-    * bucket with it at Jaccard ≥ threshold, or (b) some EARLIER delta
-    * row (smaller id) does — the greedy keep-lowest-id rule, applied
-    * pairwise (non-transitive: a delta row dropped against the corpus
-    * still shadows later delta rows that duplicate it, which matches
-    * "both copies of an already-seen doc are dropped"). Rows too short
-    * to shingle never pair and always survive (same contract as
-    * [[minHashLsh]]). Corpus-side buckets larger than `maxBucket` drop
-    * out of candidate generation ([[lshCandidates]]'s degenerate-flood
-    * guard); delta-internal pairs go through [[expandPairs]] with the
-    * same cap.
+    * The drop rule is [[survivors]]' with Jaccard ≥ threshold. Rows too
+    * short to shingle never pair and always survive (same contract as
+    * [[minHashLsh]]).
     *
     * Returns surviving delta rows with ALL their columns; persist the
     * next state as `state.unionByName(minHashState(survivors, ...))`.
@@ -278,59 +399,12 @@ object Dedup {
                             numHashes: Int = 32, bands: Int = 8,
                             shingleN: Int = 3, threshold: Double = 0.7,
                             portable: Boolean = false,
-                            maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    def bandsOf(st: DataFrame): DataFrame = {
-      val bandCol =
-        if (portable) org.apache.spark.sql.graftnative.NativeExpressions
-          .minHashBandsMod(col("_mh"), rowsPerBand, portableBandMult, portableP)
-        else graft.functions.NativeExpressions
-          .minHashBands(col("_mh"), rowsPerBand)
-      st.select(col(idCol), posexplode(bandCol).as(Seq("band", "bucket")))
-    }
-    // CACHE both sides' planned rows once (r21, [[cacheFrame]]): band
-    // extraction, the oversized-bucket count, and the verify sides each
-    // consume (id, _sh, _mh) through differently-pruned subtrees, so
-    // the r20 hoisted-exchange reuse de-canonicalized and the expensive
-    // tokenize+shingle+signature lineage re-ran per consumer; the cache
-    // is one evaluation by construction, and each consumer shuffles the
-    // small state rows directly to the key it needs (one hop fewer
-    // than through the hoisted id-exchange)
-    val dstate = cacheFrame(
-      minHashState(delta, textCol, idCol, numHashes, shingleN, portable))
-    val sstate = cacheFrame(state)
-    val db = bandsOf(dstate)
-    val cbAll = bandsOf(sstate)
-    val cb =
-      if (maxBucket == Int.MaxValue) cbAll
-      else cbAll.join(
-        cbAll.groupBy("band", "bucket").count()
-          .filter(col("count") > maxBucket).select("band", "bucket"),
-        Seq("band", "bucket"), "left_anti")
-    // cross candidates: one equi-join on (band, bucket), delta side tiny
-    val crossCand = db.select(col(idCol).as("_db"), col("band"), col("bucket"))
-      .join(cb.select(col(idCol).as("_da"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select("_da", "_db").distinct().hint("merge")
-    val deltaCand = expandPairs(db, idCol, maxBucket)
-      .select(col(s"${idCol}_a").as("_da"), col(s"${idCol}_b").as("_db"))
-    def shingleSide(st: DataFrame, as: String, sh: String, cnt: String) =
-      st.select(col(idCol).as(as), col("_sh").as(sh),
-        size(col("_sh")).as(cnt))
-    // exact-Jaccard verify; b-side (the delta row) is the drop target
-    def droppedIds(cand: DataFrame, aSide: DataFrame): DataFrame =
-      withJaccard(cand
-          .join(shingleSide(aSide, "_da", "_sa", "_na"), "_da")
-          .join(shingleSide(dstate, "_db", "_sb", "_nb"), "_db"),
-          col("_sa"), col("_sb"), col("_na"), col("_nb"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("_db").as(idCol))
-    val dropped = droppedIds(crossCand, sstate)
-      .unionByName(droppedIds(deltaCand, dstate))
-      .distinct()
-    delta.join(dropped, Seq(idCol), "left_anti")
-  }
+                            maxBucket: Int = 1000): DataFrame =
+    survivors(state, delta,
+      minHashState(delta, textCol, idCol, numHashes, shingleN, portable),
+      idCol, minHashBands(numHashes, bands, portable), maxBucket,
+      _.select(col(idCol), col("_sh"), size(col("_sh")).as("_cnt")),
+      jaccardAtLeast(threshold))
 
   // ---- exact n-gram Jaccard (the oracle-checkable near-dup path) --------
 
@@ -367,21 +441,14 @@ object Dedup {
                         shingleN: Int, threshold: Double,
                         blockCol: Option[String] = None): DataFrame = {
     val blk = blockCol.toSeq
-    // shingle compute is CPU-per-row → first exchange spreads rows over
-    // cores (input may be one file = one partition); the SECOND exchange
-    // sits ABOVE the computed shingles so all four downstream consumers
-    // (both prefix-join sides, both verify sides) reuse one evaluation
-    // per row instead of re-running the shingle transform per subtree
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val base = df
-      .repartition(par)
+    // the id exchange feeds all four consumers: both prefix-join sides
+    // and both verify sides
+    val base = byId(spread(df)
       .select(
         (Seq(col(idCol).as("_id")) ++ blk.map(col)) :+
-          graft.functions.NativeExpressions.fence(
-            T.tokenShingles(col(textCol), shingleN)).as("_sh"): _*)
+          shingles(textCol, shingleN).as("_sh"): _*)
       .withColumn("_cnt", size(col("_sh")))
-      .filter(col("_cnt") > 0)
-      .repartition(par, col("_id"))
+      .filter(col("_cnt") > 0), "_id")
     // per-row prefix under the (hash, shingle) total order; `_pos` is the
     // token's 1-based position in the FULL ordered array (the prefix is
     // its head, so prefix positions ARE full-array positions), feeding
@@ -415,16 +482,11 @@ object Dedup {
           lit(1) + least(col("a._cnt") - col("a._pos"),
             col("b._cnt") - col("b._pos")) >= overlapNeeded)(_ && _)
     val cand = prefix.as("a").join(prefix.as("b"), joinCond)
-      .select(col("a._id").as("_ida"), col("b._id").as("_idb"))
+      .select(col("a._id").as("_id_a"), col("b._id").as("_id_b"))
       .distinct()
-    withJaccard(cand
-        .join(base.select(col("_id").as("_ida"), col("_sh").as("_sha"),
-          col("_cnt").as("_ca")), "_ida")
-        .join(base.select(col("_id").as("_idb"), col("_sh").as("_shb"),
-          col("_cnt").as("_cb")), "_idb"),
-        col("_sha"), col("_shb"), col("_ca"), col("_cb"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("_ida").as(s"${idCol}_a"), col("_idb").as(s"${idCol}_b"),
+    val side = base.select("_id", "_sh", "_cnt")
+    verify(cand, "_id", side, side)(jaccardAtLeast(threshold))
+      .select(col("_id_a").as(s"${idCol}_a"), col("_id_b").as(s"${idCol}_b"),
         col("jaccard"))
   }
 
@@ -458,14 +520,28 @@ object Dedup {
 
   // ---- SimHash ----------------------------------------------------------
 
+  /** A SimHash fingerprint function together with its width: the
+    * pigeonhole bands ([[simHashBands]]) split exactly `bits` bits, so
+    * band layout and fingerprint cannot disagree (a 32-bit fingerprint
+    * banded as 60 bits leaves its high bands constant 0; the flood guard
+    * drops those buckets, fewer than `maxHamming + 1` bands see the
+    * differing bits, and pairs are lost silently). [[simHash32]] and
+    * [[simHash60Md5]] are the provided instances.
+    */
+  final case class Fingerprint(bits: Int, of: Column => Column)
+      extends (Column => Column) {
+    require(bits > 0 && bits <= 64, s"bad fingerprint width $bits")
+    def apply(textCol: Column): Column = of(textCol)
+  }
+
   /** 32-bit SimHash over tokens: per bit, sum +1/-1 weighted by token
     * presence; sign → bit. Hamming-close fingerprints = near-dups.
     * Native codegen'd expression (one murmur3 + 32 integer ops per token);
     * [[simHash32Hof]] keeps the pure-HOF twin the equivalence spec pins
     * the semantics to.
     */
-  def simHash32(textCol: Column): Column =
-    graft.functions.NativeExpressions.simHash32(T.tokens(textCol))
+  val simHash32: Fingerprint =
+    Fingerprint(32, t => N.simHash32(T.tokens(t)))
 
   /** The original higher-order-function formulation — equivalence oracle
     * for the native expression (bit positions unrolled at plan-build
@@ -513,10 +589,8 @@ object Dedup {
     * DuckDB oracle's `COALESCE(fp.simhash, 0)` yields for both cases
     * (a NULL/empty text produces no token rows oracle-side).
     */
-  def simHash60Md5(textCol: Column): Column =
-    coalesce(
-      graft.functions.NativeExpressions.simHash60Md5(T.tokens(textCol)),
-      lit(0L))
+  val simHash60Md5: Fingerprint =
+    Fingerprint(60, t => coalesce(N.simHash60Md5(T.tokens(t)), lit(0L)))
 
   /** The original md5-HOF formulation — equivalence oracle for the native
     * [[org.apache.spark.sql.graftnative.SimHash60Md5F]] expression (NOT
@@ -529,118 +603,55 @@ object Dedup {
   /** Hamming distance between two int64 fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Bounded registry of live incremental-dedup state caches (the
-    * [[GraphRouting]] assignment-cache pattern): the incremental paths
-    * consume their delta/state frames from several subtrees whose
-    * column pruning de-canonicalizes the hoisted exchange copies, so
-    * exchange reuse cannot be relied on to run the expensive
-    * tokenize+fingerprint lineage once — a persisted InternalRow RDD
-    * can (measured on q104: four ~3-8 s fingerprint stages collapse to
-    * one per side). Blocks are reference-tracked (ContextCleaner
-    * reclaims them with the frame); the bound keeps a long-lived
-    * session from accumulating state-sized caches on local disk.
-    */
-  private val MaxLiveStateCaches = 8
-  private val liveStateCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]
-  private def cacheFrame(df: DataFrame): DataFrame = {
-    val (cached, rdd) =
-      org.apache.spark.sql.graftnative.InternalDf.detachBatchCached(df)
-    liveStateCaches.add(rdd)
-    while (liveStateCaches.size > MaxLiveStateCaches) {
-      val old = liveStateCaches.poll()
-      if (old != null) old.unpersist(blocking = false)
-    }
-    cached
-  }
-
-  /** Exact Jaccard |A∩B| / (|A|+|B|−|A∩B|) from ONE `array_intersect` —
-    * the single verify formula behind the batch ([[minHashLsh]]),
-    * incremental ([[minHashLshIncremental]]), and PPJoin
-    * ([[ngramJaccardPairs]]) paths, which must stay bit-identical to
-    * each other (shingle arrays are distinct by construction, so no
-    * `array_union` pass is needed for |A∪B|).
-    *
-    * The intersection count lands in its own FENCED projection
-    * (`_jint`) so it is evaluated ONCE per candidate pair: unfenced,
-    * the `jaccard >= threshold` filter pushes the whole
-    * `array_intersect` into its predicate and the two references in
-    * the ratio inline it again — q50's verify stage measured 93 s of
-    * CPU at sf0.1 (≈4 evaluations per pair); fenced it is one. Callers
-    * filter/emit `jaccard` (cheap arithmetic over `_jint`) and drop
-    * `_jint`.
-    */
-  private def withJaccard(df: DataFrame, sa: Column, sb: Column,
-                          ca: Column, cb: Column): DataFrame =
-    df.withColumn("_jint", graft.functions.NativeExpressions.fence(
-        size(array_intersect(sa, sb))))
-      .withColumn("jaccard",
-        col("_jint").cast("double") / (ca + cb - col("_jint")).cast("double"))
-
   /** All-ones mask of the low `w` bits. `1L << 64` wraps to 1 in JVM
-    * shift semantics, so a full-width band (fpBits = 64 with
+    * shift semantics, so a full-width band (a 64-bit fingerprint with
     * maxHamming = 0) must mask with -1 — the wrapped mask of 0 would
     * silently throw every fingerprint into one bucket, which the flood
     * guard then drops, returning ZERO pairs for an exact-duplicate query.
     */
   private def lowBits(w: Int): Long = if (w >= 64) -1L else (1L << w) - 1
 
-  /** SimHash near-dup pairs with banded candidate generation: split the
-    * 32-bit fingerprint into `maxHamming + 1` bit bands — two fingerprints
-    * within hamming distance r must agree EXACTLY on at least one of r+1
-    * bands (pigeonhole), so candidates are pairs sharing any band value,
-    * then verified by exact hamming. Same grouped pair-expansion shape as
-    * MinHash LSH — never a corpus self-join.
+  /** Pigeonhole bit bands of the `_fp` fingerprint: `maxHamming + 1`
+    * bands (band b = bits [b·width, ...); the last absorbs the
+    * remainder). Two fingerprints within hamming distance r agree
+    * EXACTLY on at least one of r+1 bands, so band agreement is a
+    * complete candidate filter.
+    */
+  private def simHashBands(fp: Fingerprint, maxHamming: Int): Column = {
+    require(maxHamming >= 0 && maxHamming < fp.bits,
+      s"maxHamming in [0, ${fp.bits})")
+    val bands = maxHamming + 1
+    val width = fp.bits / bands
+    array((0 until bands).map { b =>
+      val lo = b * width
+      val w = if (b == bands - 1) fp.bits - lo else width
+      shiftright(col("_fp"), lo).bitwiseAND(lit(lowBits(w)))
+    }: _*)
+  }
+
+  /** SimHash near-dup pairs: candidates from [[simHashBands]] over
+    * [[simHashState]]'s fingerprints, verified by exact hamming — with
+    * an uncapped `maxBucket`, exactly the pairs within `maxHamming`.
     */
   def simHashNearDup(df: DataFrame, textCol: String, idCol: String,
                      maxHamming: Int, maxBucket: Int = 64,
-                     fingerprint: Column => Column = simHash32,
-                     fpBits: Int = 32): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < fpBits,
-      s"maxHamming in [0, $fpBits)")
-    val bands = maxHamming + 1
-    val width = fpBits / bands
-    // Hash-exchange ABOVE the fingerprint projection: the bucket branch and
-    // both verify join sides all consume (id, _sh32), so the exchange is
-    // reused and the expensive simHash32 aggregate runs ONCE per row total
-    // (without it, band extraction inlines the fingerprint per band —
-    // HOFs have no CSE — and each join side re-executes the subtree).
-    val fp = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol), fingerprint(col(textCol)).as("_sh32"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism, col(idCol))
-    // band b = bits [b*width, ...); the last band absorbs the remainder
-    val bandCols = (0 until bands).map { b =>
-      val lo = b * width
-      val w = if (b == bands - 1) fpBits - lo else width
-      struct(lit(b).as("band"),
-        shiftright(col("_sh32"), lo).bitwiseAND(lit(lowBits(w))).as("bucket"))
-    }
-    val buckets = fp.withColumn("_bb", explode(array(bandCols: _*)))
-      .select(col(idCol), col("_sh32"),
-        col("_bb.band").as("band"), col("_bb.bucket").as("bucket"))
-    val cand = expandPairs(buckets, idCol, maxBucket)
-    val fps = fp.select(col(idCol), col("_sh32"))
-    cand
-      .join(fps.withColumnRenamed(idCol, s"${idCol}_a")
-        .withColumnRenamed("_sh32", "_fa"), s"${idCol}_a")
-      .join(fps.withColumnRenamed(idCol, s"${idCol}_b")
-        .withColumnRenamed("_sh32", "_fb"), s"${idCol}_b")
-      .withColumn("hamming", hamming(col("_fa"), col("_fb")))
-      .filter(col("hamming") <= maxHamming)
+                     fingerprint: Fingerprint = simHash32): DataFrame = {
+    val bandCol = simHashBands(fingerprint, maxHamming)
+    val fp = byId(simHashState(df, textCol, idCol, fingerprint), idCol)
+    verify(expandPairs(buckets(fp, idCol, bandCol), idCol, maxBucket),
+        idCol, fp, fp)(hammingAtMost(maxHamming))
       .select(s"${idCol}_a", s"${idCol}_b", "hamming")
   }
 
   /** Persistable SimHash corpus state: one int64 fingerprint per doc —
     * the SMALLEST of the incremental-dedup states (8 bytes + id; a
     * billion-doc corpus is ~16 GB of state vs the shingle arrays
-    * [[minHashState]] must carry for exact-Jaccard verification).
+    * [[minHashState]] must carry for exact-Jaccard verification), and
+    * the signature stage of [[simHashNearDup]].
     */
   def simHashState(df: DataFrame, textCol: String, idCol: String,
-                   fingerprint: Column => Column = simHash32): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .select(col(idCol), fingerprint(col(textCol)).as("_fp"))
+                   fingerprint: Fingerprint = simHash32): DataFrame =
+    spread(df).select(col(idCol), fingerprint(col(textCol)).as("_fp"))
 
   /** Incremental SimHash near-dup: the surviving rows of a NEW batch
     * against a persisted fingerprint state ([[simHashState]]) — the
@@ -648,18 +659,9 @@ object Dedup {
     * cheapest of the incremental family (candidate verification is one
     * `bit_count(xor)` per pair; no shingle arrays move).
     *
-    * A delta row is dropped iff a state row sits within `maxHamming`
-    * of its fingerprint, or an EARLIER delta row (smaller id) does —
-    * the same greedy keep-lowest-id rule as the other incrementals,
-    * applied over ALL earlier delta rows (a delta row dropped against
-    * the corpus still shadows later delta rows that duplicate it).
-    * Candidates come from the pigeonhole bit-bands of
-    * [[simHashNearDup]]: `maxHamming + 1` bands, agreement on any one
-    * is necessary for hamming ≤ maxHamming, so with an uncapped
-    * `maxBucket` the drop rule is EXACT. Corpus-side buckets larger
-    * than `maxBucket` drop out of candidate generation (degenerate-
-    * flood guard); delta-internal pairs go through [[expandPairs]]
-    * with the same cap.
+    * The drop rule is [[survivors]]' with hamming ≤ `maxHamming`; the
+    * candidates are [[simHashNearDup]]'s pigeonhole bands, so with an
+    * uncapped `maxBucket` the drop rule is EXACT.
     *
     * Returns surviving delta rows with all their columns; carry the
     * state forward as
@@ -679,63 +681,10 @@ object Dedup {
   def simHashIncremental(state: DataFrame, delta: DataFrame,
                          textCol: String, idCol: String,
                          maxHamming: Int, maxBucket: Int = 64,
-                         fingerprint: Column => Column = simHash32,
-                         fpBits: Int = 32): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < fpBits,
-      s"maxHamming in [0, $fpBits)")
-    val bands = maxHamming + 1
-    val width = fpBits / bands
-    // CACHE both sides' (id, _fp) rows once (r21, [[cacheFrame]]): the
-    // bucket branch, the oversized-bucket count, and the verify sides
-    // consume them through differently-pruned subtrees, so exchange
-    // reuse de-canonicalizes and the md5 fingerprint lineage re-ran per
-    // consumer (measured: four ~3-8 s stages on q104 at sf0.1 → one per
-    // side). 16 B/row: the smallest cache in the family.
-    val dfp = cacheFrame(simHashState(delta, textCol, idCol, fingerprint))
-    val sfp = cacheFrame(state)
-    def buckets(fp: DataFrame): DataFrame = {
-      val bandCols = (0 until bands).map { b =>
-        val lo = b * width
-        val w = if (b == bands - 1) fpBits - lo else width
-        struct(lit(b).as("band"),
-          shiftright(col("_fp"), lo).bitwiseAND(lit(lowBits(w)))
-            .as("bucket"))
-      }
-      fp.withColumn("_bb", explode(array(bandCols: _*)))
-        .select(col(idCol), col("_bb.band").as("band"),
-          col("_bb.bucket").as("bucket"))
-    }
-    val db = buckets(dfp)
-    val cbAll = buckets(sfp)
-    val cb =
-      if (maxBucket == Int.MaxValue) cbAll
-      else cbAll.join(
-        cbAll.groupBy("band", "bucket").count()
-          .filter(col("count") > maxBucket).select("band", "bucket"),
-        Seq("band", "bucket"), "left_anti")
-    // merge hint, as in minHashLshIncremental's crossCand: the pair
-    // table's size is estimated from the pre-explode generator children,
-    // while its REAL cardinality is the cross-bucket pair count — an
-    // unhinted planner broadcast/hash-builds it into the verify joins
-    // (the driver-OOM class expandPairs documents)
-    val crossCand = db.select(col(idCol).as("_db"), col("band"), col("bucket"))
-      .join(cb.select(col(idCol).as("_da"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .select("_da", "_db").distinct().hint("merge")
-    val deltaCand = expandPairs(db, idCol, maxBucket)
-      .select(col(s"${idCol}_a").as("_da"), col(s"${idCol}_b").as("_db"))
-    def fpSide(fp: DataFrame, as: String, f: String) =
-      fp.select(col(idCol).as(as), col("_fp").as(f))
-    def droppedIds(cand: DataFrame, aSide: DataFrame): DataFrame = cand
-      .join(fpSide(aSide, "_da", "_fa"), "_da")
-      .join(fpSide(dfp, "_db", "_fb"), "_db")
-      .filter(hamming(col("_fa"), col("_fb")) <= maxHamming)
-      .select(col("_db").as(idCol))
-    val dropped = droppedIds(crossCand, sfp)
-      .unionByName(droppedIds(deltaCand, dfp))
-      .distinct()
-    delta.join(dropped, Seq(idCol), "left_anti")
-  }
+                         fingerprint: Fingerprint = simHash32): DataFrame =
+    survivors(state, delta, simHashState(delta, textCol, idCol, fingerprint),
+      idCol, simHashBands(fingerprint, maxHamming), maxBucket,
+      _.select(col(idCol), col("_fp")), hammingAtMost(maxHamming))
 
   // ---- embedding cosine near-dup ----------------------------------------
 
@@ -771,9 +720,7 @@ object Dedup {
                           portableDim: Int = 0): DataFrame = {
     // Column pruning splits this into two single-purpose branches: the
     // bucket branch computes ONLY `_bkts` (qint/norm pruned away) and the
-    // verify branch ONLY `_qv`/`_nrm` (buckets pruned); the hash-exchange
-    // on the verify branch is then reused across both join sides, so each
-    // expensive expression runs once per row total.
+    // verify branch ONLY `_qv`/`_nrm` (buckets pruned).
     // `equalCols` are extra exact-equality constraints (e.g. a label)
     // verified on the candidate pairs — they ride the verify join instead
     // of becoming a low-cardinality blocking key, so the self-join stays
@@ -785,44 +732,24 @@ object Dedup {
     // because the weight table is built at plan time.
     val bkts =
       if (portableDim > 0)
-        org.apache.spark.sql.graftnative.NativeExpressions.rpLshBandsQ(
-          V.qint(col(vecCol)), planesPerBand, bands, portableDim,
-          org.apache.spark.sql.graftnative.RpLshBandsQ
-            .planeWeights(bands, planesPerBand, portableDim))
-      else org.apache.spark.sql.graftnative.NativeExpressions
-        .rpLshBands(col(vecCol), planesPerBand, bands)
-    val prep = df
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+        N.rpLshBandsQ(V.qint(col(vecCol)), planesPerBand, bands, portableDim,
+          RpLshBandsQ.planeWeights(bands, planesPerBand, portableDim))
+      else N.rpLshBands(col(vecCol), planesPerBand, bands)
+    val prep = spread(df)
       .select((Seq(col(idCol), V.qint(col(vecCol)).as("_qv"),
         bkts.as("_bkts")) ++ equalCols.map(col)): _*)
-    val buckets = prep.select(col(idCol),
-      posexplode(col("_bkts")).as(Seq("band", "bucket")))
-    val cand = expandPairs(buckets, idCol, maxBucket)
+    val cand = expandPairs(buckets(prep, idCol, col("_bkts")), idCol,
+      maxBucket)
     // _nrm is computed BELOW the exchange so the shuffle files carry it and
     // both join sides read it back (a withColumn above the exchange would
     // re-evaluate the dot per side).
-    val side = prep.select((Seq(col(idCol), col("_qv")) ++
-        equalCols.map(col)): _*)
-      .withColumn("_nrm", sqrt(V.dotQ(col("_qv"), col("_qv")).cast("double")))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism, col(idCol))
-    def renamed(suffix: String) = side.select((Seq(
-      col(idCol).as(s"${idCol}$suffix"), col("_qv").as(s"_q$suffix"),
-      col("_nrm").as(s"_n$suffix")) ++
-      equalCols.map(c => col(c).as(s"_$c$suffix"))): _*)
-    cand
-      .join(renamed("_a"), s"${idCol}_a")
-      .join(renamed("_b"), s"${idCol}_b")
-      .filter(equalCols.map(c => col(s"_${c}_a") === col(s"_${c}_b"))
-        .foldLeft(lit(true))(_ && _))
-      // try_divide, the codebase's zero-divisor convention (KnnJoin,
-      // TextFunctions): a zero-norm embedding (a failed embedding call
-      // quantizes to all zeros) pairs with its LSH twins but must fail
-      // the verify as null, not ride IEEE NaN through the filter
-      .withColumn("cos_sim",
-        try_divide(V.dotQ(col("_q_a"), col("_q_b")).cast("double"),
-          col("_n_a") * col("_n_b")))
-      .filter(col("cos_sim") >= threshold)
-      .select(s"${idCol}_a", s"${idCol}_b", "cos_sim")
+    val side = byId(withNorm(prep.select((Seq(col(idCol), col("_qv")) ++
+      equalCols.map(c => col(c).as(s"_$c"))): _*)), idCol)
+    verify(cand, idCol, side, side) { pairs =>
+      cosineAtLeast(threshold)(pairs.filter(
+        equalCols.map(c => col(s"_${c}_a") === col(s"_${c}_b"))
+          .foldLeft(lit(true))(_ && _)))
+    }.select(s"${idCol}_a", s"${idCol}_b", "cos_sim")
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al., 2023: cluster the
@@ -859,31 +786,16 @@ object Dedup {
   def embeddingNearDup(df: DataFrame, vecCol: String, idCol: String,
                        blockCol: String, threshold: Double,
                        maxBlock: Int = Int.MaxValue): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    // quantize + self-dot ONCE per row below a hash exchange on id: the
-    // bucket branch and both verify join sides reuse the one exchange
-    // (ReusedExchange), so the per-row prep never re-executes per side.
     // NULL blocks (e.g. a null vector that got no IVF cell) must not
     // pair: groupBy would collect them into one bucket, unlike the old
     // null-rejecting equi-join.
-    val prep = df
-      .filter(col(blockCol).isNotNull)
-      .repartition(par)
-      .select(col(idCol), col(blockCol), V.qint(col(vecCol)).as("_qv"))
-      .withColumn("_nrm", sqrt(V.dotQ(col("_qv"), col("_qv")).cast("double")))
-      .repartition(par, col(idCol))
-    val buckets = prep.select(col(idCol), lit(0).as("band"),
-      col(blockCol).as("bucket"))
-    val cand = expandPairs(buckets, idCol, maxBlock)
-    def side(sfx: String) = prep.select(col(idCol).as(s"$idCol$sfx"),
-      col("_qv").as(s"_q$sfx"), col("_nrm").as(s"_n$sfx"))
-    cand
-      .join(side("_a"), s"${idCol}_a")
-      .join(side("_b"), s"${idCol}_b")
-      .withColumn("cos_sim", // try_divide: zero-norm rows verify as null
-        try_divide(V.dotQ(col("_q_a"), col("_q_b")).cast("double"),
-          col("_n_a") * col("_n_b")))
-      .filter(col("cos_sim") >= threshold)
+    val prep = byId(withNorm(spread(df.filter(col(blockCol).isNotNull))
+      .select(col(idCol), col(blockCol), V.qint(col(vecCol)).as("_qv"))),
+      idCol)
+    val cand = expandPairs(prep.select(col(idCol), lit(0).as("band"),
+      col(blockCol).as("bucket")), idCol, maxBlock)
+    val side = prep.select(col(idCol), col("_qv"), col("_nrm"))
+    verify(cand, idCol, side, side)(cosineAtLeast(threshold))
       .select(s"${idCol}_a", s"${idCol}_b", "cos_sim")
   }
 }

@@ -192,9 +192,7 @@ object GraphRouting {
     val (assigned0, cents) =
       assignShards(df, vecCol, idCol, parts, refineIters)
     if (cents.isEmpty) return (assigned0, cents)
-    val (assigned, cacheRdd) = org.apache.spark.sql.graftnative.InternalDf
-      .detachBatchCached(assigned0)
-    trackAssignmentCache(cacheRdd)
+    val assigned = assignmentCaches.cache(assigned0)
     val counts = assigned.filter(col("cell").isNotNull)
       .groupBy(col("cell").cast("int").as("cell")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
@@ -231,26 +229,15 @@ object GraphRouting {
     (reassigned, outCents)
   }
 
-  /** Newest-last ring of [[assignShardsCapped]]'s persisted assignment
-    * RDDs (see the cache-lifetime note there). Unpersisting an already
-    * unpersisted RDD is a no-op, so explicit caller cleanup (tests,
-    * [[graft.Bench]]'s reaper) composes with the bound.
-    */
-  private val liveAssignmentCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]()
-
   /** How many capped-assignment caches may stay persisted at once. */
   private[operators] val MaxLiveAssignmentCaches = 4
 
-  private def trackAssignmentCache(
-      rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    liveAssignmentCaches.add(rdd)
-    while (liveAssignmentCaches.size > MaxLiveAssignmentCaches) {
-      val old = liveAssignmentCaches.poll()
-      if (old != null) old.unpersist(blocking = false)
-    }
-  }
+  /** [[assignShardsCapped]]'s persisted assignment RDDs (see the
+    * cache-lifetime note there).
+    */
+  private val assignmentCaches =
+    new org.apache.spark.sql.graftnative.InternalDf.CacheRing(
+      MaxLiveAssignmentCaches)
 
   /** Re-scope a routing to the part directories that actually exist:
     * a query whose ENTIRE routed set maps to missing directories (a

@@ -89,27 +89,14 @@ object KnnJoin {
     * persist those tables themselves.
     */
   private[operators] val MaxLiveQueryCaches = 4
-  private val liveQueryCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]
-  private def trackQueryCache(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    liveQueryCaches.add(rdd)
-    while (liveQueryCaches.size > MaxLiveQueryCaches) {
-      val old = liveQueryCaches.poll()
-      if (old != null) old.unpersist(blocking = false)
-    }
-  }
 
-  /** Cache a routed-query frame's planned rows once (InternalRow RDD —
-    * the external-Row form measured ~45% slower on this family,
-    * GraphRouting.scala:170-175) and register it in the bounded live set.
+  /** Routed-query frames cached once as InternalRows (the external-Row
+    * form measured ~45% slower on this family,
+    * GraphRouting.scala:170-175).
     */
-  private def cacheRouted(df: DataFrame): DataFrame = {
-    val (cached, rdd) =
-      org.apache.spark.sql.graftnative.InternalDf.detachBatchCached(df)
-    trackQueryCache(rdd)
-    cached
-  }
+  private val queryCaches =
+    new org.apache.spark.sql.graftnative.InternalDf.CacheRing(
+      MaxLiveQueryCaches)
 
   /** k-NN join against an [[Hnsw]] index (pre-built or re-read).
     * `centroids` (e.g. the format layer's tiny `routing` artifact)
@@ -234,7 +221,7 @@ object KnnJoin {
     // distinct-cells collect and the join): cache its planned rows once
     val routedQ =
       if (nprobe >= cents.length) q1.withColumn("cell", explode(sel))
-      else cacheRouted(q1.withColumn("cell", explode(sel)))
+      else queryCaches.cache(q1.withColumn("cell", explode(sel)))
     // prune the assigned side to the cells SOME query probes
     // ([[pruneToRouted]]); skipped at probe-all, where every cell is
     // met by construction
@@ -394,7 +381,7 @@ object KnnJoin {
     val (scopedIdx, walkQ, walkParts) =
       if (cents.isEmpty) (prepared, routedQ, allParts.toSet)
       else {
-        val cached = cacheRouted(routedQ)
+        val cached = queryCaches.cache(routedQ)
         val (p, used) = pruneToRouted(prepared, "part", cached,
           used => allParts.forall(used))
         (p, cached, used)

@@ -57,14 +57,17 @@ object StreamingDedup {
     (state, delta, textCol, idCol) =>
       Dedup.exactIncremental(state, delta, textCol, idCol))
 
-  /** SimHash near-dup (int64 fingerprints; exact drop rule when
+  /** SimHash near-dup (int64 [[Dedup.simHash32]] fingerprints, one
+    * value shared by the state and the survivors; exact drop rule when
     * `maxBucket` is uncapped). */
   def simHashFamily(maxHamming: Int,
-                    maxBucket: Int = Int.MaxValue): Family =
+                    maxBucket: Int = Int.MaxValue): Family = {
+    val fp = Dedup.simHash32
     Family(s"simhash$maxHamming",
-      (df, textCol, idCol) => Dedup.simHashState(df, textCol, idCol),
+      (df, textCol, idCol) => Dedup.simHashState(df, textCol, idCol, fp),
       (state, delta, textCol, idCol) => Dedup.simHashIncremental(
-        state, delta, textCol, idCol, maxHamming, maxBucket))
+        state, delta, textCol, idCol, maxHamming, maxBucket, fp))
+  }
 
   /** MinHash-LSH near-dup (state carries shingles + signature). */
   def minHashFamily(numHashes: Int = 32, bands: Int = 8, shingleN: Int = 3,

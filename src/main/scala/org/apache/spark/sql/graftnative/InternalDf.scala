@@ -68,4 +68,25 @@ object InternalDf {
     (fromInternalRows(df.sparkSession, rdd, df.schema, isStreaming = false),
       rdd)
   }
+
+  /** A bounded, newest-last ring of [[detachBatchCached]] frames for an
+    * owner that returns its cached frames LAZILY: caching through the
+    * ring unpersists all but the newest `bound` RDDs. Eviction is
+    * correctness-neutral for a deterministic lineage (it recomputes),
+    * and unpersisting an already unpersisted RDD is a no-op, so explicit
+    * caller cleanup composes with the bound.
+    */
+  final class CacheRing(bound: Int) {
+    private val live = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]
+
+    def cache(df: DataFrame): DataFrame = {
+      val (cached, rdd) = detachBatchCached(df)
+      live.add(rdd)
+      while (live.size > bound) {
+        val old = live.poll()
+        if (old != null) old.unpersist(blocking = false)
+      }
+      cached
+    }
+  }
 }

@@ -145,7 +145,7 @@ class NativeExpressionsSpec extends SparkSpec {
     }
     // band fold: acc = (acc*131 + v) % p, rowsPerBand = 4 → 2 bands.
     // Empty shingle arrays are excluded like the pipeline excludes them
-    // (minHashSignature filters size > 0): their Long.MaxValue sentinel
+    // (minHashState filters size > 0): their Long.MaxValue sentinel
     // slots would overflow the ANSI-checked HOF twin (the native fold
     // wraps silently, but such rows never reach banding).
     val mult = graft.operators.Dedup.portableBandMult

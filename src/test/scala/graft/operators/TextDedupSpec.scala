@@ -418,7 +418,7 @@ class TextDedupSpec extends SparkSpec {
       Seq((100L, "the same text"), (101L, "the same text"))
     val pairs = Dedup.simHashNearDup(docs.toDF("id", "t"), "t", "id",
         maxHamming = 0, maxBucket = 64,
-        fingerprint = xxhash64(_), fpBits = 64)
+        fingerprint = Dedup.Fingerprint(64, xxhash64(_)))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((100L, 101L)),
       s"full-width band lost the exact-duplicate pair: $pairs")
