@@ -3,51 +3,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // Optional filter (args = query names) for isolated profiling runs.
     val selected =
       if (args.nonEmpty) SparkEntry.queries.filter(kv => args.contains(kv._1))
       else SparkEntry.queries
 
-    /** Reap all suite state a finished run left behind — OUTSIDE the timed
-      * window: registered temp roots / checkpoints / memory-sink views
-      * (QueryCleanup), any cached plans, and any persisted RDDs. The r9
-      * driver run measured 78.8 s against a 54.0 s clean run of identical
-      * code — the delta was exactly this residue.
-      */
-    def reap(): Unit = {
-      QueryCleanup.drain(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // deterministically delete every finished query's shuffle files and
-      // driver-side map-output state — the async ContextCleaner pipeline
-      // (GC → ref-queue → non-blocking remove) lags a multi-run suite by
-      // design, and r10 measured its biggest-shuffle query at 2.9× its
-      // isolated cost from exactly that accumulated local-dir state
-      if (sys.env.get("SPARK_GRAFT_NO_PURGE").isEmpty) org.apache.spark.sql.graftnative.SuiteReaper.purgeShuffles(spark)
-    }
-
-    // One timed execution. Two GC passes + 800 ms first: one gc() alone
-    // does not drain the ContextCleaner backlog a long suite accrues
-    // (broadcast/shuffle state is reclaimed via weak refs AFTER gc, by an
-    // async thread) — r7 measured untouched heavy queries 3× their
-    // isolated time from exactly this suite-JVM state. A failed run must
-    // NOT enter the timing (a fast throw would win the min and flatter
-    // the total): failures report as -1 with the error on stderr.
+    // One timed execution, settled first and reaped after (Harness). A
+    // failed run must NOT enter the timing (a fast throw would win the min
+    // and flatter the total): failures report as -1 with the error on stderr.
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      System.gc()
-      Thread.sleep(300)
-      System.gc()
-      Thread.sleep(500)
+      Harness.settle()
       val t0 = System.nanoTime()
       val r = try {
         fn(spark, sfDir).count()
@@ -57,7 +23,7 @@ object Bench {
           System.err.println(s"BENCH FAILURE $name: $e")
           None
       }
-      reap()
+      Harness.reap(spark)
       r
     }
 

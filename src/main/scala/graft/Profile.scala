@@ -1,30 +1,30 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
-/** Per-stage profiler for one named query (guide §1.1: find where the
-  * time actually goes before changing anything). Runs the query under
-  * the bench's GC+reap protocol, twice (the second run is the steady
-  * state the bench reports), and prints every stage of the second run:
-  * wall-clock, executor-cpu sum, task count, shuffle bytes, and the
-  * callsite — enough to attribute a slow query to its operator.
+/** Per-stage profiler for named queries (guide §1.1: find where the time
+  * actually goes before changing anything). Each query runs under the
+  * bench's settle+reap protocol three times:
   *
-  * `sbt "runMain graft.Profile q50_ngram_jaccard_pairs"`
+  *  1. a warmup run (codegen+JIT), not recorded;
+  *  2. the steady run the bench reports, printed stage by stage —
+  *     wall-clock, executor-cpu sum, task count, shuffle bytes, the
+  *     callsite — plus the driver gaps between its jobs;
+  *  3. one more run under a driver-side wall-clock stack sampler (guide
+  *     §7.3 applied continuously), printed as a histogram of collapsed
+  *     stacks, so the driver gaps (planning, commit protocol, metadata IO,
+  *     streaming-engine machinery) become attributable — stage metrics
+  *     cannot see them. It is its own run so the stage numbers carry no
+  *     sampler overhead.
+  *
+  * `sbt "runMain graft.Profile q50_ngram_jaccard_pairs q121_format_cdc_rename"`
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     case class StageRow(id: Int, name: String, wallMs: Long, cpuMs: Long,
                         tasks: Int, shufReadMb: Double, shufWriteMb: Double,
@@ -63,19 +63,7 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def reap(): Unit = {
-      QueryCleanup.drain(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      org.apache.spark.sql.graftnative.SuiteReaper.purgeShuffles(spark)
-    }
-
-    args.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      // warmup run (codegen+JIT), not recorded
-      fn(spark, sfDir).count(); reap()
-      System.gc(); Thread.sleep(300); System.gc(); Thread.sleep(500)
+    def stageReport(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       stages.clear(); jobs.clear(); jobStarts.clear(); recording = true
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
@@ -107,7 +95,57 @@ object Profile {
             f"[${next.take(55)}]")
         }
       }
-      reap()
+    }
+
+    def stackHistogram(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
+      val hist = mutable.Map[String, Int]().withDefaultValue(0)
+      @volatile var sampling = true
+      val sampler = new Thread(() => {
+        while (sampling) {
+          val all = Thread.getAllStackTraces
+          all.forEach { (t, st) =>
+            if (t.getState == Thread.State.RUNNABLE && st.nonEmpty &&
+                t.getName != "stack-sampler") {
+              // collapse to the deepest INTERESTING frames: skip pure
+              // JVM/socket idle loops
+              val frames = st.take(40).map(f =>
+                s"${f.getClassName}.${f.getMethodName}")
+              val isIdle = frames.headOption.exists(f =>
+                f.contains("socketAccept") || f.contains("epollWait") ||
+                f.contains("Object.wait") || f.contains("park") ||
+                f.contains("SocketDispatcher.read"))
+              if (!isIdle) {
+                val sig = frames.filterNot(_.startsWith("java.lang.Thread"))
+                  .take(14).mkString(" <- ")
+                hist(t.getName.replaceAll("-\\d+$", "") + " | " + sig) += 1
+              }
+            }
+          }
+          Thread.sleep(10)
+        }
+      }, "stack-sampler")
+      sampler.setDaemon(true)
+
+      val t0 = System.nanoTime()
+      sampler.start()
+      val n = fn(spark, sfDir).count()
+      sampling = false
+      val wall = (System.nanoTime() - t0) / 1e9
+      sampler.join(1000)
+      println(f"\n######## $name stacks: $wall%.3f s (sampled run), $n rows, " +
+        s"${hist.values.sum} samples ########")
+      hist.toSeq.sortBy(-_._2).take(40).foreach { case (sig, c) =>
+        println(f"$c%5d  $sig")
+      }
+    }
+
+    args.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      fn(spark, sfDir).count(); Harness.reap(spark) // warmup
+      Harness.settle()
+      stageReport(name, fn); Harness.reap(spark)
+      Harness.settle()
+      stackHistogram(name, fn); Harness.reap(spark)
     }
     spark.stop()
   }

@@ -8,8 +8,8 @@ import java.nio.file.{Files, Path, Paths}
   * a parquet copy per run), streaming checkpoints, and memory-sink temp
   * views (which pin every streamed row in DRIVER memory until dropped).
   *
-  * Queries register cleanups at build time; the entry points (Bench,
-  * Verify) drain the registry AFTER fully consuming each result — outside
+  * Queries register cleanups at build time; the entry points drain the
+  * registry ([[Harness.reap]]) AFTER fully consuming each result — outside
   * Bench's timed window. Without this, a multi-run 82-query suite accrues
   * gigabytes of dead temp tables and driver-held sink rows, and the
   * measured tail queries pay for earlier queries' garbage (r9: 78.8 s

@@ -1,7 +1,7 @@
 package graft.examples
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 import graft.format.GraftDataset
 import graft.streaming.GraftStreaming
 
@@ -34,13 +34,7 @@ object CdcSoak {
   def main(args: Array[String]): Unit = {
     val seed = args.headOption.map(_.toLong).getOrElse(200000L)
     val rounds = args.drop(1).headOption.map(_.toInt).getOrElse(12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     val base = java.nio.file.Files.createTempDirectory("graft-cdcsoak")
     val src = s"$base/src"

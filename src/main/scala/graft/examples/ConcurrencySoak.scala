@@ -1,7 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.format.{CommitLog, GraftDataset}
 
 /** Concurrent-ingest soak: K writer threads append to ONE table branch
@@ -23,13 +23,7 @@ object ConcurrencySoak {
     val writers = args.headOption.map(_.toInt).getOrElse(4)
     val commits = args.drop(1).headOption.map(_.toInt).getOrElse(15)
     val rowsPer = args.drop(2).headOption.map(_.toLong).getOrElse(5000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     def rows(lo: Long, n: Long) = spark.range(lo, lo + n)
       .select(col("id"), md5(col("id").cast("string")).as("payload"))

@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.operators.{GraphRouting, Hnsw, KnnJoin, VectorSearch}
 
 /** Corpus-scale k-NN JOIN soak (r19): 100k × 64-d clustered corpus, a
@@ -31,13 +32,7 @@ object KnnJoinSoak {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     val nq = args.drop(1).headOption.map(_.toInt).getOrElse(10000)
     val dim = 64; val k = 10; val nCenters = 256; val sample = 100
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     import spark.implicits._
 
     val centers: Array[Array[Float]] = {
@@ -53,7 +48,7 @@ object KnnJoinSoak {
     val data = spark.range(n).as[Long]
       .mapPartitions(_.map(id => (id, vecOf(id))))
       .toDF("vec_id", "emb")
-      .repartition(cpus.toInt)
+      .repartition(Harness.cpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     data.count()
     // the query TABLE: nq rows with ids outside the corpus id space —

@@ -1,7 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.format.{CommitLog, GraftDataset}
 
 /** Maintenance soak: a table under CONTINUOUS small-batch ingest (the
@@ -29,13 +29,7 @@ object MaintenanceSoak {
   def main(args: Array[String]): Unit = {
     val total = args.headOption.map(_.toLong).getOrElse(1000000L)
     val epochs = args.drop(1).headOption.map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     val root = java.nio.file.Files
       .createTempDirectory("graft-maintsoak").toString + "/t"

@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.format.{CommitLog, CommitMeta, GraftDataset, Versioning}
 
 /** Three-way merge at soak scale. MergeSpec proves the resolution
@@ -38,13 +39,7 @@ import graft.format.{CommitLog, CommitMeta, GraftDataset, Versioning}
 object MergeSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     val root = java.nio.file.Files
       .createTempDirectory("graft-mergesoak").toString + "/t"

@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Harness
 import graft.format.GraftDataset
 import graft.operators.{Compute, Multimodal, Statistics}
 import graft.sources.IO
@@ -15,10 +16,7 @@ import graft.functions.{TextFunctions => T}
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     import spark.implicits._
 
     val work = java.nio.file.Files.createTempDirectory("graft-pipe").toString

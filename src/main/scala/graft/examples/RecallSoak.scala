@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.operators.{GraphRouting, Hnsw, Vamana, VectorSearch}
 
 /** ANN recall soak at realistic scale: 100k × 64-d clustered vectors,
@@ -25,13 +26,7 @@ object RecallSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     val dim = 64; val nq = 100; val k = 10; val nCenters = 256
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     import spark.implicits._
 
     val centers: Array[Array[Float]] = {
@@ -47,7 +42,7 @@ object RecallSoak {
     val data = spark.range(n).as[Long]
       .mapPartitions(_.map(id => (id, vecOf(id, 0.5))))
       .toDF("vec_id", "emb")
-      .repartition(cpus.toInt)
+      .repartition(Harness.cpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     data.count()
     // query ids live OUTSIDE the corpus id space -> fresh noise draws

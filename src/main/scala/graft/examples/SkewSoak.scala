@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.operators.Dedup
 
 /** Skew soak for the quadratic-risk dedup family: a deliberately
@@ -21,13 +22,7 @@ object SkewSoak {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val hot = args.drop(1).headOption.map(_.toLong).getOrElse(100000L)
     val only = args.drop(2).headOption.getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     // 10^5 byte-identical texts (one shingle set -> one bucket in every
     // band) + unique tails for the rest of the corpus

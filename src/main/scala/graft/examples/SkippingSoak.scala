@@ -1,7 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness
 import graft.format.{FileSkipping, GraftDataset}
 
 /** Manifest file-skipping soak at a REAL manifest width (~5k files):
@@ -29,14 +29,7 @@ object SkippingSoak {
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(5000)
     val rowsPerFile = args.drop(1).headOption.map(_.toInt).getOrElse(400)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     val base = java.nio.file.Files.createTempDirectory("graft-skipsoak")
     val root = s"$base/t"

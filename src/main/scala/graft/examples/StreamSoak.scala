@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.Harness
 import graft.format.GraftDataset
 
 /** Long-running streaming soak for the graft source/sink pair: 10^6 rows
@@ -28,13 +28,7 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val total = args.headOption.map(_.toLong).getOrElse(1000000L)
     val commits = args.drop(1).headOption.map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     val base = java.nio.file.Files.createTempDirectory("graft-streamsoak")
     val src = s"$base/src"

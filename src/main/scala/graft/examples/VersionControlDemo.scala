@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Harness
 import graft.format.{GraftDataset, Versioning}
 
 /** End-to-end walkthrough of the versioned table format: create → append →
@@ -11,10 +11,7 @@ import graft.format.{GraftDataset, Versioning}
   */
 object VersionControlDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft-demo").toString

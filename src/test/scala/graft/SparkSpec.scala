@@ -12,18 +12,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // every spec runs through the NIO local FS the bench/verify
-      // sessions use (Tables.requiredConfs) — same semantics, no
-      // fork/exec chmod/readlink
-      .config("spark.hadoop.fs.file.impl", "graft.format.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.format.NioLocalFs")
-      .getOrCreate()
+    val s = Harness.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -7,9 +7,18 @@
 #   sf-dir  defaults to /root/testdata/sf0.001 (smallest fixture: fast)
 #   out-dir defaults to a fresh temp dir, removed on success
 #
-# Exit 0 = both trees compile AND graft.Verify completed on the fixture.
+# Exit 0 = no SparkSession.builder under src/main/scala outside Harness.scala,
+# both trees compile AND graft.Verify completed on the fixture.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+# One way to build a session: graft.Harness. A hand-rolled builder drifts
+# from it (the soaks once ran without Tables.requiredConfs).
+stray=$(grep -rl "SparkSession.builder" src/main/scala | grep -v '/Harness\.scala$' || true)
+if [ -n "$stray" ]; then
+  echo "pregate: FAIL — SparkSession.builder outside Harness.scala:" $stray >&2
+  exit 1
+fi
 
 SF_DIR="${1:-/root/testdata/sf0.001}"
 OUT_DIR="${2:-$(mktemp -d /tmp/pregate.XXXXXX)}"
@@ -22,7 +31,8 @@ sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
 
 # Sanity: Verify must have produced per-query output and the oracle dump.
 test -s "$OUT_DIR/oracle_sql.json"
-n=$(find "$OUT_DIR" -maxdepth 1 -name '*.parquet' | wc -l)
+# Verify writes one directory per query, holding its parquet part files.
+n=$(find "$OUT_DIR" -mindepth 2 -maxdepth 2 -name '*.parquet' -printf '%h\n' | sort -u | wc -l)
 if [ "$n" -lt 1 ]; then
   echo "pregate: FAIL — Verify wrote no parquet results to $OUT_DIR" >&2
   exit 1
