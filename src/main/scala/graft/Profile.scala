@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
 
@@ -11,7 +13,10 @@ import scala.collection.mutable
   *  1. a warmup run (codegen+JIT), not recorded;
   *  2. the steady run the bench reports, printed stage by stage —
   *     wall-clock, executor-cpu sum, task count, shuffle bytes, the
-  *     callsite — plus the driver gaps between its jobs;
+  *     callsite — plus the driver gaps between its jobs and the classes
+  *     Janino compiled during it (a steady run should compile none: a
+  *     nonzero count means the generated-code cache thrashed or a plan
+  *     inlined a per-call literal);
   *  3. one more run under a driver-side wall-clock stack sampler (guide
   *     §7.3 applied continuously), printed as a histogram of collapsed
   *     stacks, so the driver gaps (planning, commit protocol, metadata IO,
@@ -65,9 +70,14 @@ object Profile {
 
     def stageReport(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       stages.clear(); jobs.clear(); jobStarts.clear(); recording = true
+      // JVM-wide: local executors share the driver's CodeGenerator
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       recording = false
       // let async listener events drain
       Thread.sleep(500)
@@ -95,6 +105,9 @@ object Profile {
             f"[${next.take(55)}]")
         }
       }
+      println(f"codegen: $compiles classes compiled in $compileMs%.0f ms" +
+        (if (compiles > 0) " (steady run: cache thrash or literal churn)"
+         else ""))
     }
 
     def stackHistogram(name: String, fn: (SparkSession, String) => DataFrame): Unit = {

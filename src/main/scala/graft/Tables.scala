@@ -15,7 +15,9 @@ object Tables {
   /** Session configs every entry point must set: the events table stores
     * nanosecond timestamps, which Spark's Parquet reader only accepts as
     * long when this legacy flag is on (we convert back to TimestampType in
-    * [[load]]).
+    * [[load]]); the rest keep metadata IO off fork/exec and let a
+    * repeated operation reuse its generated code. Some are static: they
+    * only take effect when set on the JVM's first session.
     */
   val requiredConfs: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true",
@@ -28,7 +30,32 @@ object Tables {
       // graft.format.NioLocalFs.
       "spark.hadoop.fs.file.impl" -> "graft.format.NioLocalFileSystem",
       "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
-        "graft.format.NioLocalFs")
+        "graft.format.NioLocalFs",
+      // Spark's generated-class cache (static, read once when
+      // CodeGenerator is first used) defaults to 100 entries; the lake
+      // benchmark's working set is ~160 classes per batch_pipeline pass
+      // and 160-167 per versioned_writes episode (SCALE.md), so at 100
+      // the LRU thrashed and every repeat recompiled all of them (Janino
+      // + JIT; batch_pipeline op_p50_gmean_ms 1214 → 803 ms). 1000 holds
+      // the working set several times over and stays a finite bound;
+      // end-of-run metaspace was no higher.
+      "spark.sql.codegen.cache.maxEntries" -> "1000",
+      // the cache is keyed by the thread's context classloader, and with
+      // per-session artifact isolation (on by default since Spark 4.0)
+      // every SparkSession gets its own executor-side classloader; each
+      // streaming query runs on a fresh clone of its session, so every
+      // new query (a change feed restarted after a merge) recompiled its
+      // whole plan on the executors. The engine adds no session
+      // artifacts (jars, files, REPL classes) to isolate.
+      "spark.sql.artifact.isolation.enabled" -> "false",
+      // the cache key is the generated source, and by default the class
+      // name carries the whole-stage id; AQE numbers the stages in the
+      // order their inputs finish, so a plan that ran before came back
+      // as a new class now and then (minHashLsh/simHashNearDup: 4-6
+      // compiles every few runs). Without the id, identical stage code
+      // is one class; stack traces then show `GeneratedIterator`, and
+      // the stage id stays in the plan (`*(8)`).
+      "spark.sql.codegen.useIdInClassName" -> "false")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}

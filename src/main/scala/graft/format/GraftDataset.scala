@@ -700,9 +700,13 @@ class GraftDataset private[format] (
     val counts = prepared
       .groupBy(spark_partition_id().as("_pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
+    // each partition's first uuid, base included: Spark inlines a Long
+    // literal into the generated Java, so `lit(base)` compiled a new
+    // write-stage class for every reservation; the map literal is passed
+    // by reference and keeps the plan's code the same across appends
     var acc = 0L
     val offsets: Map[Int, Long] = counts.map { case (pid, n) =>
-      val o = pid -> acc; acc += n; o
+      val o = pid -> (base + acc); acc += n; o
     }.toMap
     require(acc < (1L << 40), "append larger than 2^40 rows; split it")
     // the low-33-bit row-in-partition counter wraps at 2^33 rows in ONE
@@ -711,7 +715,7 @@ class GraftDataset private[format] (
     require(counts.forall(_._2 < (1L << 33)),
       s"a partition holds >= 2^33 rows (max ${counts.map(_._2).max}); " +
         "repartition the input before append")
-    // pass 2: uuid = base + offset(partition) + row-in-partition. An
+    // pass 2: uuid = offset(partition) + row-in-partition. An
     // unseen partition id — or a partition that produced MORE rows than
     // the count pass saw (a non-deterministic input re-executing between
     // the two jobs) — raises, never writes: an overgrown partition's
@@ -737,8 +741,7 @@ class GraftDataset private[format] (
         lit(" produced more rows than the count pass saw - the input " +
           "re-executes non-deterministically; persist() or repartition " +
           "the input"))))
-    val withUuid = prepared.withColumn(UuidCol,
-      lit(base) + offsetOf + guardedIdx)
+    val withUuid = prepared.withColumn(UuidCol, offsetOf + guardedIdx)
     stFiles :+= writeData(withUuid, "base")
     dirty = true; pendingRewrite = false
   }
@@ -1873,7 +1876,11 @@ class GraftDataset private[format] (
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var replicaIdsCache: Option[DataFrame] = None
     try {
-      require(cached.filter(tpe === "schema_change").limit(1).count() == 0L,
+      // `isEmpty`, not `limit(1).count()`: a limit under an aggregate is
+      // a generated LocalLimit whose counter Spark names from a JVM-wide
+      // sequence, so every call compiled a new class; `isEmpty` plans a
+      // top-level CollectLimit, which generates nothing
+      require(cached.filter(tpe === "schema_change").isEmpty,
         "change feed contains schema_change events (a source rename or " +
           "column add in range) — apply them to the replica first " +
           "(GraftStreaming.replicate does this automatically) or filter " +
@@ -1907,7 +1914,7 @@ class GraftDataset private[format] (
       // since later re-inserts of a tombstoned uuid stay dead. Fail
       // loudly instead of corrupting.
       if (reconcileDeletes)
-        require(cached.filter(tpe =!= "insert").limit(1).count() == 0L,
+        require(cached.filter(tpe =!= "insert").isEmpty,
           "reconcileDeletes expects a bootstrap feed (insert events " +
             "only = the complete live snapshot); a delta feed's absent " +
             "uuids are untouched rows, not deletions")
@@ -2528,8 +2535,14 @@ class GraftDataset private[format] (
                       pqK = param("pqK", 16),
                       clustered = true, rowCountHint = deltaRows)
                   }
-                built.withColumn("part",
-                    (col("part") + lit(offset)).cast("int"))
+                // the shift rides in the closure, not in a literal: Spark
+                // inlines an Int literal into the generated Java, so each
+                // append's offset would compile a new write-stage class
+                val pi = built.schema.fieldIndex("part")
+                built.map(r => Row.fromSeq(
+                    r.toSeq.updated(pi, r.getInt(pi) + offset)))(
+                    org.apache.spark.sql.catalyst.encoders.RowEncoder
+                      .encoderFor(built.schema))
                   .write.mode("append").partitionBy("part").parquet(graphPath)
                 // fold the delta shards' centroids into the routing
                 // artifact (one sentinel-filtered pass over the graph

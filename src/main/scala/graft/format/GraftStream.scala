@@ -348,13 +348,35 @@ class GraftSink(spark: SparkSession, root: String, branch: String,
     }
   }
 
+  /** The sink's table, created by the first batch that finds none. Two
+    * sinks starting on one absent table race to create it, and the loser
+    * can land in the winner's window: the winner's first commit file is
+    * published before its branch pointer (`load` then finds no branch),
+    * or appears between the loser's check and its `create` (which
+    * refuses an existing table). The window closes when the winner's
+    * pointer lands, so both refusals are retried until `deadline`; past
+    * it the refusal propagates. Both sides creating is the rebased
+    * CREATE race of `GraftDataset.commit`. */
+  @scala.annotation.tailrec
+  private def openTable(schema: StructType, deadline: Long): GraftDataset = {
+    val opened =
+      try Some(
+        if (CommitLog.listCommits(spark, root).nonEmpty)
+          GraftDataset.load(spark, root, branch)
+        else GraftDataset.create(spark, root, schema, branch))
+      catch {
+        case _: IllegalArgumentException if System.nanoTime() < deadline => None
+      }
+    opened match {
+      case Some(ds) => ds
+      case None => Thread.sleep(20); openTable(schema, deadline)
+    }
+  }
+
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val writeToken = idToken.getOrElse(pathToken)
     val acceptTokens = idToken.toSet + pathToken ++ legacyTokens
-    val exists = CommitLog.listCommits(spark, root).nonEmpty
-    val ds =
-      if (exists) GraftDataset.load(spark, root, branch)
-      else GraftDataset.create(spark, root, data.schema, branch)
+    val ds = openTable(data.schema, System.nanoTime() + 10L * 1000000000L)
     def committed(head: String): Boolean =
       GraftStream.lastBatchId(spark, root, Some(head), acceptTokens)
         .exists(_ >= batchId)
