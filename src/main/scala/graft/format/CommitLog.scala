@@ -44,7 +44,7 @@ import java.nio.charset.StandardCharsets
   * session (parquet then stores a prefix-truncated min and an
   * incremented-truncated max, both valid bounds but the max need not
   * exist in the data). Pruning stays sound against bounds; only the
-  * exact-answer path ([[graft.format.GraftDataset.statMinMax]]) refuses
+  * exact-answer path ([[graft.format.TableState.statMinMax]]) refuses
   * them. Absent on pre-flag commits = captured without truncation (the
   * default conf), so trusted as exact.
   */
@@ -178,6 +178,28 @@ object CommitLog {
       readString(fs(spark, root), new Path(commitsDir(root), s"$id.json")))
       .extract[CommitMeta]
   }
+
+  /** The commit `id`, or None when the table has no such commit — one
+    * file read, where a membership test on [[listCommits]] lists all of
+    * history. An id that is not a plain file-name token (engine ids are
+    * 8-digit numbers) names no commit and is refused before any read, so
+    * a ref can never reach another file under `_graft`. */
+  def findCommit(spark: SparkSession, root: String,
+                 id: String): Option[CommitMeta] =
+    if (!id.matches("[A-Za-z0-9_-]+")) None
+    else try Some(readCommit(spark, root, id))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The first-parent chain from commit `from` down to, not including,
+    * `until` (the root when None), newest first. Lazy: a commit is read
+    * when the walk reaches it, and `until` is never read. */
+  def firstParentChain(spark: SparkSession, root: String,
+                       from: Option[String],
+                       until: Option[String] = None): Iterator[CommitMeta] =
+    Iterator.unfold(from.filterNot(until.contains))(_.map { id =>
+      val m = readCommit(spark, root, id)
+      (m, m.parent.filterNot(until.contains))
+    })
 
   /** Read every commit's metadata, parallelized over a bounded pool —
     * the maintenance-path bulk read behind [[GraftDataset.vacuum]] and

@@ -27,7 +27,7 @@ import org.apache.spark.sql.types._
   * is scanned); a base row whose update does NOT satisfy it is removed
   * by the re-applied filter above the scan. Tombstones only remove
   * rows. Renames disable pruning wholesale (stats are keyed by the
-  * names at write time — [[GraftDataset.pruneBaseFiles]] guards this).
+  * names at write time — [[TableState.pruneBaseFiles]] guards this).
   *
   * Conservativeness: a column with any unstatted row group, a type
   * outside the long/double/string/date/timestamp/decimal domains, or

@@ -3,7 +3,7 @@ package graft.format
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** A versioned, mutable table over immutable Parquet — the Spark-native
   * equivalent of the reference's Dataset abstraction
@@ -26,27 +26,35 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, Flo
   * << 40) | row index (reference: hidden `_uuid` tensor,
   * crud_operations.py:407-418). Merge and diff operate on uuid sets,
   * never positions (merge.py:102-154).
+  *
+  * Staged state is ONE immutable [[TableState]]: HEAD's manifest plus
+  * every uncommitted edit, each edit a new value. Reads take a state, so
+  * time travel, diff, merge and the change feed read each commit once,
+  * into a state of its own, with no second handle.
+  *
+  * A lost branch CAS rebases the commit ([[rebaseOnto]]): our change
+  * over the parent is replayed on the winner when both kept the parent's
+  * schema and rename chain, our update/tombstone lists extend the
+  * parent's, and by what we changed:
+  *   - replaced base entries → a pure rewrite whose replaced entries the
+  *     winner still holds;
+  *   - new updates/tombstones → the winner's lists extend the parent's
+  *     too, and the two sides' new entries touch disjoint uuids;
+  *   - appends only → anything the winner did (a table's first commit
+  *     stages on the empty state).
+  * Anything else stays a loud ConcurrentModificationException.
   */
 class GraftDataset private[format] (
     val spark: SparkSession,
     val root: String,
     private var branchName: Option[String],
-    private var headId: Option[String]) {
+    private var headId: Option[String],
+    // the manifest as loaded from HEAD plus every staged edit; each edit
+    // replaces the value, so a state handed to a read stays as it was
+    private var st: TableState) {
 
   import GraftDataset._
 
-  // ---- staged (uncommitted) state -----------------------------------------
-
-  private var stFiles: Vector[String] = Vector.empty
-  private var stUpdates: Vector[String] = Vector.empty
-  private var stTombstones: Vector[String] = Vector.empty
-  private var stRenames: Vector[(String, String)] = Vector.empty
-  private var stStats: Map[String, Map[String, ColStats]] = Map.empty
-  // rename-chain length at each entry's write time (entries absent = 0)
-  private var stEpochs: Map[String, Int] = Map.empty
-  // stStats keys are in current-name space (see CommitMeta.statsNormalized)
-  private var stStatsNormalized: Boolean = true
-  private var stSchema: StructType = new StructType()
   private var dirty: Boolean = false
   // true while the ONLY staged change is a file rewrite that leaves the
   // logical rows untouched (compact from a clean state) — published as
@@ -54,36 +62,24 @@ class GraftDataset private[format] (
   // re-emitting every rewritten row (Delta's dataChange=false contract)
   private var pendingRewrite: Boolean = false
 
-  loadHead()
-
   private def loadHead(): Unit = {
-    headId match {
-      case Some(id) =>
-        val m = CommitLog.readCommit(spark, root, id)
-        stFiles = m.files.toVector
-        stUpdates = m.updates.toVector
-        stTombstones = m.tombstones.toVector
-        stRenames = m.renames.map(p => (p(0), p(1))).toVector
-        stStats = m.stats.getOrElse(Map.empty)
-        stEpochs = m.epochs.getOrElse(Map.empty)
-        stStatsNormalized = m.statsNormalized.getOrElse(m.renames.isEmpty)
-        stSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-      case None =>
-        stFiles = Vector.empty; stUpdates = Vector.empty
-        stTombstones = Vector.empty; stRenames = Vector.empty
-        stStats = Map.empty; stEpochs = Map.empty; stStatsNormalized = true
-        stSchema = new StructType()
-    }
+    st = headId.fold(TableState.empty(new StructType()))(id =>
+      TableState.of(CommitLog.readCommit(spark, root, id)))
     dirty = false
     pendingRewrite = false
+  }
+
+  /** Stage an edit of the manifest; `rewrite` says the edit changes
+    * files only, never logical rows. */
+  private def stage(s: TableState, rewrite: Boolean = false): Unit = {
+    st = s; dirty = true; pendingRewrite = rewrite
   }
 
   def branch: Option[String] = branchName
   def head: Option[String] = headId
   /** All manifest entries of the loaded state (planner statistics). */
-  private[format] def manifestEntries: Seq[String] =
-    stFiles ++ stUpdates ++ stTombstones
-  def schema: StructType = stSchema
+  private[format] def manifestEntries: Seq[String] = st.entries
+  def schema: StructType = st.schema
   def hasUncommitted: Boolean = dirty
 
   // ---- snapshot read ------------------------------------------------------
@@ -116,33 +112,10 @@ class GraftDataset private[format] (
     renamed.select(cols.toIndexedSeq: _*)
   }
 
-  /** Rename-chain length when `f` was written (0 = before any recorded
-    * rename → whole chain applies, the pre-epoch behavior). Accepts an
-    * entry path or a pruned per-file path (`entry/part-...`), which
-    * inherits its entry's epoch.
-    */
-  private def epochOf(f: String): Int =
-    stEpochs.getOrElse(f, {
-      val cut = f.lastIndexOf('/')
-      if (cut <= 0) 0 else stEpochs.getOrElse(f.substring(0, cut), 0)
-    })
-
-  /** Whether `f`'s rename epoch was RECORDED (vs defaulted): renames
-    * predate the epochs map, so a legacy manifest can hold a file that
-    * was physically written AFTER a rename but carries no epoch entry —
-    * for such a file the derived epoch-0 schema would invert to the OLD
-    * name, the scan would null-fill it, and align would rename the
-    * all-null column onto the target (ADVICE r21). Epoch-absent entries
-    * on a renamed table keep the legacy mergeSchema read, whose footer
-    * names align's presence-conditional handles correctly.
-    */
-  private def epochKnown(f: String): Boolean =
-    stEpochs.contains(f) || {
-      val cut = f.lastIndexOf('/')
-      cut > 0 && stEpochs.contains(f.substring(0, cut))
-    }
-
-  private def readManifest(files: Seq[String], target: StructType): DataFrame =
+  /** `files` of state `s` read under `target`, each group of entries
+    * with the rename-chain suffix of its epoch. */
+  private def readManifest(files: Seq[String], target: StructType,
+                           s: TableState): DataFrame =
     if (files.isEmpty) emptyDf(target)
     else {
       // files written in different rename EPOCHS need different chain
@@ -150,9 +123,9 @@ class GraftDataset private[format] (
       // recreated column must not be re-renamed). Group by the actual
       // suffix so the no-rename common case stays ONE parquet relation.
       // Legacy entries (no recorded epoch on a RENAMED table) cannot
-      // trust the derived schema — see [[epochKnown]].
+      // trust the derived schema — see [[TableState.epochKnown]].
       val (derivable, legacy) =
-        files.partition(f => stRenames.isEmpty || epochKnown(f))
+        files.partition(f => s.renames.isEmpty || s.epochKnown(f))
       // PER-ENTRY footer reads for legacy entries: one merged group
       // cannot tell a pre-rename file (footer carries the OLD name — the
       // whole chain must apply) from a post-rename one (footer already
@@ -165,9 +138,9 @@ class GraftDataset private[format] (
       val legacyDfs = legacy.sorted.map { f =>
         align(spark.read.option("mergeSchema", "true")
             .parquet(new Path(root, f).toString),
-          target, stRenames)
+          target, s.renames)
       }
-      val derivedDfs = derivable.groupBy(f => stRenames.drop(epochOf(f))).toSeq
+      val derivedDfs = derivable.groupBy(f => s.renames.drop(s.epochOf(f))).toSeq
         .sortBy(_._2.head).map { case (chain, fs) =>
           val paths = fs.map(f => new Path(root, f).toString)
           // The physical schema of an epoch group is KNOWN: each target
@@ -212,14 +185,12 @@ class GraftDataset private[format] (
     spark.read.schema(UuidSchema)
       .parquet(entries.map(e => new Path(root, e).toString): _*)
 
-  /** Snapshot with the hidden `_uuid` column (internal + merge/diff +
-    * the integrity gates of the soak mains). */
-  private[graft] def snapshotWithUuid(
-      files: Seq[String] = stFiles, updates: Seq[String] = stUpdates,
-      tombstones: Seq[String] = stTombstones,
-      schema: StructType = stSchema): DataFrame = {
-    val target = withUuidSchema(schema)
-    val base = readManifest(files, target)
+  /** Snapshot of state `s` with the hidden `_uuid` column (internal +
+    * merge/diff + the integrity gates of the soak mains). */
+  private[graft] def snapshotWithUuid(s: TableState = st): DataFrame = {
+    val target = withUuidSchema(s.schema)
+    val base = readManifest(s.files, target, s)
+    val (updates, tombstones) = (s.updates, s.tombstones)
     if (updates.isEmpty && tombstones.isEmpty) return base
     // merge-on-read, FLAT: ONE anti-join drops every base row an update
     // or tombstone entry touches — a key set, so it needs no window.
@@ -231,10 +202,10 @@ class GraftDataset private[format] (
       "left_anti")
     if (updates.isEmpty) return kept
     val latest =
-      if (updates.size == 1) readManifest(updates, target)
+      if (updates.size == 1) readManifest(updates, target, s)
       else GraftDataset.lastWinsPerUuid(
         updates.zipWithIndex.map { case (u, i) =>
-          readManifest(Seq(u), target).withColumn("_file_seq", lit(i))
+          readManifest(Seq(u), target, s).withColumn("_file_seq", lit(i))
         }.reduce(_ unionByName _), "_file_seq")
     val live =
       if (tombstones.isEmpty) latest
@@ -255,18 +226,22 @@ class GraftDataset private[format] (
     */
   def maxView: DataFrame = toDF
   def minView: DataFrame =
-    stSchema.fieldNames.foldLeft(toDF)((d, c) => d.filter(col(c).isNotNull))
+    st.schema.fieldNames.foldLeft(toDF)((d, c) => d.filter(col(c).isNotNull))
 
   /** Snapshot of an arbitrary commit (time travel). */
   def snapshotAt(commitId: String): DataFrame = snapshotAtWithUuid(commitId).drop(UuidCol)
 
-  private[format] def snapshotAtWithUuid(commitId: String): DataFrame = {
-    val m = CommitLog.readCommit(spark, root, commitId)
-    assertNotExpired(m) // vacuumed-away history fails here, not mid-scan
-    val sch = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    // renames of THAT commit apply; borrow a temp dataset view
-    val tmp = new GraftDataset(spark, root, None, Some(commitId))
-    tmp.snapshotWithUuid(m.files, m.updates, m.tombstones, sch)
+  private[format] def snapshotAtWithUuid(commitId: String): DataFrame =
+    snapshotWithUuid(stateAt(commitId))
+
+  private def stateAt(commitId: String): TableState =
+    stateOf(CommitLog.readCommit(spark, root, commitId))
+
+  /** The state of commit `m`; vacuumed-away history fails here, not
+    * mid-scan. */
+  private def stateOf(m: CommitMeta): TableState = {
+    assertNotExpired(spark, root, m)
+    TableState.of(m)
   }
 
   // ---- CRUD ---------------------------------------------------------------
@@ -295,74 +270,20 @@ class GraftDataset private[format] (
     // just-written footers (driver-side metadata read, no job;
     // update/tombstone files are never pruned so they carry none).
     // Synchronized: optimizeSmallFiles writes bins concurrently and a
-    // racing `stStats ++=` would silently lose one bin's stats.
+    // racing read-modify-write of `st` would silently lose one bin's
+    // stats.
     if (kind != "update" && kind != "tombstone") {
-      val stats = FileSkipping.footerStats(spark, root, rel, stSchema)
-      this.synchronized { stStats ++= stats }
+      val stats = FileSkipping.footerStats(spark, root, rel, st.schema)
+      this.synchronized { st = st.copy(stats = st.stats ++ stats) }
     }
     // written under CURRENT names → only the chain suffix after this
     // point may apply to it on read (see readManifest epoch grouping)
-    if (stRenames.nonEmpty)
-      this.synchronized { stEpochs += rel -> stRenames.size }
+    this.synchronized {
+      if (st.renames.nonEmpty)
+        st = st.copy(epochs = st.epochs + (rel -> st.renames.size))
+    }
     rel
   }
-
-  // stat keys grouped by their entry (parent dir), memoized per stStats
-  // INSTANCE (staged mutations swap the map, invalidating the cache):
-  // the three metadata consumers below each used to scan EVERY stat key
-  // per manifest entry — O(entries × keys) driver work per planned query,
-  // ~10^8 startsWith calls on the 10k-file tables this machinery exists
-  // for — where one pass over the keys suffices.
-  @transient private var statKeysByEntryCache
-      : (AnyRef, Map[String, Seq[String]]) = null
-  private def statKeysByEntry: Map[String, Seq[String]] = {
-    val cur = stStats
-    val c = statKeysByEntryCache
-    if (c != null && (c._1 eq cur)) c._2
-    else {
-      val grouped = cur.keysIterator.flatMap { k =>
-        val cut = k.lastIndexOf('/')
-        if (cut <= 0) None else Some(k.substring(0, cut) -> k)
-      }.toSeq.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      statKeysByEntryCache = (cur, grouped)
-      grouped
-    }
-  }
-
-  /** Base manifest entries surviving the pushed filters' min/max check
-    * ([[FileSkipping]]). Stat keys are normalized EAGERLY at each
-    * rename/delete ([[renameTensor]]/[[deleteTensor]]), so they stay in
-    * current-name space and skipping survives a rename chain — at 100 TB
-    * a column rename must not degrade every selective scan to a
-    * full-manifest plan until the next full compact. Commits written
-    * before normalization existed (`statsNormalized` unset with a
-    * non-empty chain) keep the old conservative behavior: no pruning
-    * until `compact()` clears the chain and recaptures stats.
-    */
-  private[format] def pruneBaseFiles(
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[String] =
-    if (filters.isEmpty || (stRenames.nonEmpty && !stStatsNormalized)) stFiles
-    else stFiles.flatMap { entry =>
-      // per-file stats (keyed entry/part-file) give file-granular
-      // pruning; an entry with none falls back to entry-level stats
-      // (or, absent those, is always kept)
-      val perFile = statKeysByEntry.getOrElse(entry, Nil)
-        .iterator.map(k => k -> stStats(k)).toMap
-      if (perFile.isEmpty) {
-        val keep = stStats.get(entry)
-          .forall(st => !filters.exists(FileSkipping.excludes(st, _)))
-        if (!keep) { FileSkipping.prunedFiles.incrementAndGet(); Nil }
-        else Seq(entry)
-      } else {
-        val survivors = perFile.keys.toSeq.sorted.filter { f =>
-          val keep = !filters.exists(FileSkipping.excludes(perFile(f), _))
-          if (!keep) FileSkipping.prunedFiles.incrementAndGet()
-          keep
-        }
-        // all files survive → keep the single dir path (shorter plans)
-        if (survivors.size == perFile.size) Seq(entry) else survivors
-      }
-    }
 
   /** Snapshot with base files pruned by pushed filters — the registered
     * source's scan path. The filters are RE-APPLIED above this plan by
@@ -371,7 +292,7 @@ class GraftDataset private[format] (
     */
   private[format] def prunedSnapshotWithUuid(
       filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame =
-    snapshotWithUuid(files = pruneBaseFiles(filters))
+    snapshotWithUuid(st.copy(files = st.pruneBaseFiles(filters)))
 
   /** Row count of a just-written data dir from its parquet FOOTERS — a
     * driver-side metadata read, no Spark job. Lets update/pop report
@@ -405,6 +326,12 @@ class GraftDataset private[format] (
     n
   }
 
+  private def addFile(rel: String): Unit = st = st.copy(files = st.files :+ rel)
+  private def addUpdate(rel: String): Unit =
+    st = st.copy(updates = st.updates :+ rel)
+  private def addTombstone(rel: String): Unit =
+    st = st.copy(tombstones = st.tombstones :+ rel)
+
   /** Footer row count over several manifest entries, parallelized —
     * the maintenance-path analogue of [[FileSkipping.footerStats]]'s
     * bounded-pool reads (serial opens would dominate on a 10k-entry
@@ -412,16 +339,6 @@ class GraftDataset private[format] (
     */
   private def footerRows(rels: Seq[String]): Long =
     CommitLog.parMap(rels)(writtenRowCount).sum
-
-  /** Per-file row counts of one base entry from the skipping stats, when
-    * every file of the entry carries one (None → caller falls back to a
-    * footer read). */
-  private def entryStatRows(entry: String): Option[Long] = {
-    val per = statKeysByEntry.getOrElse(entry, Nil)
-      .map(k => stStats(k).values.flatMap(_.rows).headOption)
-    if (per.nonEmpty && per.forall(_.isDefined)) Some(per.flatten.sum)
-    else None
-  }
 
   /** EXACT live row count from manifest metadata alone — per-file row
     * counts captured in the skipping stats at write time, with parquet
@@ -435,86 +352,16 @@ class GraftDataset private[format] (
     * never be tombstoned again).
     */
   def countRows: Long = {
-    val perEntry = stFiles.map(e => e -> entryStatRows(e)) // one stats pass
+    val perEntry = st.files.map(e => e -> st.entryStatRows(e)) // one stats pass
     val statted = perEntry.flatMap(_._2).sum
     val unstatted = perEntry.collect { case (e, None) => e }
-    statted + footerRows(unstatted) - footerRows(stTombstones)
+    statted + footerRows(unstatted) - footerRows(st.tombstones)
   }
 
   /** Global (min, max) of a column from the skipping stats alone, when
-    * PROVABLY exact — the metadata source behind the SQL-level
-    * `MIN/MAX` pushdown ([[org.apache.spark.sql.graftnative]]'s
-    * MetadataAggregateRewrite). Refuses (None) whenever metadata cannot
-    * speak for the data: outstanding updates (values may have changed)
-    * or tombstones (an extreme row may be dead), un-normalized stats
-    * under a rename chain, any base entry without per-file stats, any
-    * file whose entry for the column is incomplete, or a column whose
-    * current schema domain differs from the stored one. `Some((null,
-    * null))` is a VALID exact answer: every row is null (SQL MIN/MAX of
-    * all-null input). Values come back typed to the schema.
-    */
-  private[format] def statMinMax(column: String): Option[(Any, Any)] = {
-    if (stUpdates.nonEmpty || stTombstones.nonEmpty) return None
-    if (stRenames.nonEmpty && !stStatsNormalized) return None
-    val field = stSchema.fields.find(_.name == column).getOrElse(return None)
-    // the ONE type→domain mapping lives in FileSkipping (capture side);
-    // using it here keeps prune and exact-answer domains from drifting
-    val domain = FileSkipping.statDomain(field.dataType).getOrElse(return None)
-    var mn: String = null
-    var mx: String = null
-    for (entry <- stFiles) {
-      val perFile = statKeysByEntry.getOrElse(entry, Nil)
-      if (perFile.isEmpty) return None // unstatted entry: can't prove
-      for (k <- perFile) {
-        val m = stStats(k)
-        m.get(column) match {
-          case Some(cs) if cs.rows.contains(0L) => () // empty file
-          case Some(cs) if cs.typ == "null" =>
-            // count-only entry: exact only if EVERY row is null
-            if (!(cs.nulls.isDefined && cs.nulls == cs.rows)) return None
-          case Some(cs) if cs.typ == domain =>
-            // bound-only stats (string min/max captured under parquet
-            // statistics truncation) cover the data but need not BE data
-            // values — sound for pruning, not for an exact answer
-            if (cs.bound.contains(true)) return None
-            if (mn == null || FileSkipping.cmpInDomain(cs.min, mn, domain) < 0)
-              mn = cs.min
-            if (mx == null || FileSkipping.cmpInDomain(cs.max, mx, domain) > 0)
-              mx = cs.max
-          case _ => return None // missing or cross-domain stats
-        }
-      }
-    }
-    if (mn == null) return Some((null, null)) // zero rows or all null
-    def typed(s: String): Any = field.dataType match {
-      case ByteType => s.toLong.toByte
-      case ShortType => s.toLong.toShort
-      case IntegerType => s.toLong.toInt
-      case LongType => s.toLong
-      case FloatType => s.toFloat
-      case DoubleType => s.toDouble
-      // temporal stats live in long days/micros ([[FileSkipping]]'s
-      // capture decode); surface them as the external JVM types the
-      // Catalyst converters expect for each Spark type
-      case DateType => org.apache.spark.sql.catalyst.util.DateTimeUtils
-        .toJavaDate(s.toLong.toInt)
-      case TimestampType => org.apache.spark.sql.catalyst.util.DateTimeUtils
-        .toJavaTimestamp(s.toLong)
-      case TimestampNTZType => org.apache.spark.sql.catalyst.util.DateTimeUtils
-        .microsToLocalDateTime(s.toLong)
-      case dt: org.apache.spark.sql.types.DecimalType =>
-        // stat strings carry the value at the file annotation's scale;
-        // re-scale to the column type's declared scale (value-neutral)
-        new java.math.BigDecimal(s).setScale(dt.scale)
-      case _ => s
-    }
-    try Some((typed(mn), typed(mx)))
-    catch {
-      // unparsable stat string, or a decimal stat whose scale cannot
-      // re-scale losslessly to the column type — refuse, never throw
-      case _: NumberFormatException | _: ArithmeticException => None
-    }
-  }
+    * provably exact ([[TableState.statMinMax]]). */
+  private[format] def statMinMax(column: String): Option[(Any, Any)] =
+    st.statMinMax(column)
 
   private def deleteData(rel: String): Unit = {
     val dir = new Path(root, rel)
@@ -559,19 +406,8 @@ class GraftDataset private[format] (
     require(parts.forall(p => !p.contains('.') && !p.contains('`')),
       s"bad tensor name $name: '.' and '`' are reserved " +
         "(use '/' to nest groups)")
-    stSchema = addNested(stSchema, parts, dataType, md)
-    // every EXISTING file physically lacks the new column (align
-    // null-backfills it), so synthesize all-null skipping stats where
-    // the row count is known: a value predicate on a late-added column
-    // then prunes every pre-addition file — on a 100 TB table that's
-    // almost the whole manifest right after the schema change
-    if (stStatsNormalized && parts.size == 1)
-      stStats = stStats.map { case (f, m) =>
-        f -> m.values.flatMap(_.rows).headOption.fold(m)(r =>
-          m + (parts.head -> ColStats("", "", "null",
-            nulls = Some(r), rows = Some(r))))
-      }
-    dirty = true; pendingRewrite = false
+    stage(st.withColumn(addNested(st.schema, parts, dataType, md),
+      parts match { case Seq(top) => Some(top); case _ => None }))
   }
 
   /** Insert a leaf field at a `/`-path, creating/extending struct levels. */
@@ -618,7 +454,7 @@ class GraftDataset private[format] (
           case _ => Nil
         })
       }
-    walk(stSchema, "").toMap
+    walk(st.schema, "").toMap
   }
 
   /** Dictionary-decoded name column for a class-label column. */
@@ -636,12 +472,8 @@ class GraftDataset private[format] (
     * the deleted column's values.
     */
   def deleteTensor(name: String): Unit = {
-    require(stSchema.fieldNames.contains(name), s"no column $name")
-    stSchema = StructType(stSchema.fields.filterNot(_.name == name))
-    stRenames :+= (name, s"$DropPrefix${stRenames.size}_$name")
-    if (stStatsNormalized) // keys are current-space → `name` is this col
-      stStats = stStats.map { case (f, m) => f -> (m - name) }
-    dirty = true; pendingRewrite = false
+    require(st.schema.fieldNames.contains(name), s"no column $name")
+    stage(st.dropped(name))
   }
 
   def renameTensor(from: String, to: String): Unit = {
@@ -651,19 +483,9 @@ class GraftDataset private[format] (
 
   /** Rename a column by appending to the rename chain (no data moves). */
   private def appendRename(from: String, to: String): Unit = {
-    require(stSchema.fieldNames.contains(from), s"no column $from")
-    require(!stSchema.fieldNames.contains(to), s"column $to exists")
-    stSchema = StructType(stSchema.fields.map(f =>
-      if (f.name == from) f.copy(name = to) else f))
-    stRenames :+= (from, to)
-    // keep skipping stats usable: every live entry predates this rename
-    // and (by the normalization invariant) keys its stats by the names
-    // just before it — rename the key alongside the column
-    if (stStatsNormalized)
-      stStats = stStats.map { case (f, m) =>
-        f -> m.get(from).map(s => m - from + (to -> s)).getOrElse(m)
-      }
-    dirty = true; pendingRewrite = false
+    require(st.schema.fieldNames.contains(from), s"no column $from")
+    require(!st.schema.fieldNames.contains(to), s"column $to exists")
+    stage(st.renamed(from, to))
   }
 
   /** Append rows. Columns may be a subset of the schema (reference
@@ -685,9 +507,9 @@ class GraftDataset private[format] (
     * than silently writing null/colliding uuids.
     */
   def append(df: DataFrame): Unit = {
-    val unknown = df.columns.filterNot(c => stSchema.fieldNames.contains(c))
+    val unknown = df.columns.filterNot(c => st.schema.fieldNames.contains(c))
     require(unknown.isEmpty, s"unknown columns: ${unknown.mkString(",")}")
-    val aligned = stSchema.fields.map { f =>
+    val aligned = st.schema.fields.map { f =>
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }
@@ -742,7 +564,7 @@ class GraftDataset private[format] (
           "re-executes non-deterministically; persist() or repartition " +
           "the input"))))
     val withUuid = prepared.withColumn(UuidCol, offsetOf + guardedIdx)
-    stFiles :+= writeData(withUuid, "base")
+    addFile(writeData(withUuid, "base"))
     dirty = true; pendingRewrite = false
   }
 
@@ -751,17 +573,14 @@ class GraftDataset private[format] (
     * applied, written as a merge-on-read update file.
     */
   def update(cond: Column, assignments: Map[String, Column]): Long = {
-    val bad = assignments.keySet.filterNot(stSchema.fieldNames.contains)
+    val bad = assignments.keySet.filterNot(st.schema.fieldNames.contains)
     require(bad.isEmpty, s"unknown columns: ${bad.mkString(",")}")
     val changed = assignments.foldLeft(snapshotWithUuid().filter(cond)) {
-      case (d, (c, v)) => d.withColumn(c, v.cast(stSchema(c).dataType))
+      case (d, (c, v)) => d.withColumn(c, v.cast(st.schema(c).dataType))
     }
     // ONE pass: write, then count from the written footers (no second
     // execution of the filter plan); an empty result unregisters itself
-    val rel = writeData(changed, "update")
-    val n = writtenRowCount(rel)
-    if (n > 0) { stUpdates :+= rel; dirty = true; pendingRewrite = false } else deleteData(rel)
-    n
+    landEntry(changed, "update")(addUpdate)
   }
 
   /** Delete rows matching `cond` (reference `pop`,
@@ -770,10 +589,7 @@ class GraftDataset private[format] (
   def pop(cond: Column): Long = {
     val dead = snapshotWithUuid().filter(cond).select(UuidCol)
     // same single-pass shape as update: write + footer count
-    val rel = writeData(dead, "tombstone")
-    val n = writtenRowCount(rel)
-    if (n > 0) { stTombstones :+= rel; dirty = true; pendingRewrite = false } else deleteData(rel)
-    n
+    landEntry(dead, "tombstone")(addTombstone)
   }
 
   /** Rewrite the snapshot into fresh base files, collapsing update and
@@ -802,9 +618,9 @@ class GraftDataset private[format] (
   def compact(clusterBy: Seq[String] = Nil, zorder: Boolean = false,
               bloomFilterFor: Seq[String] = Nil,
               bloomExpectedNdv: Long = 1000000L): Unit = {
-    val badBloom = bloomFilterFor.filterNot(stSchema.fieldNames.contains)
+    val badBloom = bloomFilterFor.filterNot(st.schema.fieldNames.contains)
     require(badBloom.isEmpty, s"unknown bloom columns: ${badBloom.mkString(",")}")
-    val bad = clusterBy.filterNot(stSchema.fieldNames.contains)
+    val bad = clusterBy.filterNot(st.schema.fieldNames.contains)
     require(bad.isEmpty, s"unknown cluster columns: ${bad.mkString(",")}")
     // a compact from a CLEAN state changes files but not logical rows —
     // its commit is marked rewrite so streaming tails skip it; compacting
@@ -847,10 +663,10 @@ class GraftDataset private[format] (
       try writeData(clustered, "compact",
         bloomOptions(bloomFilterFor, bloomExpectedNdv))
       finally prevSample.foreach(spark.conf.set(sampleKey, _))
-    stFiles = Vector(rel); stUpdates = Vector.empty
-    stTombstones = Vector.empty; stRenames = Vector.empty
-    stEpochs = Map.empty; stStatsNormalized = true // fresh names + stats
-    dirty = true; pendingRewrite = rewriteOnly
+    stage(st.copy(files = Vector(rel), updates = Vector.empty,
+      tombstones = Vector.empty, renames = Vector.empty,
+      epochs = Map.empty, statsNormalized = true), // fresh names + stats
+      rewrite = rewriteOnly)
   }
 
   /** Incremental small-file compaction — Delta's OPTIMIZE bin-packing,
@@ -879,7 +695,7 @@ class GraftDataset private[format] (
     // parallel sizing pre-pass: on the 10k-small-entry table this op
     // targets, serial per-entry listings would cost 10k round-trips
     // before any rewrite began
-    val sized = CommitLog.parMap(stFiles)(rel =>
+    val sized = CommitLog.parMap(st.files)(rel =>
       rel -> CommitLog.entryBytes(f, root, rel))
     val (small, big) = sized.partition(_._2 < targetBytes)
     if (small.size < 2) return (0, 0) // nothing worth merging
@@ -903,9 +719,9 @@ class GraftDataset private[format] (
     val newEntries: Seq[String] =
       CommitLog.parMap(worthIt.map(_._1.toSeq).toSeq, cap = 8)(bin =>
         writeData(readManifest(bin,
-          withUuidSchema(stSchema)).coalesce(1), "bin"))
-    stFiles = stFiles.filterNot(rewritten.contains) ++ newEntries
-    dirty = true; pendingRewrite = rewriteOnly
+          withUuidSchema(st.schema), st).coalesce(1), "bin"))
+    stage(st.copy(files = st.files.filterNot(rewritten.contains) ++ newEntries),
+      rewrite = rewriteOnly)
     (rewritten.size, newEntries.size)
   }
 
@@ -927,7 +743,7 @@ class GraftDataset private[format] (
     val bits = math.min(10, 63 / clusterBy.size)
     val nBuckets = 1 << bits
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val numeric = clusterBy.filter(c => stSchema(c).dataType match {
+    val numeric = clusterBy.filter(c => st.schema(c).dataType match {
       case _: org.apache.spark.sql.types.NumericType |
            _: org.apache.spark.sql.types.DateType |
            _: org.apache.spark.sql.types.TimestampType => true
@@ -936,7 +752,7 @@ class GraftDataset private[format] (
     // DATE cannot cast straight to double (disallowed since Spark 3.0);
     // route it through timestamp (one session-zone conversion, identical
     // for boundaries and values, so bucket assignment is consistent)
-    def asDouble(c: String): Column = stSchema(c).dataType match {
+    def asDouble(c: String): Column = st.schema(c).dataType match {
       case _: org.apache.spark.sql.types.DateType =>
         col(c).cast("timestamp").cast("double")
       case _ => col(c).cast("double")
@@ -956,7 +772,7 @@ class GraftDataset private[format] (
           .map { case (c, b) => c -> b.distinct.sorted.drop(1) }.toMap
       }
     val ids = clusterBy.map { c =>
-      stSchema(c).dataType match {
+      st.schema(c).dataType match {
         case _ if numBounds.contains(c) =>
           ZOrder.rangeBucketDouble(asDouble(c), numBounds(c))
         case _: org.apache.spark.sql.types.StringType =>
@@ -965,7 +781,7 @@ class GraftDataset private[format] (
           // job reads ~targetRows regardless of table size; sorted under
           // UTF8String.binaryCompare = the parquet stats collation
           val targetRows = nBuckets * 16
-          val estimate = math.max(1L, footerRows(stFiles))
+          val estimate = math.max(1L, footerRows(st.files))
           val fraction = math.min(1.0, targetRows * 2.0 / estimate)
           val sample = snap.select(col(c)).filter(col(c).isNotNull)
             .sample(withReplacement = false, fraction, seed = 42)
@@ -1068,9 +884,7 @@ class GraftDataset private[format] (
               .get(b).exists(alreadyApplied))) {
             aborted = true
           } else {
-          if (rebasesLeft <= 0 || !(rebaseAppendsOntoBranchHead() ||
-              rebaseRewriteOntoBranchHead() ||
-              rebaseMutationsOntoBranchHead())) throw e
+          if (rebasesLeft <= 0 || !rebaseLostCommit()) throw e
           rebasesLeft -= 1
           // jittered backoff breaks convoys: under heavy same-table
           // contention a straight retry tends to lose the CAS to the
@@ -1086,234 +900,84 @@ class GraftDataset private[format] (
     if (aborted) None else result
   }
 
-  /** Rebase a lost optimistic commit onto the branch's new head, when
-    * that is provably safe: our staged change is APPEND-ONLY relative to
-    * the parent we loaded (new base entries only — no updates, pops,
-    * renames, or schema changes of ours), and the winner left schema and
-    * rename chain untouched. Appended rows commute with anything the
-    * winner did to OTHER rows: uuids are collision-free by construction
-    * ([[CommitLog.claimReservation]] — each appender atomically claims a
-    * disjoint uuid block), so the winner's updates/tombstones cannot
-    * reference ours, and file skipping stats ride along per entry. At
-    * scale this is what lets N ingest jobs append to one table without
-    * a lock or a user-level retry loop. Returns false (caller rethrows)
-    * for anything else — conflicts that need user semantics stay loud.
+  /** Rebase a lost optimistic commit onto the branch's new head with
+    * [[rebaseOnto]]; false (the caller rethrows) when the branch is gone
+    * or did not move. A None parent is the CREATE race: two writers (e.g.
+    * two streaming queries starting against one empty table) both staged
+    * the table's FIRST commit and ours lost the branch CAS; its parent,
+    * the empty state with OUR schema, keeps diverging create schemas a
+    * loud conflict.
     */
-  private def rebaseAppendsOntoBranchHead(): Boolean = {
+  private def rebaseLostCommit(): Boolean = {
     val b = branchName.getOrElse(return false)
     val newHeadId = CommitLog.readBranches(spark, root)
       .getOrElse(b, return false)
-    val parentId = headId
-    if (parentId.contains(newHeadId)) return false
-    // a None parent is the CREATE race: two writers (e.g. two streaming
-    // queries starting against one empty table) both staged the table's
-    // FIRST commit and ours lost the branch CAS. Synthesize the empty
-    // pre-state with OUR schema: the append-only check below then
-    // demands we staged nothing but base files, and the compatibility
-    // check demands the winner established the SAME schema — anything
-    // else (diverging create schemas) stays a loud conflict.
-    val parent = parentId.map(CommitLog.readCommit(spark, root, _))
-      .getOrElse(CommitMeta(id = "", parent = None, mergeParent = None,
-        message = "", timestampMs = 0L, schemaJson = stSchema.json,
-        files = Nil, updates = Nil, tombstones = Nil, renames = Nil))
-    val head = CommitLog.readCommit(spark, root, newHeadId)
-    val parentFiles = parent.files.toSet
-    val appended = stFiles.filterNot(parentFiles)
-    val appendOnly =
-      stFiles.filter(parentFiles) == parent.files.toVector &&
-        stUpdates.toSeq == parent.updates &&
-        stTombstones.toSeq == parent.tombstones &&
-        stRenames.map(p => Seq(p._1, p._2)).toSeq == parent.renames &&
-        stSchema.json == parent.schemaJson
-    val headCompatible =
-      head.schemaJson == parent.schemaJson && head.renames == parent.renames
-    if (!appendOnly || !headCompatible) return false
-    // adopt the winner's state wholesale; graft only OUR new entries
-    // (with their stats and epochs) on top
-    val appendedSet = appended.toSet
-    val ourStats = stStats.view.filterKeys(k =>
-      appended.exists(e => k == e || k.startsWith(e + "/"))).toMap
-    val ourEpochs = stEpochs.filter { case (k, _) => appendedSet(k) }
-    headId = Some(newHeadId)
-    stFiles = head.files.toVector ++ appended
-    stUpdates = head.updates.toVector
-    stTombstones = head.tombstones.toVector
-    stRenames = head.renames.map(p => (p(0), p(1))).toVector
-    stStats = head.stats.getOrElse(Map.empty) ++ ourStats
-    stEpochs = head.epochs.getOrElse(Map.empty) ++ ourEpochs
-    stStatsNormalized = head.statsNormalized.getOrElse(head.renames.isEmpty)
-    stSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-    true
+    if (headId.contains(newHeadId)) return false
+    val parent = headId.fold(TableState.empty(st.schema))(id =>
+      TableState.of(CommitLog.readCommit(spark, root, id)))
+    val rebased = rebaseOnto(parent,
+      TableState.of(CommitLog.readCommit(spark, root, newHeadId)))
+    rebased.foreach { s => st = s; headId = Some(newHeadId) }
+    rebased.isDefined
   }
 
-  /** Rebase a lost REWRITE commit (clean-state [[optimizeSmallFiles]] /
-    * [[compact]]) onto the branch's new head, when that is provably
-    * safe — the Delta OPTIMIZE conflict resolution, and what lets
-    * routine maintenance run alongside live ingest without a user-level
-    * retry loop. Conditions:
-    *   - our staged change is a PURE base-entry rewrite vs the parent we
-    *     loaded: updates/tombstones/renames/schema all verbatim equal
-    *     (a FOLDING compact resets them and stays a loud conflict), only
-    *     `files` changed — some entries replaced by repacked ones;
-    *   - the winner kept every entry we replaced in its manifest (nobody
-    *     else rewrote them) and left schema + rename chain untouched.
-    * Then the rewrite commutes with whatever the winner did: base bytes
-    * are immutable and position-independent, the winner's new
-    * updates/tombstones key on `_uuid` and apply merge-on-read over the
-    * repacked bases unchanged, and the winner's new base entries simply
-    * stay unpacked until the next maintenance pass. The rebased commit
-    * adopts the winner's state wholesale, swaps the replaced entries for
-    * ours (stats + epochs riding along — valid because the rename chain
-    * is unchanged), and keeps its rewrite flag so feeds still skip it.
+  /** Our staged change replayed on the winner `head` of a lost branch
+    * CAS when it provably commutes with what the winner did since our
+    * `parent` (accept table in the class doc) — a metadata-only retry,
+    * the data files exist. None otherwise: conflicts that need user
+    * semantics stay loud. Why each case commutes:
+    *   - REPLACED entries (clean-state [[optimizeSmallFiles]] /
+    *     [[compact]], Delta's OPTIMIZE resolution, so maintenance runs
+    *     beside live ingest): base bytes are immutable and
+    *     position-independent, the winner's new updates/tombstones apply
+    *     by `_uuid` over the repacked bases unchanged, and its new base
+    *     entries stay unpacked until the next pass. A FOLDING compact
+    *     resets the lists and stays loud. The rewrite flag stays, so
+    *     feeds still skip the commit.
+    *   - UPDATES/TOMBSTONES (so an enrichment job runs beside ingest and
+    *     maintenance without a lock) are SNAPSHOT-SCOPED edits pinned to
+    *     `_uuid`: they commute with appends (disjoint uuid spaces) and
+    *     rewrites (uuid-preserving). A winner that mutated too commutes
+    *     exactly when the new entries touch DISJOINT uuids — row-level,
+    *     finer than Delta's file-level check. OVERLAPPING edits stay
+    *     loud: postimages are FULL rows computed against OUR parent, so
+    *     replaying them over the winner's edit of the SAME row would
+    *     silently clobber it (any last-wins order would be an arbitrary
+    *     pick) — Delta's ConcurrentDeleteRead/WriteException family. A
+    *     winner that FOLDED the lists (compact over churn) stays loud.
+    *   - APPENDS commute with anything the winner did to OTHER rows:
+    *     [[CommitLog.claimReservation]] gives each appender a disjoint
+    *     uuid block, so the winner's edits cannot reference ours — N
+    *     ingest jobs append to one table without a lock or a retry loop.
+    * The winner's state is adopted wholesale with our delta replayed on
+    * it ([[TableState.replayedOn]]), stats and epochs riding along per
+    * entry — valid because the rename chain is unchanged.
     */
-  private def rebaseRewriteOntoBranchHead(): Boolean = {
-    if (!pendingRewrite) return false
-    val b = branchName.getOrElse(return false)
-    val newHeadId = CommitLog.readBranches(spark, root)
-      .getOrElse(b, return false)
-    val parentId = headId.getOrElse(return false) // rewrites have a parent
-    if (parentId == newHeadId) return false
-    val parent = CommitLog.readCommit(spark, root, parentId)
-    val head = CommitLog.readCommit(spark, root, newHeadId)
-    val parentFiles = parent.files.toSet
-    val stFileSet = stFiles.toSet
-    val replaced = parent.files.filterNot(stFileSet)
-    val packed = stFiles.filterNot(parentFiles)
-    val rewriteOnly = replaced.nonEmpty &&
-      stUpdates.toSeq == parent.updates &&
-      stTombstones.toSeq == parent.tombstones &&
-      stRenames.map(p => Seq(p._1, p._2)).toSeq == parent.renames &&
-      stSchema.json == parent.schemaJson
-    val headFiles = head.files.toSet
-    val headCompatible =
-      head.schemaJson == parent.schemaJson &&
-        head.renames == parent.renames &&
-        replaced.forall(headFiles)
-    if (!rewriteOnly || !headCompatible) return false
-    val replacedSet = replaced.toSet
-    val packedSet = packed.toSet
-    val ourStats = stStats.view.filterKeys(k =>
-      packed.exists(e => k == e || k.startsWith(e + "/"))).toMap
-    val ourEpochs = stEpochs.filter { case (k, _) => packedSet(k) }
-    headId = Some(newHeadId)
-    stFiles = head.files.toVector.filterNot(replacedSet) ++ packed
-    stUpdates = head.updates.toVector
-    stTombstones = head.tombstones.toVector
-    stRenames = head.renames.map(p => (p(0), p(1))).toVector
-    // adopt the winner's stats/epochs MINUS the entries this rebase just
-    // removed from the manifest — carrying them would commit dead keys
-    // that every descendant inherits forever (metadata bloat, not a
-    // correctness issue: lookups are manifest-driven)
-    stStats = head.stats.getOrElse(Map.empty).view.filterKeys(k =>
-      !replaced.exists(e => k == e || k.startsWith(e + "/"))).toMap ++ ourStats
-    stEpochs = head.epochs.getOrElse(Map.empty)
-      .filter { case (k, _) => !replacedSet(k) } ++ ourEpochs
-    // conservative AND: never claim normalized stat keys the winner (or
-    // our own pre-rebase handle) did not
-    stStatsNormalized = stStatsNormalized &&
-      head.statsNormalized.getOrElse(head.renames.isEmpty)
-    stSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-    true
-  }
-
-  /** Rebase a lost commit that staged uuid-keyed MUTATIONS (update /
-    * pop entries, optionally alongside appends) onto the branch's new
-    * head, when that is provably safe — what lets an enrichment job
-    * run beside live ingest and maintenance without a lock. Our
-    * mutations are SNAPSHOT-SCOPED row edits pinned to `_uuid`: the
-    * rows they touch are exactly the rows our handle read, so they
-    * commute with a winner that only APPENDED (disjoint uuid spaces by
-    * reservation) or only REWROTE base entries (uuid-preserving, and
-    * update/tombstone entries apply merge-on-read by uuid over any base
-    * layout). A winner whose own update/tombstone lists ALSO grew
-    * commutes exactly when the two sides' new entries touch DISJOINT
-    * uuid sets — checked with one tiny join over just the racing
-    * entries (row-level conflict detection, finer than Delta's
-    * file-level check: two enrichment jobs on disjoint slices never
-    * block each other). OVERLAPPING mutations stay a loud conflict
-    * needing user semantics: update postimages are FULL rows computed
-    * against OUR parent snapshot, so replaying them over the winner's
-    * edit of the SAME row would silently clobber it (and any silent
-    * last-wins ordering between the two would be an arbitrary pick) —
-    * Delta's ConcurrentDeleteRead/WriteException family. A winner that
-    * FOLDED the lists (compact over outstanding churn) stays loud too.
-    */
-  private def rebaseMutationsOntoBranchHead(): Boolean = {
-    val b = branchName.getOrElse(return false)
-    val newHeadId = CommitLog.readBranches(spark, root)
-      .getOrElse(b, return false)
-    val parentId = headId.getOrElse(return false) // mutations need rows
-    if (parentId == newHeadId) return false
-    val parent = CommitLog.readCommit(spark, root, parentId)
-    val head = CommitLog.readCommit(spark, root, newHeadId)
-    def extendsSeq(ours: Seq[String], base: Seq[String]) =
-      ours.length >= base.length && ours.take(base.length) == base
-    val newFiles = stFiles.drop(parent.files.length)
-    val newUpdates = stUpdates.drop(parent.updates.length)
-    val newTombstones = stTombstones.drop(parent.tombstones.length)
-    val mutationOnly =
-      (newUpdates.nonEmpty || newTombstones.nonEmpty) &&
-        extendsSeq(stFiles.toSeq, parent.files) &&
-        extendsSeq(stUpdates.toSeq, parent.updates) &&
-        extendsSeq(stTombstones.toSeq, parent.tombstones) &&
-        stRenames.map(p => Seq(p._1, p._2)).toSeq == parent.renames &&
-        stSchema.json == parent.schemaJson
-    val headNewUpdates = head.updates.drop(parent.updates.length)
-    val headNewTombstones = head.tombstones.drop(parent.tombstones.length)
-    val headCompatible =
-      head.schemaJson == parent.schemaJson &&
-        head.renames == parent.renames &&
-        extendsSeq(head.updates, parent.updates) &&
-        extendsSeq(head.tombstones, parent.tombstones)
-    if (!mutationOnly || !headCompatible) return false
-    // the winner also mutated: commutes iff the two sides' new entries
-    // touch disjoint uuid sets. One join over ONLY the racing entries —
-    // cost scales with the churn of the two commits, never the table —
-    // with no driver-side uuid materialization.
-    if (headNewUpdates.nonEmpty || headNewTombstones.nonEmpty) {
-      val ours = readUuids(newUpdates ++ newTombstones)
-      val theirs = readUuids(headNewUpdates ++ headNewTombstones)
-      if (!ours.join(theirs, UuidCol).isEmpty) return false
-    }
-    val newEntries = (newFiles ++ newUpdates ++ newTombstones).toSet
-    val ourStats = stStats.view.filterKeys(k =>
-      newFiles.exists(e => k == e || k.startsWith(e + "/"))).toMap
-    val ourEpochs = stEpochs.filter { case (k, _) => newEntries(k) }
-    headId = Some(newHeadId)
-    stFiles = head.files.toVector ++ newFiles
-    stUpdates = head.updates.toVector ++ newUpdates
-    stTombstones = head.tombstones.toVector ++ newTombstones
-    stRenames = head.renames.map(p => (p(0), p(1))).toVector
-    stStats = head.stats.getOrElse(Map.empty) ++ ourStats
-    stEpochs = head.epochs.getOrElse(Map.empty) ++ ourEpochs
-    stStatsNormalized = stStatsNormalized &&
-      head.statsNormalized.getOrElse(head.renames.isEmpty)
-    stSchema = DataType.fromJson(head.schemaJson).asInstanceOf[StructType]
-    true
+  private def rebaseOnto(parent: TableState,
+                         head: TableState): Option[TableState] = {
+    def keepsParentShape(s: TableState) =
+      s.schema.json == parent.schema.json && s.renames == parent.renames
+    val d = st.since(parent).filter(_ =>
+      keepsParentShape(st) && keepsParentShape(head)).getOrElse(return None)
+    val commutes =
+      if (d.replaced.nonEmpty)
+        pendingRewrite && d.mutations.isEmpty &&
+          d.replaced.forall(head.files.toSet)
+      else if (d.mutations.nonEmpty) head.since(parent).exists { h =>
+        // cost scales with the churn of the two commits, never the
+        // table, with no driver-side uuid materialization
+        h.mutations.isEmpty ||
+          readUuids(d.mutations).join(readUuids(h.mutations), UuidCol).isEmpty
+      }
+      else true
+    if (commutes) Some(st.replayedOn(head, d)) else None
   }
 
   private def publishCommit(id: String, message: String,
                             parent: Option[String],
                             mergeParent: Option[String]): Unit = {
-    CommitLog.writeCommit(spark, root, CommitMeta(
-      id = id, parent = parent, mergeParent = mergeParent, message = message,
-      timestampMs = System.currentTimeMillis(),
-      schemaJson = stSchema.json,
-      files = stFiles, updates = stUpdates, tombstones = stTombstones,
-      renames = stRenames.map(p => Seq(p._1, p._2)),
-      rewrite = if (pendingRewrite) Some(true) else None,
-      stats = {
-        val live = stStats.view.filterKeys(k =>
-          stFiles.exists(e => k == e || k.startsWith(e + "/"))).toMap
-        if (live.isEmpty) None else Some(live)
-      },
-      epochs = {
-        val entries = (stFiles ++ stUpdates ++ stTombstones).toSet
-        val live = stEpochs.filter { case (e, n) => n > 0 && entries(e) }
-        if (live.isEmpty) None else Some(live)
-      },
-      statsNormalized =
-        if (stRenames.nonEmpty && stStatsNormalized) Some(true) else None))
+    CommitLog.writeCommit(spark, root,
+      st.meta(id, parent, mergeParent, message, rewrite = pendingRewrite))
     CommitLog.advanceCommitHint(spark, root, id)
     // Optimistic concurrency on the branch pointer: advance it only if it
     // still points at this commit's parent. A stale writer (someone else
@@ -1355,16 +1019,8 @@ class GraftDataset private[format] (
   def branches: Map[String, String] = CommitLog.readBranches(spark, root)
 
   /** First-parent history from HEAD (reference `log`/`commits`). */
-  def log: Seq[CommitMeta] = {
-    val out = Vector.newBuilder[CommitMeta]
-    var cur = headId
-    while (cur.isDefined) {
-      val m = CommitLog.readCommit(spark, root, cur.get)
-      out += m
-      cur = m.parent
-    }
-    out.result()
-  }
+  def log: Seq[CommitMeta] =
+    CommitLog.firstParentChain(spark, root, headId).toVector
 
   /** Newest first-parent commit from HEAD whose message equals
     * `message`, or None — the marker-matched read of the cross-table
@@ -1415,16 +1071,12 @@ class GraftDataset private[format] (
     * `descendantId` (inclusive) — reference `commits_between`.
     */
   def commitsBetween(ancestorId: String, descendantId: String): Seq[CommitMeta] = {
-    val out = Vector.newBuilder[CommitMeta]
-    var cur: Option[String] = Some(descendantId)
-    var found = false
-    while (cur.isDefined && !found) {
-      val m = CommitLog.readCommit(spark, root, cur.get)
-      if (m.id == ancestorId) found = true
-      else { out += m; cur = m.parent }
-    }
-    require(found, s"$ancestorId is not a first-parent ancestor of $descendantId")
-    out.result().reverse
+    val path = CommitLog.firstParentChain(spark, root, Some(descendantId),
+      Some(ancestorId)).toVector
+    require(path.lastOption.fold(descendantId == ancestorId)(
+      _.parent.contains(ancestorId)),
+      s"$ancestorId is not a first-parent ancestor of $descendantId")
+    path.reverse
   }
 
   /** Switch branch/commit; `create=true` branches from HEAD (reference
@@ -1447,9 +1099,9 @@ class GraftDataset private[format] (
       case Some(commitId) =>
         branchName = Some(ref); headId = Some(commitId); loadHead()
       case None => // detached checkout of a commit id
-        require(CommitLog.listCommits(spark, root).contains(ref),
-          s"no branch or commit $ref")
-        branchName = None; headId = Some(ref); loadHead()
+        val m = CommitLog.findCommit(spark, root, ref)
+        require(m.isDefined, s"no branch or commit $ref")
+        branchName = None; headId = Some(ref); st = TableState.of(m.get)
     }
   }
 
@@ -1514,7 +1166,7 @@ class GraftDataset private[format] (
     // stays on disk
     val survivorEntries = all.values
       .filterNot(m => exclusive.contains(m.id)).flatMap(entriesOf).toSet ++
-      stFiles ++ stUpdates ++ stTombstones
+      st.entries
     val doomed = exclusive.toSeq.sorted.flatMap(id =>
       all.get(id).toSeq.flatMap(entriesOf)).distinct
       .filterNot(survivorEntries.contains)
@@ -1524,9 +1176,6 @@ class GraftDataset private[format] (
   }
 
   // ---- storage reclamation ------------------------------------------------
-
-  private def entriesOf(m: CommitMeta): Seq[String] =
-    m.files ++ m.updates ++ m.tombstones
 
   /** Commits that must never lose data files: every branch head, this
     * instance's HEAD (possibly detached), every saved view's pinned
@@ -1543,34 +1192,6 @@ class GraftDataset private[format] (
         .flatMap(c => indexCommit(c.getPath))
     ((branches -- excludeBranch).values ++ headId ++ viewPins ++ idxPins).toSet
   }
-
-  private def vacuumFile = new Path(root, "_graft/vacuum.json")
-
-  /** Watermark of the newest cutoff any completed vacuum used: commits
-    * older than this MAY have lost data files, so time travel to them
-    * first verifies their manifest still resolves (clean error instead
-    * of a mid-scan path failure).
-    */
-  private[format] def vacuumCutoff(): Option[Long] = {
-    val f = CommitLog.fs(spark, root)
-    if (!f.exists(vacuumFile)) None
-    else scala.util.Try {
-      val in = f.open(vacuumFile)
-      val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      (org.json4s.jackson.JsonMethods.parse(s) \ "cutoffMs")
-        .extract[Long](org.json4s.DefaultFormats, implicitly[Manifest[Long]])
-    }.toOption
-  }
-
-  private[format] def assertNotExpired(m: CommitMeta): Unit =
-    vacuumCutoff().filter(m.timestampMs < _).foreach { _ =>
-      val f = CommitLog.fs(spark, root)
-      val missing = entriesOf(m).filterNot(e => f.exists(new Path(root, e)))
-      if (missing.nonEmpty) throw new IllegalStateException(
-        s"commit ${m.id} has been expired by vacuum (missing data: " +
-          s"${missing.take(3).mkString(", ")}); time travel to it is no " +
-          "longer possible")
-    }
 
   /** Reclaim data entries no retained commit references — the Delta
     * `VACUUM` / Iceberg `expire_snapshots` + `remove_orphan_files` of
@@ -1626,7 +1247,7 @@ class GraftDataset private[format] (
       all.values.collect { case m if m.timestampMs >= cutoff => m.id }
     val live: Set[String] =
       protectedIds.flatMap(id => all.get(id).toSeq.flatMap(entriesOf)) ++
-        stFiles ++ stUpdates ++ stTombstones
+        st.entries
     val f = CommitLog.fs(spark, root)
     val dataDir = new Path(root, "data")
     val children =
@@ -1650,9 +1271,9 @@ class GraftDataset private[format] (
       CommitLog.parMap(children)(classify)
     }
     if (!dryRun) {
-      val newCutoff = math.max(vacuumCutoff().getOrElse(Long.MinValue),
+      val newCutoff = math.max(vacuumCutoff(spark, root).getOrElse(Long.MinValue),
         math.min(cutoff, now)) // future cutoffs cap at `now`: later commits are intact
-      CommitLog.atomicReplace(spark, vacuumFile,
+      CommitLog.atomicReplace(spark, vacuumFile(root),
         org.json4s.jackson.Serialization.write(Map("cutoffMs" -> newCutoff))(
           org.json4s.DefaultFormats))
     }
@@ -1662,9 +1283,16 @@ class GraftDataset private[format] (
   // ---- diff / merge -------------------------------------------------------
 
   private def resolveRef(ref: String): String =
-    branches.getOrElse(ref,
-      { require(CommitLog.listCommits(spark, root).contains(ref),
-          s"no branch or commit $ref"); ref })
+    branches.getOrElse(ref, readRef(ref).id)
+
+  /** The commit `ref` names — a branch head, else a commit id — read
+    * once. */
+  private def readRef(ref: String): CommitMeta = {
+    val m = branches.get(ref).map(CommitLog.readCommit(spark, root, _))
+      .orElse(CommitLog.findCommit(spark, root, ref))
+    require(m.isDefined, s"no branch or commit $ref")
+    m.get
+  }
 
   private def threeWayIds(targetRef: String) = {
     val ourId = headId.getOrElse(throw new IllegalStateException("no HEAD"))
@@ -1685,14 +1313,14 @@ class GraftDataset private[format] (
     * either side gives.
     */
   private def restrictToChurn(tw: ThreeWay,
-      frames: Seq[(CommitMeta, Seq[(String, String)])]): ThreeWay = {
-    val metas = frames.map(_._1)
-    val lca = metas.head
-    val shared = metas.map(entriesOf(_).toSet).reduce(_ intersect _)
-    val sameOrder = metas.map(_.updates.filter(shared)).distinct.size == 1
+      frames: Seq[(TableState, Seq[(String, String)])]): ThreeWay = {
+    val states = frames.map(_._1)
+    val lca = states.head
+    val shared = states.map(_.entries.toSet).reduce(_ intersect _)
+    val sameOrder = states.map(_.updates.filter(shared)).distinct.size == 1
     if (!sameOrder || !Versioning.uniformOutsideChurn(tw.schema, lca, frames)) tw
     else {
-      val churn = metas.flatMap(entriesOf).distinct.filterNot(shared)
+      val churn = states.flatMap(_.entries).distinct.filterNot(shared)
       val cands = if (churn.isEmpty) emptyDf(UuidSchema) else readUuids(churn)
       def keep(df: DataFrame) = df.join(cands, Seq(UuidCol), "left_semi")
       ThreeWay(keep(tw.lca), keep(tw.ours), keep(tw.theirs), tw.schema)
@@ -1708,11 +1336,11 @@ class GraftDataset private[format] (
   private[format] def compareInputs(targetRef: String,
                                     restrict: Boolean = true): ThreeWay = {
     val (ourId, theirId, lcaId) = threeWayIds(targetRef)
-    val metas = Seq(lcaId, ourId, theirId).map(CommitLog.readCommit(spark, root, _))
-    val tw = ThreeWay(snapshotAtWithUuid(lcaId), snapshotAtWithUuid(ourId),
-      snapshotAtWithUuid(theirId),
-      Versioning.mergedSchema(stSchema, schemaOf(metas(2))))
-    if (restrict) restrictToChurn(tw, metas.map(_ -> Nil)) else tw
+    val states = Seq(lcaId, ourId, theirId).map(stateAt)
+    val Seq(l, o, t) = states.map(snapshotWithUuid)
+    val tw = ThreeWay(l, o, t,
+      Versioning.mergedSchema(st.schema, states(2).schema))
+    if (restrict) restrictToChurn(tw, states.map(_ -> Nil)) else tw
   }
 
   /** Per-side change sets vs the LCA (reference `diff`). Joins only the
@@ -1741,16 +1369,14 @@ class GraftDataset private[format] (
       else resolveRef(toRef)
     // empty fromRef = from the very beginning: the full feed bootstraps
     // a CDC replica (first commit's events included)
-    val fromId = if (fromRef.isEmpty) None else Some(resolveRef(fromRef))
-    val metas = fromId match {
-      case Some(f) => commitsBetween(f, toId)
-      case None =>
-        new GraftDataset(spark, root, None, Some(toId)).log.reverse
-    }
-    var prev = fromId.map(CommitLog.readCommit(spark, root, _)).getOrElse(
+    val from = if (fromRef.isEmpty) None else Some(readRef(fromRef))
+    val metas = from.fold[Seq[CommitMeta]](
+      CommitLog.firstParentChain(spark, root, Some(toId)).toVector.reverse)(
+      f => commitsBetween(f.id, toId))
+    var prev = from.getOrElse(
       CommitMeta(id = "", parent = None, mergeParent = None, message = "",
         timestampMs = 0L,
-        schemaJson = metas.headOption.fold(stSchema.json)(_.schemaJson),
+        schemaJson = metas.headOption.fold(st.schema.json)(_.schemaJson),
         files = Nil, updates = Nil, tombstones = Nil, renames = Nil))
     // the feed's pinned schema: the range-START schema extended by every
     // column ADDED within the range (at its add-time name — a later
@@ -1766,8 +1392,7 @@ class GraftDataset private[format] (
       // downstream select/toDF on the feed fails on the ambiguity —
       // fail here with the range-split contract instead
       val pinned = scala.collection.mutable.Set.empty[String]
-      pinned ++= DataType.fromJson(prev.schemaJson)
-        .asInstanceOf[StructType].fieldNames
+      pinned ++= TableState.schemaOf(prev).fieldNames
       val b = Vector.newBuilder[org.apache.spark.sql.types.StructField]
       for (m <- metas) { // prev advances over rewrite commits too,
         if (!m.rewrite.contains(true) && // mirroring the event walk below
@@ -1787,8 +1412,7 @@ class GraftDataset private[format] (
       b.result()
     }
     val dataSchema = GraftStream.nullableData(withUuidSchema(StructType(
-      DataType.fromJson(prev.schemaJson).asInstanceOf[StructType].fields ++
-        rangeAdds)))
+      TableState.schemaOf(prev).fields ++ rangeAdds)))
     val cdfSchema = StructType(dataSchema.fields :+
       StructField(GraftStream.ChangeTypeCol, StringType, nullable = false) :+
       StructField(GraftStream.CommitIdCol, StringType, nullable = false))
@@ -1810,7 +1434,7 @@ class GraftDataset private[format] (
           parts += GraftStream.schemaChangeEvent(spark, cdfSchema, m.id)
         }
         GraftStream.requireDeltaExpressible(m, prev)
-        assertNotExpired(m)
+        assertNotExpired(spark, root, m)
         parts ++= GraftStream.changeEvents(spark, root, dataSchema, m, prev)
       }
       prev = m
@@ -1852,7 +1476,7 @@ class GraftDataset private[format] (
     require(!reconcileDeletes || dedupInserts,
       "reconcileDeletes needs the replica uuid scan dedupInserts provides")
     val tpe = col(GraftStream.ChangeTypeCol)
-    val dataCols = withUuidSchema(stSchema).fieldNames.toIndexedSeq.map(col)
+    val dataCols = withUuidSchema(st.schema).fieldNames.toIndexedSeq.map(col)
     // loud contract at schema-evolution boundaries: this is the LOW-LEVEL
     // apply — events map onto file kinds under the REPLICA's current
     // schema. A feed carrying data columns this replica lacks (a source
@@ -1864,7 +1488,7 @@ class GraftDataset private[format] (
     // automatically) or aligns/filters the feed explicitly.
     val unknownCols = events.columns.toSet --
       Set(GraftStream.ChangeTypeCol, GraftStream.CommitIdCol) --
-      withUuidSchema(stSchema).fieldNames
+      withUuidSchema(st.schema).fieldNames
     require(unknownCols.isEmpty,
       s"change feed carries columns this replica lacks: " +
         s"${unknownCols.mkString(", ")} — adopt the source's schema " +
@@ -1920,7 +1544,7 @@ class GraftDataset private[format] (
             "uuids are untouched rows, not deletions")
       val freshIns = ins.select(dataCols: _*)
         .join(replicaIds, Seq(UuidCol), "left_anti")
-      val nIns = landEntry(freshIns.select(dataCols: _*), "cdc")(stFiles :+= _)
+      val nIns = landEntry(freshIns.select(dataCols: _*), "cdc")(addFile)
       val staleIns = ins
         .join(replicaIds, Seq(UuidCol), "left_semi")
       // postimages win over a same-commit insert of the same uuid
@@ -1932,7 +1556,7 @@ class GraftDataset private[format] (
       val latestUpd = GraftDataset.lastWinsPerUuid(
         cached.filter(tpe === "update_postimage").unionByName(staleIns)
           .select((dataCols :+ seq.as("_seq")): _*), "_seq")
-      val nUpd = landEntry(latestUpd, "update")(stUpdates :+= _)
+      val nUpd = landEntry(latestUpd, "update")(addUpdate)
       // delete idempotency must hold at the FILE level, not just the
       // snapshot level: countRows subtracts tombstone-file row counts
       // assuming every tombstoned uuid was live exactly once, so a
@@ -1946,10 +1570,10 @@ class GraftDataset private[format] (
       val delEvents =
         cached.filter(tpe === "delete").select(col(UuidCol)).distinct()
       val freshDel =
-        if (dedupInserts && stTombstones.nonEmpty)
-          delEvents.join(readUuids(stTombstones), Seq(UuidCol), "left_anti")
+        if (dedupInserts && st.tombstones.nonEmpty)
+          delEvents.join(readUuids(st.tombstones), Seq(UuidCol), "left_anti")
         else delEvents
-      var nDel = landEntry(freshDel, "tombstone")(stTombstones :+= _)
+      var nDel = landEntry(freshDel, "tombstone")(addTombstone)
       // a BOOTSTRAP feed (the complete live snapshot as insert events)
       // carries no delete events for rows that died before it was cut —
       // a behind replica re-synced from a fresh checkpoint would keep
@@ -1959,7 +1583,7 @@ class GraftDataset private[format] (
       // feed's absent uuids are merely untouched rows (caller decides).
       if (reconcileDeletes)
         nDel += landEntry(replicaIds.join(ins.select(col(UuidCol)),
-          Seq(UuidCol), "left_anti"), "tombstone")(stTombstones :+= _)
+          Seq(UuidCol), "left_anti"), "tombstone")(addTombstone)
       (nIns, nUpd, nDel)
     } finally {
       cached.unpersist(false)
@@ -1972,10 +1596,9 @@ class GraftDataset private[format] (
     * (reference `direct_diff`).
     */
   def directDiff(targetRef: String): DataFrame = {
-    val theirId = resolveRef(targetRef)
-    Versioning.directDiff(
-      snapshotWithUuid(), snapshotAtWithUuid(theirId),
-      Versioning.mergedSchema(stSchema, schemaAt(theirId)))
+    val theirs = stateOf(readRef(targetRef))
+    Versioning.directDiff(snapshotWithUuid(), snapshotWithUuid(theirs),
+      Versioning.mergedSchema(st.schema, theirs.schema))
   }
 
   /** Per-tensor changes between two commits (reference `tensor_diff`,
@@ -1987,10 +1610,9 @@ class GraftDataset private[format] (
     */
   def tensorDiff(ref1: String, ref2: String,
                  tensors: Seq[String] = Nil): DataFrame = {
-    val aId = resolveRef(ref1); val bId = resolveRef(ref2)
-    Versioning.tensorDiff(
-      snapshotAtWithUuid(aId), snapshotAtWithUuid(bId),
-      Versioning.mergedSchema(schemaAt(aId), schemaAt(bId)), tensors)
+    val Seq(a, b) = Seq(readRef(ref1), readRef(ref2)).map(stateOf)
+    Versioning.tensorDiff(snapshotWithUuid(a), snapshotWithUuid(b),
+      Versioning.mergedSchema(a.schema, b.schema), tensors)
   }
 
   /** Conflict report for merging `targetRef` into HEAD
@@ -2001,12 +1623,6 @@ class GraftDataset private[format] (
     val in = compareInputs(targetRef)
     Versioning.conflicts(in.lca, in.ours, in.theirs, in.schema)
   }
-
-  private def schemaAt(commitId: String): StructType =
-    schemaOf(CommitLog.readCommit(spark, root, commitId))
-
-  private def schemaOf(m: CommitMeta): StructType =
-    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
 
   /** The merge's three-way inputs, renamed onto the merged names, and
     * the renames ours adopts from theirs (in chain order).
@@ -2022,11 +1638,8 @@ class GraftDataset private[format] (
   private[format] def mergeInputs(ourId: String, theirId: String,
       lcaId: String, restrict: Boolean = true)
       : (ThreeWay, Seq[(String, String)]) = {
-    val Seq(l, o, t) =
-      Seq(lcaId, ourId, theirId).map(CommitLog.readCommit(spark, root, _))
-    def renamesOf(m: CommitMeta): Seq[(String, String)] =
-      m.renames.map(p => (p(0), p(1)))
-    val lcaRen = renamesOf(l)
+    val Seq(l, o, t) = Seq(lcaId, ourId, theirId).map(stateAt)
+    val lcaRen = l.renames
     def since(chain: Seq[(String, String)]): Seq[(String, String)] =
       if (chain.startsWith(lcaRen)) chain.drop(lcaRen.length)
       else chain // compaction reset the chain; apply conservatively
@@ -2034,9 +1647,9 @@ class GraftDataset private[format] (
     // propagate: delete-vs-keep keeps the column via schema union, the
     // pre-marker semantics; letting a marker through would rename the
     // other side's live column (or the LCA's) onto a dead name.
-    val theirNew = since(renamesOf(t)).filterNot(p => isDropMarker(p._2))
-    val ourNew = since(renamesOf(o)).filterNot(p => isDropMarker(p._2))
-    val (ourSchema0, theirSchema0) = (schemaOf(o), schemaOf(t))
+    val theirNew = since(t.renames).filterNot(p => isDropMarker(p._2))
+    val ourNew = since(o.renames).filterNot(p => isDropMarker(p._2))
+    val (ourSchema0, theirSchema0) = (o.schema, t.schema)
     def applicable(renames: Seq[(String, String)], toSchema: StructType,
                    otherSide: Seq[(String, String)]) =
       renames.filter { case (from, to) =>
@@ -2055,9 +1668,9 @@ class GraftDataset private[format] (
     // look changed on both sides and spuriously conflict
     val lcaRenames = ourNew ++ adoptOurs
     val tw = ThreeWay(
-      renameDf(snapshotAtWithUuid(lcaId), lcaRenames),
-      renameDf(snapshotAtWithUuid(ourId), adoptOurs),
-      renameDf(snapshotAtWithUuid(theirId), adoptTheirs),
+      renameDf(snapshotWithUuid(l), lcaRenames),
+      renameDf(snapshotWithUuid(o), adoptOurs),
+      renameDf(snapshotWithUuid(t), adoptTheirs),
       Versioning.mergedSchema(renameSchema(ourSchema0, adoptOurs),
         renameSchema(theirSchema0, adoptTheirs)))
     (if (restrict) restrictToChurn(tw,
@@ -2101,9 +1714,9 @@ class GraftDataset private[format] (
       // adopt the merged names BEFORE any write, so the entries' skipping
       // stats and rename epochs are taken under the final names; the
       // delta plan reads per-commit snapshots, never this staged state
-      for ((from, to) <- adoptOurs if stSchema.fieldNames.contains(from))
+      for ((from, to) <- adoptOurs if st.schema.fieldNames.contains(from))
         appendRename(from, to)
-      stSchema = in.schema
+      st = st.copy(schema = in.schema)
       val op = col(Versioning.DeltaOp)
       // one job (no separate exchange stage) materializes the delta and
       // counts its kinds; an empty kind writes no entry
@@ -2115,21 +1728,21 @@ class GraftDataset private[format] (
       // its row is still in ours' base files, so it becomes live again by
       // dropping it from its tombstone entry, with its postimage on top
       val revived =
-        if (n("insert") == 0 || stTombstones.isEmpty) None
+        if (n("insert") == 0 || st.tombstones.isEmpty) None
         else Some(inserts.select(UuidCol)
-          .join(readUuids(stTombstones), Seq(UuidCol), "left_semi"))
+          .join(readUuids(st.tombstones), Seq(UuidCol), "left_semi"))
           .filterNot(_.isEmpty)
       val (fresh, postimages) = revived.fold((inserts, updates))(r =>
         (inserts.join(r, Seq(UuidCol), "left_anti"),
           updates.unionByName(inserts.join(r, Seq(UuidCol), "left_semi"))))
       if (n("insert") > 0)
-        landEntry(fresh.drop(Versioning.DeltaOp), "merge")(stFiles :+= _)
+        landEntry(fresh.drop(Versioning.DeltaOp), "merge")(addFile)
       if (n("update") > 0 || revived.isDefined)
-        landEntry(postimages.drop(Versioning.DeltaOp), "update")(stUpdates :+= _)
+        landEntry(postimages.drop(Versioning.DeltaOp), "update")(addUpdate)
       revived.foreach(reviveFromTombstones)
       if (n("delete") > 0)
         landEntry(delta.filter(op === "delete").select(UuidCol),
-          "tombstone")(stTombstones :+= _)
+          "tombstone")(addTombstone)
     } catch {
       // a failed merge leaves HEAD's state staged, never a half-adopted one
       case scala.util.control.NonFatal(e) => loadHead(); throw e
@@ -2157,12 +1770,14 @@ class GraftDataset private[format] (
   /** Rewrite, in place, each staged tombstone entry that holds one of
     * `uuids` without them; an entry left empty leaves the manifest. */
   private def reviveFromTombstones(uuids: DataFrame): Unit = {
-    val hit = stTombstones.zipWithIndex
+    val hit = st.tombstones.zipWithIndex
       .map { case (t, i) => readUuids(Seq(t)).withColumn("_entry", lit(i)) }
       .reduce(_ unionByName _)
       .join(uuids, Seq(UuidCol), "left_semi")
       .select("_entry").distinct().collect().map(_.getInt(0)).toSet
-    stTombstones = stTombstones.zipWithIndex.flatMap { case (t, i) =>
+    // every landed entry updates `st` (epochs), so the new list is built
+    // first and swapped in after
+    val tombstones = st.tombstones.zipWithIndex.flatMap { case (t, i) =>
       if (!hit(i)) Some(t)
       else {
         var kept: Option[String] = None
@@ -2171,6 +1786,7 @@ class GraftDataset private[format] (
         kept
       }
     }
+    st = st.copy(tombstones = tombstones)
   }
 
   // ---- views (reference save_view/load_view, view_operations.py) ----------
@@ -2350,14 +1966,16 @@ class GraftDataset private[format] (
     * in-place changes (updates/tombstones/renames) that an append-only
     * delta cannot express, which forces a full rebuild.
     */
-  private def appendOnlyDelta(indexedAt: String): Option[Seq[String]] = {
-    val old = CommitLog.readCommit(spark, root, indexedAt)
-    val appendOnly = old.updates == stUpdates.toSeq &&
-      old.tombstones == stTombstones.toSeq &&
-      old.renames == stRenames.map(p => Seq(p._1, p._2)).toSeq &&
-      old.files.forall(stFiles.contains)
-    if (appendOnly) Some(stFiles.filterNot(old.files.toSet).toSeq) else None
+  private def appendOnlyDelta(indexedAt: String): Option[Vector[String]] = {
+    val old = TableState.of(CommitLog.readCommit(spark, root, indexedAt))
+    st.since(old).filter(d => d.replaced.isEmpty && d.mutations.isEmpty &&
+      old.renames == st.renames).map(_.appended)
   }
+
+  /** The rows of base entries `files` alone (an index delta). */
+  private def rowsOf(files: Vector[String]): DataFrame =
+    snapshotWithUuid(st.copy(files = files, updates = Vector.empty,
+      tombstones = Vector.empty))
 
   /** Incremental inverted-index maintenance (reference `update_index`,
     * inverted_index_vectorized.py:397-445: tokenize ONLY the appended
@@ -2380,8 +1998,7 @@ class GraftDataset private[format] (
         if (newFiles.nonEmpty) {
           val postingsPath = new Path(dir, "postings").toString
           graft.operators.InvertedIndex.build(
-              snapshotWithUuid(files = newFiles, updates = Nil,
-                tombstones = Nil), column, UuidCol, persistedShards)
+              rowsOf(newFiles), column, UuidCol, persistedShards)
             .write.mode("append").partitionBy("shard")
             .parquet(postingsPath)
           // refresh the stats sidecar so query-time broadcast bounds stay
@@ -2472,13 +2089,12 @@ class GraftDataset private[format] (
         // out new tombstones since), which only UNDER-estimates the
         // delta fraction — fine for a 0.5 heuristic.
         val deltaRows = footerRows(newFiles)
-        val indexedRows = footerRows(stFiles.filterNot(newFiles.toSet).toSeq)
+        val indexedRows = footerRows(st.files.filterNot(newFiles.toSet))
         if (indexedRows > 0 && deltaRows > rebuildThreshold * indexedRows)
           rebuild() // writes its own meta (bumped rebuilds counter)
         else {
           if (newFiles.nonEmpty) {
-            val added = snapshotWithUuid(files = newFiles, updates = Nil,
-              tombstones = Nil)
+            val added = rowsOf(newFiles)
             val assignedPath = new Path(dir, "assigned").toString
             val graphPath = new Path(dir, "graph").toString
             tpe match {
@@ -2693,10 +2309,10 @@ class GraftDataset private[format] (
     */
   def describeFiles: DataFrame = {
     import spark.implicits._
-    stFiles.flatMap { entry =>
-      val epoch = epochOf(entry) // rename-chain suffix start (0 = whole chain)
+    st.files.flatMap { entry =>
+      val epoch = st.epochOf(entry) // rename-chain suffix start (0 = whole chain)
       val prefix = entry + "/"
-      val perFile = stStats.view
+      val perFile = st.stats.view
         .filterKeys(k => k == entry || k.startsWith(prefix)).toMap
       if (perFile.isEmpty)
         Seq((entry, entry, epoch, Option.empty[String], Option.empty[String],
@@ -2724,7 +2340,7 @@ class GraftDataset private[format] (
     // (footerRows, optimizeSmallFiles, vacuum): serial per-entry
     // round-trips on a 10k-entry object-store manifest are minutes of
     // wall clock for a size estimate
-    CommitLog.parMap((stFiles ++ stUpdates ++ stTombstones).toSeq) { rel =>
+    CommitLog.parMap(st.entries) { rel =>
       val p = new Path(root, rel)
       if (f.exists(p)) f.getContentSummary(p).getLength else 0L
     }.sum
@@ -3391,6 +3007,39 @@ object GraftDataset {
       .filter(col("_rn") === 1).drop("_rn", seqCol)
   }
 
+  private[format] def entriesOf(m: CommitMeta): Seq[String] =
+    m.files ++ m.updates ++ m.tombstones
+
+  private def vacuumFile(root: String) = new Path(root, "_graft/vacuum.json")
+
+  /** Watermark of the newest cutoff any completed vacuum used: commits
+    * older than this MAY have lost data files, so time travel to them
+    * first verifies their manifest still resolves (clean error instead
+    * of a mid-scan path failure).
+    */
+  private[format] def vacuumCutoff(spark: SparkSession,
+                                   root: String): Option[Long] = {
+    val f = CommitLog.fs(spark, root)
+    if (!f.exists(vacuumFile(root))) None
+    else scala.util.Try {
+      val in = f.open(vacuumFile(root))
+      val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      (org.json4s.jackson.JsonMethods.parse(s) \ "cutoffMs")
+        .extract[Long](org.json4s.DefaultFormats, implicitly[Manifest[Long]])
+    }.toOption
+  }
+
+  private[format] def assertNotExpired(spark: SparkSession, root: String,
+                                       m: CommitMeta): Unit =
+    vacuumCutoff(spark, root).filter(m.timestampMs < _).foreach { _ =>
+      val f = CommitLog.fs(spark, root)
+      val missing = entriesOf(m).filterNot(e => f.exists(new Path(root, e)))
+      if (missing.nonEmpty) throw new IllegalStateException(
+        s"commit ${m.id} has been expired by vacuum (missing data: " +
+          s"${missing.take(3).mkString(", ")}); time travel to it is no " +
+          "longer possible")
+    }
+
   /** Create a new table (reference `muller.empty` / `muller.dataset`). */
   def create(spark: SparkSession, root: String, schema: StructType,
              branch: String = "main"): GraftDataset = {
@@ -3404,8 +3053,8 @@ object GraftDataset {
     // RACING creator (the documented table-CREATE race) must never wipe
     // a winner's already-published pointer with a fresh empty map.
     CommitLog.ensureBranchesFile(spark, root)
-    val ds = new GraftDataset(spark, root, Some(branch), None)
-    ds.stSchema = schema
+    val ds = new GraftDataset(spark, root, Some(branch), None,
+      TableState.empty(schema))
     ds.dirty = true
     ds.commit("init", allowEmpty = true)
     ds
@@ -3418,7 +3067,8 @@ object GraftDataset {
            branch: String = "main"): GraftDataset = {
     val heads = CommitLog.readBranches(spark, root)
     require(heads.contains(branch), s"no branch $branch at $root")
-    new GraftDataset(spark, root, Some(branch), Some(heads(branch)))
+    new GraftDataset(spark, root, Some(branch), Some(heads(branch)),
+      TableState.of(CommitLog.readCommit(spark, root, heads(branch))))
   }
 
   /** Newest commit on the branch's first-parent chain whose timestamp
@@ -3428,16 +3078,12 @@ object GraftDataset {
     */
   def commitAsOf(spark: SparkSession, root: String, tsMs: Long,
                  branch: String = "main"): String = {
-    var cur = CommitLog.readBranches(spark, root).get(branch)
-    require(cur.isDefined, s"no branch $branch at $root")
-    while (cur.isDefined) {
-      val m = CommitLog.readCommit(spark, root, cur.get)
-      if (m.timestampMs <= tsMs) return m.id
-      cur = m.parent
-    }
-    throw new IllegalArgumentException(
-      s"no commit at or before timestamp $tsMs on branch $branch " +
-        s"(the table's first commit is newer)")
+    val head = CommitLog.readBranches(spark, root).get(branch)
+    require(head.isDefined, s"no branch $branch at $root")
+    CommitLog.firstParentChain(spark, root, head).find(_.timestampMs <= tsMs)
+      .map(_.id).getOrElse(throw new IllegalArgumentException(
+        s"no commit at or before timestamp $tsMs on branch $branch " +
+          s"(the table's first commit is newer)"))
   }
 
   /** Timestamp-addressed detached load (TIMESTAMP AS OF). */
@@ -3450,11 +3096,10 @@ object GraftDataset {
     */
   def loadCommit(spark: SparkSession, root: String,
                  commitId: String): GraftDataset = {
-    require(CommitLog.listCommits(spark, root).contains(commitId),
-      s"no commit $commitId at $root")
-    val ds = new GraftDataset(spark, root, None, Some(commitId))
-    ds.assertNotExpired(CommitLog.readCommit(spark, root, commitId))
-    ds
+    val m = CommitLog.findCommit(spark, root, commitId)
+    require(m.isDefined, s"no commit $commitId at $root")
+    assertNotExpired(spark, root, m.get)
+    new GraftDataset(spark, root, None, Some(commitId), TableState.of(m.get))
   }
 
   /** Schema-only copy (reference `muller.like`, api/dataset/copy.py). */

@@ -206,7 +206,7 @@ case class GraftRelation(spark: SparkSession, root: String,
   def metadataCount: Long = dataset.countRows
 
   /** Exact (min, max) of a column from manifest metadata, when provable
-    * ([[GraftDataset.statMinMax]] lists the refusal conditions). */
+    * ([[TableState.statMinMax]] lists the refusal conditions). */
   def metadataMinMax(column: String): Option[(Any, Any)] =
     dataset.statMinMax(column)
 

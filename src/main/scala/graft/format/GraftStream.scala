@@ -136,11 +136,8 @@ object GraftStream {
                                  m: CommitMeta): Option[Seq[(String, String)]] = {
     if (m.renames.size <= prev.renames.size) return None
     if (m.renames.take(prev.renames.size) != prev.renames) return None
-    val added = m.renames.drop(prev.renames.size).map(p => (p(0), p(1)))
-    val prevS = org.apache.spark.sql.types.DataType.fromJson(prev.schemaJson)
-      .asInstanceOf[StructType]
-    val mS = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[StructType]
+    val added = TableState.renamesOf(m).drop(prev.renames.size)
+    val (prevS, mS) = (TableState.schemaOf(prev), TableState.schemaOf(m))
     if (prevS.fields.length != mS.fields.length) return None
     val renamed = added.foldLeft(prevS.fieldNames.toSeq) { case (ns, (f, t)) =>
       ns.map(n => if (n == f) t else n)
@@ -166,10 +163,7 @@ object GraftStream {
   private[graft] def addDelta(prev: CommitMeta,
                               m: CommitMeta): Option[Seq[StructField]] = {
     if (m.renames != prev.renames) return None
-    val prevS = org.apache.spark.sql.types.DataType.fromJson(prev.schemaJson)
-      .asInstanceOf[StructType]
-    val mS = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[StructType]
+    val (prevS, mS) = (TableState.schemaOf(prev), TableState.schemaOf(m))
     val k = prevS.fields.length
     if (mS.fields.length <= k) return None
     val prefixOk = prevS.fields.zip(mS.fields.take(k)).forall { case (a, b) =>
@@ -233,8 +227,7 @@ object GraftStream {
     // names at commit m, aligned positionally with the pinned dataSchema
     // (`_uuid` never renames); equal to the pinned names whenever the
     // range crosses no rename
-    val mFields = org.apache.spark.sql.types.DataType
-      .fromJson(m.schemaJson).asInstanceOf[StructType].fields
+    val mFields = TableState.schemaOf(m).fields
     val curNames: Seq[String] =
       mFields.map(_.name).toSeq :+ GraftDataset.UuidCol
     // the walked commit must be a pure-rename/pure-add stage of the
@@ -263,9 +256,9 @@ object GraftStream {
         case (e, rs) =>
           // physical names at epoch e: undo the chain suffix applied
           // after the files were written, newest pair first
-          val undo = m.renames.drop(e).reverse
-          val phys = curNames.map(n =>
-            undo.foldLeft(n)((nn, p) => if (nn == p(1)) p(0) else nn))
+          val undo = TableState.renamesOf(m).drop(e).reverse
+          val phys = curNames.map(n => undo.foldLeft(n) {
+            case (nn, (from, to)) => if (nn == to) from else nn })
           val readSchema = StructType(pinnedSub.zip(phys).map {
             case (f, p) => f.copy(name = p) })
           spark.read.schema(readSchema).parquet(paths(rs): _*)
@@ -472,23 +465,15 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
     val (ancestor, descendant) =
       if (endId.toLong < pinnedHead.toLong) (endId, pinnedHead)
       else (pinnedHead, endId)
-    def chain(from: String, to: String): Option[List[CommitMeta]] = {
-      var metas = List.empty[CommitMeta] // ascending after the walk
-      var cur = Option(from)
-      while (cur.isDefined && cur.get != to) {
-        val m = CommitLog.readCommit(spark, root, cur.get)
-        metas ::= m
-        cur = m.parent
-      }
-      if (cur.isDefined) Some(metas) else None
-    }
-    val path = chain(descendant, ancestor)
-      .getOrElse(throw new IllegalStateException(
+    val path = CommitLog.firstParentChain(spark, root, Some(descendant),
+      Some(ancestor)).toList
+    if (!path.lastOption.exists(_.parent.contains(ancestor)))
+      throw new IllegalStateException(
         s"graft stream source: commit $endId and the stream's pinned " +
           s"head $pinnedHead are not on one first-parent chain — " +
-          "restart the stream with a fresh checkpoint"))
+          "restart the stream with a fresh checkpoint")
     var prev = CommitLog.readCommit(spark, root, ancestor)
-    for (m <- path) {
+    for (m <- path.reverse) {
       if (m.schemaJson != prev.schemaJson)
         // change feeds tolerate pure renames and pure ADDS (positional
         // identity of the prefix; pre-add events null-backfill);
@@ -731,12 +716,11 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
         // the batch feed (GraftDataset.changes) makes the same per-commit
         // check; without it the batch dies executor-side on a raw
         // FileNotFoundException mid-scan
-        lazy val expiryDs = GraftDataset.loadCommit(spark, root, endId)
         val added = Vector.newBuilder[String]
         val cdfBatches = Vector.newBuilder[DataFrame]
         for (m <- metas) {
           if (!m.rewrite.contains(true)) {
-            expiryDs.assertNotExpired(m)
+            GraftDataset.assertNotExpired(spark, root, m)
             // schema equality, not rename-chain equality: a compact-on-
             // dirty commit FOLDS the cumulative rename chain into the
             // data (chain resets to empty with no logical rename), while
@@ -755,8 +739,7 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
               // restart contract instead of silently dropping the new
               // column's values
               val addOk = GraftStream.addDelta(prev, m).exists(_ =>
-                org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-                  .asInstanceOf[StructType].fields.length <=
+                TableState.schemaOf(m).fields.length <=
                   cdfDataSchema.fields.length - 1)
               require(changeFeed &&
                   (GraftStream.renameDelta(prev, m).isDefined || addOk),
@@ -853,9 +836,7 @@ object GraftTailSource {
   private[format] def schemaAtCommit(spark: SparkSession, root: String,
                                      head: String, withUuid: Boolean,
                                      changeFeed: Boolean): StructType = {
-    val logical = org.apache.spark.sql.types.DataType
-      .fromJson(CommitLog.readCommit(spark, root, head).schemaJson)
-      .asInstanceOf[StructType]
+    val logical = TableState.schemaOf(CommitLog.readCommit(spark, root, head))
     // the change feed always carries `_uuid`: a delete event is
     // identity-only, and consumers key their apply on it
     val withId =

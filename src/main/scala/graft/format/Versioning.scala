@@ -148,8 +148,8 @@ object Versioning {
     * skip it. `frames` gives each frame's commit and the renames applied
     * to its snapshot; every frame's lineage must be known.
     */
-  private[format] def uniformOutsideChurn(schema: StructType, lca: CommitMeta,
-      frames: Seq[(CommitMeta, Seq[(String, String)])]): Boolean = {
+  private[format] def uniformOutsideChurn(schema: StructType, lca: TableState,
+      frames: Seq[(TableState, Seq[(String, String)])]): Boolean = {
     val lineages = frames.map { case (m, renames) => lineage(lca, m, renames) }
     lineages.forall(_.isDefined) &&
       schema.fieldNames.filterNot(_ == U).forall { n =>
@@ -169,15 +169,15 @@ object Versioning {
     * not extend the LCA's (a compaction reset it) or a frame rename lands
     * on a live name.
     */
-  private def lineage(lca: CommitMeta, side: CommitMeta,
+  private def lineage(lca: TableState, side: TableState,
       frameRenames: Seq[(String, String)])
       : Option[Map[String, (Option[String], DataType)]] = {
     if (!side.renames.startsWith(lca.renames)) return None
     val carried = side.renames.drop(lca.renames.size)
-      .foldLeft(schemaOf(lca).fieldNames.map(n => n -> n).toMap) {
-        (m, p) => m.get(p(0)).fold(m)(src => m - p(0) + (p(1) -> src))
+      .foldLeft(lca.schema.fieldNames.map(n => n -> n).toMap) {
+        case (m, (from, to)) => m.get(from).fold(m)(src => m - from + (to -> src))
       }
-    val start = schemaOf(side).fields
+    val start = side.schema.fields
       .map(f => f.name -> (carried.get(f.name), f.dataType)).toMap
     frameRenames.foldLeft(Option(start)) {
       case (Some(m), (from, to)) if m.contains(from) =>
@@ -185,9 +185,6 @@ object Versioning {
       case (acc, _) => acc
     }
   }
-
-  private def schemaOf(m: CommitMeta): StructType =
-    DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
 
   /** Conflict report (reference `detect_merge_conflict`,
     * commits.py:254-302): update/update rows changed differently on both
