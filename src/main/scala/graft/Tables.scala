@@ -78,8 +78,4 @@ object Tables {
     }
     else df
   }
-
-  /** Register every table as a temp view so spark.sql(...) works. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

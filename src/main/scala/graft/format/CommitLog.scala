@@ -192,12 +192,14 @@ object CommitLog {
 
   /** The first-parent chain from commit `from` down to, not including,
     * `until` (the root when None), newest first. Lazy: a commit is read
-    * when the walk reaches it, and `until` is never read. */
+    * when the walk reaches it, and `until` is never read. `read` is a
+    * commit the caller already holds; the walk does not read it again. */
   def firstParentChain(spark: SparkSession, root: String,
                        from: Option[String],
-                       until: Option[String] = None): Iterator[CommitMeta] =
+                       until: Option[String] = None,
+                       read: Option[CommitMeta] = None): Iterator[CommitMeta] =
     Iterator.unfold(from.filterNot(until.contains))(_.map { id =>
-      val m = readCommit(spark, root, id)
+      val m = read.filter(_.id == id).getOrElse(readCommit(spark, root, id))
       (m, m.parent.filterNot(until.contains))
     })
 

@@ -234,8 +234,12 @@ class GraftDataset private[format] (
   private[format] def snapshotAtWithUuid(commitId: String): DataFrame =
     snapshotWithUuid(stateAt(commitId))
 
-  private def stateAt(commitId: String): TableState =
-    stateOf(CommitLog.readCommit(spark, root, commitId))
+  /** The state of `commitId`, from `read` when that is the commit
+    * already read (a commit-id ref's existence check). */
+  private def stateAt(commitId: String,
+                      read: Option[CommitMeta] = None): TableState =
+    stateOf(read.filter(_.id == commitId)
+      .getOrElse(CommitLog.readCommit(spark, root, commitId)))
 
   /** The state of commit `m`; vacuumed-away history fails here, not
     * mid-scan. */
@@ -1070,9 +1074,15 @@ class GraftDataset private[format] (
   /** Commits on the first-parent path from `ancestorId` (exclusive) to
     * `descendantId` (inclusive) — reference `commits_between`.
     */
-  def commitsBetween(ancestorId: String, descendantId: String): Seq[CommitMeta] = {
+  def commitsBetween(ancestorId: String, descendantId: String): Seq[CommitMeta] =
+    pathBetween(ancestorId, descendantId, None)
+
+  /** [[commitsBetween]], `read` being `descendantId`'s commit when the
+    * caller already read it. */
+  private def pathBetween(ancestorId: String, descendantId: String,
+                          read: Option[CommitMeta]): Seq[CommitMeta] = {
     val path = CommitLog.firstParentChain(spark, root, Some(descendantId),
-      Some(ancestorId)).toVector
+      Some(ancestorId), read).toVector
     require(path.lastOption.fold(descendantId == ancestorId)(
       _.parent.contains(ancestorId)),
       s"$ancestorId is not a first-parent ancestor of $descendantId")
@@ -1282,23 +1292,31 @@ class GraftDataset private[format] (
 
   // ---- diff / merge -------------------------------------------------------
 
-  private def resolveRef(ref: String): String =
-    branches.getOrElse(ref, readRef(ref).id)
+  /** The commit id `ref` names — a branch head, else a commit id — and,
+    * for a commit id, the commit its existence check read, so the
+    * caller builds its state without reading it again. */
+  private def resolveRef(ref: String): (String, Option[CommitMeta]) =
+    branches.get(ref) match {
+      case Some(id) => (id, None)
+      case None =>
+        val m = CommitLog.findCommit(spark, root, ref)
+        require(m.isDefined, s"no branch or commit $ref")
+        (m.get.id, m)
+    }
 
-  /** The commit `ref` names — a branch head, else a commit id — read
-    * once. */
+  /** The commit `ref` names, read once. */
   private def readRef(ref: String): CommitMeta = {
-    val m = branches.get(ref).map(CommitLog.readCommit(spark, root, _))
-      .orElse(CommitLog.findCommit(spark, root, ref))
-    require(m.isDefined, s"no branch or commit $ref")
-    m.get
+    val (id, read) = resolveRef(ref)
+    read.getOrElse(CommitLog.readCommit(spark, root, id))
   }
 
+  /** HEAD, the target, the LCA, and the target's commit if resolving it
+    * read it. */
   private def threeWayIds(targetRef: String) = {
     val ourId = headId.getOrElse(throw new IllegalStateException("no HEAD"))
-    val theirId = resolveRef(targetRef)
+    val (theirId, theirs) = resolveRef(targetRef)
     val lcaId = CommitLog.lca(spark, root, ourId, theirId)
-    (ourId, theirId, lcaId)
+    (ourId, theirId, lcaId, theirs)
   }
 
   /** Semi-join the three frames of `tw` to the churn since the LCA: the
@@ -1335,8 +1353,8 @@ class GraftDataset private[format] (
     */
   private[format] def compareInputs(targetRef: String,
                                     restrict: Boolean = true): ThreeWay = {
-    val (ourId, theirId, lcaId) = threeWayIds(targetRef)
-    val states = Seq(lcaId, ourId, theirId).map(stateAt)
+    val (ourId, theirId, lcaId, theirs) = threeWayIds(targetRef)
+    val states = Seq(lcaId, ourId, theirId).map(stateAt(_, theirs))
     val Seq(l, o, t) = states.map(snapshotWithUuid)
     val tw = ThreeWay(l, o, t,
       Versioning.mergedSchema(st.schema, states(2).schema))
@@ -1363,16 +1381,17 @@ class GraftDataset private[format] (
     * files vacuum reclaimed fail with the clean expiry error.
     */
   def changes(fromRef: String = "", toRef: String = ""): DataFrame = {
-    val toId =
-      if (toRef.isEmpty) headId.getOrElse(
-        throw new IllegalStateException("no HEAD"))
+    val (toId, toRead) =
+      if (toRef.isEmpty) (headId.getOrElse(
+        throw new IllegalStateException("no HEAD")), None)
       else resolveRef(toRef)
     // empty fromRef = from the very beginning: the full feed bootstraps
     // a CDC replica (first commit's events included)
     val from = if (fromRef.isEmpty) None else Some(readRef(fromRef))
     val metas = from.fold[Seq[CommitMeta]](
-      CommitLog.firstParentChain(spark, root, Some(toId)).toVector.reverse)(
-      f => commitsBetween(f.id, toId))
+      CommitLog.firstParentChain(spark, root, Some(toId), read = toRead)
+        .toVector.reverse)(
+      f => pathBetween(f.id, toId, toRead))
     var prev = from.getOrElse(
       CommitMeta(id = "", parent = None, mergeParent = None, message = "",
         timestampMs = 0L,
@@ -1636,9 +1655,10 @@ class GraftDataset private[format] (
     * side is not propagated.
     */
   private[format] def mergeInputs(ourId: String, theirId: String,
-      lcaId: String, restrict: Boolean = true)
+      lcaId: String, restrict: Boolean = true,
+      theirs: Option[CommitMeta] = None)
       : (ThreeWay, Seq[(String, String)]) = {
-    val Seq(l, o, t) = Seq(lcaId, ourId, theirId).map(stateAt)
+    val Seq(l, o, t) = Seq(lcaId, ourId, theirId).map(stateAt(_, theirs))
     val lcaRen = l.renames
     def since(chain: Seq[(String, String)]): Seq[(String, String)] =
       if (chain.startsWith(lcaRen)) chain.drop(lcaRen.length)
@@ -1704,9 +1724,9 @@ class GraftDataset private[format] (
               Versioning.MergeResolutions()): String = {
     Versioning.validate(resolutions) // even for no-op merges
     require(!dirty, "uncommitted changes; commit or reset first")
-    val (ourId, theirId, lcaId) = threeWayIds(targetRef)
+    val (ourId, theirId, lcaId, theirs) = threeWayIds(targetRef)
     if (lcaId == theirId) return ourId // target already merged
-    val (in, adoptOurs) = mergeInputs(ourId, theirId, lcaId)
+    val (in, adoptOurs) = mergeInputs(ourId, theirId, lcaId, theirs = theirs)
     val delta = Versioning.mergeDelta(in.lca, in.ours, in.theirs,
         withUuidSchema(in.schema), resolutions)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -32,7 +32,8 @@ final case class TableState(
     * dropped or replaced), and epoch 0 is left implicit. */
   def meta(id: String, parent: Option[String], mergeParent: Option[String],
            message: String, rewrite: Boolean): CommitMeta = {
-    val liveStats = stats.filter { case (k, _) => under(files, k) }
+    val fileSet = files.toSet
+    val liveStats = stats.filter { case (k, _) => under(fileSet, k) }
     val entrySet = entries.toSet
     val liveEpochs = epochs.filter { case (e, n) => n > 0 && entrySet(e) }
     CommitMeta(
@@ -265,7 +266,8 @@ final case class TableState(
     * when both keep one schema and rename chain, so `head`'s stand. */
   def replayedOn(head: TableState, d: Delta): TableState = {
     val gone = d.replaced.toSet
-    val ours = (d.appended ++ d.mutations).toSet
+    val appended = d.appended.toSet
+    val ours = appended ++ d.mutations
     head.copy(
       files = head.files.filterNot(gone) ++ d.appended,
       updates = head.updates ++ d.newUpdates,
@@ -273,8 +275,8 @@ final case class TableState(
       // carrying the replaced entries' keys would commit dead keys that
       // every descendant inherits forever (metadata bloat, not a
       // correctness issue: lookups are manifest-driven)
-      stats = head.stats.filter { case (k, _) => !under(d.replaced, k) } ++
-        stats.filter { case (k, _) => under(d.appended, k) },
+      stats = head.stats.filter { case (k, _) => !under(gone, k) } ++
+        stats.filter { case (k, _) => under(appended, k) },
       epochs = head.epochs.filter { case (k, _) => !gone(k) } ++
         epochs.filter { case (k, _) => ours(k) },
       // conservative AND: never claim normalized stat keys either side
@@ -314,7 +316,16 @@ object TableState {
   }
 
   /** Whether stat key `k` belongs to one of `entries`: the entry's own
-    * key, or a per-file key `entry/part-...`. */
-  private def under(entries: Seq[String], k: String): Boolean =
-    entries.exists(e => k == e || k.startsWith(e + "/"))
+    * key, or a per-file key `entry/part-...`. Looks up `k` and each of
+    * its prefixes that ends just before a '/' — O(key length) per key,
+    * where testing every entry was O(entries). */
+  private[format] def under(entries: Set[String], k: String): Boolean = {
+    var slash = k.indexOf('/')
+    var found = entries(k)
+    while (!found && slash >= 0) {
+      found = entries(k.substring(0, slash))
+      slash = k.indexOf('/', slash + 1)
+    }
+    found
+  }
 }

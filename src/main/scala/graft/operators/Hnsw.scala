@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
@@ -28,6 +26,10 @@ import scala.collection.mutable
   * Determinism: node levels come from a murmur3 hash of the node's
   * insertion sequence (not a RNG), so a rebuild of the same partition
   * yields the same graph.
+  *
+  * This object holds the graph, its row codec and its parameters; the
+  * Spark side (build, route, walk, persisted reads) is [[GraphIndex]]'s,
+  * shared with [[Vamana]].
   */
 object Hnsw {
 
@@ -231,174 +233,70 @@ object Hnsw {
     */
   val CentroidNode: Int = -1
 
+  /** The HNSW family of [[GraphIndex]]: one row per node with its
+    * `level`, per-level `adj` lists and the shard's `entry`; searched
+    * with beam `ef`. `m`/`efConstruction` shape builds only — a
+    * reassembled graph is walked, never inserted into. */
+  private[operators] final case class Family(m: Int = 16,
+                                             efConstruction: Int = 100)
+      extends GraphIndex.Family[Graph, Int] {
+    def schema: StructType = indexSchema
+    def centroidNode: Int = CentroidNode
+    def newGraph(): Graph = new Graph(m, efConstruction)
+    def insert(g: Graph, id: Long, v: Array[Float]): Unit = g.insert(id, v)
+    def isEmpty(g: Graph): Boolean = g.entry < 0
+    def shardRows(shard: Int, g: Graph, centroid: Option[Array[Float]])
+        : Iterator[Row] =
+      centroid.iterator.map(c => Row(shard, CentroidNode,
+        g.vecs.length.toLong, c.toSeq, -1, Seq.empty[Seq[Int]], g.entry)) ++
+        (0 until g.vecs.length).iterator.map { n =>
+          Row(shard, n, g.extIds(n), g.vecs(n).toSeq, g.levels(n),
+            g.nbrs(n).map(_.toSeq).toSeq, g.entry)
+        }
+    /** Rebuild the shard's graph from its rows (sentinels skipped) and
+      * walk it with beam `ef`. */
+    def searcher(rows: scala.collection.Seq[Row], k: Int, ef: Int)
+        : Array[Float] => Seq[(Long, Double)] = {
+      val sorted = rows.filter(_.getInt(1) >= 0).sortBy(_.getInt(1))
+      val g = new Graph(16, 100)
+      var expect = 0
+      sorted.foreach { r =>
+        // adjacency lists index by POSITION: a duplicate or missing node
+        // id (a doubly-appended delta shard, an interrupted rewrite) would
+        // shift every later neighbor pointer onto the wrong vector —
+        // silently wrong ext_ids. Loud beats plausible-looking garbage.
+        require(r.getInt(1) == expect,
+          s"corrupt graph shard: expected node $expect, found " +
+            s"${r.getInt(1)} (duplicate or missing node rows)")
+        expect += 1
+        g.vecs += r.getSeq[Float](3).toArray
+        g.extIds += r.getLong(2)
+        g.levels += r.getInt(4)
+        g.nbrs += r.getSeq[scala.collection.Seq[Int]](5)
+          .map { a =>
+            val v = new GraphPrims.IntVec(a.length)
+            a.foreach(v.add); v
+          }.toArray
+      }
+      g.entry = if (sorted.nonEmpty) sorted.head.getInt(6) else -1
+      q => g.search(q, k, ef)
+    }
+  }
+
+  /** The search-side family: build parameters at their defaults. */
+  private[operators] val family: Family = Family()
+
   /** Build per-partition graphs; returns index rows (persist with
-    * `.write.partitionBy("part")`). One pass, no shuffle beyond the
-    * initial spread; memory bounded by SHARD size, which is bounded by
-    * construction: when `numPartitions <= 0` the shard count is derived
-    * from the CORPUS SIZE — `ceil(rows / 500)`, capped at 4096
-    * ([[GraphRouting.shardsFor]]) — so every build task holds a ~500-row
-    * graph no matter the corpus, instead of the O(rows/cores) graph a
-    * `defaultParallelism` default would grow into at 100× data. The row
-    * count comes from `rowCountHint` when the caller already knows it
-    * (the format layer reads it from manifest metadata — no scan) and
-    * from one `count()` pass otherwise — noise next to the graph
-    * construction it sizes. An explicit `numPartitions > 0` overrides.
-    *
-    * `clustered = true` assigns rows to shards by nearest coarse k-means
-    * centroid instead of round-robin, with a skew cap — a dominant cell
-    * splits into avg-sized sub-shards sharing its centroid
-    * ([[GraphRouting.assignShardsCapped]]) — and persists each shard's
-    * centroid as a sentinel row: the prerequisite for sub-linear
-    * shard-routed search (`probeParts` on the searchers). Falls back to
-    * the round-robin build when the corpus has no vectors to train on.
-    * Null-cell rows (wrong-dim vectors) are dropped — they would break
-    * the walk's distance loop anyway.
+    * `.write.partitionBy("part")`). Shard sizing, the clustered build
+    * and its fallback are [[GraphIndex.build]]'s.
     */
   def build(df: DataFrame, vecCol: String, idCol: String,
             numPartitions: Int = 0, m: Int = 16,
             efConstruction: Int = 100,
             clustered: Boolean = false,
-            rowCountHint: Long = -1L): DataFrame = {
-    implicit val enc = RowEncoder.encoderFor(indexSchema)
-    val base = df.select(col(idCol).cast("long").as("_gid"),
-        col(vecCol).as("_gvec"))
-      .filter(col("_gvec").isNotNull)
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else GraphRouting.shardsFor(
-        if (rowCountHint >= 0L) rowCountHint else base.count())
-    if (!clustered) {
-      base.repartition(parts)
-        .mapPartitions { rows =>
-          val g = new Graph(m, efConstruction)
-          rows.foreach(r => g.insert(r.getLong(0),
-            r.getSeq[Float](1).toArray))
-          if (g.entry < 0) Iterator.empty
-          else {
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            (0 until g.vecs.length).iterator.map { n =>
-              Row(pid, n, g.extIds(n), g.vecs(n).toSeq, g.levels(n),
-                g.nbrs(n).map(_.toSeq).toSeq, g.entry)
-            }
-          }
-        }
-    } else {
-      val (assigned, cents) =
-        GraphRouting.assignShardsCapped(base, "_gvec", "_gid", parts)
-      if (cents.isEmpty) // pass the resolved parts: no second count()
-        return build(df, vecCol, idCol, parts, m, efConstruction)
-      val centMap = cents.toMap
-      // hash-partition by shard: every shard's rows land wholly in one
-      // task (the colocated invariant); a task may hold several shards,
-      // so group and build one graph per shard
-      assigned.filter(col("cell").isNotNull)
-        .select(col("_gid"), col("_gvec"), col("cell").cast("int"))
-        .repartition(parts, col("cell"))
-        .mapPartitions { rows =>
-          val byShard = mutable.LinkedHashMap[Int, Graph]()
-          rows.foreach { r =>
-            val g = byShard.getOrElseUpdate(r.getInt(2),
-              new Graph(m, efConstruction))
-            g.insert(r.getLong(0), r.getSeq[Float](1).toArray)
-          }
-          byShard.iterator.filter(_._2.entry >= 0).flatMap {
-            case (shard, g) =>
-              Iterator.single(Row(shard, CentroidNode, g.vecs.length.toLong,
-                centMap(shard).toSeq, -1, Seq.empty[Seq[Int]], g.entry)) ++
-                (0 until g.vecs.length).iterator.map { n =>
-                  Row(shard, n, g.extIds(n), g.vecs(n).toSeq, g.levels(n),
-                    g.nbrs(n).map(_.toSeq).toSeq, g.entry)
-                }
-          }
-        }
-    }
-  }
-
-  /** Per-part candidate hits for a broadcast query batch: each subgraph
-    * is reassembled ONCE per task and walked once per query — one index
-    * pass for N queries (the reference's batched `vector_search`,
-    * vector_search_ops.py:84-101). `colocated = true` skips the
-    * `repartition(col("part"))` shuffle — correct when each part's rows
-    * already sit wholly within one task: a freshly-built index (build
-    * emits one part per task) or [[PartitionedIndex.partScans]].
-    */
-  private def localHits(index: DataFrame, queries: Seq[(Long, Seq[Float])],
-                        k: Int, ef: Int, colocated: Boolean,
-                        routing: Option[GraphRouting.Routing] = None)
-      : DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType),
-      StructField("ext_id", LongType), StructField("l2sq", DoubleType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    // the bounded query batch rides in the task closure: the task binary
-    // is itself broadcast once per stage AND reclaimed with the stage, so
-    // (unlike an explicit sc.broadcast, which lingers until the async
-    // ContextCleaner reaps it) repeated batch searches against a
-    // long-lived session leave no accumulating driver/executor state
-    val qarr = queries.map { case (qid, v) => (qid, v.toArray) }.toArray
-    // normalize column order/types: partitionBy moves `part` to the end
-    // on read-back, and positional access below must stay stable
-    val prepared = index.select(col("part").cast("int"), col("node"),
-      col("ext_id"), col("vec"), col("level"), col("adj"), col("entry"))
-    // routing prunes shards no query probes BEFORE the scan/shuffle —
-    // partition-pruned on a partitionBy("part") read
-    val scoped = routing.fold(prepared)(r => prepared.filter(r.scanFilter))
-    val spread = if (colocated) scoped
-      else scoped.repartition(col("part"))
-    spread.mapPartitions { rows =>
-      // a task may hold several parts after the repartition: regroup
-      val byPart = mutable.HashMap[Int, mutable.ArrayBuffer[Row]]()
-      rows.foreach(r => byPart.getOrElseUpdate(r.getInt(0),
-        mutable.ArrayBuffer[Row]()) += r)
-      byPart.iterator.flatMap { case (pid, rs) =>
-        val g = reassemble(rs)
-        qarr.iterator
-          .filter { case (qid, _) => routing.forall(_.allowed(qid, pid)) }
-          .flatMap { case (qid, q) =>
-            g.search(q, k, ef).map { case (id, d) => Row(qid, id, d) }
-          }
-      }
-    }
-  }
-
-  /** Rebuild one shard's in-memory graph from its persisted index rows
-    * (column order part,node,ext_id,vec,level,adj,entry; sentinel rows
-    * skipped). Shared by the searchers and [[KnnJoin]].
-    */
-  private[operators] def reassemble(rs: scala.collection.Seq[Row]): Graph = {
-    val sorted = rs.filter(_.getInt(1) >= 0).sortBy(_.getInt(1))
-    val g = new Graph(16, 100)
-    var expect = 0
-    sorted.foreach { r =>
-      // adjacency lists index by POSITION: a duplicate or missing node id
-      // (a doubly-appended delta shard, an interrupted rewrite) would
-      // shift every later neighbor pointer onto the wrong vector —
-      // silently wrong ext_ids. Loud beats plausible-looking garbage.
-      require(r.getInt(1) == expect,
-        s"corrupt graph shard: expected node $expect, found " +
-          s"${r.getInt(1)} (duplicate or missing node rows)")
-      expect += 1
-      g.vecs += r.getSeq[Float](3).toArray
-      g.extIds += r.getLong(2)
-      g.levels += r.getInt(4)
-      g.nbrs += r.getSeq[scala.collection.Seq[Int]](5)
-        .map { a =>
-          val v = new GraphPrims.IntVec(a.length)
-          a.foreach(v.add); v
-        }.toArray
-    }
-    g.entry = if (sorted.nonEmpty) sorted.head.getInt(6) else -1
-    g
-  }
-
-  /** See [[GraphRouting.routingFor]] — shared with [[Vamana]]. */
-  private def routingFor(index: DataFrame,
-                         queries: Seq[(Long, Seq[Float])],
-                         probeParts: Int,
-                         centroids: Array[(Int, Array[Float])] = Array.empty)
-      : Option[GraphRouting.Routing] =
-    GraphRouting.routingFor(index, queries, probeParts, CentroidNode,
-      centroids)
+            rowCountHint: Long = -1L): DataFrame =
+    GraphIndex.build(Family(m, efConstruction), df, vecCol, idCol,
+      numPartitions, clustered, rowCountHint)
 
   /** Search a persisted (or freshly-built) index: each partition's rows
     * reassemble their graph(s) in memory, probe locally with beam `ef`,
@@ -409,139 +307,43 @@ object Hnsw {
   def topK(index: DataFrame, query: Seq[Float], k: Int,
            ef: Int = 64, colocated: Boolean = false,
            probeParts: Int = 0,
-           centroids: Array[(Int, Array[Float])] = Array.empty): DataFrame = {
-    val qs = Seq((0L, query))
-    topKRouted(index, query, k, ef, colocated,
-      routingFor(index, qs, probeParts, centroids))
-  }
+           centroids: Array[(Int, Array[Float])] = Array.empty): DataFrame =
+    GraphIndex.search(family, ef, index, Seq((0L, query)), k, colocated,
+      probeParts, centroids, batch = false)
 
-  /** [[topK]] against a PRE-BUILT routing (the persisted read path,
-    * where the routing has been healed against the real directories).
-    */
-  private[operators] def topKRouted(index: DataFrame, query: Seq[Float],
-                                    k: Int, ef: Int, colocated: Boolean,
-                                    routing: Option[GraphRouting.Routing])
-      : DataFrame =
-    localHits(index, Seq((0L, query)), k, ef, colocated, routing)
-      .select(col("ext_id"), col("l2sq"))
-      .orderBy(col("l2sq").asc_nulls_last, col("ext_id").asc)
-      .limit(k)
-
-  /** Batched search: the query batch is broadcast, every subgraph is
-    * walked once per query in ONE pass over the index, and the global
-    * per-query top-k is the PARTIAL top-k aggregate over the per-shard
-    * hit streams (r20) — the rank exchange moves |q|·k rows, never the
-    * `parts × k × |queries|` candidate set the former window shuffled.
-    * Output: (query_id, ext_id, l2sq, rank).
+  /** Batched search: every subgraph is walked once per query in ONE pass
+    * over the index, merged by the partial top-k aggregate
+    * ([[GraphIndex.search]]). Output: (query_id, ext_id, l2sq, rank).
     */
   def batchTopK(index: DataFrame, queries: Seq[(Long, Seq[Float])],
                 k: Int, ef: Int = 64, colocated: Boolean = false,
                 probeParts: Int = 0,
                 centroids: Array[(Int, Array[Float])] = Array.empty)
       : DataFrame =
-    batchTopKRouted(index, queries, k, ef, colocated,
-      routingFor(index, queries, probeParts, centroids))
+    GraphIndex.search(family, ef, index, queries, k, colocated, probeParts,
+      centroids, batch = true)
 
-  /** [[batchTopK]] against a PRE-BUILT routing (the persisted read
-    * path, where the routing has been healed against the real
-    * directories — re-deriving it here from the raw centroids would
-    * re-introduce the stale per-query gating the heal removed).
-    */
-  private[operators] def batchTopKRouted(index: DataFrame,
-                                         queries: Seq[(Long, Seq[Float])],
-                                         k: Int, ef: Int,
-                                         colocated: Boolean,
-                                         routing: Option[GraphRouting.Routing])
-      : DataFrame = {
-    // per-query global top-k over the per-shard hit streams via the
-    // partial aggregate (r20): |q|·k rows exchanged, not |q|·p·k
-    VectorSearch.topKPerGroup(
-        localHits(index, queries, k, ef, colocated, routing),
-        "query_id", "ext_id", "l2sq", asc = true, k)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Exchange-free search over an index persisted with
-    * `partitionBy("part")`: one narrow single-task scan per part
-    * directory ([[PartitionedIndex.partScans]]) — the plan has NO
-    * Exchange above the index scan. Falls back to the shuffled path if
-    * `path` is not a part-partitioned layout.
-    *
-    * `probeParts > 0` routes the query to its nearest shards before any
-    * scan is planned: `centroids` (e.g. the format layer's tiny `routing`
-    * artifact) selects the directories, so a p-of-P probe READS p
-    * directories. When `centroids` is empty they are read from the
-    * index's sentinel rows instead (one pruned pass); an index with no
-    * sentinels probes all shards.
+  /** [[topK]] over an index persisted with `partitionBy("part")`: an
+    * exchange-free read of the part directories `probeParts > 0` routes
+    * the query to, by `centroids` (e.g. the format layer's tiny
+    * `routing` artifact) or else the index's own sentinel rows
+    * ([[GraphIndex.searchPersisted]]).
     */
   def topKPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
                     query: Seq[Float], k: Int, ef: Int = 64,
                     probeParts: Int = 0,
                     centroids: Array[(Int, Array[Float])] = Array.empty)
-      : DataFrame = {
-    val routing = persistedRouting(spark, path, Seq((0L, query)),
-      probeParts, centroids, CentroidNode)
-    val keep: Int => Boolean = routing.fold((_: Int) => true)(r => r.partKept)
-    PartitionedIndex.partScans(spark, path, keep = keep)
-      .map(scan => topKRouted(scan, query, k, ef, colocated = true, routing))
-      // non-partitioned layout (or more dirs than partScans plans):
-      // shuffled read. Caller centroids are not trusted against an
-      // arbitrary path here, but a routing persistedRouting derived from
-      // THE INDEX'S OWN sentinels is — reuse it instead of paying a
-      // second full sentinel scan per call
-      .getOrElse {
-        val scan = spark.read.parquet(path)
-        if (centroids.isEmpty && routing.isDefined)
-          topKRouted(scan, query, k, ef, colocated = false, routing)
-        else topK(scan, query, k, ef, probeParts = probeParts)
-      }
-  }
+      : DataFrame =
+    GraphIndex.searchPersisted(family, ef, spark, path, Seq((0L, query)), k,
+      probeParts, centroids, batch = false)
 
-  /** Batched [[topKPersisted]]: one exchange-free pass over the UNION of
-    * the batch's routed directories, each query gated inside the walk to
-    * its own shard set — N queries cost one scan of ≤ |union| shards,
-    * not N scans and not the full index. Falls back like the single-
-    * query path (shuffled read when the layout is not part-partitioned;
-    * probe-all when `probeParts = 0` or no centroids exist).
-    */
+  /** Batched [[topKPersisted]]: one pass over the UNION of the batch's
+    * routed directories, each query gated to its own shard set. */
   def batchTopKPersisted(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: Seq[(Long, Seq[Float])],
                          k: Int, ef: Int = 64, probeParts: Int = 0,
                          centroids: Array[(Int, Array[Float])] = Array.empty)
-      : DataFrame = {
-    val routing = persistedRouting(spark, path, queries, probeParts,
-      centroids, CentroidNode)
-    val keep: Int => Boolean = routing.fold((_: Int) => true)(r => r.partKept)
-    PartitionedIndex.partScans(spark, path, keep = keep)
-      // per-query gating still applies (via the routing): the union
-      // scan holds shards some queries did not route to
-      .map(scan => batchTopKRouted(scan, queries, k, ef,
-        colocated = true, routing))
-      // non-partitioned layout: shuffled read, sentinel-derived routing
-      // reused (see topKPersisted)
-      .getOrElse {
-        val scan = spark.read.parquet(path)
-        if (centroids.isEmpty && routing.isDefined)
-          batchTopKRouted(scan, queries, k, ef, colocated = false, routing)
-        else batchTopK(scan, queries, k, ef, probeParts = probeParts)
-      }
-  }
-
-  /** Routing for a persisted read: centroids from the caller (the
-    * format layer's `routing` artifact) or the index's own sentinels,
-    * routes per query, then HEALED against the part directories that
-    * actually exist ([[GraphRouting.heal]]) — a query whose entire
-    * routed set is missing degrades to probe-all with a WARN, never to
-    * an empty result, and healthy queries keep their pruning.
-    */
-  private[operators] def persistedRouting(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: Seq[(Long, Seq[Float])], probeParts: Int,
-      centroids: Array[(Int, Array[Float])], sentinelNode: Int)
-      : Option[GraphRouting.Routing] =
-    GraphRouting
-      .routingFor(spark.read.parquet(path), queries, probeParts,
-        sentinelNode, centroids) // by-name index: scanned only if needed
-      .map(r => PartitionedIndex.partIds(spark, path)
-        .fold(r)(ids => GraphRouting.heal(r, ids, path)))
+      : DataFrame =
+    GraphIndex.searchPersisted(family, ef, spark, path, queries, k,
+      probeParts, centroids, batch = true)
 }

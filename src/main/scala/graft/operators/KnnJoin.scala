@@ -25,13 +25,16 @@ import graft.functions.{VectorFunctions => V}
   *      driver-side [[GraphRouting.route]]), and explodes to
   *      (shard, query) rows — sentinel-less shards are appended
   *      unconditionally, exactly like `Routing.allowed`;
-  *   2. an equi-join on shard id (a `cogroup`) meets each shard's index
-  *      rows with exactly the queries routed to it: each task
+  *   2. one sorted walk ([[walk]], r21) meets each shard's index rows
+  *      with exactly the queries routed to it: both sides are tagged,
+  *      hash-exchanged on shard id at an explicit width and sorted so a
+  *      shard's index rows arrive before its queries; each task
   *      reassembles its shard graph ONCE (bounded ~500 rows by the
   *      corpus-derived build sizing) and STREAMS its queries through —
   *      no cartesian, no broadcast of either table;
-  *   3. the global per-query top-k is a window over |queries|·p·k
-  *      candidate rows — never the corpus.
+  *   3. the global per-query top-k is the PARTIAL top-k aggregate over
+  *      the per-shard hit streams (r20): |queries|·k rows exchanged,
+  *      never |queries|·p·k — and never the corpus.
   *
   * `probeParts <= 0` (or a non-clustered index) is the probe-all
   * fallback: every query meets every shard — exact w.r.t. the per-shard
@@ -44,11 +47,6 @@ import graft.functions.{VectorFunctions => V}
   * probe-all (KnnJoinSpec pins the parity on both families).
   */
 object KnnJoin {
-
-  private val outSchema = StructType(Seq(
-    StructField("query_id", LongType),
-    StructField("ext_id", LongType),
-    StructField("l2sq", DoubleType)))
 
   /** Prune the INDEX side to the `keyCol` values SOME query routed to,
     * before the walk/join: one bounded action (distinct keys,
@@ -109,18 +107,9 @@ object KnnJoin {
            qVecCol: String, k: Int, ef: Int = 64,
            probeParts: Int = 0,
            centroids: Array[(Int, Array[Float])] = Array.empty,
-           partsHint: Option[Set[Int]] = None): DataFrame = {
-    val prepared = index.select(col("part").cast("int"), col("node"),
-      col("ext_id"), col("vec"), col("level"), col("adj"), col("entry"))
-    val kk = k
-    val efC = math.max(ef, k)
-    run(prepared, queries, qIdCol, qVecCol, k, probeParts,
-      Hnsw.CentroidNode, centroids, partsHint,
-      rows => {
-        val g = Hnsw.reassemble(rows)
-        (q: Array[Float]) => g.search(q, kk, efC)
-      })
-  }
+           partsHint: Option[Set[Int]] = None): DataFrame =
+    run(Hnsw.family, math.max(ef, k), index, queries, qIdCol, qVecCol, k,
+      probeParts, centroids, partsHint)
 
   /** k-NN join against a [[Vamana]] (DiskANN) index: PQ/ADC walk +
     * exact re-rank per query, like [[Vamana.batchTopK]] (`rerank = 0`
@@ -130,22 +119,9 @@ object KnnJoin {
              qVecCol: String, k: Int, beam: Int = 64, rerank: Int = 100,
              probeParts: Int = 0,
              centroids: Array[(Int, Array[Float])] = Array.empty,
-             partsHint: Option[Set[Int]] = None): DataFrame = {
-    val prepared = index.select(col("part").cast("int"), col("node"),
-      col("ext_id"), col("vec"), col("code"), col("adj"), col("medoid"))
-    val kk = k
-    val bm = math.max(beam, k)
-    val rr = rerank
-    run(prepared, queries, qIdCol, qVecCol, k, probeParts,
-      Vamana.CentroidNode, centroids, partsHint,
-      rows => {
-        val (g, codes, pqOpt) = Vamana.reassemble(rows, wantPq = rr > 0)
-        (q: Array[Float]) => pqOpt match {
-          case Some(pq) => g.searchPq(q, kk, bm, rr, pq, codes)
-          case None => g.search(q, kk, bm)
-        }
-      })
-  }
+             partsHint: Option[Set[Int]] = None): DataFrame =
+    run(Vamana.family, (math.max(beam, k), rerank), index, queries, qIdCol,
+      qVecCol, k, probeParts, centroids, partsHint)
 
   /** k-NN join against an IVF index (`VectorSearch.ivfBuild`'s
     * cell-assigned table + centroids): each query row computes its
@@ -276,18 +252,18 @@ object KnnJoin {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** The shared join: `prepared` has `part` (int) first and `node`
-    * second; `mkSearcher` turns one shard's rows into a per-query
-    * walker. Driver state is bounded by |shards| (part ids + centroids)
-    * — the query table is never collected.
+  /** The shared join: the index in `fam`'s column order (`part` as int
+    * first, `node` second), each shard's rows turned into a per-query
+    * walker by `fam`'s searcher at `params`. Driver state is bounded by
+    * |shards| (part ids + centroids) — the query table is never
+    * collected.
     */
-  private def run(prepared: DataFrame, queries: DataFrame, qIdCol: String,
-                  qVecCol: String, k: Int, probeParts: Int,
-                  sentinelNode: Int,
-                  centroids: Array[(Int, Array[Float])],
-                  partsHint: Option[Set[Int]],
-                  mkSearcher: Seq[Row] => Array[Float] => Seq[(Long, Double)])
-      : DataFrame = {
+  private def run[P](fam: GraphIndex.Family[_, P], params: P,
+                     index: DataFrame, queries: DataFrame, qIdCol: String,
+                     qVecCol: String, k: Int, probeParts: Int,
+                     centroids: Array[(Int, Array[Float])],
+                     partsHint: Option[Set[Int]]): DataFrame = {
+    val prepared = GraphIndex.prepared(fam, index)
     val spark = prepared.sparkSession
     import spark.implicits._
     // shard enumeration, cheapest source first: a persisted layout's
@@ -302,7 +278,7 @@ object KnnJoin {
         case Some(ps) =>
           val cs =
             if (probeParts > 0 && centroids.isEmpty)
-              prepared.filter(col("node") === lit(sentinelNode))
+              prepared.filter(col("node") === lit(fam.centroidNode))
                 .select(col("part"), col("vec")).collect()
                 .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
             else Array.empty[(Int, Array[Float])]
@@ -313,7 +289,7 @@ object KnnJoin {
            Array.empty[(Int, Array[Float])])
         case None =>
           val info = prepared.groupBy(col("part"))
-            .agg(max(when(col("node") === lit(sentinelNode), col("vec")))
+            .agg(max(when(col("node") === lit(fam.centroidNode), col("vec")))
               .as("cent"))
             .collect()
             .map(r => (r.getInt(0), Option(r.get(1)).map(_ =>
@@ -327,7 +303,7 @@ object KnnJoin {
       else sentinelCents
     // caller-supplied centroids can be staler than the frame (a routing
     // artifact surviving a crash-interrupted rewrite): a shard id the
-    // frame does not hold can never be met by the cogroup, so a query
+    // frame does not hold can never be met by the walk, so a query
     // routed only to such ids would silently return nothing — re-route
     // every query against the surviving cells instead (the frame's own
     // shard list is ground truth here), probe-all when none survive
@@ -399,7 +375,8 @@ object KnnJoin {
     // BEFORE query rows, so each task buffers one shard's rows
     // (bounded by build sizing, the cogroup's own memory contract),
     // reassembles the graph once, and STREAMS its queries through.
-    val hits = walk(spark, scopedIdx, walkQ, walkParts, mkSearcher)
+    val hits = walk(spark, scopedIdx, walkQ, walkParts,
+      rows => fam.searcher(rows, k, params))
     // per-query global top-k over the per-shard k-hit streams, via the
     // partial aggregate: |q|·k exchanged, not |q|·p·k
     VectorSearch.topKPerGroup(hits, "query_id", "ext_id", "l2sq",
@@ -448,7 +425,7 @@ object KnnJoin {
       col("query_id").as("_qid"),
       col("_qv").as("_wqv"),
       lit(null).cast(idxStructT).as("_i"))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
+    implicit val enc = RowEncoder.encoderFor(GraphIndex.HitSchema)
     idxTagged.unionByName(qTagged)
       .repartition(n, col("_p"))
       .sortWithinPartitions(col("_p"), col("_t"))

@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
@@ -31,8 +29,8 @@ import scala.collection.mutable
   *     never reads a full vector — is preserved, which is exactly the
   *     property that makes the layout work when vectors outgrow memory.
   *
-  * Scale shape: build is one `mapPartitions` pass (memory bounded by
-  * partition size, embarrassingly parallel); search reads the persisted
+  * Scale shape: build is one pass over the shards (memory bounded by
+  * shard size, embarrassingly parallel); search reads the persisted
   * rows partition-pruned, probes each subgraph independently, and only
   * `parts × k` candidate rows ever reach the final merge. With a
   * CLUSTERED build (`clustered = true` + `probeParts = p` — see
@@ -43,6 +41,10 @@ import scala.collection.mutable
   * order, PQ seeds are evenly-spaced samples, Lloyd runs a fixed
   * iteration count — so a rebuild of the same partition yields the same
   * graph, codes, and search results.
+  *
+  * This object holds the graph, the quantizer, its row codec and its
+  * parameters; the Spark side (build, route, walk, persisted reads) is
+  * [[GraphIndex]]'s, shared with [[Hnsw]].
   */
 object Vamana {
 
@@ -381,40 +383,23 @@ object Vamana {
     */
   val CentroidNode: Int = -2
 
-  /** Build per-partition Vamana graphs + PQ codes; returns index rows
-    * (persist with `.write.partitionBy("part")`). One `mapPartitions`
-    * pass; the partition's codebook travels in a single sentinel row
-    * (`node = -1`, flattened into `vec`, dims in `code`) rather than
-    * being duplicated per node.
-    *
-    * `clustered = true` assigns rows to shards by nearest coarse k-means
-    * centroid instead of round-robin ([[GraphRouting.assignShards]]) and
-    * persists each shard's centroid as a second sentinel (`node = -2`) —
-    * the prerequisite for sub-linear shard-routed search (`probeParts`
-    * on the searchers). Falls back to the round-robin build when the
-    * corpus has no vectors to train on.
-    */
-  def build(df: DataFrame, vecCol: String, idCol: String,
-            numPartitions: Int = 0, r: Int = 32, alpha: Double = 1.2,
-            buildBeam: Int = 64, pqM: Int = 8, pqK: Int = 16,
-            clustered: Boolean = false,
-            rowCountHint: Long = -1L): DataFrame = {
-    val spark = df.sparkSession
-    implicit val enc = RowEncoder.encoderFor(indexSchema)
-    val base = df.select(col(idCol).cast("long").as("_gid"),
-        col(vecCol).as("_gvec"))
-      .filter(col("_gvec").isNotNull)
-    // shard count derived from corpus size, not cores, when the caller
-    // does not pin it — bounds every build task's in-heap graph at
-    // ~GraphRouting.DefaultShardRows vectors (see Hnsw.build's doc)
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else GraphRouting.shardsFor(
-        if (rowCountHint >= 0L) rowCountHint else base.count())
-    // a function VALUE, not a local def: a def compiles to a method on
-    // the (non-serializable) enclosing object and poisons the closure
-    val emit = (shard: Int, g: Graph,
-                centroid: Option[Array[Float]]) => {
+  /** The Vamana family of [[GraphIndex]]: one row per node with its PQ
+    * `code`, `adj` list and the shard's `medoid`, plus the shard's
+    * codebook in a single sentinel row (`node = -1`, flattened into
+    * `vec`, dims in `code`) rather than duplicated per node. Searched
+    * at `(beam, rerank)` ([[topK]]). */
+  private[operators] final case class Family(r: Int = 32,
+                                             alpha: Double = 1.2,
+                                             buildBeam: Int = 64,
+                                             pqM: Int = 8, pqK: Int = 16)
+      extends GraphIndex.Family[Graph, (Int, Int)] {
+    def schema: StructType = indexSchema
+    def centroidNode: Int = CentroidNode
+    def newGraph(): Graph = new Graph(r, alpha, buildBeam)
+    def insert(g: Graph, id: Long, v: Array[Float]): Unit = g.insert(id, v)
+    def isEmpty(g: Graph): Boolean = g.medoid < 0
+    def shardRows(shard: Int, g: Graph, centroid: Option[Array[Float]])
+        : Iterator[Row] = {
       g.finalizeMedoid()
       val pq = PqLocal.train(g.vecs.toIndexedSeq, pqM, pqK)
       val pqSentinel = Row(shard, PqNode, -1L,
@@ -429,136 +414,59 @@ object Vamana {
             pq.encode(g.vecs(n)).toSeq, g.adj(n).toSeq, g.medoid)
         }
     }
-    if (!clustered) {
-      base.repartition(parts)
-        .mapPartitions { rows =>
-          val g = new Graph(r, alpha, buildBeam)
-          rows.foreach(r0 => g.insert(r0.getLong(0),
-            r0.getSeq[Float](1).toArray))
-          if (g.medoid < 0) Iterator.empty
-          else emit(org.apache.spark.TaskContext.getPartitionId(), g, None)
+
+    /** Rebuild the shard's graph + PQ codes from its rows and walk it at
+      * `(beam, rerank)`. The PQ sentinel is picked BY marker: clustered
+      * shards also carry a centroid sentinel (node = -2), and head order
+      * is not contractual. */
+    def searcher(rows: scala.collection.Seq[Row], k: Int,
+                 params: (Int, Int)): Array[Float] => Seq[(Long, Double)] = {
+      val (beam, rerank) = params
+      val (sentinels, nodes) = rows.partition(_.getInt(1) < 0)
+      val sorted = nodes.sortBy(_.getInt(1))
+      val g = new Graph(32, 1.2, 64)
+      val codes = new Array[Array[Int]](sorted.length)
+      sorted.foreach { r0 =>
+        codes(g.vecs.length) = r0.getSeq[Int](4).toArray
+        g.vecs += r0.getSeq[Float](3).toArray
+        g.extIds += r0.getLong(2)
+        g.adj += {
+          val a = r0.getSeq[Int](5)
+          val v = new GraphPrims.IntVec(a.length)
+          a.foreach(v.add); v
         }
-    } else {
-      val (assigned, cents) =
-        GraphRouting.assignShardsCapped(base, "_gvec", "_gid", parts)
-      if (cents.isEmpty) // pass the resolved parts: no second count()
-        return build(df, vecCol, idCol, parts, r, alpha,
-          buildBeam, pqM, pqK)
-      val centMap = cents.toMap
-      // hash-partition by shard: every shard's rows land wholly in one
-      // task (the colocated invariant); a task may hold several shards,
-      // so group and build one graph per shard
-      assigned.filter(col("cell").isNotNull)
-        .select(col("_gid"), col("_gvec"), col("cell").cast("int"))
-        .repartition(parts, col("cell"))
-        .mapPartitions { rows =>
-          val byShard = mutable.LinkedHashMap[Int, Graph]()
-          rows.foreach { r0 =>
-            val g = byShard.getOrElseUpdate(r0.getInt(2),
-              new Graph(r, alpha, buildBeam))
-            g.insert(r0.getLong(0), r0.getSeq[Float](1).toArray)
-          }
-          byShard.iterator.filter(_._2.medoid >= 0).flatMap {
-            case (shard, g) => emit(shard, g, Some(centMap(shard)))
-          }
-        }
+      }
+      g.medoid = if (sorted.nonEmpty) sorted.head.getInt(6) else -1
+      sentinels.find(_.getInt(1) == PqNode).filter(_ => rerank > 0) match {
+        case Some(s) =>
+          val dims = s.getSeq[Int](4)
+          val (m, kk, dim) = (dims(0), dims(1), dims(2))
+          val flat = s.getSeq[Float](3)
+          val sub = dim / m
+          val pq = PqLocal(m, kk, dim, Array.tabulate(m)(mi =>
+            Array.tabulate(kk)(ki =>
+              Array.tabulate(sub)(j => flat((mi * kk + ki) * sub + j)))))
+          q => g.searchPq(q, k, beam, rerank, pq, codes)
+        case None => q => g.search(q, k, beam)
+      }
     }
   }
 
-  /** Per-part candidate hits for a broadcast query batch: each subgraph
-    * + codebook is reassembled ONCE per task and walked once per query
-    * (one ADC table per query) — one index pass for N queries.
-    * `colocated = true` skips the `repartition(col("part"))` shuffle —
-    * correct when each part's rows already sit wholly within one task: a
-    * freshly-built index or [[PartitionedIndex.partScans]].
+  /** The search-side family: build parameters at their defaults. */
+  private[operators] val family: Family = Family()
+
+  /** Build per-partition Vamana graphs + PQ codes; returns index rows
+    * (persist with `.write.partitionBy("part")`). Shard sizing, the
+    * clustered build (whose shards also persist a centroid sentinel,
+    * `node = -2`) and its fallback are [[GraphIndex.build]]'s.
     */
-  private def localHits(index: DataFrame, queries: Seq[(Long, Seq[Float])],
-                        k: Int, beam: Int, rerank: Int,
-                        colocated: Boolean,
-                        routing: Option[GraphRouting.Routing] = None)
-      : DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("query_id", LongType),
-      StructField("ext_id", LongType), StructField("l2sq", DoubleType)))
-    implicit val enc = RowEncoder.encoderFor(outSchema)
-    // bounded query batch in the task closure (the task binary is
-    // broadcast once per stage and reclaimed with it) — an explicit
-    // sc.broadcast would accumulate until the async ContextCleaner runs
-    val qarr = queries.map { case (qid, v) => (qid, v.toArray) }.toArray
-    val prepared = index.select(col("part").cast("int"), col("node"),
-      col("ext_id"), col("vec"), col("code"), col("adj"), col("medoid"))
-    // routing prunes shards no query probes BEFORE the scan/shuffle —
-    // partition-pruned on a partitionBy("part") read
-    val scoped = routing.fold(prepared)(r => prepared.filter(r.scanFilter))
-    val spread = if (colocated) scoped
-      else scoped.repartition(col("part"))
-    spread.mapPartitions { rows =>
-      val byPart = mutable.HashMap[Int, mutable.ArrayBuffer[Row]]()
-      rows.foreach(r0 => byPart.getOrElseUpdate(r0.getInt(0),
-        mutable.ArrayBuffer[Row]()) += r0)
-      byPart.iterator.flatMap { case (pid, rs) =>
-        val (g, codes, pqOpt) = reassemble(rs, wantPq = rerank > 0)
-        qarr.iterator
-          .filter { case (qid, _) => routing.forall(_.allowed(qid, pid)) }
-          .flatMap { case (qid, q) =>
-            val hits = pqOpt match {
-              case Some(pq) => g.searchPq(q, k, beam, rerank, pq, codes)
-              case None => g.search(q, k, beam)
-            }
-            hits.map { case (id, d) => Row(qid, id, d) }
-          }
-      }
-    }
-  }
-
-  /** Rebuild one shard's in-memory graph + PQ codes from its persisted
-    * index rows (column order part,node,ext_id,vec,code,adj,medoid).
-    * The PQ sentinel is picked BY marker: clustered shards also carry a
-    * centroid sentinel (node = -2), and head order is not contractual.
-    * Shared by the searchers and [[KnnJoin]].
-    */
-  private[operators] def reassemble(rs: scala.collection.Seq[Row],
-                                    wantPq: Boolean)
-      : (Graph, Array[Array[Int]], Option[PqLocal]) = {
-    val (sentinels, nodes) = rs.partition(_.getInt(1) < 0)
-    val sorted = nodes.sortBy(_.getInt(1))
-    val g = new Graph(32, 1.2, 64)
-    val codes = new Array[Array[Int]](sorted.length)
-    sorted.foreach { r0 =>
-      codes(g.vecs.length) = r0.getSeq[Int](4).toArray
-      g.vecs += r0.getSeq[Float](3).toArray
-      g.extIds += r0.getLong(2)
-      g.adj += {
-        val a = r0.getSeq[Int](5)
-        val v = new GraphPrims.IntVec(a.length)
-        a.foreach(v.add); v
-      }
-    }
-    g.medoid = if (sorted.nonEmpty) sorted.head.getInt(6) else -1
-    val pqSentinel = sentinels.find(_.getInt(1) == PqNode)
-    val pqOpt =
-      if (!wantPq || pqSentinel.isEmpty) None
-      else {
-        val s = pqSentinel.get
-        val dims = s.getSeq[Int](4)
-        val (m, kk, dim) = (dims(0), dims(1), dims(2))
-        val flat = s.getSeq[Float](3)
-        val sub = dim / m
-        val cb = Array.tabulate(m)(mi => Array.tabulate(kk)(ki =>
-          Array.tabulate(sub)(j => flat((mi * kk + ki) * sub + j))))
-        Some(PqLocal(m, kk, dim, cb))
-      }
-    (g, codes, pqOpt)
-  }
-
-  /** See [[GraphRouting.routingFor]] — shared with [[Hnsw]]. */
-  private def routingFor(index: DataFrame,
-                         queries: Seq[(Long, Seq[Float])],
-                         probeParts: Int,
-                         centroids: Array[(Int, Array[Float])] = Array.empty)
-      : Option[GraphRouting.Routing] =
-    GraphRouting.routingFor(index, queries, probeParts, CentroidNode,
-      centroids)
+  def build(df: DataFrame, vecCol: String, idCol: String,
+            numPartitions: Int = 0, r: Int = 32, alpha: Double = 1.2,
+            buildBeam: Int = 64, pqM: Int = 8, pqK: Int = 16,
+            clustered: Boolean = false,
+            rowCountHint: Long = -1L): DataFrame =
+    GraphIndex.build(Family(r, alpha, buildBeam, pqM, pqK), df, vecCol,
+      idCol, numPartitions, clustered, rowCountHint)
 
   /** Search a persisted (or freshly-built) index: each partition
     * reassembles its graph + codebook, walks it on ADC distances with
@@ -571,29 +479,13 @@ object Vamana {
   def topK(index: DataFrame, query: Seq[Float], k: Int,
            beam: Int = 64, rerank: Int = 100,
            colocated: Boolean = false, probeParts: Int = 0,
-           centroids: Array[(Int, Array[Float])] = Array.empty): DataFrame = {
-    val qs = Seq((0L, query))
-    topKRouted(index, query, k, beam, rerank, colocated,
-      routingFor(index, qs, probeParts, centroids))
-  }
+           centroids: Array[(Int, Array[Float])] = Array.empty): DataFrame =
+    GraphIndex.search(family, (beam, rerank), index, Seq((0L, query)), k,
+      colocated, probeParts, centroids, batch = false)
 
-  /** [[topK]] against a PRE-BUILT routing (the persisted read path,
-    * where the routing has been healed against the real directories).
-    */
-  private[operators] def topKRouted(index: DataFrame, query: Seq[Float],
-                                    k: Int, beam: Int, rerank: Int,
-                                    colocated: Boolean,
-                                    routing: Option[GraphRouting.Routing])
-      : DataFrame =
-    localHits(index, Seq((0L, query)), k, beam, rerank, colocated, routing)
-      .select(col("ext_id"), col("l2sq"))
-      .orderBy(col("l2sq").asc_nulls_last, col("ext_id").asc)
-      .limit(k)
-
-  /** Batched search: the query batch is broadcast, every subgraph is
-    * walked once per query in ONE pass over the index (one ADC table per
-    * query), and the global per-query top-k is a window over
-    * `parts × k × |queries|` candidate rows — never the corpus.
+  /** Batched search: every subgraph is walked once per query in ONE pass
+    * over the index (one ADC table per query), merged by the partial
+    * top-k aggregate ([[GraphIndex.search]]).
     * Output: (query_id, ext_id, l2sq, rank).
     */
   def batchTopK(index: DataFrame, queries: Seq[(Long, Seq[Float])],
@@ -601,81 +493,31 @@ object Vamana {
                 colocated: Boolean = false, probeParts: Int = 0,
                 centroids: Array[(Int, Array[Float])] = Array.empty)
       : DataFrame =
-    batchTopKRouted(index, queries, k, beam, rerank, colocated,
-      routingFor(index, queries, probeParts, centroids))
+    GraphIndex.search(family, (beam, rerank), index, queries, k, colocated,
+      probeParts, centroids, batch = true)
 
-  /** [[batchTopK]] against a PRE-BUILT routing (the persisted read
-    * path — see Hnsw.batchTopKRouted's doc for why the healed routing
-    * must flow through instead of being re-derived from centroids).
-    */
-  private[operators] def batchTopKRouted(index: DataFrame,
-                                         queries: Seq[(Long, Seq[Float])],
-                                         k: Int, beam: Int, rerank: Int,
-                                         colocated: Boolean,
-                                         routing: Option[GraphRouting.Routing])
-      : DataFrame = {
-    // per-query global top-k over the per-shard hit streams via the
-    // partial aggregate (r20): |q|·k rows exchanged, not |q|·p·k
-    VectorSearch.topKPerGroup(
-        localHits(index, queries, k, beam, rerank, colocated, routing),
-        "query_id", "ext_id", "l2sq", asc = true, k)
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Exchange-free search over an index persisted with
-    * `partitionBy("part")`: one narrow single-task scan per part
-    * directory ([[PartitionedIndex.partScans]]) — the plan has NO
-    * Exchange above the index scan. Falls back to the shuffled path if
-    * `path` is not a part-partitioned layout.
-    */
-  /** `probeParts > 0` routes the query to its nearest shards before any
-    * scan is planned: `centroids` (e.g. the format layer's tiny `routing`
-    * artifact) selects the directories, so a p-of-P probe READS p
-    * directories. When `centroids` is empty they are read from the
-    * index's sentinel rows instead (one pruned pass); an index with no
-    * sentinels probes all shards.
+  /** [[topK]] over an index persisted with `partitionBy("part")`: an
+    * exchange-free read of the part directories `probeParts > 0` routes
+    * the query to, by `centroids` (e.g. the format layer's tiny
+    * `routing` artifact) or else the index's own sentinel rows
+    * ([[GraphIndex.searchPersisted]]).
     */
   def topKPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
                     query: Seq[Float], k: Int, beam: Int = 64,
                     rerank: Int = 100, probeParts: Int = 0,
                     centroids: Array[(Int, Array[Float])] = Array.empty)
-      : DataFrame = {
-    val routing = Hnsw.persistedRouting(spark, path, Seq((0L, query)),
-      probeParts, centroids, CentroidNode)
-    val keep: Int => Boolean = routing.fold((_: Int) => true)(r => r.partKept)
-    PartitionedIndex.partScans(spark, path, keep = keep)
-      .map(scan => topKRouted(scan, query, k, beam, rerank,
-        colocated = true, routing))
-      // non-partitioned layout: shuffled read, routing re-derived from
-      // the index's own sentinels — caller centroids are not trusted
-      // against an arbitrary path here
-      .getOrElse(topK(spark.read.parquet(path), query, k, beam, rerank,
-        probeParts = probeParts))
-  }
+      : DataFrame =
+    GraphIndex.searchPersisted(family, (beam, rerank), spark, path,
+      Seq((0L, query)), k, probeParts, centroids, batch = false)
 
-  /** Batched [[topKPersisted]]: one exchange-free pass over the UNION of
-    * the batch's routed directories, each query gated inside the walk to
-    * its own shard set — N queries cost one scan of ≤ |union| shards,
-    * not N scans and not the full index. Falls back like the single-
-    * query path.
-    */
+  /** Batched [[topKPersisted]]: one pass over the UNION of the batch's
+    * routed directories, each query gated to its own shard set. */
   def batchTopKPersisted(spark: org.apache.spark.sql.SparkSession,
                          path: String, queries: Seq[(Long, Seq[Float])],
                          k: Int, beam: Int = 64, rerank: Int = 100,
                          probeParts: Int = 0,
                          centroids: Array[(Int, Array[Float])] = Array.empty)
-      : DataFrame = {
-    val routing = Hnsw.persistedRouting(spark, path, queries, probeParts,
-      centroids, CentroidNode)
-    val keep: Int => Boolean = routing.fold((_: Int) => true)(r => r.partKept)
-    PartitionedIndex.partScans(spark, path, keep = keep)
-      // per-query gating still applies (via the routing): the union
-      // scan holds shards some queries did not route to
-      .map(scan => batchTopKRouted(scan, queries, k, beam, rerank,
-        colocated = true, routing))
-      // non-partitioned layout: shuffled read, routing re-derived from
-      // the index's own sentinels (see topKPersisted)
-      .getOrElse(batchTopK(spark.read.parquet(path), queries, k, beam,
-        rerank, probeParts = probeParts))
-  }
+      : DataFrame =
+    GraphIndex.searchPersisted(family, (beam, rerank), spark, path, queries,
+      k, probeParts, centroids, batch = true)
 }

@@ -11,7 +11,7 @@ import graft.operators.Dedup
   * queries — with the dedup state itself persisted in the versioned
   * format. This is the streaming face of the incremental-dedup family
   * ([[graft.operators.Dedup.exactIncremental]] /
-  * [[Dedup.simHashIncremental]] / [[Dedup.minHashLshIncremental]]) and
+  * [[Dedup.simHashIncremental]]) and
   * differs from [[GraftStreaming.dedupStream]] on exactly the axis that
   * matters for training corpora: `dropDuplicatesWithinWatermark` keeps
   * bounded engine state and forgets duplicates beyond the horizon; here
@@ -68,15 +68,6 @@ object StreamingDedup {
       (state, delta, textCol, idCol) => Dedup.simHashIncremental(
         state, delta, textCol, idCol, maxHamming, maxBucket, fp))
   }
-
-  /** MinHash-LSH near-dup (state carries shingles + signature). */
-  def minHashFamily(numHashes: Int = 32, bands: Int = 8, shingleN: Int = 3,
-                    threshold: Double = 0.7): Family =
-    Family(s"minhash$numHashes",
-      (df, textCol, idCol) =>
-        Dedup.minHashState(df, textCol, idCol, numHashes, shingleN),
-      (state, delta, textCol, idCol) => Dedup.minHashLshIncremental(
-        state, delta, textCol, idCol, numHashes, bands, shingleN, threshold))
 
   private def marker(token: String, epoch: Long) = s"dedup[$token] batch $epoch"
   private val MarkerRe = "dedup\\[([^\\]]+)\\] batch (\\d+)".r

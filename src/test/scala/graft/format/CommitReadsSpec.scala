@@ -63,6 +63,29 @@ class CommitReadsSpec extends SparkSpec {
     assert(reads(ds.merge("side")) == walk + 3)
   }
 
+  test("a commit-id target reads the LCA walk plus three") {
+    val ds = probeTable()
+    val side = ds.branches("side")
+    def walk() = reads(CommitLog.lca(spark, ds.root, ds.head.get, side))
+    var w = walk()
+    assert(w > 0)
+    assert(reads(ds.diff(side)) == w + 3)
+    w = walk()
+    assert(reads(ds.detectMergeConflict(side)) == w + 3)
+    w = walk()
+    assert(reads(ds.merge(side)) == w + 3)
+  }
+
+  test("changes to a commit id reads each commit of the range once") {
+    val ds = probeTable()
+    val base = ds.commitForMessage("base").get
+    val pop = ds.head.get
+    assert(reads(ds.changes(base, pop)) == 3)
+    assert(reads(ds.changes(toRef = pop)).toInt ==
+      CommitLog.firstParentChain(spark, ds.root, Some(pop)).size)
+    assert(ds.changes(base, pop).count() == 2)
+  }
+
   test("changes(from) reads each commit of the range once") {
     val ds = probeTable()
     val base = ds.commitForMessage("base").get

@@ -71,4 +71,25 @@ class TableStateSpec extends SparkSpec {
       assert(s.renames.map { case (a, b) => Seq(a, b) } == m.renames)
     }
   }
+
+  test("the set-keyed stat-key rule answers as testing every entry") {
+    def byScan(entries: Seq[String], k: String): Boolean =
+      entries.exists(e => k == e || k.startsWith(e + "/"))
+    val entrySets = Seq(
+      Seq("data/base-1.parquet", "data/base-2.parquet"),
+      Seq("a", "a/b", "a/b/c"),
+      Seq("a/b/c"),
+      Seq("a"),
+      Seq("ab"),
+      Seq("x/y", "x//z", "/lead", ""),
+      Seq.empty[String])
+    val keys = Seq("data/base-1.parquet", "data/base-1.parquet/part-0",
+      "data/base-12.parquet/part-0", "data/base-1.parquetx",
+      "a", "ab", "ab/x", "a/b", "a/b/c", "a/b/c/part-0", "a/bc",
+      "a/b/cd", "b/a", "x/y/part-1", "x/yz", "x//z/p", "x/", "/lead/p",
+      "/", "", "lead")
+    for (es <- entrySets; k <- keys)
+      assert(TableState.under(es.toSet, k) == byScan(es, k),
+        s"key '$k' against entries $es")
+  }
 }

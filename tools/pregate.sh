@@ -8,7 +8,8 @@
 #   out-dir defaults to a fresh temp dir, removed on success
 #
 # Exit 0 = no SparkSession.builder under src/main/scala outside Harness.scala,
-# both trees compile AND graft.Verify completed on the fixture.
+# no graph-index Spark path in Hnsw.scala or Vamana.scala, both trees compile
+# AND graft.Verify completed on the fixture.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -17,6 +18,16 @@ cd "$(dirname "$0")/.."
 stray=$(grep -rl "SparkSession.builder" src/main/scala | grep -v '/Harness\.scala$' || true)
 if [ -n "$stray" ]; then
   echo "pregate: FAIL — SparkSession.builder outside Harness.scala:" $stray >&2
+  exit 1
+fi
+
+# One Spark path for the graph indexes: graft.operators.GraphIndex. Hnsw and
+# Vamana keep only their graphs and row codecs; a shuffle, a per-partition
+# pass or a part scan there is a second copy of that path, free to drift.
+graph="src/main/scala/graft/operators/Hnsw.scala src/main/scala/graft/operators/Vamana.scala"
+drift=$(grep -lE 'mapPartitions|\.repartition\(|partScans' $graph || true)
+if [ -n "$drift" ]; then
+  echo "pregate: FAIL — graph-index Spark path outside GraphIndex.scala:" $drift >&2
   exit 1
 fi
 
