@@ -86,7 +86,7 @@ final case class CommitMeta(
     // the chain. Absent + empty chain = trivially normalized.
     statsNormalized: Option[Boolean] = None)
 
-object CommitLog {
+object CommitLog extends org.apache.spark.internal.Logging {
   implicit val fmts: Formats = DefaultFormats
 
   def fs(spark: SparkSession, root: String): FileSystem =
@@ -101,7 +101,7 @@ object CommitLog {
     try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  private def readString(fs: FileSystem, p: Path): String = {
+  private[format] def readString(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try new String(in.readAllBytes(), StandardCharsets.UTF_8)
     finally in.close()
@@ -497,7 +497,7 @@ object CommitLog {
       // we took a lock that is NOT the stale one we observed: restore it
       if (!scala.util.Try(f.rename(quarantine, lock)).getOrElse(false)) {
         scala.util.Try(f.delete(quarantine, false))
-        System.err.println("graft: WARN quarantined a live branch lock at " +
+        logWarning("graft: WARN quarantined a live branch lock at " +
           s"$lock and could not restore it (a waiter re-created the lock " +
           "first); the displaced holder's section is no longer covered")
       }
@@ -554,7 +554,7 @@ object CommitLog {
       scala.util.Try(f.delete(taken, false)); ()
     } else if (!scala.util.Try(f.rename(taken, lock)).getOrElse(false)) {
       scala.util.Try(f.delete(taken, false))
-      System.err.println(s"graft: WARN lost a stolen branch lock while " +
+      logWarning(s"graft: WARN lost a stolen branch lock while " +
         s"restoring it at $lock — a waiter re-created the lock first; " +
         "the stolen holder's section is no longer covered")
     }
@@ -606,11 +606,11 @@ object CommitLog {
             "branch lock cannot guarantee cross-process exclusion there " +
             "(unset spark.graft.branchLockStrictStore to proceed unsafely)")
       else if (warnedLockSchemes.add(scheme))
-        System.err.println(s"graft: WARN scheme '$scheme' is not known to " +
+        logWarning(s"graft: WARN scheme '$scheme' is not known to " +
           "provide atomic exclusive create/rename — cross-process branch " +
           "locking is BEST-EFFORT there (see CommitLog.withBranchLock)")
     } else if (!renameSafeScheme(f) && warnedLockSchemes.add(s"$scheme:rename"))
-      System.err.println(s"graft: WARN scheme '$scheme' has atomic create " +
+      logWarning(s"graft: WARN scheme '$scheme' has atomic create " +
         "but its rename is not trusted to be atomic and mtime-preserving — " +
         "stale-lock steals DEGRADE to the guarded-delete mode there: two " +
         "stealers observing the same stale lock can both pass the fresh " +

@@ -43,19 +43,22 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   *   - appends only → anything the winner did (a table's first commit
   *     stages on the empty state).
   * Anything else stays a loud ConcurrentModificationException.
+  *
+  * Saved views and the inverted and vector indexes are the
+  * [[IndexFacet]] this class mixes in.
   */
 class GraftDataset private[format] (
     val spark: SparkSession,
     val root: String,
     private var branchName: Option[String],
-    private var headId: Option[String],
+    private[format] var headId: Option[String],
     // the manifest as loaded from HEAD plus every staged edit; each edit
     // replaces the value, so a state handed to a read stays as it was
-    private var st: TableState) {
+    private[format] var st: TableState) extends IndexFacet {
 
   import GraftDataset._
 
-  private var dirty: Boolean = false
+  private[format] var dirty: Boolean = false
   // true while the ONLY staged change is a file rewrite that leaves the
   // logical rows untouched (compact from a clean state) — published as
   // CommitMeta.rewrite so streaming tails skip the commit instead of
@@ -341,7 +344,7 @@ class GraftDataset private[format] (
     * bounded-pool reads (serial opens would dominate on a 10k-entry
     * table).
     */
-  private def footerRows(rels: Seq[String]): Long =
+  private[format] def footerRows(rels: Seq[String]): Long =
     CommitLog.parMap(rels)(writtenRowCount).sum
 
   /** EXACT live row count from manifest metadata alone — per-file row
@@ -1191,17 +1194,8 @@ class GraftDataset private[format] (
     * instance's HEAD (possibly detached), every saved view's pinned
     * commit, and every persisted index's bound commit.
     */
-  private def pinnedCommits(excludeBranch: Option[String] = None): Set[String] = {
-    val f = CommitLog.fs(spark, root)
-    val viewPins = views.flatMap(v =>
-      indexMetaField(new Path(viewsDir, v), "commit")).filter(_.nonEmpty)
-    val idxBase = new Path(root, "_graft/indexes")
-    val idxPins =
-      if (!f.exists(idxBase)) Nil
-      else f.listStatus(idxBase).toSeq.flatMap(k => f.listStatus(k.getPath))
-        .flatMap(c => indexCommit(c.getPath))
-    ((branches -- excludeBranch).values ++ headId ++ viewPins ++ idxPins).toSet
-  }
+  private def pinnedCommits(excludeBranch: Option[String] = None): Set[String] =
+    ((branches -- excludeBranch).values ++ headId ++ metaPins).toSet
 
   /** Reclaim data entries no retained commit references — the Delta
     * `VACUUM` / Iceberg `expire_snapshots` + `remove_orphan_files` of
@@ -1809,55 +1803,6 @@ class GraftDataset private[format] (
     st = st.copy(tombstones = tombstones)
   }
 
-  // ---- views (reference save_view/load_view, view_operations.py) ----------
-
-  private def viewsDir = new Path(root, "_graft/views")
-
-  /** Persist the row set matching `cond` as a named view: a parquet of
-    * matching uuids + the predicate text, bound to the current commit.
-    */
-  def saveView(name: String, cond: Column): Unit = {
-    // views pin to a commit; a dirty snapshot would record uuids the
-    // pinned commit doesn't contain (silently empty view after commit)
-    require(!dirty, "commit before saving a view")
-    val dir = new Path(viewsDir, name)
-    snapshotWithUuid().filter(cond).select(UuidCol)
-      .write.mode("overwrite").parquet(new Path(dir, "ids").toString)
-    val f = CommitLog.fs(spark, root)
-    val out = f.create(new Path(dir, "meta.json"), true)
-    try out.write(org.json4s.jackson.Serialization.write(Map(
-      "query" -> cond.toString, "commit" -> headId.getOrElse("")))(
-      org.json4s.DefaultFormats).getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Materialize a saved view as a DataFrame: semi-join the saved uuid
-    * set against the snapshot AT THE COMMIT the view was saved on — the
-    * reference pins views to the source dataset version
-    * (muller/core/view/view_operations.py:106-234), so later updates,
-    * deletes, or appends never change a saved view's contents. Views
-    * saved before the commit field existed fall back to the live snapshot.
-    */
-  def loadView(name: String): DataFrame = {
-    val dir = new Path(viewsDir, name)
-    val ids = spark.read.parquet(new Path(dir, "ids").toString)
-    val pinned = indexMetaField(dir, "commit").filter(_.nonEmpty)
-      .map(snapshotAtWithUuid)
-      .getOrElse(snapshotWithUuid())
-    pinned.join(ids, Seq(UuidCol), "left_semi").drop(UuidCol)
-  }
-
-  def views: Seq[String] = {
-    val f = CommitLog.fs(spark, root)
-    if (!f.exists(viewsDir)) Seq.empty
-    else f.listStatus(viewsDir).toSeq.map(_.getPath.getName).sorted
-  }
-
-  def deleteView(name: String): Unit = {
-    CommitLog.fs(spark, root).delete(new Path(viewsDir, name), true)
-    ()
-  }
-
   // ---- query surface (reference mixins/query.py) --------------------------
 
   /** Flagship condition-tuple filter (reference `filter_vectorized`).
@@ -1915,411 +1860,6 @@ class GraftDataset private[format] (
   /** Per-column statistics (reference `ds.summary`/statistics). */
   def summary(): DataFrame = graft.operators.Statistics.columnStatistics(toDF)
 
-  // ---- index lifecycle (reference mixins/query.py create_index_*) ---------
-
-  private def indexDir(kind: String, column: String) =
-    new Path(root, s"_graft/indexes/$kind/$column")
-
-  /** Build + persist the inverted text index for `column`, bound to the
-    * current commit (reference `create_index_vectorized`; staleness is
-    * detected by comparing the recorded commit id, like
-    * filter_vectorized.py:476-492).
-    */
-  def createIndexVectorized(column: String, numShards: Int = 16): Unit = {
-    require(!dirty, "commit before indexing")
-    val dir = indexDir("inverted", column)
-    val idx = graft.operators.InvertedIndex.build(
-      snapshotWithUuid(), column, UuidCol, numShards)
-    graft.operators.InvertedIndex.save(idx, new Path(dir, "postings").toString)
-    writeIndexMeta(dir, Map("numShards" -> numShards.toString))
-  }
-
-  private def writeIndexMeta(dir: Path,
-                             extra: Map[String, String] = Map.empty): Unit = {
-    val f = CommitLog.fs(spark, root)
-    val out = f.create(new Path(dir, "meta.json"), true)
-    try out.write(org.json4s.jackson.Serialization.write(
-      Map("commit" -> headId.getOrElse("")) ++ extra)(org.json4s.DefaultFormats)
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def indexMetaField(dir: Path, key: String): Option[String] = {
-    val f = CommitLog.fs(spark, root)
-    val p = new Path(dir, "meta.json")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val s = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      org.json4s.jackson.JsonMethods.parse(s)
-        .\(key).extractOpt[String](org.json4s.DefaultFormats,
-          implicitly[Manifest[String]])
-    }
-  }
-
-  private def indexCommit(dir: Path): Option[String] =
-    indexMetaField(dir, "commit")
-
-  /** True if the persisted index for `column` matches HEAD. */
-  def indexFresh(kind: String, column: String): Boolean =
-    indexCommit(indexDir(kind, column)) == headId
-
-  /** Per-term document counts straight from the inverted index's
-    * posting table — the reference's row-aggregate "fast path"
-    * (aggregate.py:33-52: grouped `count(*)` over an indexed
-    * class-label answered from posting sizes, never the rows)
-    * generalized into an explicit vocabulary-statistics op: the scan is
-    * over the index (vocabulary-sized), not the corpus text, which at
-    * 100 TB is the difference between a metadata-shaped job and a full
-    * tokenization pass. Counts are distinct documents per term under
-    * the index's own tokenizer contract. Requires a fresh index.
-    */
-  def termCounts(column: String): DataFrame = {
-    require(indexFresh("inverted", column),
-      s"no fresh inverted index for $column (create/update it first)")
-    val postings = graft.operators.InvertedIndex.load(spark,
-      new Path(indexDir("inverted", column), "postings").toString)
-    postings.groupBy("term").agg(count_distinct(col("id")).as("n_docs"))
-  }
-
-  /** New base files since the index's commit — or None if the table saw
-    * in-place changes (updates/tombstones/renames) that an append-only
-    * delta cannot express, which forces a full rebuild.
-    */
-  private def appendOnlyDelta(indexedAt: String): Option[Vector[String]] = {
-    val old = TableState.of(CommitLog.readCommit(spark, root, indexedAt))
-    st.since(old).filter(d => d.replaced.isEmpty && d.mutations.isEmpty &&
-      old.renames == st.renames).map(_.appended)
-  }
-
-  /** The rows of base entries `files` alone (an index delta). */
-  private def rowsOf(files: Vector[String]): DataFrame =
-    snapshotWithUuid(st.copy(files = files, updates = Vector.empty,
-      tombstones = Vector.empty))
-
-  /** Incremental inverted-index maintenance (reference `update_index`,
-    * inverted_index_vectorized.py:397-445: tokenize ONLY the appended
-    * rows and merge shards). Appends since the indexed commit are
-    * tokenized and their postings appended to the same shard-partitioned
-    * parquet; deletions need no posting cleanup because search semi-joins
-    * back to the live snapshot. In-place updates/renames fall back to a
-    * full rebuild (the reference would serve a stale index and warn).
-    */
-  def updateIndexVectorized(column: String, numShards: Int = 16): Unit = {
-    require(!dirty, "commit before indexing")
-    val dir = indexDir("inverted", column)
-    indexCommit(dir).flatMap(appendOnlyDelta) match {
-      case Some(newFiles) =>
-        // the delta MUST shard with the PERSISTED count: mixing shard
-        // functions in one posting table silently mis-routes query-time
-        // partition pruning (`numShards` only applies on a full rebuild)
-        val persistedShards = indexMetaField(dir, "numShards")
-          .map(_.toInt).getOrElse(numShards)
-        if (newFiles.nonEmpty) {
-          val postingsPath = new Path(dir, "postings").toString
-          graft.operators.InvertedIndex.build(
-              rowsOf(newFiles), column, UuidCol, persistedShards)
-            .write.mode("append").partitionBy("shard")
-            .parquet(postingsPath)
-          // refresh the stats sidecar so query-time broadcast bounds stay
-          // truthful after the append (one agg at maintenance time)
-          graft.operators.InvertedIndex.saveStats(spark, postingsPath,
-            graft.operators.InvertedIndex.computeStats(
-              graft.operators.InvertedIndex.load(spark, postingsPath)))
-        }
-        writeIndexMeta(dir, Map("numShards" -> persistedShards.toString))
-      case None => createIndexVectorized(column, numShards)
-    }
-  }
-
-  /** Incremental vector-index maintenance (reference
-    * vector_search_ops.py:51-82: diff the tensor between the index's
-    * commit and HEAD, apply appends), dispatched by the index's
-    * recorded type with its recorded build params:
-    *   - IVF/IVFPQ: new rows are assigned to the EXISTING centroids
-    *     (and PQ-encoded with the frozen codebooks) and appended to the
-    *     cell-partitioned table;
-    *   - HNSW/DISKANN: new rows get fresh graph SHARDS (part ids after
-    *     the existing ones) — search already probes every shard, so
-    *     adding shards is the sharded-subgraph meaning of "apply
-    *     appends to the index";
-    *   - FLAT: rebind the commit (search reads the live snapshot).
-    * Non-append changes rebuild with the recorded params.
-    */
-  /** The recorded build params of the persisted index at `dir`, carried
-    * through maintenance so incremental updates and rebuilds reuse them.
-    */
-  private def carriedVectorMeta(dir: Path, nlist: Int = 64)
-      : Map[String, String] = {
-    def param(key: String, dflt: Int): Int =
-      indexMetaField(dir, key).map(_.toInt).getOrElse(dflt)
-    Map("type" -> indexMetaField(dir, "type").getOrElse("IVF"),
-      "nlist" -> param("nlist", nlist).toString,
-      "pqM" -> param("pqM", 0).toString, "pqK" -> param("pqK", 16).toString,
-      "graphDegree" -> param("graphDegree", 16).toString,
-      "buildBeam" -> param("buildBeam", 100).toString,
-      "metric" -> indexMetaField(dir, "metric").getOrElse("l2"),
-      "rebuilds" -> param("rebuilds", 0).toString)
-  }
-
-  /** Full rebuild over the live snapshot with the index's own recorded
-    * params, bumping the `rebuilds` maintenance counter in the meta.
-    * `nlistDefault` backstops an index whose meta never recorded nlist —
-    * it must carry the CALLER's value, not a hardcoded 64, or
-    * `updateVectorIndex(column, nlist = 256)`'s rebuild path silently
-    * builds a 64-cell index.
-    */
-  private def rebuildVectorIndex(column: String, dir: Path,
-                                 nlistDefault: Int = 64): Unit = {
-    val carried = carriedVectorMeta(dir, nlistDefault)
-    createVectorIndex(column, carried("nlist").toInt,
-      indexType = carried("type"), pqM = carried("pqM").toInt,
-      pqK = carried("pqK").toInt, graphDegree = carried("graphDegree").toInt,
-      buildBeam = carried("buildBeam").toInt, metric = carried("metric"))
-    writeIndexMeta(dir,
-      carried + ("rebuilds" -> (carried("rebuilds").toInt + 1).toString))
-  }
-
-  def updateVectorIndex(column: String, nlist: Int = 64,
-                        rebuildThreshold: Double = 0.5): Unit = {
-    require(!dirty, "commit before indexing")
-    unloadVectorIndex(column) // a pinned copy would go stale on append
-    val dir = indexDir("vector", column)
-    val tpe = indexMetaField(dir, "type").getOrElse("IVF")
-    def param(key: String, dflt: Int): Int =
-      indexMetaField(dir, key).map(_.toInt).getOrElse(dflt)
-    val V = graft.operators.VectorSearch
-    val idxMetric = indexMetaField(dir, "metric").getOrElse("l2")
-    val carried = carriedVectorMeta(dir, nlist)
-    def rebuild(): Unit = rebuildVectorIndex(column, dir, nlist)
-    indexCommit(dir).flatMap(appendOnlyDelta) match {
-      case _ if tpe == "FLAT" => writeIndexMeta(dir, carried)
-      case Some(newFiles) if newFiles.isEmpty =>
-        writeIndexMeta(dir, carried) // no-op maintenance: nothing to scan
-      case Some(newFiles) =>
-        // Delta-fraction guard: every append FRAGMENTS the index (new
-        // graph shards that each probe pays for; cells assigned to
-        // centroids that drift from the data). Past the threshold the
-        // compounding probe cost exceeds one rebuild's, so rebuild —
-        // the same economics as the inverted index's optimize path.
-        // Row counts come from parquet FOOTERS (driver-side metadata,
-        // parallel, no Spark job) — a threshold check must not cost a
-        // merge-on-read table scan at 100 TB. Footer counts include
-        // base rows tombstoned BEFORE indexing (appendOnlyDelta rules
-        // out new tombstones since), which only UNDER-estimates the
-        // delta fraction — fine for a 0.5 heuristic.
-        val deltaRows = footerRows(newFiles)
-        val indexedRows = footerRows(st.files.filterNot(newFiles.toSet))
-        if (indexedRows > 0 && deltaRows > rebuildThreshold * indexedRows)
-          rebuild() // writes its own meta (bumped rebuilds counter)
-        else {
-          if (newFiles.nonEmpty) {
-            val added = rowsOf(newFiles)
-            val assignedPath = new Path(dir, "assigned").toString
-            val graphPath = new Path(dir, "graph").toString
-            tpe match {
-              case "IVF" =>
-                val centroids = spark.read.parquet(
-                  new Path(dir, "centroids").toString)
-                V.assignCells(added, column, centroids)
-                  .write.mode("append").partitionBy("cell")
-                  .parquet(assignedPath)
-              case "IVFPQ" =>
-                val centroids = spark.read.parquet(
-                  new Path(dir, "centroids").toString)
-                val model = readPqModel(
-                  spark.read.parquet(new Path(dir, "pqmodel").toString))
-                V.pqEncode(
-                    V.assignCells(graphInput(added, column, idxMetric),
-                      column, centroids),
-                    column, model)
-                  .write.mode("append").partitionBy("cell")
-                  .parquet(assignedPath)
-              case "HNSW" | "DISKANN" =>
-                // empty persisted graph (index created while the vector
-                // column had no rows): max(part) is null — or the parquet
-                // dir has no readable footer at all — and the delta IS the
-                // whole index, so new parts start at 0
-                val lastPart = try {
-                  spark.read.parquet(graphPath)
-                    .agg(coalesce(max(col("part")), lit(-1))).head().getInt(0)
-                } catch {
-                  case _: org.apache.spark.sql.AnalysisException => -1
-                }
-                val offset = lastPart + 1
-                val gIn = graphInput(added, column, idxMetric)
-                // delta shards build CLUSTERED too: their sentinels keep
-                // shard routing correct after appends (a sentinel-less
-                // delta shard would be probed unconditionally — safe but
-                // unroutable, and appends would erode the sub-linearity).
-                // Shard count derives from the DELTA's footer row count
-                // (already read for the rebuild-threshold check — no
-                // scan), so delta build tasks stay ~500-row bounded too.
-                val built =
-                  if (tpe == "HNSW")
-                    graft.operators.Hnsw.build(gIn, column, UuidCol,
-                      m = param("graphDegree", 16),
-                      efConstruction = param("buildBeam", 100),
-                      clustered = true, rowCountHint = deltaRows)
-                  else {
-                    val pqM0 = param("pqM", 0)
-                    graft.operators.Vamana.build(gIn, column, UuidCol,
-                      r = math.max(param("graphDegree", 16), 4),
-                      buildBeam = param("buildBeam", 100),
-                      pqM = if (pqM0 > 0) pqM0
-                            else V.autoSubspaces(vectorDim(added, column)),
-                      pqK = param("pqK", 16),
-                      clustered = true, rowCountHint = deltaRows)
-                  }
-                // the shift rides in the closure, not in a literal: Spark
-                // inlines an Int literal into the generated Java, so each
-                // append's offset would compile a new write-stage class
-                val pi = built.schema.fieldIndex("part")
-                built.map(r => Row.fromSeq(
-                    r.toSeq.updated(pi, r.getInt(pi) + offset)))(
-                    org.apache.spark.sql.catalyst.encoders.RowEncoder
-                      .encoderFor(built.schema))
-                  .write.mode("append").partitionBy("part").parquet(graphPath)
-                // fold the delta shards' centroids into the routing
-                // artifact (one sentinel-filtered pass over the graph
-                // table — row-group pruned, |shards| rows out)
-                writeRoutingArtifact(dir,
-                  if (tpe == "HNSW") graft.operators.Hnsw.CentroidNode
-                  else graft.operators.Vamana.CentroidNode)
-              case t => throw new IllegalStateException(s"unknown type $t")
-            }
-          }
-          writeIndexMeta(dir, carried)
-        }
-      case None => rebuild()
-    }
-  }
-
-  /** Compact an append-fragmented vector index: rebuild over the live
-    * snapshot with the index's recorded params (the vector-family
-    * analogue of [[optimizeIndex]] for the inverted index; reference
-    * regenerates indexes wholesale, vector_search_ops.py:51-82).
-    *
-    * Why it exists: [[updateVectorIndex]]'s append path gives graph
-    * indexes NEW subgraph shards per append — search probes every
-    * shard, so N small appends degrade latency and recall forever —
-    * and assigns IVF/IVFPQ rows to centroids the data has drifted away
-    * from. One rebuild restores build-parallelism part counts and
-    * data-fitted centroids; the `rebuilds` meta counter records each
-    * maintenance rebuild (whether from here or the update path's
-    * delta-fraction threshold). FLAT has no artifacts to compact — the
-    * call just rebinds the commit.
-    */
-  def optimizeVectorIndex(column: String): Unit = {
-    require(!dirty, "commit before indexing")
-    unloadVectorIndex(column)
-    val dir = indexDir("vector", column)
-    require(CommitLog.fs(spark, root).exists(new Path(dir, "meta.json")),
-      s"no vector index for '$column' to optimize; createVectorIndex first")
-    if (carriedVectorMeta(dir)("type") == "FLAT")
-      writeIndexMeta(dir, carriedVectorMeta(dir))
-    else rebuildVectorIndex(column, dir)
-  }
-
-  /** Maintenance metadata for the persisted vector index on `column`:
-    * build params, bound commit, and the rebuild counter. */
-  def vectorIndexInfo(column: String): Map[String, String] = {
-    val dir = indexDir("vector", column)
-    carriedVectorMeta(dir) ++
-      indexCommit(dir).map("commit" -> _).toMap
-  }
-
-  /** Indexed CONTAINS search routed through the posting table
-    * (reference indexed fuzzy/complex match). Falls back to the scan
-    * predicate when the index is stale — same answer, different plan
-    * (the reference WARNS and searches the stale index instead).
-    */
-  def textSearch(column: String, query: String): DataFrame = {
-    val dir = indexDir("inverted", column)
-    if (indexFresh("inverted", column)) {
-      val postingsPath = new Path(dir, "postings").toString
-      val idx = graft.operators.InvertedIndex.load(spark, postingsPath)
-      // shard routing from the persisted shard count -> partition pruning;
-      // broadcast decision from the stats sidecar -> no planning-time job
-      val numShards = indexMetaField(dir, "numShards").map(_.toInt)
-      val stats = graft.operators.InvertedIndex.loadStats(spark, postingsPath)
-      graft.operators.InvertedIndex.search(
-        snapshotWithUuid(), UuidCol, idx, query, numShards,
-        stats = stats).drop(UuidCol)
-    } else
-      toDF.filter(graft.operators.FilterVectorized.containsPredicate(
-        col(column), query))
-  }
-
-  /** Filter by a SELF-ROUTING indexed predicate: with the
-    * `IndexedContainsRewrite` optimizer rule installed (GraftExtensions
-    * .install / spark.sql.extensions) the predicate is rewritten into a
-    * broadcast semi-join against the shard-pruned posting table; without
-    * it, the same predicate evaluates as a scan. Plan changes, answers
-    * don't — the Catalyst-rule form of the reference's scan-vs-index
-    * routing (filter_vectorized.py:211-279).
-    */
-  def filterIndexed(column: String, query: String): DataFrame = {
-    val dir = indexDir("inverted", column)
-    require(indexFresh("inverted", column),
-      s"inverted index for $column is stale or missing")
-    val n = indexMetaField(dir, "numShards").map(_.toInt).getOrElse(16)
-    snapshotWithUuid().filter(
-      org.apache.spark.sql.graftnative.GraftIndexedContains(
-        col(column), query, new Path(dir, "postings").toString, n))
-      .drop(UuidCol)
-  }
-
-  /** Compact the posting files of an inverted index (reference
-    * `optimize_index`, inverted_index_vectorized.py:313-394: merge shard
-    * fragments): incremental updates append small files per shard; this
-    * rewrites each shard partition into one well-sized file. Results are
-    * identical — only file layout changes.
-    */
-  def optimizeIndex(column: String): Unit =
-    rewritePostings(column, None)
-
-  /** Re-shard an inverted index to a new shard count (reference
-    * `reshard_index`): recompute `shard = xxhash64(term) % n` and rewrite.
-    */
-  def reshardIndex(column: String, newNumShards: Int): Unit =
-    rewritePostings(column, Some(newNumShards))
-
-  private def rewritePostings(column: String, newShards: Option[Int]): Unit = {
-    val dir = indexDir("inverted", column)
-    val f = CommitLog.fs(spark, root)
-    val postings = new Path(dir, "postings")
-    require(f.exists(postings), s"no inverted index for $column")
-    val cur = spark.read.parquet(postings.toString)
-    val rewritten = newShards match {
-      case Some(n) => cur.withColumn("shard",
-        pmod(xxhash64(col("term")), lit(n)).cast("int"))
-      case None => cur
-    }
-    // capture meta BEFORE rewriting: layout maintenance must preserve the
-    // index's commit binding (rebinding to HEAD would fake freshness);
-    // term counts are unchanged by optimize/reshard, so the stats sidecar
-    // is carried over rather than recomputed
-    val boundCommit = indexCommit(dir).getOrElse("")
-    val shardCount = newShards.map(_.toString)
-      .orElse(indexMetaField(dir, "numShards"))
-    val stats = graft.operators.InvertedIndex.loadStats(spark, postings.toString)
-    val tmp = new Path(dir, "postings_tmp")
-    rewritten
-      .repartition(col("shard"))
-      .write.mode("overwrite").partitionBy("shard").parquet(tmp.toString)
-    f.delete(postings, true)
-    f.rename(tmp, postings)
-    stats.foreach(st =>
-      graft.operators.InvertedIndex.saveStats(spark, postings.toString, st))
-    val out = f.create(new Path(dir, "meta.json"), true)
-    try out.write(org.json4s.jackson.Serialization.write(
-      Map("commit" -> boundCommit) ++
-        shardCount.map("numShards" -> _))(org.json4s.DefaultFormats)
-      .getBytes("UTF-8"))
-    finally out.close()
-  }
-
   /** Operational view of the live base manifest with its file-skipping
     * stats: one row per (file, statted column) — entries or files
     * without stats appear with null columns. Lets a user see WHY a
@@ -2364,550 +1904,6 @@ class GraftDataset private[format] (
       val p = new Path(root, rel)
       if (f.exists(p)) f.getContentSummary(p).getLength else 0L
     }.sum
-  }
-
-  /** Build + persist a vector index for an embedding `column`
-    * (reference `create_vector_index(tensor, index_name, index_type,
-    * metric, **params)`, vector_search_ops.py:18-48; the four index
-    * types utils.py:31-42; artifacts live beside the data keyed by
-    * commit, vector/artifact_store.py). `indexType`:
-    *   - `IVF` (default) — centroid cells, exact scoring in probed cells
-    *   - `IVFPQ` — cells + product-quantization codes: search scans ADC
-    *     lookups in the probed cells and exact-re-ranks
-    *     `refineFactor·k` (the reference's faiss IVFPQ + refine_factor)
-    *   - `HNSW` — per-partition navigable-small-world graphs
-    *   - `DISKANN` — per-partition Vamana graphs, PQ walk + re-rank
-    *   - `FLAT` — no artifacts; search is exact brute force
-    * Build params are recorded in the index meta so incremental
-    * [[updateVectorIndex]] reuses them.
-    */
-  def createVectorIndex(column: String, nlist: Int = 64,
-                        indexType: String = "IVF", pqM: Int = 0,
-                        pqK: Int = 16, graphDegree: Int = 32,
-                        buildBeam: Int = 100,
-                        metric: String = "l2"): Unit = {
-    // graphDegree default 32 (faiss's HNSW M default): clustered shards
-    // hold a query's near-tie neighborhood whole, and RecallSoak measured
-    // degree-16 graphs navigating such shards at 0.93 recall@10 vs 1.00
-    // at degree 32 (m is THE knob — efConstruction/ef barely move it)
-    require(!dirty, "commit before indexing")
-    unloadVectorIndex(column) // a pinned copy would go stale on overwrite
-    val dir = indexDir("vector", column)
-    // a re-create with a DIFFERENT type must not leave the old type's
-    // artifacts behind (search routes by meta type, but mixed leftovers
-    // would be pinned by loadVectorIndex and mislead listIndexes)
-    CommitLog.fs(spark, root).delete(dir, true)
-    val snap = snapshotWithUuid()
-    val V = graft.operators.VectorSearch
-    val tpe = indexType.toUpperCase
-    def subspaces: Int =
-      if (pqM > 0) pqM else V.autoSubspaces(vectorDim(snap, column))
-    tpe match {
-      case "IVF" =>
-        val (assigned, centroids) = V.ivfBuild(snap, column, UuidCol, nlist)
-        assigned.write.mode("overwrite").partitionBy("cell")
-          .parquet(new Path(dir, "assigned").toString)
-        centroids.write.mode("overwrite")
-          .parquet(new Path(dir, "centroids").toString)
-      case "IVFPQ" =>
-        // PQ codes score squared L2, so cosine rides the same unit-norm
-        // build as the graph indexes ([[graphInput]]); IVF stores raw
-        // vectors because ivfTopK evaluates the metric at query time
-        val pqIn = graphInput(snap, column, metric)
-        val (assigned, centroids) = V.ivfBuild(pqIn, column, UuidCol, nlist)
-        val model = V.pqTrain(pqIn, column, UuidCol, subspaces, pqK)
-        V.pqEncode(assigned, column, model)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(new Path(dir, "assigned").toString)
-        centroids.write.mode("overwrite")
-          .parquet(new Path(dir, "centroids").toString)
-        writePqModel(dir, model)
-      case "HNSW" =>
-        // clustered: shards are coarse k-means cells, each with a
-        // persisted centroid — probe-all search is unchanged (every row
-        // is in exactly one shard) and probeShards routing becomes
-        // available (see [[vectorSearch]]). Shard count derives from the
-        // MANIFEST row count (countRows — metadata only, no scan), not
-        // from cluster cores: ~500-row shards keep every build task's
-        // in-heap graph bounded at any corpus size and sit at the
-        // recall optimum RecallSoak measured (GraphRouting.shardsFor).
-        graft.operators.Hnsw.build(graphInput(snap, column, metric),
-            column, UuidCol, m = graphDegree, efConstruction = buildBeam,
-            clustered = true, rowCountHint = countRows)
-          .write.mode("overwrite").partitionBy("part")
-          .parquet(new Path(dir, "graph").toString)
-        writeRoutingArtifact(dir, graft.operators.Hnsw.CentroidNode)
-      case "DISKANN" =>
-        graft.operators.Vamana.build(graphInput(snap, column, metric),
-            column, UuidCol, r = math.max(graphDegree, 4),
-            buildBeam = buildBeam, pqM = subspaces, pqK = pqK,
-            clustered = true, rowCountHint = countRows)
-          .write.mode("overwrite").partitionBy("part")
-          .parquet(new Path(dir, "graph").toString)
-        writeRoutingArtifact(dir, graft.operators.Vamana.CentroidNode)
-      case "FLAT" => () // exact search reads the live snapshot directly
-      case t => throw new IllegalArgumentException(
-        s"bad index type $t (FLAT | IVF | IVFPQ | HNSW | DISKANN)")
-    }
-    writeIndexMeta(dir, Map("type" -> tpe, "nlist" -> nlist.toString,
-      "pqM" -> pqM.toString, "pqK" -> pqK.toString,
-      "graphDegree" -> graphDegree.toString,
-      "buildBeam" -> buildBeam.toString, "metric" -> metric))
-  }
-
-  /** Graph indexes walk on L2; a `cosine` graph is built over
-    * UNIT-NORMALIZED vectors, where L2 order equals cosine order
-    * (`‖a−b‖² = 2−2·cos` on unit vectors — the same normalize-then-L2
-    * mapping the reference applies for faiss cosine, utils.py:46-95).
-    */
-  private def graphInput(snap: DataFrame, column: String,
-                         metric: String): DataFrame = metric match {
-    case "l2" => snap
-    case "cosine" => snap.withColumn(column,
-      graft.functions.VectorFunctions.normalize(col(column)))
-    case m => throw new IllegalArgumentException(
-      s"graph index metric must be l2 or cosine, got $m")
-  }
-
-  /** The embedding dimensionality, from the first non-null vector. */
-  private def vectorDim(df: DataFrame, column: String): Int =
-    df.filter(col(column).isNotNull).select(col(column)).head(1) match {
-      case Array(r) => r.getSeq[Float](0).length
-      case _ => throw new IllegalArgumentException(
-        s"cannot build a vector index: column '$column' has no non-null " +
-          "vectors to infer the dimensionality from")
-    }
-
-  /** Extract the graph index's per-shard routing centroids (its
-    * centroid-sentinel rows) into a tiny standalone `routing` artifact,
-    * so a routed search reads |shards| rows — never the graph — to pick
-    * its probe set. Re-derived after every incremental append (delta
-    * shards bring their own sentinels); a search on an index whose
-    * routing artifact is missing probes all shards.
-    */
-  private def writeRoutingArtifact(dir: Path, sentinelNode: Int): Unit = {
-    val graphPath = new Path(dir, "graph").toString
-    spark.read.parquet(graphPath)
-      .filter(col("node") === lit(sentinelNode))
-      .select(col("part").cast("int").as("part"), col("vec"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(new Path(dir, "routing").toString)
-  }
-
-  private def readRoutingArtifact(column: String, dir: Path)
-      : Array[(Int, Array[Float])] = {
-    def art: Option[DataFrame] =
-      loadedVector.get(column).flatMap(_.get("routing")).orElse {
-        val p = new Path(dir, "routing")
-        if (CommitLog.fs(spark, root).exists(p))
-          Some(spark.read.parquet(p.toString))
-        else None
-      }
-    art.map(_.select(col("part"), col("vec")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)))
-      .getOrElse(Array.empty)
-  }
-
-  private def writePqModel(
-      dir: Path, model: graft.operators.VectorSearch.PqModel): Unit = {
-    import spark.implicits._
-    Seq((model.m, model.k, model.dim, model.codebooks.toSeq))
-      .toDF("m", "k", "dim", "codebooks")
-      .write.mode("overwrite").parquet(new Path(dir, "pqmodel").toString)
-  }
-
-  private def readPqModel(df: DataFrame)
-      : graft.operators.VectorSearch.PqModel = {
-    val r = df.select("m", "k", "dim", "codebooks").head()
-    graft.operators.VectorSearch.PqModel(r.getInt(0), r.getInt(1),
-      r.getInt(2), r.getSeq[Float](3).toArray)
-  }
-
-  // ---- vector index lifecycle (reference vector_search_ops.py:104-141:
-  // load = pin in memory, unload = release, drop = delete permanently) ----
-
-  /** Loaded-index registry: column → artifact name → DataFrame, each
-    * persisted in executor memory+disk so repeated searches skip the
-    * parquet scan — the Spark-native meaning of the reference's "load
-    * index into memory". Which artifacts exist depends on the index
-    * type (IVF: assigned+centroids; IVFPQ: +pqmodel; graphs: graph;
-    * FLAT: none).
-    */
-  private val loadedVector =
-    scala.collection.mutable.Map[String, Map[String, DataFrame]]()
-
-  private val VectorArtifacts =
-    Seq("assigned", "centroids", "graph", "pqmodel", "routing")
-
-  def loadVectorIndex(column: String): Unit = {
-    require(indexFresh("vector", column),
-      s"vector index for $column is stale or missing; createVectorIndex first")
-    if (!loadedVector.contains(column)) {
-      val dir = indexDir("vector", column)
-      val f = CommitLog.fs(spark, root)
-      loadedVector(column) = VectorArtifacts
-        .filter(n => f.exists(new Path(dir, n)))
-        .map(n => n -> spark.read.parquet(new Path(dir, n).toString)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        .toMap
-    }
-  }
-
-  def unloadVectorIndex(column: String): Unit =
-    loadedVector.remove(column).foreach(_.values.foreach { df =>
-      df.unpersist(); ()
-    })
-
-  /** Drop the persisted index permanently (and release any loaded copy). */
-  def dropVectorIndex(column: String): Unit = {
-    unloadVectorIndex(column)
-    CommitLog.fs(spark, root).delete(indexDir("vector", column), true)
-    ()
-  }
-
-  def isVectorIndexLoaded(column: String): Boolean =
-    loadedVector.contains(column)
-
-  /** Enumerate persisted indexes as (kind, column, fresh). */
-  def listIndexes: Seq[(String, String, Boolean)] = {
-    val f = CommitLog.fs(spark, root)
-    val base = new Path(root, "_graft/indexes")
-    if (!f.exists(base)) Seq.empty
-    else for {
-      kindDir <- f.listStatus(base).toSeq.sortBy(_.getPath.getName)
-      colDir <- f.listStatus(kindDir.getPath).toSeq.sortBy(_.getPath.getName)
-      kind = kindDir.getPath.getName
-      column = colDir.getPath.getName
-    } yield (kind, column, indexFresh(kind, column))
-  }
-
-  /** ANN search through the persisted index, routed by its recorded
-    * type (reference `vector_search(query_vector, tensor_name,
-    * index_name, topk, nprobe, refine_factor)`, dataset.py:1564-1568):
-    * IVF probes `nprobe` cells (partition-pruned read, or the pinned
-    * in-memory copy after [[loadVectorIndex]]); IVFPQ ADC-scans the
-    * probed cells and exact-re-ranks `refineFactor·k`; graph types walk
-    * every shard on the metric the graph was BUILT for (l2, or cosine
-    * via unit-normalized vectors — the score returned is then the
-    * cosine similarity); FLAT is exact brute force over the live
-    * snapshot (`exact = true` scores on the deterministic scaled-int
-    * grid, the oracle-checkable path). IVFPQ serves the metric it was
-    * built for the same way the graphs do (l2, or cosine via the
-    * unit-norm build). Requires a fresh index.
-    *
-    * `probeShards` is the graph families' nprobe: > 0 routes the query
-    * to its nearest `probeShards` graph shards by the index's persisted
-    * routing centroids (the tiny `routing` artifact — |shards| rows, the
-    * graph itself is untouched for the decision) and reads ONLY those
-    * part directories; 0 (default) probes every shard — the exactness
-    * fallback and the behavior for pre-routing indexes.
-    */
-  def vectorSearch(column: String, queryVec: Seq[Float], k: Int,
-                   metric: String = "cosine", nprobe: Int = 8,
-                   refineFactor: Int = 4, exact: Boolean = false,
-                   tieBreakCols: Seq[String] = Nil,
-                   probeShards: Int = 0): DataFrame = {
-    val dir = indexDir("vector", column)
-    require(indexFresh("vector", column),
-      s"vector index for $column is stale or missing; createVectorIndex first")
-    val tpe = indexMetaField(dir, "type").getOrElse("IVF")
-    def art(name: String): DataFrame =
-      loadedVector.get(column).flatMap(_.get(name)).getOrElse(
-        spark.read.parquet(new Path(dir, name).toString))
-    // graph walks run on the metric the vectors were prepared for at
-    // build time; a cosine graph takes a normalized query and maps the
-    // unit-vector L2² back to cosine (cos = 1 − l2²/2)
-    val graphMetric = indexMetaField(dir, "metric").getOrElse("l2")
-    def requireGraphMetric(): Unit = require(metric == graphMetric,
-      s"$tpe index was built for metric $graphMetric, not $metric " +
-        "(re-create the index, or use indexType FLAT or IVF)")
-    def graphQuery: Seq[Float] =
-      if (graphMetric == "l2") queryVec
-      else {
-        val n = math.sqrt(queryVec.foldLeft(0.0)((s, x) => s + x * x))
-        if (n == 0.0) queryVec else queryVec.map(x => (x / n).toFloat)
-      }
-    def graphScore(hits: DataFrame): DataFrame = {
-      val s = if (graphMetric == "l2") col("l2sq")
-              else lit(1.0) - col("l2sq") / lit(2.0) // unit vecs → cosine
-      hits.select(col("ext_id").as(UuidCol), s.as("score"))
-    }
-    // score ties at the k boundary: FLAT (the exact, oracle-able path)
-    // resolves them by user-visible columns on request; the index paths
-    // break ties by row identity, like the reference's faiss ids
-    require(tieBreakCols.isEmpty || tpe == "FLAT",
-      s"tieBreakCols is supported on FLAT indexes only (this is $tpe)")
-    // graph-only knob, guarded like tieBreakCols: silently ignoring it
-    // would let an IVF caller believe they tuned routing (IVF's probe
-    // knob is nprobe)
-    require(probeShards == 0 || tpe == "HNSW" || tpe == "DISKANN",
-      s"probeShards applies to HNSW/DISKANN indexes only (this is $tpe; " +
-        "IVF/IVFPQ route by nprobe)")
-    // graph families route from the tiny `routing` artifact (pinned in
-    // memory after loadVectorIndex) — never from a sentinel scan of the
-    // graph itself; a def so the non-graph types never read it
-    def routingCents: Array[(Int, Array[Float])] =
-      if (probeShards > 0) readRoutingArtifact(column, dir)
-      else Array.empty
-    val V = graft.operators.VectorSearch
-    val hits = tpe match {
-      case "FLAT" =>
-        V.bruteForceTopK(snapshotWithUuid(), column, UuidCol,
-          queryVec, metric, k, exact, tieBreakCols)
-      case "IVF" =>
-        V.ivfTopK(art("assigned"), art("centroids"), column, UuidCol,
-          queryVec, metric, k, nprobe, exact)
-      case "IVFPQ" =>
-        requireGraphMetric() // codes score L2; cosine = unit-norm build
-        val raw = V.ivfPqTopK(art("assigned"), art("centroids"), column,
-          UuidCol, readPqModel(art("pqmodel")), graphQuery, k, nprobe,
-          rerank = refineFactor * k)
-        if (graphMetric == "l2") raw
-        else raw.select(col(UuidCol),
-          (lit(1.0) - col("score") / lit(2.0)).as("score"))
-      case "HNSW" =>
-        requireGraphMetric()
-        // unpinned: serve straight off the partitionBy("part") layout —
-        // one narrow scan per part directory, no Exchange. The pinned
-        // in-memory copy keeps the shuffled path (its cached partitioning
-        // does not preserve the directory co-location).
-        val hits =
-          if (isVectorIndexLoaded(column))
-            graft.operators.Hnsw.topK(art("graph"), graphQuery, k,
-              ef = math.max(64, refineFactor * k),
-              probeParts = probeShards, centroids = routingCents)
-          else graft.operators.Hnsw.topKPersisted(spark,
-            new Path(dir, "graph").toString, graphQuery, k,
-            ef = math.max(64, refineFactor * k),
-            probeParts = probeShards, centroids = routingCents)
-        graphScore(hits)
-      case "DISKANN" =>
-        requireGraphMetric()
-        // rerank floor 256: on a CLUSTERED shard the PQ walk pools many
-        // near-identical codes, and an exact re-rank smaller than the tie
-        // pool picks arbitrarily among them — RecallSoak measured 0.49
-        // recall@10 at rerank=40 vs 1.00 at 400 on a 100k 256-center
-        // corpus. Exact-scoring ≤256 vectors per probed shard is noise
-        // next to the walk itself.
-        val vamanaRerank = math.max(256, refineFactor * k)
-        val hits =
-          if (isVectorIndexLoaded(column))
-            graft.operators.Vamana.topK(art("graph"), graphQuery, k,
-              beam = math.max(64, refineFactor * k),
-              rerank = vamanaRerank, probeParts = probeShards,
-              centroids = routingCents)
-          else graft.operators.Vamana.topKPersisted(spark,
-            new Path(dir, "graph").toString, graphQuery, k,
-            beam = math.max(64, refineFactor * k),
-            rerank = vamanaRerank, probeParts = probeShards,
-            centroids = routingCents)
-        graphScore(hits)
-      case t => throw new IllegalStateException(s"unknown index type $t")
-    }
-    hits.withColumnRenamed(UuidCol, "row_uuid")
-  }
-
-  /** Shard list for [[vectorKnnJoin]]'s graph paths from the persisted
-    * layout's `part=N` directory listing — ground truth for the same dir
-    * the join reads, and zero index scans (the way the driver-batch
-    * persisted reads dir-prune). None when the index is pinned in memory
-    * ([[loadVectorIndex]]): the join then enumerates the CACHED frame,
-    * which is cheap and can never disagree with itself.
-    */
-  private def knnPartsHint(column: String, dir: Path): Option[Set[Int]] =
-    if (isVectorIndexLoaded(column)) None
-    else graft.operators.PartitionedIndex.partIds(spark,
-      new Path(dir, "graph").toString)
-
-  /** Routed k-NN JOIN through the persisted index — the dataset-level
-    * face of [[graft.operators.KnnJoin]] (r19): every row of a query
-    * DATAFRAME finds its k nearest corpus rows, with the query table
-    * never touching the driver. This is the 100 TB form of batched
-    * `vector_search` (reference vector_search_ops.py:84-101 batches
-    * driver-held arrays only): semantic dedup and retrieval joins pass
-    * a corpus-scale query table here, [[vectorSearch]] stays the
-    * single-vector/driver-batch path. Every index type is served:
-    *
-    *   - HNSW/DISKANN: shard-routed graph walks (`probeShards` is the
-    *     pruning knob; 0 probes every shard — exact w.r.t. the walks);
-    *   - IVF/IVFPQ: cell-routed exact scoring over the `nprobe`
-    *     nearest cells per query (the IVFPQ join exact-scores its
-    *     stored vectors — with routing pruning cells, the ADC
-    *     approximation buys nothing a join-shaped scan can't);
-    *   - FLAT: exact brute force — the query table is broadcast
-    *     (|q|·|corpus| scored pairs: the inherent cost of exact);
-    *
-    * always on the metric the index was built for (cosine rides the
-    * unit-norm build where applicable, scores map back to cosine
-    * similarity). Output: (query_id, row_uuid, score, rank), rank 1..k
-    * best-first per query.
-    */
-  def vectorKnnJoin(column: String, queries: DataFrame, qIdCol: String,
-                    qVecCol: String, k: Int, metric: String = "cosine",
-                    refineFactor: Int = 4, nprobe: Int = 8,
-                    exact: Boolean = false,
-                    probeShards: Int = 0): DataFrame = {
-    val dir = indexDir("vector", column)
-    require(indexFresh("vector", column),
-      s"vector index for $column is stale or missing; createVectorIndex first")
-    val tpe = indexMetaField(dir, "type").getOrElse("IVF")
-    require(probeShards == 0 || tpe == "HNSW" || tpe == "DISKANN",
-      s"probeShards applies to HNSW/DISKANN indexes only (this is $tpe; " +
-        "IVF/IVFPQ route by nprobe)")
-    def art(name: String): DataFrame =
-      loadedVector.get(column).flatMap(_.get(name)).getOrElse(
-        spark.read.parquet(new Path(dir, name).toString))
-    val idxMetric = indexMetaField(dir, "metric").getOrElse("l2")
-    def requireIdxMetric(): Unit = require(metric == idxMetric,
-      s"$tpe index was built for metric $idxMetric, not $metric")
-    // unit-normalized query side for the metrics that ride the
-    // unit-norm build (graphs + IVFPQ cosine)
-    def qNormalized: DataFrame =
-      if (idxMetric == "l2") queries
-      else queries.withColumn(qVecCol,
-        graft.functions.VectorFunctions.normalize(col(qVecCol)))
-    def l2ToMetric(hits: DataFrame): DataFrame = {
-      val score = if (idxMetric == "l2") col("l2sq")
-                  else lit(1.0) - col("l2sq") / lit(2.0) // unit → cosine
-      hits.select(col("query_id"), col("ext_id").as("row_uuid"),
-        score.as("score"), col("rank"))
-    }
-    tpe match {
-      case "FLAT" =>
-        graft.operators.VectorSearch.batchTopK(snapshotWithUuid(),
-            column, UuidCol, queries, qIdCol, qVecCol, metric, k, exact)
-          .withColumnRenamed(UuidCol, "row_uuid")
-          .select(col("query_id"), col("row_uuid"), col("score"),
-            col("rank"))
-      case "IVF" =>
-        graft.operators.KnnJoin.ivf(art("assigned"), art("centroids"),
-            column, UuidCol, queries, qIdCol, qVecCol, metric, k,
-            nprobe, exact)
-          .withColumnRenamed("ext_id", "row_uuid")
-      case "IVFPQ" =>
-        requireIdxMetric() // stored vectors are metric-prepared
-        // BOTH metrics keep the caller's exact knob: cosine rides the
-        // unit-norm build scored on the scaled-int l2 grid (unit values
-        // quantize on the same 1e-7 grid; max l2² of 4 → 4e14, well
-        // inside int64 and lossless in double), then maps to cosine
-        val hits = graft.operators.KnnJoin.ivf(art("assigned"),
-          art("centroids"), column, UuidCol, qNormalized, qIdCol,
-          qVecCol, "l2", k, nprobe, exact)
-        if (idxMetric == "l2") hits.withColumnRenamed("ext_id", "row_uuid")
-        else {
-          // unit vectors: cos = 1 − l2²/2. Exact scores are 1e14-scaled
-          // longs (qint products), doubles are raw l2² — one
-          // deterministic affine step either way
-          val half = if (exact) lit(2.0e14) else lit(2.0)
-          hits.select(col("query_id"), col("ext_id").as("row_uuid"),
-            (lit(1.0) - col("score").cast("double") / half).as("score"),
-            col("rank"))
-        }
-      case "HNSW" =>
-        requireIdxMetric()
-        val cents = if (probeShards > 0) readRoutingArtifact(column, dir)
-                    else Array.empty[(Int, Array[Float])]
-        l2ToMetric(graft.operators.KnnJoin.hnsw(art("graph"),
-          qNormalized, qIdCol, qVecCol, k,
-          ef = math.max(64, refineFactor * k),
-          probeParts = probeShards, centroids = cents,
-          partsHint = knnPartsHint(column, dir)))
-      case "DISKANN" =>
-        requireIdxMetric()
-        val cents = if (probeShards > 0) readRoutingArtifact(column, dir)
-                    else Array.empty[(Int, Array[Float])]
-        l2ToMetric(graft.operators.KnnJoin.vamana(art("graph"),
-          qNormalized, qIdCol, qVecCol, k,
-          beam = math.max(64, refineFactor * k),
-          rerank = math.max(256, refineFactor * k),
-          probeParts = probeShards, centroids = cents,
-          partsHint = knnPartsHint(column, dir)))
-      case t => throw new IllegalStateException(s"unknown index type $t")
-    }
-  }
-
-  /** SEMANTIC DEDUP over the persisted vector index, via the routed
-    * k-NN SELF-join (r20, the 100 TB retrieval-dedup form): every live
-    * row queries the index for its nearest OTHER row, and is marked a
-    * duplicate iff that neighbor clears `threshold` from a LOWER
-    * `_uuid` — SemDeDup's keep-first rule (Abbas 2023) with the hidden
-    * uuid as the deterministic tie. The corpus is the query table of
-    * [[vectorKnnJoin]]: no driver collect of either side, cell/shard
-    * routing prunes the pair space (`nprobe` for IVF/IVFPQ,
-    * `probeShards` for the graph families, exact for FLAT).
-    *
-    * k = 2 suffices for nearest-other (the self row displaces at most
-    * one of the two returned hits), and an EXACT tie at the top score
-    * resolves to the lowest uuid — so a clique of m identical rows
-    * keeps exactly its min-uuid member: the min's nearest other is a
-    * higher-uuid clique-mate (survives), every other member's is the
-    * min (dropped). Near-dup CHAINS (a≈b≈c, a≉c) are judged per row
-    * against the nearest neighbor only — the same non-transitive
-    * contract as SemDeDup's per-cell argmax, q134's oracle pins the
-    * exact form and KnnJoinSoak's dedup leg pins blocked-path parity.
-    *
-    * Returns one row per live corpus row that HAS another row to
-    * compare against (a 1-row corpus yields nothing): `(row_uuid,
-    * nn_uuid, score, is_dup)`. Survivors = `filter(!is_dup)` joined
-    * back on `_uuid`; approximate index families can miss true
-    * neighbors like any ANN search — probe-all / `nprobe = nlist` is
-    * the exactness fallback.
-    *
-    * `threshold` is ALWAYS in raw metric units (cosine similarity, raw
-    * squared l2 distance, raw inner product) regardless of `exact`: the
-    * exact l2 AND ip paths emit 1e14-scaled integer scores (q133's
-    * oracle grid; `dotScaled` = raw × 1e14), and the comparison
-    * rescales the threshold to match — the `score` COLUMN keeps the
-    * join's native units (the grid, for exact l2/ip), only the
-    * threshold comparison adapts. FLAT is served (the only exact
-    * option the reference's FLAT
-    * maps to) but WARNS here: its join broadcasts the query table, and
-    * the corpus IS the query table — driver-bounded corpora only;
-    * corpus-scale dedup wants a clustered index family.
-    */
-  def semanticDedupIndexed(column: String, threshold: Double,
-                           metric: String = "cosine", nprobe: Int = 8,
-                           exact: Boolean = false,
-                           probeShards: Int = 0): DataFrame = {
-    val tpe = indexMetaField(indexDir("vector", column), "type")
-      .getOrElse("IVF")
-    if (tpe == "FLAT")
-      System.err.println("graft: WARN semanticDedupIndexed over a FLAT " +
-        "index broadcasts the corpus as the query table — fine for " +
-        "driver-bounded corpora, use a clustered index type at scale")
-    val qdf = snapshotWithUuid()
-      .select(col(UuidCol).cast("long").as("qid"), col(column).as("qv"))
-    // threshold sides with the metric's rank order: l2 is a distance
-    // (dup at score ≤ threshold), cosine/ip are similarities (≥).
-    // BOTH grid metrics' exact scores arrive 1e14-scaled from the
-    // IVF-family joins — l2 as qint squared distance, ip as the qint
-    // dot (`dotScaled` = raw × 1e14) — while exact cosine divides back
-    // to raw by construction and the graph walks stay raw doubles and
-    // ignore `exact`; the threshold is rescaled onto whichever grid the
-    // score column is on — the caller's units are ALWAYS raw metric
-    // units
-    val gridScaled = exact && (metric match {
-      case "l2" => tpe != "HNSW" && tpe != "DISKANN"
-      case "ip" => tpe == "IVF" || tpe == "FLAT"
-      case _    => false
-    })
-    def clears(score: Column) = {
-      val t = if (gridScaled) threshold * 1e14 else threshold
-      if (metric == "l2") score <= lit(t) else score >= lit(t)
-    }
-    // nearest-other = min rank after the self filter — via min_by, a
-    // partial-combinable aggregate (rank is unique per query, so the
-    // pick is deterministic), not yet another corpus-wide rank window
-    vectorKnnJoin(column, qdf, "qid", "qv", k = 2, metric,
-        nprobe = nprobe, exact = exact, probeShards = probeShards)
-      .filter(col("row_uuid") =!= col("query_id"))
-      .groupBy(col("query_id"))
-      .agg(min_by(struct(col("row_uuid"), col("score")), col("rank"))
-        .as("_nn"))
-      .select(col("query_id").as("row_uuid"),
-        col("_nn.row_uuid").as("nn_uuid"), col("_nn.score").as("score"),
-        (clears(col("_nn.score")) &&
-          col("_nn.row_uuid") < col("query_id")).as("is_dup"))
   }
 }
 

@@ -341,20 +341,22 @@ class GraftSink(spark: SparkSession, root: String, branch: String,
     }
   }
 
-  /** The sink's table, created by the first batch that finds none. Two
-    * sinks starting on one absent table race to create it, and the loser
-    * can land in the winner's window: the winner's first commit file is
-    * published before its branch pointer (`load` then finds no branch),
-    * or appears between the loser's check and its `create` (which
-    * refuses an existing table). The window closes when the winner's
-    * pointer lands, so both refusals are retried until `deadline`; past
-    * it the refusal propagates. Both sides creating is the rebased
-    * CREATE race of `GraftDataset.commit`. */
+  /** The sink's table, created by the first batch that finds none. The
+    * branch map answers whether it exists: one file read per batch,
+    * where listing the commits would list all of history. Two sinks
+    * starting on one absent table race to create it, and the loser can
+    * land in the winner's window: `create` publishes an empty branch map
+    * before its first commit file, and that file before its branch
+    * pointer, so the loser finds no branch and its `create` refuses the
+    * existing table. The window closes when the winner's pointer lands,
+    * so the refusal is retried until `deadline`; past it the refusal
+    * propagates. Both sides creating is the rebased CREATE race of
+    * `GraftDataset.commit`. */
   @scala.annotation.tailrec
   private def openTable(schema: StructType, deadline: Long): GraftDataset = {
     val opened =
       try Some(
-        if (CommitLog.listCommits(spark, root).nonEmpty)
+        if (CommitLog.readBranches(spark, root).nonEmpty)
           GraftDataset.load(spark, root, branch)
         else GraftDataset.create(spark, root, schema, branch))
       catch {

@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * mapPartitions-joined against the index, not routed one closure at a
   * time.
   */
-object GraphRouting {
+object GraphRouting extends org.apache.spark.internal.Logging {
 
   /** Target rows per graph shard. Measured, not guessed: RecallSoak's
     * 1M-row run at a fixed 256 shards grew shards to ~4,000 near-tie
@@ -254,7 +254,7 @@ object GraphRouting {
     }
     if (stale.isEmpty) r
     else {
-      System.err.println(s"graft: WARN routing for $label selected no " +
+      logWarning(s"graft: WARN routing for $label selected no " +
         s"existing part directory for ${stale.size} of " +
         s"${r.queryParts.size} queries (stale routing artifact?); " +
         "probing all shards for those queries")

@@ -46,7 +46,7 @@ import graft.functions.{VectorFunctions => V}
   * the [[Hnsw.batchTopK]] contract, and provably identical to it at
   * probe-all (KnnJoinSpec pins the parity on both families).
   */
-object KnnJoin {
+object KnnJoin extends org.apache.spark.internal.Logging {
 
   /** Prune the INDEX side to the `keyCol` values SOME query routed to,
     * before the walk/join: one bounded action (distinct keys,
@@ -310,7 +310,7 @@ object KnnJoin {
     val allSet = allParts.toSet
     val cents = rawCents.filter(c => allSet.contains(c._1))
     if (cents.length < rawCents.length)
-      System.err.println("graft: WARN knn-join routing centroids name " +
+      logWarning("graft: WARN knn-join routing centroids name " +
         s"${rawCents.length - cents.length} shard(s) absent from the " +
         "index (stale routing artifact?); " +
         (if (cents.isEmpty) "probing all shards"

@@ -663,4 +663,143 @@ class IndexSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       ds.vectorSearch("emb", Seq(1.0f, 0.0f, 0.0f), k = 1))
   }
+
+  test("vectorIndexInfo refuses a column with no vector index") {
+    val ds = table()
+    val e = intercept[IllegalArgumentException](ds.vectorIndexInfo("emb"))
+    assert(e.getMessage.contains(
+      "no vector index for 'emb'; createVectorIndex first"), e.getMessage)
+    ds.createVectorIndex("emb", nlist = 2)
+    assert(ds.vectorIndexInfo("emb")("type") == "IVF")
+  }
+
+  /** Overwrite the meta file in `rel` (relative to the table root) with
+    * `json`, through the table's filesystem so its checksum follows. */
+  private def plantMeta(ds: GraftDataset, rel: String, json: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"${ds.root}/$rel/meta.json")
+    val out = CommitLog.fs(spark, ds.root).create(p, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
+  }
+
+  test("metas in the shapes earlier builds wrote still search, update, optimize and load") {
+    // the literal files below are byte-for-byte what the dataset wrote
+    // before the index meta codec; commit 00000001 is the "rows" commit
+    def rowsOf(ds: GraftDataset): Set[Long] =
+      ds.toDF.select("id").as[Long].collect().toSet
+    def more(ds: GraftDataset, id: Long): Unit = {
+      ds.append(Seq((id, "vector appended later", Seq(0.8f, 0.2f, 0f)))
+        .toDF("id", "text", "emb"))
+      ds.commit(s"more$id")
+    }
+    val full = Seq(
+      "IVF" -> ("""{"buildBeam":"100","nlist":"2","rebuilds":"0",""" +
+        """"pqK":"16","type":"IVF","pqM":"0","graphDegree":"32",""" +
+        """"metric":"l2","commit":"00000001"}"""),
+      "HNSW" -> ("""{"buildBeam":"32","nlist":"64","rebuilds":"3",""" +
+        """"pqK":"16","type":"HNSW","pqM":"0","graphDegree":"8",""" +
+        """"metric":"cosine","commit":"00000001"}"""))
+    for ((tpe, json) <- full) {
+      val ds = table()
+      assert(ds.head.contains("00000001"))
+      ds.createVectorIndex("emb", nlist = 2, indexType = tpe, graphDegree = 8,
+        buildBeam = 32, metric = if (tpe == "HNSW") "cosine" else "l2")
+      plantMeta(ds, "_graft/indexes/vector/emb", json)
+      val m = if (tpe == "HNSW") "cosine" else "l2"
+      assert(ds.vectorSearch("emb", Seq(1f, 0f, 0f), k = 1, metric = m,
+        nprobe = 2).count() == 1, tpe)
+      val info = ds.vectorIndexInfo("emb")
+      assert(info("metric") == m && info("commit") == "00000001", tpe)
+      more(ds, 7L)
+      ds.updateVectorIndex("emb", rebuildThreshold = 2.0) // append delta
+      val rebuilds = if (tpe == "HNSW") 3 else 0
+      assert(ds.vectorIndexInfo("emb")("rebuilds") == rebuilds.toString, tpe)
+      assert(ds.vectorKnnJoin("emb", Seq((1L, Seq(0.8f, 0.2f, 0f)))
+          .toDF("qid", "qv"), "qid", "qv", k = 4, metric = m, nprobe = 2)
+        .count() == 4, tpe)
+      ds.optimizeVectorIndex("emb")
+      assert(ds.vectorIndexInfo("emb")("rebuilds") == (rebuilds + 1).toString)
+    }
+    // before the metric, graphDegree and rebuilds keys: l2, 16 and 0
+    val old = table()
+    old.createVectorIndex("emb", indexType = "HNSW", graphDegree = 16)
+    plantMeta(old, "_graft/indexes/vector/emb",
+      """{"commit":"00000001","type":"HNSW","nlist":"64","pqM":"0",""" +
+        """"pqK":"16","buildBeam":"100"}""")
+    assert(old.vectorIndexInfo("emb") == Map("type" -> "HNSW",
+      "nlist" -> "64", "pqM" -> "0", "pqK" -> "16", "graphDegree" -> "16",
+      "buildBeam" -> "100", "metric" -> "l2", "rebuilds" -> "0",
+      "commit" -> "00000001"))
+    assert(old.vectorSearch("emb", Seq(1f, 0f, 0f), k = 2, metric = "l2")
+      .count() == 2)
+    intercept[IllegalArgumentException](
+      old.vectorSearch("emb", Seq(1f, 0f, 0f), k = 2, metric = "cosine"))
+    more(old, 8L)
+    old.updateVectorIndex("emb") // 1 row onto 3: an append delta
+    assert(old.vectorIndexInfo("emb")("rebuilds") == "0")
+    assert(old.semanticDedupIndexed("emb", 1e-9, metric = "l2").count() == 4)
+    old.optimizeVectorIndex("emb")
+    assert(old.vectorIndexInfo("emb")("rebuilds") == "1")
+    // an inverted index keeps its recorded shard count through maintenance
+    val text = table()
+    text.createIndexVectorized("text", numShards = 4)
+    plantMeta(text, "_graft/indexes/inverted/text",
+      """{"commit":"00000001","numShards":"4"}""")
+    assert(text.textSearch("text", "vector").select("id").as[Long]
+      .collect().toSet == Set(1L, 3L))
+    more(text, 9L)
+    text.updateIndexVectorized("text", numShards = 16)
+    assert(text.filterIndexed("text", "vector").select("id").as[Long]
+      .collect().toSet == Set(1L, 3L, 9L))
+    text.optimizeIndex("text")
+    text.reshardIndex("text", 3)
+    assert(text.textSearch("text", "vector").select("id").as[Long]
+      .collect().toSet == Set(1L, 3L, 9L))
+    // a view loads the rows of the commit it names
+    val view = table()
+    view.saveView("v", $"id" >= 2L)
+    plantMeta(view, "_graft/views/v",
+      """{"query":"(id >= 2)","commit":"00000001"}""")
+    more(view, 10L)
+    assert(rowsOf(view) == Set(1L, 2L, 3L, 10L))
+    assert(view.loadView("v").select("id").as[Long].collect().toSet ==
+      Set(2L, 3L))
+  }
+
+  test("each public index entry point reads its meta at most once") {
+    val ds = table()
+    ds.createVectorIndex("emb", nlist = 2)
+    ds.createIndexVectorized("text")
+    ds.saveView("v", $"id" >= 2L)
+    val q = Seq((1L, Seq(1f, 0f, 0f))).toDF("qid", "qv")
+    def reads(call: => Any): Long = {
+      val before = IndexMeta.reads.get()
+      call
+      IndexMeta.reads.get() - before
+    }
+    val calls = Seq[(String, () => Any)](
+      "vectorSearch" -> (() => ds.vectorSearch("emb", Seq(1f, 0f, 0f), k = 1)),
+      "vectorKnnJoin" -> (() =>
+        ds.vectorKnnJoin("emb", q, "qid", "qv", k = 1, metric = "l2")),
+      "semanticDedupIndexed" -> (() =>
+        ds.semanticDedupIndexed("emb", 0.9, metric = "cosine")),
+      "vectorIndexInfo" -> (() => ds.vectorIndexInfo("emb")),
+      "loadVectorIndex" -> (() => ds.loadVectorIndex("emb")),
+      "textSearch" -> (() => ds.textSearch("text", "vector")),
+      "filterIndexed" -> (() => ds.filterIndexed("text", "vector")),
+      "termCounts" -> (() => ds.termCounts("text")),
+      "loadView" -> (() => ds.loadView("v")),
+      "indexFresh" -> (() => ds.indexFresh("vector", "emb")),
+      "optimizeIndex" -> (() => ds.optimizeIndex("text")),
+      "reshardIndex" -> (() => ds.reshardIndex("text", 2)),
+      "optimizeVectorIndex" -> (() => ds.optimizeVectorIndex("emb")),
+      "append" -> (() => {
+        ds.append(Seq((4L, "vector four", Seq(0f, 0f, 1f)))
+          .toDF("id", "text", "emb"))
+        ds.commit("four")
+      }),
+      "updateVectorIndex" -> (() => ds.updateVectorIndex("emb")),
+      "updateIndexVectorized" -> (() => ds.updateIndexVectorized("text")))
+    val counts = calls.map { case (n, c) => n -> reads(c()) }
+    assert(counts.filter(_._1 != "append").forall(_._2 == 1L), counts)
+  }
 }

@@ -8,8 +8,10 @@
 #   out-dir defaults to a fresh temp dir, removed on success
 #
 # Exit 0 = no SparkSession.builder under src/main/scala outside Harness.scala,
-# no graph-index Spark path in Hnsw.scala or Vamana.scala, both trees compile
-# AND graft.Verify completed on the fixture.
+# no graph-index Spark path in Hnsw.scala or Vamana.scala, no meta.json
+# outside IndexFacet.scala, no HNSW/DISKANN/IVFPQ literal in
+# GraftDataset.scala, both trees compile AND graft.Verify completed on the
+# fixture.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -28,6 +30,23 @@ graph="src/main/scala/graft/operators/Hnsw.scala src/main/scala/graft/operators/
 drift=$(grep -lE 'mapPartitions|\.repartition\(|partScans' $graph || true)
 if [ -n "$drift" ]; then
   echo "pregate: FAIL — graph-index Spark path outside GraphIndex.scala:" $drift >&2
+  exit 1
+fi
+
+# One meta codec: IndexMeta (in IndexFacet.scala) reads and writes every
+# index and view meta file. A second reader or writer re-reads the file
+# per field and writes it non-atomically, as the dataset once did.
+meta=$(grep -rl 'meta\.json' src/main/scala | grep -v '/IndexFacet\.scala$' || true)
+if [ -n "$meta" ]; then
+  echo "pregate: FAIL — meta.json named outside IndexFacet.scala:" $meta >&2
+  exit 1
+fi
+
+# One kind table: IndexFacet maps each vector-index type name to its code.
+# A type literal in GraftDataset.scala is a second dispatch on the type.
+kinds=$(grep -lE '"(HNSW|DISKANN|IVFPQ)"' src/main/scala/graft/format/GraftDataset.scala || true)
+if [ -n "$kinds" ]; then
+  echo "pregate: FAIL — index-type literal outside the kind table:" $kinds >&2
   exit 1
 fi
 
