@@ -3,7 +3,7 @@ package graft.format
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** A versioned, mutable table over immutable Parquet — the Spark-native
   * equivalent of the reference's Dataset abstraction
@@ -45,7 +45,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
   * Anything else stays a loud ConcurrentModificationException.
   *
   * Saved views and the inverted and vector indexes are the
-  * [[IndexFacet]] this class mixes in.
+  * [[IndexFacet]] this class mixes in; the batch change feed and its
+  * replica side are the [[ChangeFeedFacet]].
   */
 class GraftDataset private[format] (
     val spark: SparkSession,
@@ -54,7 +55,8 @@ class GraftDataset private[format] (
     private[format] var headId: Option[String],
     // the manifest as loaded from HEAD plus every staged edit; each edit
     // replaces the value, so a state handed to a read stays as it was
-    private[format] var st: TableState) extends IndexFacet {
+    private[format] var st: TableState)
+    extends IndexFacet with ChangeFeedFacet {
 
   import GraftDataset._
 
@@ -87,11 +89,8 @@ class GraftDataset private[format] (
 
   // ---- snapshot read ------------------------------------------------------
 
-  private def emptyDf(s: StructType): DataFrame =
+  private[format] def emptyDf(s: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-
-  private def withUuidSchema(s: StructType): StructType =
-    StructType(s.fields :+ StructField(UuidCol, LongType, nullable = false))
 
   /** Align a stored file's frame to the target schema: apply the given
     * rename-chain suffix, null-backfill missing columns, drop extras,
@@ -324,8 +323,8 @@ class GraftDataset private[format] (
   /** Write `df` as one new entry of `kind` and hand it to `register` if
     * it holds rows (an empty one is deleted); returns its row count from
     * the footers. Any registered entry marks the state dirty. */
-  private def landEntry(df: DataFrame, kind: String)
-                       (register: String => Unit): Long = {
+  private[format] def landEntry(df: DataFrame, kind: String)
+                               (register: String => Unit): Long = {
     val rel = writeData(df, kind)
     val n = writtenRowCount(rel)
     if (n > 0) { register(rel); dirty = true; pendingRewrite = false }
@@ -333,10 +332,11 @@ class GraftDataset private[format] (
     n
   }
 
-  private def addFile(rel: String): Unit = st = st.copy(files = st.files :+ rel)
-  private def addUpdate(rel: String): Unit =
+  private[format] def addFile(rel: String): Unit =
+    st = st.copy(files = st.files :+ rel)
+  private[format] def addUpdate(rel: String): Unit =
     st = st.copy(updates = st.updates :+ rel)
-  private def addTombstone(rel: String): Unit =
+  private[format] def addTombstone(rel: String): Unit =
     st = st.copy(tombstones = st.tombstones :+ rel)
 
   /** Footer row count over several manifest entries, parallelized —
@@ -1082,8 +1082,8 @@ class GraftDataset private[format] (
 
   /** [[commitsBetween]], `read` being `descendantId`'s commit when the
     * caller already read it. */
-  private def pathBetween(ancestorId: String, descendantId: String,
-                          read: Option[CommitMeta]): Seq[CommitMeta] = {
+  private[format] def pathBetween(ancestorId: String, descendantId: String,
+                                  read: Option[CommitMeta]): Seq[CommitMeta] = {
     val path = CommitLog.firstParentChain(spark, root, Some(descendantId),
       Some(ancestorId), read).toVector
     require(path.lastOption.fold(descendantId == ancestorId)(
@@ -1289,7 +1289,7 @@ class GraftDataset private[format] (
   /** The commit id `ref` names — a branch head, else a commit id — and,
     * for a commit id, the commit its existence check read, so the
     * caller builds its state without reading it again. */
-  private def resolveRef(ref: String): (String, Option[CommitMeta]) =
+  private[format] def resolveRef(ref: String): (String, Option[CommitMeta]) =
     branches.get(ref) match {
       case Some(id) => (id, None)
       case None =>
@@ -1299,7 +1299,7 @@ class GraftDataset private[format] (
     }
 
   /** The commit `ref` names, read once. */
-  private def readRef(ref: String): CommitMeta = {
+  private[format] def readRef(ref: String): CommitMeta = {
     val (id, read) = resolveRef(ref)
     read.getOrElse(CommitLog.readCommit(spark, root, id))
   }
@@ -1360,249 +1360,6 @@ class GraftDataset private[format] (
   def diff(targetRef: String): DataFrame = {
     val in = compareInputs(targetRef)
     Versioning.diffReport(in.lca, in.ours, in.theirs, in.schema)
-  }
-
-  /** Batch change feed (Delta's `table_changes`): every CDC event of
-    * the first-parent commits in `(fromRef, toRef]`, in the same shape
-    * the streaming `changeFeed=true` source emits — `insert` /
-    * `update_postimage` (full rows) / `delete` (identity-only) events
-    * with `_uuid` and `_commit_id`. Unlike [[diff]] (endpoint
-    * comparison via snapshot joins), this reads ONLY the delta files of
-    * the walked commits — the 100 TB path for "what changed since
-    * commit X": cost scales with the churn, not the table. Rewrite-only
-    * compaction commits contribute nothing; a schema change inside the
-    * range fails loudly (the event schema is pinned); commits whose
-    * files vacuum reclaimed fail with the clean expiry error.
-    */
-  def changes(fromRef: String = "", toRef: String = ""): DataFrame = {
-    val (toId, toRead) =
-      if (toRef.isEmpty) (headId.getOrElse(
-        throw new IllegalStateException("no HEAD")), None)
-      else resolveRef(toRef)
-    // empty fromRef = from the very beginning: the full feed bootstraps
-    // a CDC replica (first commit's events included)
-    val from = if (fromRef.isEmpty) None else Some(readRef(fromRef))
-    val metas = from.fold[Seq[CommitMeta]](
-      CommitLog.firstParentChain(spark, root, Some(toId), read = toRead)
-        .toVector.reverse)(
-      f => pathBetween(f.id, toId, toRead))
-    var prev = from.getOrElse(
-      CommitMeta(id = "", parent = None, mergeParent = None, message = "",
-        timestampMs = 0L,
-        schemaJson = metas.headOption.fold(st.schema.json)(_.schemaJson),
-        files = Nil, updates = Nil, tombstones = Nil, renames = Nil))
-    // the feed's pinned schema: the range-START schema extended by every
-    // column ADDED within the range (at its add-time name — a later
-    // rename is announced as schema_change, not adopted, like any other
-    // pinned name). Pre-add events null-backfill the added columns;
-    // post-add events carry their values — without the extension the
-    // pin would silently DROP them.
-    val rangeAdds = {
-      var p = prev
-      // pinned names must stay UNIQUE: a tolerated sequence like
-      // add x → pure-rename x→y → add x again would otherwise pin two
-      // fields named x (adds keep their add-time name) and every
-      // downstream select/toDF on the feed fails on the ambiguity —
-      // fail here with the range-split contract instead
-      val pinned = scala.collection.mutable.Set.empty[String]
-      pinned ++= TableState.schemaOf(prev).fieldNames
-      val b = Vector.newBuilder[org.apache.spark.sql.types.StructField]
-      for (m <- metas) { // prev advances over rewrite commits too,
-        if (!m.rewrite.contains(true) && // mirroring the event walk below
-            m.schemaJson != p.schemaJson)
-          GraftStream.addDelta(p, m).foreach { fs =>
-            for (f <- fs) {
-              require(pinned.add(f.name),
-                s"schema changed at commit ${m.id}: column '${f.name}' " +
-                  "collides with a name already pinned by this range " +
-                  "(re-added after a rename?); change feeds are " +
-                  "schema-pinned — anything else splits the range")
-              b += f
-            }
-          }
-        p = m
-      }
-      b.result()
-    }
-    val dataSchema = GraftStream.nullableData(withUuidSchema(StructType(
-      TableState.schemaOf(prev).fields ++ rangeAdds)))
-    val cdfSchema = StructType(dataSchema.fields :+
-      StructField(GraftStream.ChangeTypeCol, StringType, nullable = false) :+
-      StructField(GraftStream.CommitIdCol, StringType, nullable = false))
-    val parts = Vector.newBuilder[DataFrame]
-    for (m <- metas) {
-      if (!m.rewrite.contains(true)) {
-        // pure renames are tolerated exactly like the streaming feed:
-        // events keep the range-start (pinned) names, and the rename is
-        // announced as a one-row `schema_change` event (`_uuid` = -1)
-        // for replicas to apply ([[applyChanges]] / renameDelta on the
-        // event's commit meta)
-        if (m.schemaJson != prev.schemaJson) {
-          require(GraftStream.renameDelta(prev, m).isDefined ||
-              GraftStream.addDelta(prev, m).isDefined,
-            s"schema changed at commit ${m.id}; change feeds are " +
-              "schema-pinned — pure column renames and pure column adds " +
-              "are expressed as schema_change events, anything else " +
-              "splits the range")
-          parts += GraftStream.schemaChangeEvent(spark, cdfSchema, m.id)
-        }
-        GraftStream.requireDeltaExpressible(m, prev)
-        assertNotExpired(spark, root, m)
-        parts ++= GraftStream.changeEvents(spark, root, dataSchema, m, prev)
-      }
-      prev = m
-    }
-    parts.result().reduceOption(_ unionByName _)
-      .getOrElse(emptyDf(cdfSchema))
-      .select(cdfSchema.fieldNames.toIndexedSeq.map(col): _*)
-  }
-
-  /** Apply a change feed to THIS table — the replica side of CDC
-    * replication, and the inverse of [[changes]] / the streaming
-    * `changeFeed=true` source. Each event kind maps DIRECTLY onto the
-    * format's own file kinds, so applying N events costs one write per
-    * kind, not one operation per row:
-    *   - `insert` rows → one base entry (uuid-PRESERVING: the feed's
-    *     `_uuid` is the replica's row identity),
-    *   - `update_postimage` rows → one update file (merge-on-read
-    *     last-wins does the rest; multi-commit feeds are deduped to the
-    *     LATEST postimage per uuid by `_commit_id` first),
-    *   - `delete` rows → one tombstone file.
-    * Contract: a replica fed this way is identified by the SOURCE's
-    * uuids — write it exclusively through applyChanges (local appends
-    * would mint uuids from this table's own reservation space and could
-    * collide with the source's), and apply feeds FORWARD only: ranges
-    * must start at or after the replica's last applied commit.
-    * Re-applying an OLDER overlapping range would land its stale
-    * postimages in a newer update file and silently roll live rows
-    * back (update resolution is file-ordered, not commit-ordered).
-    * The bootstrap re-application path is safe by construction — a
-    * fresh feed's snapshot is always at or ahead of the replica.
-    * The caller commits. Returns (inserts, updates, deletes) applied.
-    */
-  def applyChanges(events: DataFrame,
-                   dedupInserts: Boolean = true,
-                   reconcileDeletes: Boolean = false): (Long, Long, Long) = {
-    val need = Seq(GraftStream.ChangeTypeCol, GraftStream.CommitIdCol, UuidCol)
-    require(need.forall(events.columns.contains),
-      s"not a change feed: expected columns ${need.mkString(", ")}")
-    require(!reconcileDeletes || dedupInserts,
-      "reconcileDeletes needs the replica uuid scan dedupInserts provides")
-    val tpe = col(GraftStream.ChangeTypeCol)
-    val dataCols = withUuidSchema(st.schema).fieldNames.toIndexedSeq.map(col)
-    // loud contract at schema-evolution boundaries: this is the LOW-LEVEL
-    // apply — events map onto file kinds under the REPLICA's current
-    // schema. A feed carrying data columns this replica lacks (a source
-    // column ADD) or schema_change events (add or rename announcements)
-    // spans a source schema change; projecting to dataCols would silently
-    // DISCARD the new column's values and the announcement, permanently
-    // diverging the replica with no error. The caller adopts first
-    // (GraftStreaming.replicate adopts renames and trailing adds
-    // automatically) or aligns/filters the feed explicitly.
-    val unknownCols = events.columns.toSet --
-      Set(GraftStream.ChangeTypeCol, GraftStream.CommitIdCol) --
-      withUuidSchema(st.schema).fieldNames
-    require(unknownCols.isEmpty,
-      s"change feed carries columns this replica lacks: " +
-        s"${unknownCols.mkString(", ")} — adopt the source's schema " +
-        "change first (GraftStreaming.replicate does this automatically) " +
-        "or align the feed to the replica's schema")
-    // three writes consume the feed — persist so the (possibly
-    // expensive: bootstrap snapshot, multi-commit delta) plan runs once
-    val cached = events.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var replicaIdsCache: Option[DataFrame] = None
-    try {
-      // `isEmpty`, not `limit(1).count()`: a limit under an aggregate is
-      // a generated LocalLimit whose counter Spark names from a JVM-wide
-      // sequence, so every call compiled a new class; `isEmpty` plans a
-      // top-level CollectLimit, which generates nothing
-      require(cached.filter(tpe === "schema_change").isEmpty,
-        "change feed contains schema_change events (a source rename or " +
-          "column add in range) — apply them to the replica first " +
-          "(GraftStreaming.replicate does this automatically) or filter " +
-          "them out explicitly after aligning the feed")
-      // row-level idempotency with UPSERT semantics: an insert whose
-      // uuid this replica already carries (a replayed bootstrap after a
-      // lost checkpoint) must not be dropped —
-      // a bootstrap snapshot folds later updates into its insert
-      // events, so discarding it would strand a behind replica at its
-      // stale value forever. Fresh inserts land as a base entry; stale
-      // ones re-route as update postimages. A live tombstoned uuid
-      // stays dead regardless (the tombstone kills the uuid whichever
-      // file holds it). Deletes are idempotent by construction.
-      // `dedupInserts = false` skips the replica-snapshot uuid scan for
-      // batches that provably contain no re-deliveries (a live stream's
-      // steady-state delta batches, guarded by the epoch marker), so
-      // steady-state apply cost scales with the churn, not the table.
-      // When it IS needed, the uuid set is persisted: three joins
-      // consume it (fresh/stale split + delete reconciliation), and
-      // re-resolving the merge-on-read snapshot three times would
-      // triple exactly the cost the flag exists to avoid.
-      val ins = cached.filter(tpe === "insert")
-      val replicaIds =
-        (if (dedupInserts) snapshotWithUuid().select(UuidCol)
-         else ins.select(UuidCol).limit(0))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      replicaIdsCache = Some(replicaIds)
-      // a reconcile feed must be a BOOTSTRAP (all-insert complete live
-      // snapshot): reconciling against a partial/delta feed would
-      // tombstone every replica row outside the range — permanently,
-      // since later re-inserts of a tombstoned uuid stay dead. Fail
-      // loudly instead of corrupting.
-      if (reconcileDeletes)
-        require(cached.filter(tpe =!= "insert").isEmpty,
-          "reconcileDeletes expects a bootstrap feed (insert events " +
-            "only = the complete live snapshot); a delta feed's absent " +
-            "uuids are untouched rows, not deletions")
-      val freshIns = ins.select(dataCols: _*)
-        .join(replicaIds, Seq(UuidCol), "left_anti")
-      val nIns = landEntry(freshIns.select(dataCols: _*), "cdc")(addFile)
-      val staleIns = ins
-        .join(replicaIds, Seq(UuidCol), "left_semi")
-      // postimages win over a same-commit insert of the same uuid
-      // (append-then-update in one commit): order by (commit id,
-      // event-kind priority) — commit ids are zero-padded, so string
-      // concatenation preserves the order
-      val seq = concat(col(GraftStream.CommitIdCol),
-        when(tpe === "update_postimage", lit("1")).otherwise(lit("0")))
-      val latestUpd = GraftDataset.lastWinsPerUuid(
-        cached.filter(tpe === "update_postimage").unionByName(staleIns)
-          .select((dataCols :+ seq.as("_seq")): _*), "_seq")
-      val nUpd = landEntry(latestUpd, "update")(addUpdate)
-      // delete idempotency must hold at the FILE level, not just the
-      // snapshot level: countRows subtracts tombstone-file row counts
-      // assuming every tombstoned uuid was live exactly once, so a
-      // re-delivered delete (the same lost-checkpoint replay dedupInserts
-      // exists for) landing a second tombstone row would double-subtract
-      // and drift the metadata count negative while the snapshot stays
-      // correct. distinct() folds same-feed repeats; the anti-join against
-      // the replica's existing tombstones (bounded by churn, skipped on
-      // the epoch-guarded steady-state path like the insert dedup) folds
-      // cross-apply replays.
-      val delEvents =
-        cached.filter(tpe === "delete").select(col(UuidCol)).distinct()
-      val freshDel =
-        if (dedupInserts && st.tombstones.nonEmpty)
-          delEvents.join(readUuids(st.tombstones), Seq(UuidCol), "left_anti")
-        else delEvents
-      var nDel = landEntry(freshDel, "tombstone")(addTombstone)
-      // a BOOTSTRAP feed (the complete live snapshot as insert events)
-      // carries no delete events for rows that died before it was cut —
-      // a behind replica re-synced from a fresh checkpoint would keep
-      // those rows as phantoms forever. reconcileDeletes treats the
-      // feed's insert set as the COMPLETE live population: replica rows
-      // outside it are tombstoned. Only valid for full feeds — a delta
-      // feed's absent uuids are merely untouched rows (caller decides).
-      if (reconcileDeletes)
-        nDel += landEntry(replicaIds.join(ins.select(col(UuidCol)),
-          Seq(UuidCol), "left_anti"), "tombstone")(addTombstone)
-      (nIns, nUpd, nDel)
-    } finally {
-      cached.unpersist(false)
-      replicaIdsCache.foreach(_.unpersist(false))
-      ()
-    }
   }
 
   /** Row-level value diff between HEAD and another ref
@@ -1917,6 +1674,10 @@ object GraftDataset {
     */
   val UuidSchema: StructType =
     StructType(Seq(StructField(UuidCol, LongType, nullable = false)))
+
+  /** `s` with the row-identity column last. */
+  private[format] def withUuidSchema(s: StructType): StructType =
+    StructType(s.fields ++ UuidSchema.fields)
 
   /** The three snapshots (with `_uuid`) a diff, conflict report or
     * merge joins, already renamed onto `schema`'s names. */

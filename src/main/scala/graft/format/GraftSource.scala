@@ -143,7 +143,9 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
     val path = root(parameters)
     val branch = parameters.getOrElse("branch", "main")
     val message = parameters.getOrElse("message", s"spark.write ($mode)")
-    val exists = CommitLog.listCommits(spark, path).nonEmpty
+    // the branch map answers whether the table exists with one file
+    // read; listing the commits would list all of history per write
+    val exists = CommitLog.readBranches(spark, path).nonEmpty
     def writeNew(): Unit = {
       val ds = GraftDataset.create(spark, path, data.schema, branch)
       ds.append(data)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftnative.InternalDf
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The streaming halves of the `graft` data source —
   * `df.writeStream.format("graft")` (sink) and
@@ -85,212 +85,6 @@ object GraftStream {
   }
 
   private[format] def commitId(v: Long): String = f"$v%08d"
-
-  /** Data columns forced NULLABLE for change feeds: delete events carry
-    * null in every data column (identity-only), so a non-nullable
-    * declared schema would let the optimizer constant-fold an
-    * `IsNotNull` filter to true and leak delete rows through it (or
-    * NPE a typed consumer). `_uuid` stays non-null — every event
-    * carries identity.
-    */
-  private[format] def nullableData(dataSchema: StructType): StructType =
-    StructType(dataSchema.fields.map(f =>
-      if (f.name == GraftDataset.UuidCol) f else f.copy(nullable = true)))
-
-  /** A commit whose manifest DROPPED prior entries (compaction or
-    * bin-packing over staged changes, a merge that resurrects popped
-    * rows by rewriting their tombstone entries) FOLDS history into fresh
-    * files: its new files restate old rows, not changes, so a change
-    * feed cannot express it as per-row events — emitting its files as
-    * inserts would silently duplicate the whole table downstream. Fail
-    * loudly; maintenance run from a CLEAN state publishes a
-    * rewrite-flagged commit, which feeds skip entirely. A merge commit
-    * that only extends ours' manifest (the common case, see
-    * [[GraftDataset.merge]]) passes: its entries are its events.
-    */
-  private[format] def requireDeltaExpressible(m: CommitMeta,
-                                              prev: CommitMeta): Unit = {
-    val (files, ups, tombs) =
-      (m.files.toSet, m.updates.toSet, m.tombstones.toSet)
-    require(prev.files.forall(files) &&
-        prev.updates.forall(ups) &&
-        prev.tombstones.forall(tombs),
-      s"commit ${m.id} folds prior state into rewritten files (compaction " +
-        "over staged changes, or a merge that resurrects popped rows); a " +
-        "change feed cannot express " +
-        "it as row events — run maintenance from a clean state (rewrite-" +
-        "flagged commits are skipped) or split the feed at this commit")
-  }
-
-  /** The rename pairs a commit adds over its parent, IFF the schema
-    * change is a PURE RENAME: the rename chain grew by exactly the
-    * returned pairs, field count / order / types / nullability are
-    * unchanged, and applying the pairs to the parent's names yields the
-    * commit's names. Anything else (added / dropped column — drops also
-    * change the field count via their marker rename — or a type change)
-    * returns None and the caller keeps its loud-failure contract.
-    * Pure renames are metadata-only, so a change feed CAN keep speaking
-    * its pinned schema across them (positional identity holds).
-    */
-  private[graft] def renameDelta(prev: CommitMeta,
-                                 m: CommitMeta): Option[Seq[(String, String)]] = {
-    if (m.renames.size <= prev.renames.size) return None
-    if (m.renames.take(prev.renames.size) != prev.renames) return None
-    val added = TableState.renamesOf(m).drop(prev.renames.size)
-    val (prevS, mS) = (TableState.schemaOf(prev), TableState.schemaOf(m))
-    if (prevS.fields.length != mS.fields.length) return None
-    val renamed = added.foldLeft(prevS.fieldNames.toSeq) { case (ns, (f, t)) =>
-      ns.map(n => if (n == f) t else n)
-    }
-    val shapeOk = prevS.fields.zip(mS.fields).forall { case (a, b) =>
-      a.dataType == b.dataType && a.nullable == b.nullable }
-    if (shapeOk && renamed == mS.fieldNames.toSeq) Some(added) else None
-  }
-
-  /** The fields a commit ADDED over its parent, IFF the schema change is
-    * a PURE ADDITIVE evolution: the rename chain is unchanged (drops
-    * always touch it via their marker rename), the parent's fields are a
-    * positional prefix of the commit's (same names, types, nullability),
-    * and every appended field is nullable (existing rows must read as
-    * null — `createTensor`'s contract). Anything else (drop, retype, a
-    * nested add that mutates a struct field in place, an add combined
-    * with a rename in one commit) returns None and the caller keeps its
-    * loud-failure contract. Pure adds are metadata-only, so a change
-    * feed pinned AT OR AFTER the add can keep speaking its pinned
-    * schema: pre-add events null-backfill the added columns
-    * (positional identity of the prefix holds).
-    */
-  private[graft] def addDelta(prev: CommitMeta,
-                              m: CommitMeta): Option[Seq[StructField]] = {
-    if (m.renames != prev.renames) return None
-    val (prevS, mS) = (TableState.schemaOf(prev), TableState.schemaOf(m))
-    val k = prevS.fields.length
-    if (mS.fields.length <= k) return None
-    val prefixOk = prevS.fields.zip(mS.fields.take(k)).forall { case (a, b) =>
-      a.name == b.name && a.dataType == b.dataType && a.nullable == b.nullable
-    }
-    val added = mS.fields.drop(k)
-    if (prefixOk && added.forall(_.nullable)) Some(added.toSeq) else None
-  }
-
-  /** The one-row `schema_change` event a pure rename emits into a change
-    * feed: no row identity (`_uuid` = -1, a value real uuids — strictly
-    * positive by construction — never take), all data columns null. A
-    * replicator reads the rename pairs from the source commit's metadata
-    * ([[renameDelta]] on `_commit_id`'s meta vs its parent) and applies
-    * them to its replica; other consumers may treat it as a signal to
-    * restart with a fresh checkpoint if they want the new names.
-    */
-  private[format] def schemaChangeEvent(spark: SparkSession,
-                                        cdfSchema: StructType,
-                                        commitId: String): DataFrame = {
-    val row = org.apache.spark.sql.Row.fromSeq(cdfSchema.fields.toSeq.map {
-      f => f.name match {
-        case ChangeTypeCol => "schema_change"
-        case CommitIdCol => commitId
-        case GraftDataset.UuidCol => -1L
-        case _ => null
-      }
-    })
-    spark.createDataFrame(
-      java.util.Collections.singletonList(row), cdfSchema)
-  }
-
-  /** One commit's change events vs its parent state — the shared engine
-    * behind the streaming change feed (`changeFeed=true`) and the batch
-    * [[GraftDataset.changes]] (Delta `table_changes` analogue):
-    *   - new base files   → `insert` (full row),
-    *   - new update files → `update_postimage` (full row, last-wins per
-    *     uuid within the commit),
-    *   - new tombstones   → `delete` (identity only: `_uuid` + null data
-    *     columns).
-    * `dataSchema` is the pinned read schema (table columns + `_uuid`).
-    *
-    * Rename-aware reads: when the walked range crosses pure renames, a
-    * commit's files carry PHYSICAL column names from their own rename
-    * epoch — reading them with the pinned names would silently
-    * null-backfill the renamed column. Each file group is read with the
-    * physical names of its epoch (the commit's own names with the chain
-    * suffix after the epoch undone) and re-aliased POSITIONALLY to the
-    * pinned schema — sound because pure renames preserve field order
-    * ([[renameDelta]] is validated at every schema change in the walk).
-    */
-  private[format] def changeEvents(spark: SparkSession, root: String,
-                                   dataSchema: StructType,
-                                   m: CommitMeta,
-                                   prev: CommitMeta): Seq[DataFrame] = {
-    def paths(rels: Seq[String]) =
-      rels.map(f => new org.apache.hadoop.fs.Path(root, f).toString)
-    def tagged(df: DataFrame, tpe: String) = df
-      .withColumn(ChangeTypeCol, lit(tpe))
-      .withColumn(CommitIdCol, lit(m.id))
-    // names at commit m, aligned positionally with the pinned dataSchema
-    // (`_uuid` never renames); equal to the pinned names whenever the
-    // range crosses no rename
-    val mFields = TableState.schemaOf(m).fields
-    val curNames: Seq[String] =
-      mFields.map(_.name).toSeq :+ GraftDataset.UuidCol
-    // the walked commit must be a pure-rename/pure-add stage of the
-    // pinned schema: equal width, or NARROWER when the pin carries
-    // columns added after this commit (the walk validates prev→m;
-    // this guards the PIN itself, e.g. a checkpoint-reconstruction walk
-    // over a range that predates a non-rename change the pinned head
-    // schema already carries). The commit's fields must align as a
-    // positional TYPE prefix of the pin — a same-width name skew is a
-    // rename (fine); a type skew is a real schema change.
-    require(curNames.length <= dataSchema.fields.length &&
-        mFields.map(_.dataType).toSeq ==
-          dataSchema.fields.take(mFields.length).map(_.dataType).toSeq,
-      s"graft change feed: the table schema changed between commit " +
-        s"${m.id} and the feed's pinned schema; restart the stream with " +
-        "a fresh checkpoint to pick up the new schema")
-    // pinned fields this commit's files can physically carry (prefix +
-    // `_uuid`); columns the pin added later are null-backfilled below
-    val pinnedSub = dataSchema.fields.take(mFields.length) :+
-      dataSchema.fields.last
-    val lateAdds = dataSchema.fields
-      .slice(mFields.length, dataSchema.fields.length - 1)
-    val epochs = m.epochs.getOrElse(Map.empty)
-    def readPinned(rels: Seq[String]): DataFrame = {
-      val narrow = rels.groupBy(r => epochs.getOrElse(r, 0)).toSeq.map {
-        case (e, rs) =>
-          // physical names at epoch e: undo the chain suffix applied
-          // after the files were written, newest pair first
-          val undo = TableState.renamesOf(m).drop(e).reverse
-          val phys = curNames.map(n => undo.foldLeft(n) {
-            case (nn, (from, to)) => if (nn == to) from else nn })
-          val readSchema = StructType(pinnedSub.zip(phys).map {
-            case (f, p) => f.copy(name = p) })
-          spark.read.schema(readSchema).parquet(paths(rs): _*)
-            .toDF(pinnedSub.map(_.name).toIndexedSeq: _*)
-      }.reduce(_ unionByName _)
-      lateAdds.foldLeft(narrow)((df, f) =>
-          df.withColumn(f.name, lit(null).cast(f.dataType)))
-        .select(dataSchema.fieldNames.toIndexedSeq.map(col): _*)
-    }
-    val out = Vector.newBuilder[DataFrame]
-    val newFiles = m.files.filterNot(prev.files.toSet)
-    if (newFiles.nonEmpty) out += tagged(readPinned(newFiles), "insert")
-    val newUps = m.updates.filterNot(prev.updates.toSet)
-    if (newUps.nonEmpty) {
-      val all = newUps.zipWithIndex.map { case (u, i) =>
-        readPinned(Seq(u)).withColumn("_file_seq", lit(i))
-      }.reduce(_ unionByName _)
-      out += tagged(GraftDataset.lastWinsPerUuid(all, "_file_seq"),
-        "update_postimage")
-    }
-    val newTombs = m.tombstones.filterNot(prev.tombstones.toSet)
-    if (newTombs.nonEmpty) {
-      val dead = spark.read.schema(GraftDataset.UuidSchema)
-        .parquet(paths(newTombs): _*)
-      val cols = dataSchema.fields.toIndexedSeq.map { f =>
-        if (f.name == GraftDataset.UuidCol) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }
-      out += tagged(dead.select(cols: _*), "delete")
-    }
-    out.result()
-  }
 }
 
 /** Streaming sink: one graft commit per micro-batch, exactly-once via the
@@ -440,11 +234,7 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
   /** The branch head this source's schema was pinned at — the anchor
     * for validating that any other commit the engine asks to read is a
     * pure-rename stage of the pinned schema (positional identity). */
-  private val pinnedHead: String =
-    CommitLog.readBranches(spark, root).getOrElse(branch,
-      throw new IllegalArgumentException(
-        s"graft stream source: no branch '$branch' at $root — the table " +
-          "must exist with at least one commit before streaming from it"))
+  private val pinnedHead: String = GraftTailSource.headOf(spark, root, branch)
 
   override val schema: StructType = GraftTailSource
     .schemaAtCommit(spark, root, pinnedHead, withUuid, changeFeed)
@@ -474,22 +264,20 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
         s"graft stream source: commit $endId and the stream's pinned " +
           s"head $pinnedHead are not on one first-parent chain — " +
           "restart the stream with a fresh checkpoint")
-    var prev = CommitLog.readCommit(spark, root, ancestor)
-    for (m <- path.reverse) {
-      if (m.schemaJson != prev.schemaJson)
-        // change feeds tolerate pure renames and pure ADDS (positional
-        // identity of the prefix; pre-add events null-backfill);
-        // the plain tail reads files BY NAME against the pinned schema,
-        // where even a pure rename would silently null-backfill the
-        // renamed column — any gap schema change fails it loudly
-        require(changeFeed &&
-            (GraftStream.renameDelta(prev, m).isDefined ||
-              GraftStream.addDelta(prev, m).isDefined),
-          s"graft stream source: the table schema changed at commit " +
-            s"${m.id} between this batch's range and the stream's " +
-            "pinned schema; restart the stream with a fresh checkpoint " +
-            "to pick up the new schema")
-      prev = m
+    path.reverse.foldLeft(CommitLog.readCommit(spark, root, ancestor)) {
+      (prev, m) =>
+        if (m.schemaJson != prev.schemaJson)
+          // change feeds tolerate pure renames and pure ADDS (positional
+          // identity of the prefix; pre-add events null-backfill);
+          // the plain tail reads files BY NAME against the pinned schema,
+          // where even a pure rename would silently null-backfill the
+          // renamed column — any gap schema change fails it loudly
+          require(changeFeed && ChangeFeed.schemaStep(cdfDataSchema, prev, m),
+            s"graft stream source: the table schema changed at commit " +
+              s"${m.id} between this batch's range and the stream's " +
+              "pinned schema; restart the stream with a fresh checkpoint " +
+              "to pick up the new schema")
+        m
     }
   }
 
@@ -557,13 +345,9 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
     // (O(history) serial driver reads) to rebuild ids it will never use
     val known = math.max(chain.lastOption.getOrElse(-1L), floorV)
     if (headId <= known) return
-    var cur = Option(GraftStream.commitId(headId))
-    val add = Vector.newBuilder[Long]
-    while (cur.isDefined && cur.get.toLong > known) {
-      add += cur.get.toLong
-      cur = CommitLog.readCommit(spark, root, cur.get).parent
-    }
-    chain = chain ++ add.result().reverse
+    chain ++= CommitLog.firstParentChain(spark, root,
+      Some(GraftStream.commitId(headId)), Some(GraftStream.commitId(known)))
+      .map(_.id.toLong).takeWhile(_ > known).toVector.reverse
   }
 
   // ---- Trigger.AvailableNow (SupportsTriggerAvailableNow) ---------------
@@ -578,9 +362,12 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
   // the run stay beyond the target, per the AvailableNow contract.
   @volatile private var availableNowTarget: Option[Long] = None
 
+  /** The branch head now, as an offset value. */
+  private def branchHead: Option[Long] =
+    CommitLog.readBranches(spark, root).get(branch).map(_.toLong)
+
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget =
-      CommitLog.readBranches(spark, root).get(branch).map(_.toLong)
+    availableNowTarget = branchHead
 
   override def getDefaultReadLimit
       : org.apache.spark.sql.connector.read.streaming.ReadLimit =
@@ -599,17 +386,14 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
   /** The true branch head, uncapped — progress reporting only. */
   override def reportLatestOffset()
       : org.apache.spark.sql.connector.read.streaming.Offset =
-    CommitLog.readBranches(spark, root).get(branch)
-      .map(h => LongOffset(h.toLong)).orNull
+    branchHead.map(LongOffset(_)).orNull
 
   override def getOffset: Option[Offset] = nextOffset()
 
   private def nextOffset(): Option[LongOffset] = {
-    val head = CommitLog.readBranches(spark, root).get(branch).map(_.toLong)
-      // an AvailableNow run drains to the head pinned at prepare time and
-      // no further
-      .map(h => availableNowTarget.fold(h)(math.min(h, _)))
-    head.map { h =>
+    // an AvailableNow run drains to the head pinned at prepare time and
+    // no further
+    branchHead.map(h => availableNowTarget.fold(h)(math.min(h, _))).map { h =>
       if (maxCommitsPerTrigger <= 0) LongOffset(h)
       else {
         extendChain(h)
@@ -639,17 +423,13 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
         // names. Shape divergence = a real schema change: fail loudly.
         requirePureRenamePath(endId)
         val ds = GraftDataset.loadCommit(spark, root, endId)
-        val snap0 = {
-          // canonical order (logical fields, then `_uuid`) in the
-          // commit's OWN names, so the positional pin below is
-          // order-independent of the snapshot plan's internal layout
-          val s0 = if (changeFeed || withUuid) ds.snapshotWithUuid() else ds.toDF
-          val names =
-            if (changeFeed || withUuid)
-              ds.schema.fieldNames.toIndexedSeq :+ GraftDataset.UuidCol
-            else ds.schema.fieldNames.toIndexedSeq
-          s0.select(names.map(col): _*)
-        }
+        val keepUuid = changeFeed || withUuid
+        // canonical order (logical fields, then `_uuid`) in the
+        // commit's OWN names, so the positional pin below is
+        // order-independent of the snapshot plan's internal layout
+        val snap0 = (if (keepUuid) ds.snapshotWithUuid() else ds.toDF)
+          .select((ds.schema.fieldNames.toIndexedSeq ++
+            Option.when(keepUuid)(GraftDataset.UuidCol)).map(col): _*)
         val pinnedData =
           if (changeFeed) schema.fields.dropRight(2) else schema.fields
         // a change-feed snapshot may be NARROWER than the pin when pure
@@ -697,119 +477,65 @@ class GraftTailSource(spark: SparkSession, root: String, branch: String,
         // construction) per trigger
         if (GraftStream.offsetValue(end) < pinnedHead.toLong)
           requirePureRenamePath(endId)
-        // per-commit walk (not an endpoint diff): a rewrite-only commit
-        // (compaction, CommitMeta.rewrite) replaces the whole manifest
-        // while leaving logical rows untouched — an endpoint diff would
-        // re-emit every row in the table; the walk skips those commits'
-        // file changes entirely and checks append-only-ness per commit
+        // per-commit walk (not an endpoint diff, see ChangeFeed.events);
+        // the id bound stops a walk that misses `start` (a rewound
+        // branch) at the range instead of at the root
         val startV = GraftStream.offsetValue(s)
-        var metas = List.empty[CommitMeta]
-        var cur = Option(endId)
-        while (cur.isDefined && cur.get.toLong > startV) {
-          val m = CommitLog.readCommit(spark, root, cur.get)
-          metas ::= m // ascending after the loop
-          cur = m.parent
-        }
-        var prev = CommitLog.readCommit(spark, root,
-          GraftStream.commitId(startV))
-        // a replayed range can outlive the vacuum retention (a stream
-        // down longer than the retention window): fail with the clean
-        // expiry message BEFORE scheduling scans over reclaimed files —
-        // the batch feed (GraftDataset.changes) makes the same per-commit
-        // check; without it the batch dies executor-side on a raw
-        // FileNotFoundException mid-scan
-        val added = Vector.newBuilder[String]
-        val cdfBatches = Vector.newBuilder[DataFrame]
-        for (m <- metas) {
-          if (!m.rewrite.contains(true)) {
-            GraftDataset.assertNotExpired(spark, root, m)
-            // schema equality, not rename-chain equality: a compact-on-
-            // dirty commit FOLDS the cumulative rename chain into the
-            // data (chain resets to empty with no logical rename), while
-            // any real rename / added / dropped column changes the field
-            // list — which is exactly what invalidates the pinned schema.
-            // Exception: in change-feed mode a PURE RENAME is tolerated —
-            // it is metadata-only, so the feed keeps speaking its pinned
-            // names (events re-aliased positionally) and announces the
-            // rename as a `schema_change` event for replicas to apply.
-            if (m.schemaJson != prev.schemaJson) {
-              // pure ADDS are tolerated only when the pin already
-              // carries the added columns (a replayed range, or a
-              // restart whose fresh pin post-dates the add): a LIVE add
-              // beyond the pin cannot be expressed — the feed's output
-              // schema is fixed at stream start — so it keeps the loud
-              // restart contract instead of silently dropping the new
-              // column's values
-              val addOk = GraftStream.addDelta(prev, m).exists(_ =>
-                TableState.schemaOf(m).fields.length <=
-                  cdfDataSchema.fields.length - 1)
-              require(changeFeed &&
-                  (GraftStream.renameDelta(prev, m).isDefined || addOk),
-                s"graft stream source: the table schema changed at commit " +
-                  s"${m.id}; restart the stream (with a fresh checkpoint) " +
-                  "to pick up the new schema (change feeds tolerate pure " +
-                  "column renames, and pure column ADDS the stream's " +
-                  "pinned schema already carries; a live add, dropped, " +
-                  "or retyped column always needs a restart)")
-              cdfBatches += GraftStream.schemaChangeEvent(spark, schema, m.id)
-            }
-            val prevFiles = prev.files.toSet
-            val mFiles = m.files.toSet
-            if (changeFeed) {
-              GraftStream.requireDeltaExpressible(m, prev)
-              cdfBatches ++= cdfEvents(m, prev)
-            }
-            else {
-              val appendOnly = m.updates == prev.updates &&
-                m.tombstones == prev.tombstones &&
-                prev.files.forall(mFiles.contains)
-              require(appendOnly || ignoreChanges,
-                s"graft stream source: commit ${m.id} contains in-place " +
-                  "changes (update/pop) that an append stream cannot " +
-                  "express; set option ignoreChanges=true to stream the " +
-                  "appends only, or changeFeed=true for full CDC events")
-              added ++= m.files.filterNot(prevFiles)
-            }
-          }
-          prev = m
-        }
-        if (changeFeed) {
-          val parts = cdfBatches.result()
-          if (parts.isEmpty) InternalDf.emptyStreaming(spark, schema)
-          else InternalDf.asStreaming(
-            parts.reduce(_ unionByName _).select(logicalCols: _*))
-        } else {
-          // manifest paths are table-root-relative; reading with the
-          // PINNED schema null-backfills columns a file predates and
-          // ignores columns it has extra (the snapshot readers'
-          // mergeSchema+align equivalent), so a file range written under
-          // an older schema — replayed after a schema-change restart —
-          // still reads instead of failing on single-file inference
-          val newFiles = added.result()
-            .map(f => new org.apache.hadoop.fs.Path(root, f).toString)
-          if (newFiles.isEmpty) InternalDf.emptyStreaming(spark, schema)
-          else InternalDf.asStreaming(
-            spark.read.schema(schema).parquet(newFiles: _*)
-              .select(logicalCols: _*))
-        }
+        val startId = GraftStream.commitId(startV)
+        val metas = CommitLog.firstParentChain(spark, root, Some(endId),
+          Some(startId)).takeWhile(_.id.toLong > startV).toVector.reverse
+        val prev = CommitLog.readCommit(spark, root, startId)
+        val frames =
+          if (changeFeed) ChangeFeed.events(spark, root, cdfDataSchema,
+            prev, metas, schemaRefusal)
+          else appended(prev, metas)
+        if (frames.isEmpty) InternalDf.emptyStreaming(spark, schema)
+        else InternalDf.asStreaming(
+          frames.reduce(_ unionByName _).select(logicalCols: _*))
     }
   }
 
-  /** One commit's change events (Delta CDF shape, computed at READ time
-    * from the manifest delta — the format's update/tombstone files
-    * already carry everything the feed needs):
-    *   - new base files   → `insert` (full row),
-    *   - new update files → `update_postimage` (full row; update files
-    *     store complete rows, last-wins per uuid WITHIN the commit so a
-    *     multi-update commit emits its final image once),
-    *   - new tombstones   → `delete` (identity only: `_uuid` + null
-    *     data columns — the row's values died with the commit).
-    * Pre-images are not materialized (they would need the parent
-    * snapshot joined per commit); uuid identity + postimage covers
-    * downstream upsert/delete application, the dominant CDC use.
-    */
-  private def cdfEvents(m: CommitMeta, prev: CommitMeta): Seq[DataFrame] =
-    GraftStream.changeEvents(spark, root, cdfDataSchema, m, prev)
+  /** The refusal of a schema change inside a batch's range. */
+  private def schemaRefusal(id: String): String =
+    s"graft stream source: the table schema changed at commit $id; " +
+      "restart the stream (with a fresh checkpoint) to pick up the new " +
+      "schema (change feeds tolerate pure column renames, and pure column " +
+      "ADDS the stream's pinned schema already carries; a live add, " +
+      "dropped, or retyped column always needs a restart)"
+
+  /** The plain tail's frame over the new base files of its range. Like
+    * [[ChangeFeed.events]] it skips rewrite commits and checks expiry
+    * per commit; every other commit must keep the pinned schema (schema
+    * equality, as there) and, unless `ignoreChanges`, be append-only. */
+  private def appended(prev: CommitMeta,
+                       metas: Seq[CommitMeta]): Seq[DataFrame] = {
+    val added = Vector.newBuilder[String]
+    metas.foldLeft(prev) { (p, m) =>
+      if (!m.rewrite.contains(true)) {
+        GraftDataset.assertNotExpired(spark, root, m)
+        require(m.schemaJson == p.schemaJson, schemaRefusal(m.id))
+        val appendOnly = m.updates == p.updates &&
+          m.tombstones == p.tombstones && p.files.forall(m.files.toSet)
+        require(appendOnly || ignoreChanges,
+          s"graft stream source: commit ${m.id} contains in-place " +
+            "changes (update/pop) that an append stream cannot " +
+            "express; set option ignoreChanges=true to stream the " +
+            "appends only, or changeFeed=true for full CDC events")
+        added ++= m.files.filterNot(p.files.toSet)
+      }
+      m
+    }
+    // manifest paths are table-root-relative; reading with the
+    // PINNED schema null-backfills columns a file predates and
+    // ignores columns it has extra (the snapshot readers'
+    // mergeSchema+align equivalent), so a file range written under
+    // an older schema — replayed after a schema-change restart —
+    // still reads instead of failing on single-file inference
+    val files = added.result()
+      .map(f => new org.apache.hadoop.fs.Path(root, f).toString)
+    if (files.isEmpty) Nil
+    else Seq(spark.read.schema(schema).parquet(files: _*))
+  }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -823,12 +549,16 @@ object GraftTailSource {
   def tableSchema(spark: SparkSession, root: String, branch: String,
                   withUuid: Boolean,
                   changeFeed: Boolean = false): StructType = {
-    val head = CommitLog.readBranches(spark, root).getOrElse(branch,
+    schemaAtCommit(spark, root, headOf(spark, root, branch), withUuid,
+      changeFeed)
+  }
+
+  private def headOf(spark: SparkSession, root: String,
+                     branch: String): String =
+    CommitLog.readBranches(spark, root).getOrElse(branch,
       throw new IllegalArgumentException(
         s"graft stream source: no branch '$branch' at $root — the table " +
           "must exist with at least one commit before streaming from it"))
-    schemaAtCommit(spark, root, head, withUuid, changeFeed)
-  }
 
   /** [[tableSchema]] pinned to one specific commit — the source derives
     * its pinned schema and its rename-path anchor from a SINGLE head
@@ -842,14 +572,9 @@ object GraftTailSource {
     // the change feed always carries `_uuid`: a delete event is
     // identity-only, and consumers key their apply on it
     val withId =
-      if (withUuid || changeFeed) StructType(logical.fields :+
-        StructField(GraftDataset.UuidCol, LongType, nullable = false))
+      if (withUuid || changeFeed) GraftDataset.withUuidSchema(logical)
       else logical
     if (!changeFeed) withId
-    else StructType(GraftStream.nullableData(withId).fields :+
-      StructField(GraftStream.ChangeTypeCol,
-        org.apache.spark.sql.types.StringType, nullable = false) :+
-      StructField(GraftStream.CommitIdCol,
-        org.apache.spark.sql.types.StringType, nullable = false))
+    else ChangeFeed.eventSchema(ChangeFeed.nullableData(withId))
   }
 }

@@ -352,6 +352,9 @@ trait IndexFacet { self: GraftDataset =>
   private def buildVectorIndex(column: String, p: VectorParams,
                                rebuilds: Option[Int]): Unit = {
     require(!dirty, "commit before indexing")
+    // resolved before anything is deleted: a typo in the type must
+    // refuse, not destroy the column's working index first
+    val kind = kindOf(p.tpe)
     unloadVectorIndex(column) // a pinned copy would go stale on overwrite
     val dir = indexDir("vector", column)
     // a re-create with a DIFFERENT type must not leave the old type's
@@ -359,7 +362,7 @@ trait IndexFacet { self: GraftDataset =>
     // would be pinned by loadVectorIndex and mislead listIndexes)
     CommitLog.fs(spark, root).delete(dir, true)
     val snap = snapshotWithUuid()
-    kindOf(p.tpe).build(snap, Site(column, p))
+    kind.build(snap, Site(column, p))
     bind(dir, p.meta(rebuilds))
   }
 

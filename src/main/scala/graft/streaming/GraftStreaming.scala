@@ -203,7 +203,7 @@ object GraftStreaming {
               val par = meta.parent.map(
                 graft.format.CommitLog.readCommit(s, srcRoot, _))
               for (delta <- par.flatMap(p =>
-                     graft.format.GraftStream.renameDelta(p, meta));
+                     graft.format.ChangeFeed.renameDelta(p, meta));
                    (f, t) <- delta)
                 if (replica.schema.fieldNames.contains(f) &&
                     !replica.schema.fieldNames.contains(t))

@@ -83,7 +83,7 @@ class CdcFuzzSpec extends SparkSpec {
       val parent = m.parent.map(CommitLog.readCommit(spark, srcRoot, _))
       // adds BEFORE row events (post-add rows carry the column);
       // renames AFTER (value-neutral, positional identity)
-      for (p <- parent; delta <- GraftStream.addDelta(p, m); f <- delta)
+      for (p <- parent; delta <- ChangeFeed.addDelta(p, m); f <- delta)
         if (!replica.schema.fieldNames.contains(f.name))
           replica.createTensor(f.name, f.dataType)
       val rows = feed.filter(tpe =!= "schema_change")
@@ -94,7 +94,7 @@ class CdcFuzzSpec extends SparkSpec {
         replica.applyChanges(rows.toDF(names: _*), dedupInserts = false)
         ()
       }
-      for (p <- parent; delta <- GraftStream.renameDelta(p, m);
+      for (p <- parent; delta <- ChangeFeed.renameDelta(p, m);
            (f, t) <- delta)
         if (replica.schema.fieldNames.contains(f) &&
             !replica.schema.fieldNames.contains(t))
@@ -239,10 +239,10 @@ class CdcFuzzSpec extends SparkSpec {
     for (cid <- scCommits) {
       val m = CommitLog.readCommit(spark, srcRoot, cid)
       val p = m.parent.map(CommitLog.readCommit(spark, srcRoot, _))
-      for (pp <- p; delta <- GraftStream.addDelta(pp, m); f <- delta)
+      for (pp <- p; delta <- ChangeFeed.addDelta(pp, m); f <- delta)
         if (!rep2.schema.fieldNames.contains(f.name))
           rep2.createTensor(f.name, f.dataType)
-      for (pp <- p; delta <- GraftStream.renameDelta(pp, m);
+      for (pp <- p; delta <- ChangeFeed.renameDelta(pp, m);
            (f, t) <- delta)
         if (rep2.schema.fieldNames.contains(f) &&
             !rep2.schema.fieldNames.contains(t))

@@ -94,6 +94,42 @@ class CommitReadsSpec extends SparkSpec {
     assert(ds.changes(base).count() == 2) // one postimage, one delete
   }
 
+  /** `init` and four appends on main. */
+  private def appendTable(): (GraftDataset, Seq[String]) = {
+    val ds = GraftDataset.create(spark, tmpDir("readsstream") + "/t", schema)
+    for (i <- 1L to 4L) {
+      ds.append(Seq((i, s"v$i")).toDF("id", "v"))
+      ds.commit(s"a$i")
+    }
+    (ds, CommitLog.firstParentChain(spark, ds.root, ds.head).map(_.id)
+      .toVector.reverse)
+  }
+
+  private def source(ds: GraftDataset, changeFeed: Boolean) =
+    new GraftTailSource(spark, ds.root, "main", withUuid = false,
+      ignoreChanges = false, changeFeed = changeFeed)
+
+  private def batchReads(src: GraftTailSource, from: String,
+                         to: String): Long = {
+    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    reads(src.getBatch(Some(LongOffset(from.toLong)), LongOffset(to.toLong)))
+  }
+
+  test("a steady incremental getBatch reads its commit and the start") {
+    val (ds, ids) = appendTable()
+    for (cdf <- Seq(false, true))
+      assert(batchReads(source(ds, cdf), ids(3), ids(4)) == 2, s"cdf=$cdf")
+  }
+
+  test("a replayed range older than the pin reads the gap walk once") {
+    val (ds, ids) = appendTable()
+    // the gap (a2, a4] walked once, plus a2 as its anchor; then the
+    // range: a2 and its start a1
+    for (cdf <- Seq(false, true))
+      assert(batchReads(source(ds, cdf), ids(1), ids(2)) == 2 + 1 + 2,
+        s"cdf=$cdf")
+  }
+
   test("a bogus ref and a missing commit id keep their messages") {
     val ds = probeTable()
     val root = ds.root

@@ -78,6 +78,21 @@ class IndexSpec extends SparkSpec {
     assert(top.count() == 2) // new row is findable through the index
   }
 
+  test("a bad index type refuses and keeps the working index") {
+    val ds = table()
+    ds.createVectorIndex("emb", nlist = 2)
+    def top() = ds.vectorSearch("emb", Seq(1.0f, 0.0f, 0.0f), k = 2,
+      metric = "l2", nprobe = 2).collect().toSeq
+    val before = top()
+    val info = ds.vectorIndexInfo("emb")
+    val e = intercept[IllegalArgumentException](
+      ds.createVectorIndex("emb", nlist = 2, indexType = "IVFX"))
+    assert(e.getMessage.contains("bad index type IVFX"))
+    assert(ds.indexFresh("vector", "emb"))
+    assert(ds.vectorIndexInfo("emb") == info)
+    assert(top() == before && before.size == 2)
+  }
+
   test("typed vector indexes: FLAT/IVFPQ/HNSW/DISKANN route, match exact top-1") {
     val ds = GraftDataset.create(spark, tmpDir("idxtyped"), StructType(Seq(
       StructField("id", LongType),

@@ -10,8 +10,8 @@
 # Exit 0 = no SparkSession.builder under src/main/scala outside Harness.scala,
 # no graph-index Spark path in Hnsw.scala or Vamana.scala, no meta.json
 # outside IndexFacet.scala, no HNSW/DISKANN/IVFPQ literal in
-# GraftDataset.scala, both trees compile AND graft.Verify completed on the
-# fixture.
+# GraftDataset.scala, no change-feed step called outside ChangeFeed.scala,
+# both trees compile AND graft.Verify completed on the fixture.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -47,6 +47,15 @@ fi
 kinds=$(grep -lE '"(HNSW|DISKANN|IVFPQ)"' src/main/scala/graft/format/GraftDataset.scala || true)
 if [ -n "$kinds" ]; then
   echo "pregate: FAIL — index-type literal outside the kind table:" $kinds >&2
+  exit 1
+fi
+
+# One change-feed walk: ChangeFeed.events. A call of one of its per-commit
+# steps elsewhere is a second walk, free to drift from the first, as the
+# batch feed and the streaming source once each wrote their own.
+walk=$(grep -rlE '(changeEvents|schemaChangeEvent|requireDeltaExpressible)\(' src/main/scala | grep -v '/ChangeFeed\.scala$' || true)
+if [ -n "$walk" ]; then
+  echo "pregate: FAIL — change-feed step called outside ChangeFeed.scala:" $walk >&2
   exit 1
 fi
 
